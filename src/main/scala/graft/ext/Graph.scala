@@ -48,8 +48,9 @@ object Graph {
     // broadcast RE-COMPUTES the incidence distinct under its own
     // BroadcastExchange (plans/r16/x_graph_degrees_before.txt shows the
     // doubled subtree) and a broadcast of an incidence-scale table is
-    // exactly what dies first at 100 TB. Measured (CoEdgesAbProbe,
-    // sf0.1): degrees 1.74 s → 0.96 s, weighted backbone 1.60 → 0.84.
+    // exactly what dies first at 100 TB. Measured (sf0.1, SCALE.md
+    // "Round 16: optimization round 1", item 1): degrees 1.74 s → 0.96 s,
+    // weighted backbone 1.60 → 0.84.
     val pairs = df.select(col(keyCol).as("k"), col(itemCol).as("i"))
       .repartition(col("k")).distinct()
     pairs.join(pairs.withColumnRenamed("i", "j").hint("SHUFFLE_HASH"), "k")
@@ -754,7 +755,8 @@ object Graph {
     * random probe into an edge-count-sized broadcast hash (a cache
     * miss per wedge at 12 M edges): measured 18.0 s vs 54.6 s at sf1
     * (411 M wedges) and 2.3 s vs 4.3 s at sf0.1, identical outputs
-    * (TriAdjProbe). Each triangle is counted exactly once BECAUSE THE
+    * (SCALE.md "Round 12: triangle closure = adjacency intersection").
+    * Each triangle is counted exactly once BECAUSE THE
     * ORIENTATION IS A TOTAL ORDER: for triangle a≺b≺c (oriented edges
     * a→b, a→c, b→c), only edge (a,b) finds c in both out-lists —
     * edge (a,c) would need b∈N⁺(c), i.e. an edge c→b, which the

@@ -196,8 +196,9 @@ object Retrieval {
     * via [[graft.operators.Compact.compactShards]]. Probe-side pruning
     * is preserved — `tok_band` stays a partition column inside the
     * consolidated postings shard — and the probe result is unchanged
-    * (CompactSpec pins hash parity; ShardCompactProbe measures the
-    * probe-latency curve vs shard count that motivates running this).
+    * (CompactSpec pins hash parity; SCALE.md "Round 11: `batch=` shard
+    * compaction" measures the probe-latency curve vs shard count that
+    * motivates running this).
     *
     * SAFETY: consolidate only batches beyond replay — after an
     * AvailableNow drain terminates, or `upTo` = the owning stream's
@@ -206,8 +207,9 @@ object Retrieval {
     * shard that overwrite would drop the other batches' rows.
     *
     * `minor`/`maxRuns` run the tiered LSM schedule; `maxRuns` defaults
-    * to the measured probe-latency knee (8 — RunCountProbe, SCALE.md
-    * r14: flat through 8 stacked runs, 2–3× worse by 32).
+    * to the measured probe-latency knee (8 — SCALE.md "Round 14:
+    * read-side pricing of stacked runs": flat through 8 stacked runs,
+    * 2–3× worse by 32).
     */
   def compactIndex(spark: org.apache.spark.sql.SparkSession,
       indexPath: String, targetBytes: Long = 128L << 20,

@@ -524,7 +524,8 @@ object Similarity {
     * The sample is md5-bottom-k over the id (deterministic,
     * engine-neutral, one scan + TakeOrdered — no shuffle of the
     * corpus), so the centroids stay a pure function of the data like
-    * the full-Lloyd path. Measured (IvfSampledProbe, SCALE.md r15):
+    * the full-Lloyd path. Measured (SCALE.md "Round 15: IVF centroid
+    * training sized and sampled"):
     * training cost goes flat in corpus size while recall@k against the
     * full-corpus trainer's index is statistically indistinguishable.
     */
@@ -555,10 +556,11 @@ object Similarity {
   /** Corpus-row threshold above which the STORED-index builders train
     * on the bounded md5-bottom-k sample by default (r15 VERDICT #5:
     * `sampledTraining` was a caller flag with a measured crossover —
-    * make the default follow the measurement). IvfSampledProbe
-    * (SCALE.md r15) brackets the crossover: at 20k rows the sample's
-    * checkpoint + scan overhead ties or loses to full Lloyd; at 200k
-    * full training is 12.7× slower at statistically-equal recall. 2^16
+    * make the default follow the measurement). SCALE.md "Round 15: IVF
+    * centroid training sized and sampled" brackets the crossover: at 20k
+    * rows the sample's checkpoint + scan overhead ties or loses to full
+    * Lloyd; at 200k full training is 12.7× slower at statistically-equal
+    * recall. 2^16
     * sits inside that measured gap — below it the demo/oracle corpora
     * (≤ tens of k) keep bit-identical full training, above it a build
     * would otherwise pay the n^1.5 (IVF) / corpus-bound-per-round (PQ)
@@ -1070,8 +1072,8 @@ object Similarity {
     * corpus is paid only by the one [[pqEncode]] pass that produces the
     * codes — which is the index build's irreducible scan. Same
     * md5-bottom-k sample and stats-checkpoint discipline as the IVF
-    * trainer (every round reads the sample). Measured: IvfSampledProbe
-    * PQ rows, SCALE.md r15.
+    * trainer (every round reads the sample). Measured: the PQ rows of
+    * SCALE.md "Round 15: IVF centroid training sized and sampled".
     */
   def pqCodebooksSampled(corpus: DataFrame, idCol: String, vecCol: String,
                          m: Int, subDim: Int, ks: Int, iterations: Int,
@@ -1711,8 +1713,9 @@ object Similarity {
     * to ~`targetBucketRows` vectors and candidate pairs to
     * ~b·n·targetBucket/2 — LINEAR in n — instead of the fixed-r
     * b·n²/2^r quadratic. Measured on the 10× corpus
-    * (NearDupScaleProbe, SCALE.md r15): r=8 vs the demo r=4 cut
-    * candidates 12.7× and confirm time 9.2× at 20k rows, keeping every
+    * (SCALE.md "Round 15: registry-wide sf1 scaling sweep"): r=8 vs the
+    * demo r=4 cut candidates 12.7× and confirm time 9.2× at 20k rows,
+    * keeping every
     * near-1 dup family (per-bit agreement p ≈ 1 there) and 71 % of the
     * pair set down at τ=0.4. The clamp: r < 4 under-prunes any corpus;
     * r > 24 costs plane dot products (b·r planes) faster than it

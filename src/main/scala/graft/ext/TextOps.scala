@@ -20,9 +20,9 @@ object TextOps {
     * Empty array when len < n. Delegates to the native [[graft.functions.WordShingles]]
     * expression: the equivalent higher-order-function formulation
     * (transform(sequence…) over element_at(split…)) is interpreted, not
-    * codegen'd, and re-evaluates the split per element — ProfileScale
-    * measured it ~25× slower per row at 10× scale, while the native
-    * single-pass expression stays linear.
+    * codegen'd, and re-evaluates the split per element — measured ~25×
+    * slower per row at 10× scale (SCALE.md "Two real super-linear
+    * findings"), while the native single-pass expression stays linear.
     */
   def shingles(c: Column, n: Int): Column =
     graft.functions.WordShingles.shingles(c, n)

@@ -300,9 +300,10 @@ object Compact {
       graceMs = graceMs, minor = minor, maxRuns = maxRuns,
       lockTtlMs = lockTtlMs)
 
-  /** Default minor-run bound — typical LSM fan-out; RunCountProbe
-    * (SCALE.md r14) prices probe latency vs run count behind it: flat
-    * through ~8 stacked runs, 2-3x worse by 32 — 8 is the measured knee.
+  /** Default minor-run bound — typical LSM fan-out; SCALE.md "Round 14:
+    * read-side pricing of stacked runs" prices probe latency vs run count
+    * behind it: flat through ~8 stacked runs, 2-3x worse by 32 — 8 is the
+    * measured knee.
     */
   val DefaultMaxRuns = 8
 

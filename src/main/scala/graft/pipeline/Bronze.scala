@@ -21,11 +21,20 @@ object Bronze {
     * loads; filename available via `input_file_name()` if needed.
     */
   def readNdjson(spark: SparkSession, schema: StructType, paths: String*): DataFrame =
-    spark.read.schema(schema)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(paths: _*)
-      .filter(col("_corrupt_record").isNull && col("data").isNotNull)
+    dropCorrupt(spark.read.schema(schema).options(NdjsonOptions).json(paths: _*))
+
+  /** Reader options of every lake NDJSON scan, batch or streaming:
+    * PERMISSIVE, with unparseable lines kept in `_corrupt_record`.
+    */
+  private[graft] val NdjsonOptions: Map[String, String] =
+    Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_corrupt_record")
+
+  /** The rejected-line filter over an [[NdjsonOptions]] scan: corrupt
+    * lines and lines without a `data` object drop, so batch and
+    * streaming bronze reject the same lines.
+    */
+  private[graft] def dropCorrupt(raw: DataFrame): DataFrame =
+    raw.filter(col("_corrupt_record").isNull && col("data").isNotNull)
       .drop("_corrupt_record")
 
   /** S1/S3/S8: control/seed CSV with header + inferred schema

@@ -125,25 +125,28 @@ object Gold {
       (martGroup.map(col) ++ calendarCols ++
         df.columns.filterNot(c => martGroup.contains(c)).map(col)): _*)
 
+  /** One hourly mart: the J2 denormalization, one AVG column per pivot
+    * over the mart group, then the record key and calendar columns.
+    */
+  private def mart(validMeasurements: DataFrame, sensorsEnriched: DataFrame,
+                   pivotCols: Seq[PivotCol], keyName: String): DataFrame = {
+    val pivots = pivotCols.map(pAvg)
+    val agg = martJoined(validMeasurements, sensorsEnriched)
+      .groupBy(martGroup.map(col): _*).agg(pivots.head, pivots.tail: _*)
+    withMartKey(agg, keyName)
+  }
+
   /** mart_location_air_quality: 14 conditional-AVG pivot columns
     * (mart_location_air_quality.sql:51-96).
     */
-  def martAirQuality(validMeasurements: DataFrame, sensorsEnriched: DataFrame): DataFrame = {
-    val pivots = airQualityPivots.map(pAvg)
-    val agg = martJoined(validMeasurements, sensorsEnriched)
-      .groupBy(martGroup.map(col): _*).agg(pivots.head, pivots.tail: _*)
-    withMartKey(agg, "air_quality_record_id")
-  }
+  def martAirQuality(validMeasurements: DataFrame, sensorsEnriched: DataFrame): DataFrame =
+    mart(validMeasurements, sensorsEnriched, airQualityPivots, "air_quality_record_id")
 
   /** mart_location_weather: 5 pivot columns incl. Fahrenheit conversion
     * and 0-decimal wind direction (mart_location_weather.sql:50-88).
     */
-  def martWeather(validMeasurements: DataFrame, sensorsEnriched: DataFrame): DataFrame = {
-    val pivots = weatherPivots.map(pAvg)
-    val agg = martJoined(validMeasurements, sensorsEnriched)
-      .groupBy(martGroup.map(col): _*).agg(pivots.head, pivots.tail: _*)
-    withMartKey(agg, "weather_record_id")
-  }
+  def martWeather(validMeasurements: DataFrame, sensorsEnriched: DataFrame): DataFrame =
+    mart(validMeasurements, sensorsEnriched, weatherPivots, "weather_record_id")
 
   /** Streaming-algebraic mart building blocks. A micro-batch sink that
     * re-pivots only its own rows and MERGEs by key silently replaces an
@@ -183,20 +186,25 @@ object Gold {
     withMartKey(partials.select(partials.columns.toSeq.map(col) ++ display: _*), keyName)
   }
 
-  /** Incremental mart refresh (T2/F3/A6): keep only measurements at or
-    * after the existing mart's max hour (boundary hour re-aggregates;
+  /** The refresh boundary cut (F3): the measurements at or after the
+    * existing mart's max hour. The boundary hour re-aggregates;
     * strictly-later-than-boundary late rows are silently dropped — the
-    * reference's documented behavior, SURVEY §2.9 T2), rebuild the pivot
-    * for that slice, and MERGE it over the existing mart by record key.
+    * reference's documented behavior, SURVEY §2.9 T2.
     */
-  def incrementalRefresh(existing: DataFrame, validMeasurements: DataFrame,
-                         sensorsEnriched: DataFrame, keyName: String,
-                         pivot: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+  private[pipeline] def freshSlice(existing: DataFrame, validMeasurements: DataFrame): DataFrame = {
     val bound = existing.agg(max(col("measurement_hour_utc")).as("__bound"))
-    val fresh = validMeasurements
+    validMeasurements
       .crossJoin(broadcast(bound))
       .filter(col("measured_from_utc") >= col("__bound"))
       .drop("__bound")
-    Merge.upsert(existing, pivot(fresh, sensorsEnriched), Seq(keyName))
   }
+
+  /** Incremental mart refresh (T2/F3/A6): rebuild the pivot for the
+    * [[freshSlice]] and MERGE it over the existing mart by record key.
+    */
+  def incrementalRefresh(existing: DataFrame, validMeasurements: DataFrame,
+                         sensorsEnriched: DataFrame, keyName: String,
+                         pivot: (DataFrame, DataFrame) => DataFrame): DataFrame =
+    Merge.upsert(existing, pivot(freshSlice(existing, validMeasurements), sensorsEnriched),
+      Seq(keyName))
 }

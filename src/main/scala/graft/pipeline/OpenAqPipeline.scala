@@ -83,9 +83,9 @@ object OpenAqPipeline {
     * days) to change one boundary day; here only the partitions the
     * fresh slice touches are read, merged, and rewritten:
     *
-    *  1. boundary = existing mart's max hour (same cut as
-    *     `Gold.incrementalRefresh`, F3 semantics: boundary hour
-    *     re-aggregates, strictly-late rows drop);
+    *  1. boundary = existing mart's max hour (`Gold.freshSlice`, the
+    *     same cut as `Gold.incrementalRefresh`, F3 semantics: boundary
+    *     hour re-aggregates, strictly-late rows drop);
     *  2. the re-pivoted fresh slice determines the touched day set —
     *     for a daily T-1 run that is 1–2 partitions out of thousands;
     *  3. only those days of the existing mart enter the merge (a
@@ -107,14 +107,9 @@ object OpenAqPipeline {
                   sensorsEnriched: DataFrame, keyName: String,
                   pivot: (DataFrame, DataFrame) => DataFrame,
                   path: String): Unit = {
-    import org.apache.spark.sql.functions.{broadcast, col, max, to_date}
+    import org.apache.spark.sql.functions.{broadcast, col, to_date}
     val existing = spark.read.parquet(path)
-    val bound = existing.agg(max(col("measurement_hour_utc")).as("__bound"))
-    val fresh = validMeasurements
-      .crossJoin(broadcast(bound))
-      .filter(col("measured_from_utc") >= col("__bound"))
-      .drop("__bound")
-    val batch = pivot(fresh, sensorsEnriched)
+    val batch = pivot(Gold.freshSlice(existing, validMeasurements), sensorsEnriched)
       .withColumn("__day", to_date(col("measurement_hour_utc")))
     val touchedDays = batch.select(col("__day")).distinct()
     val touchedExisting =

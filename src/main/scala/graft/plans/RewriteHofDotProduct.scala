@@ -16,8 +16,10 @@ import graft.functions.DotProductScaled
   * form is what a SQL user writes naturally, but Catalyst cannot
   * whole-stage-codegen lambda functions: every row pays interpreted
   * dispatch per element plus a materialized intermediate array (~10×
-  * in the ANN hot loop, ProfileScale). The two forms are semantically
-  * identical by construction — same IEEE ops per element, same int64
+  * in the ANN hot loop; SCALE.md "Two real super-linear findings"
+  * records the same interpreted-HOF cost for shingling). The two forms
+  * are semantically identical by construction — same IEEE ops per
+  * element, same int64
   * accumulation, same NULL result on null input, null element, or
   * length mismatch (zip_with pads with null → floor(null) → null sum)
   * — and the equivalence is pinned in DotProductScaledSpec, so the

@@ -855,7 +855,8 @@ object ExtQueries {
     //      ORACLE spelling (the band CTEs embed r literally); at corpus
     //      scale callers size the bands to n via
     //      Similarity.cosineNearDupLshSized (candidates drop from
-    //      n²/2^r to ~linear — NearDupScaleProbe, SCALE.md r15).
+    //      n²/2^r to ~linear — SCALE.md "Round 15: registry-wide sf1
+    //      scaling sweep").
     "x_semantic_dedup" -> ((s, d) => {
       val pairs = Similarity.cosineNearDupLsh(Tables.embeddings(s, d),
           "vec_id", "embedding", NearDupTau, NearDupPlanes,

@@ -28,9 +28,9 @@ object DrainWidth {
     // injected stats (checkpointWithStats) or file stats, so runtime
     // replanning buys nothing — but each AQE query stage materializes
     // as its own job, and at ~24 jobs per fold the driver-side stage
-    // machinery WAS the measured drain floor (DrainFloorProbe: job time
-    // ≪ wall time). Width is already pinned by the clamp; join sides
-    // still broadcast from static stats.
+    // machinery WAS the measured drain floor (SCALE.md "Round 11: the
+    // `t*` drain floor": job time ≪ wall time). Width is already pinned
+    // by the clamp; join sides still broadcast from static stats.
     spark.conf.set(aqe, "false")
     try body finally {
       spark.conf.set(conf, prev)

@@ -73,7 +73,8 @@ object StreamingAsOf {
     // replayed batch overwrites its own shard bit-for-bit, and the
     // per-batch right-store cost is O(delta) — a full-history rewrite
     // here measured as the one index-sized term in the fold
-    // (StreamIncProbe). Long streams consolidate shards offline with
+    // (SCALE.md "Round 10: streaming as-of + streaming BM25 — measured
+    // fold costs"). Long streams consolidate shards offline with
     // Compact.compactShards — behind the mart's _applied_batch
     // watermark, whose replay guard returns above BEFORE this shard
     // write (the property that makes consolidating applied batches
@@ -164,7 +165,8 @@ object StreamingAsOf {
     * min/max time for the A-prune, the touched-days computation and the
     * affected-window split, and until r11 paid one extra agg job per
     * side per batch for numbers the checkpoint scan already saw
-    * (DrainFloorProbe: the drain floor is job count, not bytes).
+    * (SCALE.md "Round 11: the `t*` drain floor, decomposed and cut":
+    * the drain floor is job count, not bytes).
     * Returns the stats-checkpointed delta plus `Some((min, max))` epoch
     * micros — None when the delta is empty OR its times are all NULL
     * (min over non-empty all-NULL input is NULL): a NULL-time right
@@ -361,7 +363,8 @@ object StreamingAsOf {
     // CLUSTER BY DAY first: an unclustered dynamic overwrite fans out to
     // one file per (task × day) — measured 115 files for a 30-day toy
     // mart, and the per-file open/commit machinery dominated the fold
-    // (DrainFloorProbe). Hashing days across tasks writes one file per
+    // (SCALE.md "Round 11: the `t*` drain floor"). Hashing days across
+    // tasks writes one file per
     // touched day; a production backfill whose single hot day outgrows
     // one task would add a salt column here, but the fold's steady state
     // touches the tolerance window's 1–2 days.

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
-import graft.pipeline.{Gold, Schemas, Silver}
+import graft.pipeline.{Bronze, Gold, Schemas, Silver}
 
 /** Streaming form of the OpenAQ ingestion→mart chain (SURVEY §2.9):
   * the lake NDJSON directory becomes a file-stream source (new
@@ -21,14 +21,10 @@ object StreamingOpenAq {
 
   /** Streaming bronze: watch a lake directory of measurement NDJSON. */
   def measurementsStream(spark: SparkSession, glob: String): DataFrame =
-    spark.readStream
+    Bronze.dropCorrupt(spark.readStream
       .schema(Schemas.measurementsEnvelope)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(glob)
-      .filter(org.apache.spark.sql.functions.col("_corrupt_record").isNull &&
-        org.apache.spark.sql.functions.col("data").isNotNull)
-      .drop("_corrupt_record")
+      .options(Bronze.NdjsonOptions)
+      .json(glob))
 
   /** Per-micro-batch: silver-extract, quality-gate, join the (static)
     * sensor dimension, aggregate to algebraic (sum, count) PARTIALS, and

@@ -52,7 +52,8 @@ object shims {
 
   /** Drain the async listener bus so task-end events posted by a just-
     * finished action are visible to listeners (`listenerBus` is
-    * `private[spark]`). Used by QueryMetrics to scope measurements.
+    * `private[spark]`). Used by QueryMetrics to scope measurements and
+    * by listener-based test assertions.
     */
   def waitForListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty(30000)
@@ -74,8 +75,8 @@ object shims {
     * builds the RDD lazily, the `count()` is the action that computes,
     * caches AND counts the blocks — measured construction 1.35–1.68 s
     * vs 1.38–1.58 s for `localCheckpoint(lazy)` + `Dataset.count()`
-    * on the 1.2 M-edge sf0.1 graph, identical within noise;
-    * TrianglePhaseProbe), measures the ACTUAL footprint of the cached
+    * on the 1.2 M-edge sf0.1 graph, identical within noise; SCALE.md
+    * "Round 8 … Cause 1"), measures the ACTUAL footprint of the cached
     * blocks (`getRDDStorageInfo`), and re-wraps the RDD in a
     * `LogicalRDD` carrying `Statistics(sizeInBytes = measured,
     * rowCount = exact)` plus the analyzed plan's constraint set.
@@ -94,14 +95,7 @@ object shims {
     * (same contract as a plain eager localCheckpoint).
     */
   def checkpointWithStats(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    checkpointVariant(df, keepStats = true, keepLayout = false)
-
-  /** Block until all queued SparkListener events are delivered —
-    * listener-based assertions (GraphSpec's fast-path boundary pin)
-    * need it, and `listenerBus` is private[spark].
-    */
-  def waitListenerBusEmpty(sc: org.apache.spark.SparkContext): Unit =
-    sc.listenerBus.waitUntilEmpty()
+    checkpointVariant(df, keepLayout = false)
 
   /** [[checkpointWithStats]] that ALSO returns the plan's observed
     * metrics (`Dataset.observe` / CollectMetrics rows, keyed by observe
@@ -124,7 +118,7 @@ object shims {
       : (org.apache.spark.sql.DataFrame, Map[String, org.apache.spark.sql.Row]) =
     if (planOnly) (df, Map.empty)
     else {
-      val out = checkpointVariantImpl(df, keepStats = true, keepLayout = false)
+      val out = checkpointVariantImpl(df, keepLayout = false)
       (out, df.queryExecution.observedMetrics)
     }
 
@@ -139,7 +133,7 @@ object shims {
     * only safe checkpoint for loop-fed frames in every mode.
     */
   def checkpointWithStatsEager(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    checkpointVariantImpl(df, keepStats = true, keepLayout = false)
+    checkpointVariantImpl(df, keepLayout = false)
 
   /** [[checkpointWithStatsObserved]]'s eager twin — runs even in
     * [[planOnly]] mode, for observe-carrying frames inside inherently
@@ -151,7 +145,7 @@ object shims {
     */
   def checkpointWithStatsObservedEager(df: org.apache.spark.sql.DataFrame)
       : (org.apache.spark.sql.DataFrame, Map[String, org.apache.spark.sql.Row]) = {
-    val out = checkpointVariantImpl(df, keepStats = true, keepLayout = false)
+    val out = checkpointVariantImpl(df, keepLayout = false)
     (out, df.queryExecution.observedMetrics)
   }
 
@@ -172,16 +166,13 @@ object shims {
     * 2 degree aggregates + 2 joins): layout-preserving ran the degree
     * stages TWICE, +2 jobs and ~1.5 s of its 7.2 s at sf0.1 — the
     * named r7 bench regression. The layout-free form restores
-    * exchange dedup (CkptBisectProbe: 12 jobs → 10, matching the
-    * plain lazy checkpoint).
+    * exchange dedup (12 jobs → 10, matching the plain lazy checkpoint —
+    * SCALE.md "Round 8 … Cause 1: layout-preserving checkpoints defeat
+    * AQE exchange dedup").
     */
   def checkpointWithStatsLayout(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    checkpointVariant(df, keepStats = true, keepLayout = true)
+    checkpointVariant(df, keepLayout = true)
 
-  /** [[checkpointWithStats]] with the restated ingredients toggleable —
-    * probe surface for isolating which ingredient perturbs a downstream
-    * plan (CkptBisectProbe).
-    */
   /** Plan-inspection mode (`-Dgraft.planOnly=true`, set by DumpPlans):
     * stats checkpoints degrade to LAZY checkpoints and count fallbacks
     * are skipped, so constructing an eager-contract DataFrame runs NO
@@ -202,14 +193,12 @@ object shims {
   def lazyCheckpoint(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     if (planOnly) df else df.localCheckpoint(eager = false)
 
-  def checkpointVariant(df: org.apache.spark.sql.DataFrame,
-      keepStats: Boolean, keepLayout: Boolean): org.apache.spark.sql.DataFrame = {
-    if (planOnly) return df
-    checkpointVariantImpl(df, keepStats, keepLayout)
-  }
+  private def checkpointVariant(df: org.apache.spark.sql.DataFrame,
+      keepLayout: Boolean): org.apache.spark.sql.DataFrame =
+    if (planOnly) df else checkpointVariantImpl(df, keepLayout)
 
   private def checkpointVariantImpl(df: org.apache.spark.sql.DataFrame,
-      keepStats: Boolean, keepLayout: Boolean): org.apache.spark.sql.DataFrame = {
+      keepLayout: Boolean): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, SortOrder}
     import org.apache.spark.sql.catalyst.plans.logical.Statistics
     import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, PartitioningCollection, UnknownPartitioning}
@@ -267,11 +256,9 @@ object shims {
       // blocks evicted / not yet reported: fall back to a width
       // estimate so the stat is still finite and row-count-accurate
       .getOrElse(rowCount * math.max(8L, qe.analyzed.schema.defaultSize.toLong))
-    val stats =
-      if (keepStats) Some(Statistics(
-        sizeInBytes = BigInt(math.max(measured, 1L)),
-        rowCount = Some(BigInt(rowCount))))
-      else None
+    val stats = Statistics(
+      sizeInBytes = BigInt(math.max(measured, 1L)),
+      rowCount = Some(BigInt(rowCount)))
     // Snapshot the analyzed plan's CONSTRAINTS (non-null facts etc.) the
     // way Dataset.localCheckpoint's `LogicalRDD.fromDataset` does.
     // Dropping them (the r7 build passed None) makes the optimizer
@@ -285,7 +272,7 @@ object shims {
     // constraint set applies without rewriting.
     val restated = new LogicalRDD(
       logicalOut, internalRdd, partitioning, ordering,
-      false, None)(session, stats, Some(qe.analyzed.constraints))
+      false, None)(session, Some(stats), Some(qe.analyzed.constraints))
     org.apache.spark.sql.classic.Dataset.ofRows(session, restated)
   }
 

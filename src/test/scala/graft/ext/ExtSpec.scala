@@ -243,7 +243,7 @@ class ExtSpec extends SparkSuite {
 
   test("sizedRowsPerBand follows the corpus and the sized LSH keeps true dups") {
     // ceil(log2(n/bucket)) clamped to [4, 24]: the sizing rule measured
-    // in NearDupScaleProbe (SCALE.md r15) as a function
+    // in SCALE.md "Round 15: registry-wide sf1 scaling sweep" as a function
     assert(Similarity.sizedRowsPerBand(0L) == 4)            // degenerate
     assert(Similarity.sizedRowsPerBand(1000L) == 4)         // 15 buckets
     assert(Similarity.sizedRowsPerBand(2000L) == 5)         // 31 buckets

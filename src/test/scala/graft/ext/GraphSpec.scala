@@ -206,7 +206,7 @@ class GraphSpec extends SparkSuite {
         spark.conf.set(key, threshold.toString)
         val r = Graph.componentsIncremental(labels, e2.toDF("u", "v"))
           .as[(Long, Long)].collect().toMap
-        org.apache.spark.sql.graft.shims.waitListenerBusEmpty(spark.sparkContext)
+        org.apache.spark.sql.graft.shims.waitForListenerBus(spark.sparkContext)
         (r, smallPathJobs.get())
       } finally {
         spark.conf.set(key, saved)

@@ -42,7 +42,8 @@ class IvfStoredSpec extends SparkSuite {
     // md5-bottom-k sample), never the index layout or the search path:
     // the stored search must still DPP-prune and return sane neighbors.
     // (Result parity with full training is a quality question, measured
-    // in IvfSampledProbe/SCALE.md r15 — not an equality contract.)
+    // in SCALE.md "Round 15: IVF centroid training sized and sampled" —
+    // not an equality contract.)
     val emb = Tables.embeddings(spark, sfDir)
     val queries = emb.filter(col("vec_id") < 10)
     val path = java.nio.file.Files.createTempDirectory("ivf_sampled").toString

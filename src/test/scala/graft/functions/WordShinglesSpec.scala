@@ -10,7 +10,8 @@ class WordShinglesSpec extends SparkSuite {
 
   /** Independent built-ins-only reference implementation, kept HERE (not
     * in TextOps, which delegates to the native expression — the HOF form
-    * is ~25× slower per row, ProfileScale): transform over positions,
+    * is ~25× slower per row, SCALE.md "Two real super-linear findings"):
+    * transform over positions,
     * element_at into the split. Exists purely so the native expression
     * is cross-checked against a formulation that shares none of its code.
     */
