@@ -336,17 +336,22 @@ object Similarity {
   }
 
   /** [[Numeric.scaledAvg]] at [[IvfScale]], replayed on the driver:
-    * floor(Σ floor(v·10^s + 0.5) / count + 0.5) / 10^s. The distributed
-    * sum is over integral doubles ≪ 2^53 — exact in any order — so a
-    * double accumulator reproduces it bit-for-bit.
+    * floor(CAST(Σ floor(v·10^s + 0.5) AS DOUBLE) / count + 0.5) / 10^s.
+    * `sum` is the BIGINT sum of [[scaledTermLocal]] terms, accumulated
+    * with [[addTerm]] exactly as the distributed sum is, so the twin
+    * stays bit-identical at any magnitude, past 2^53 included.
     */
-  @inline private def scaledAvgLocal(sum: Double, cnt: Long): Double = {
+  @inline private def scaledAvgLocal(sum: Long, cnt: Long): Double = {
     val f = 1000000L // 10^IvfScale
-    math.floor(sum / cnt + 0.5) / f
+    math.floor(sum.toDouble / cnt + 0.5) / f
   }
 
-  @inline private def scaledTermLocal(v: Float): Double =
-    math.floor(v.toDouble * 1000000L + 0.5)
+  /** floor(v·10^s + 0.5) as Spark's `floor` returns it: a BIGINT. */
+  @inline private def scaledTermLocal(v: Float): Long =
+    math.floor(v.toDouble * 1000000L + 0.5).toLong
+
+  /** One step of the distributed BIGINT sum: ANSI mode fails on overflow. */
+  @inline private def addTerm(sum: Long, term: Long): Long = Math.addExact(sum, term)
 
   /** One set of per-cluster [[Numeric.scaledAvg]] means — the
     * [[ivfUpdate]] algebra on driver arrays: per (cluster, dim)
@@ -355,7 +360,7 @@ object Similarity {
     * sorted by cluster id (output order is irrelevant downstream;
     * sorted for determinism of the LocalRelation).
     */
-  private def lloydMeans(members: java.util.TreeMap[Int, (Array[Double], Array[Long])])
+  private def lloydMeans(members: java.util.TreeMap[Int, (Array[Long], Array[Long])])
       : Array[(Int, Array[Float])] = {
     val out = new scala.collection.mutable.ArrayBuffer[(Int, Array[Float])](members.size)
     members.forEach { (cid, sc) =>
@@ -384,7 +389,7 @@ object Similarity {
       sorted.take(nClusters).zipWithIndex.map { case ((_, v), j) => (j, v) }
     for (_ <- 1 to iterations) {
       val n2s = cents.map { case (cid, c) => (cid, dotScaledLocal(c, c)) }
-      val members = new java.util.TreeMap[Int, (Array[Double], Array[Long])]()
+      val members = new java.util.TreeMap[Int, (Array[Long], Array[Long])]()
       rows.foreach { case (_, v) =>
         var bestD = Long.MaxValue; var bestC = Int.MaxValue; var j = 0
         while (j < cents.length) {
@@ -395,10 +400,10 @@ object Similarity {
           j += 1
         }
         val sc = members.computeIfAbsent(bestC,
-          _ => (new Array[Double](v.length), new Array[Long](v.length)))
+          _ => (new Array[Long](v.length), new Array[Long](v.length)))
         var d = 0
         while (d < v.length) {
-          sc._1(d) += scaledTermLocal(v(d)); sc._2(d) += 1L; d += 1
+          sc._1(d) = addTerm(sc._1(d), scaledTermLocal(v(d))); sc._2(d) += 1L; d += 1
         }
       }
       cents = lloydMeans(members)
@@ -426,7 +431,7 @@ object Similarity {
       while (s < m) {
         val bk = books(s)
         val n2s = bk.map { case (cid, c) => (cid, dotScaledLocal(c, c)) }
-        val members = new java.util.TreeMap[Int, (Array[Double], Array[Long])]()
+        val members = new java.util.TreeMap[Int, (Array[Long], Array[Long])]()
         rows.foreach { case (_, v) =>
           val sv = java.util.Arrays.copyOfRange(v, s * subDim, (s + 1) * subDim)
           var bestD = Long.MaxValue; var bestC = Int.MaxValue; var j = 0
@@ -438,10 +443,10 @@ object Similarity {
             j += 1
           }
           val sc = members.computeIfAbsent(bestC,
-            _ => (new Array[Double](sv.length), new Array[Long](sv.length)))
+            _ => (new Array[Long](sv.length), new Array[Long](sv.length)))
           var d = 0
           while (d < sv.length) {
-            sc._1(d) += scaledTermLocal(sv(d)); sc._2(d) += 1L; d += 1
+            sc._1(d) = addTerm(sc._1(d), scaledTermLocal(sv(d))); sc._2(d) += 1L; d += 1
           }
         }
         next(s) = lloydMeans(members)
@@ -682,23 +687,30 @@ object Similarity {
       org.apache.spark.sql.types.ArrayType(
         org.apache.spark.sql.types.FloatType))))
 
-  private def listsSchema(queries: DataFrame, idCol: String,
-                          vecCol: String): org.apache.spark.sql.types.StructType =
+  /** Stored inverted lists ([[writeIvfIndex]], [[ivfSink]]): the corpus
+    * contract's BIGINT id and ARRAY<FLOAT> vector, pinned like
+    * [[Retrieval.bm25TopKStored]]'s posting schema, whatever the types
+    * of the query frame that probes them.
+    */
+  private val ListsSchema =
     org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("neighbor_id",
-        queries.schema(idCol).dataType),
+        org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("c_vec",
-        queries.schema(vecCol).dataType),
+        org.apache.spark.sql.types.ArrayType(
+          org.apache.spark.sql.types.FloatType)),
       org.apache.spark.sql.types.StructField("c_n2",
         org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("cluster_id",
         org.apache.spark.sql.types.IntegerType)))
 
-  private def pqCodesSchema(queries: DataFrame, idCol: String,
-                            withCoarse: Boolean): org.apache.spark.sql.types.StructType =
+  /** Stored PQ codes, with `coarse_id` for IVF-PQ; `neighbor_id` pinned
+    * BIGINT as in [[ListsSchema]].
+    */
+  private def pqCodesSchema(withCoarse: Boolean): org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("neighbor_id",
-        queries.schema(idCol).dataType),
+        org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("sub",
         org.apache.spark.sql.types.IntegerType),
       org.apache.spark.sql.types.StructField("code",
@@ -766,7 +778,7 @@ object Similarity {
     // the bare attribute, and an EMPTY corpus's zero partition dirs
     // (schema-less layout) read as an empty index instead of failing
     // inference — the declared schema covers what the old try/catch did.
-    val lists = spark.read.schema(listsSchema(queries, idCol, vecCol))
+    val lists = spark.read.schema(ListsSchema)
       .parquet(s"$path/lists")
     ivfSearch(lists, cents, queries, idCol, vecCol, nProbe, k)
   }
@@ -1201,7 +1213,7 @@ object Similarity {
                    m: Int = 4, subDim: Int = 16, k: Int = 3): DataFrame =
     // declared index schemas — no per-probe footer inference (guide §6)
     pqSearch(
-      spark.read.schema(pqCodesSchema(queries, idCol, withCoarse = false))
+      spark.read.schema(pqCodesSchema(withCoarse = false))
         .parquet(s"$path/codes"),
       spark.read.schema(PqBookSchema).parquet(s"$path/codebooks"),
       queries, idCol, vecCol, m, subDim, k)
@@ -1461,7 +1473,7 @@ object Similarity {
     // writeIvfIndex's lists) read as an empty index under the declared
     // schema — covers what the old inference-failure catch did.
     val codes = spark.read
-      .schema(pqCodesSchema(queries, idCol, withCoarse = true))
+      .schema(pqCodesSchema(withCoarse = true))
       .parquet(s"$path/codes")
     ivfPqSearch(codes,
       spark.read.schema(CentroidSchema).parquet(s"$path/coarse"),

@@ -1,29 +1,57 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.graft.shims
 
 /** End-to-end orchestration of the medallion chain for one run
-  * (SURVEY §3): lake NDJSON → bronze → (lazy) silver/intermediate →
-  * materialized gold, with the reference's count-gated stages (T7) and
-  * the disaster-recovery full-reload path (§3.3).
+  * (SURVEY §3): lake NDJSON → bronze → silver (materialized once per
+  * run) → lazy intermediate → materialized gold, with the reference's
+  * count-gated stages (T7) and the disaster-recovery full-reload path
+  * (§3.3).
   *
-  * Staging/intermediate stay UNMATERIALIZED DataFrame vals — Catalyst
-  * inlines the whole chain into each mart job exactly as BigQuery inlines
-  * dbt views, giving cross-layer predicate pushdown and column pruning
-  * for free (SURVEY §3.2, §4).
+  * The three staging models are MATERIALIZED once per run (measured-stats
+  * local checkpoints), unlike the reference's dbt views, which every mart
+  * and every dbt test re-derives from bronze: the dim, both marts, the
+  * refresh and every check read the same rows, and the latest-wins
+  * winner is decided once. Intermediate and mart models stay lazy
+  * DataFrames over those checkpoints.
   */
 final case class OpenAqModels(
     stgLocations: DataFrame, stgSensors: DataFrame, stgMeasurements: DataFrame,
     sensorsEnriched: DataFrame, validMeasurements: DataFrame,
-    dimLocations: DataFrame, martAirQuality: DataFrame, martWeather: DataFrame)
+    dimLocations: DataFrame, martAirQuality: DataFrame, martWeather: DataFrame) {
+
+  /** Free the storage blocks of the three staging checkpoints. A
+    * long-lived session calls it after a run's last consumer; the models
+    * are unusable afterwards. Without it `ContextCleaner` frees the blocks
+    * once GC finds the models unreachable. Frames that are not
+    * checkpoints (plan-only mode) are left alone.
+    */
+  def release(): Unit =
+    Seq(stgLocations, stgSensors, stgMeasurements)
+      .filter(_.queryExecution.analyzed.isInstanceOf[LogicalRDD])
+      .foreach(shims.unpersistLocalCheckpoint)
+}
 
 object OpenAqPipeline {
 
-  /** Build every model lazily from the two bronze inputs. */
+  /** Build every model from the two bronze inputs: the three staging
+    * models are materialized here, each with one job (identity in
+    * plan-only mode); everything downstream stays lazy.
+    *
+    * Reading the staging rows back from checkpoint blocks counts as task
+    * input: the traced `pipebench` metric
+    * `daily_increment.silver.rows_scanned_per_fresh_row` (input records
+    * of the mart refreshes per loaded row) went from ~9 to ~21 with this
+    * materialization. That is a change in what the metric counts, not
+    * more work: the refreshes no longer parse bronze JSON at all.
+    */
   def models(rawLocations: DataFrame, rawMeasurements: DataFrame): OpenAqModels = {
-    val locs = Silver.stgLocations(rawLocations)
-    val sens = Silver.stgSensors(rawLocations)
-    val meas = Silver.stgMeasurements(rawMeasurements)
+    val locs = shims.checkpointWithStats(Silver.stgLocations(rawLocations))
+    val sens = shims.checkpointWithStats(Silver.stgSensors(rawLocations))
+    val meas = shims.checkpointWithStats(Silver.stgMeasurements(rawMeasurements))
     val enriched = Gold.intSensorsEnriched(sens, locs)
     val valid = Gold.intValidMeasurements(meas)
     OpenAqModels(locs, sens, meas, enriched, valid,
@@ -34,17 +62,24 @@ object OpenAqPipeline {
 
   /** Ingest one run's lake files into bronze (count-gated append, T7):
     * returns loaded row counts; zero-row inputs skip the write exactly
-    * like the reference's branch operators (dags/01:104-119).
+    * like the reference's branch operators (dags/01:104-119). Each input
+    * is parsed once: the gate is a limit-1 `isEmpty` probe and the count
+    * is observed during the write itself.
     */
   def ingest(spark: SparkSession, locationsGlob: String, measurementsGlob: String,
              bronzeDir: String): (Long, Long) = {
-    val rawLoc = Bronze.readNdjson(spark, Schemas.locationsEnvelope, locationsGlob)
-    val rawMeas = Bronze.readNdjson(spark, Schemas.measurementsEnvelope, measurementsGlob)
-    val nLoc = rawLoc.count()
-    if (nLoc > 0) Bronze.appendPartitioned(rawLoc, s"$bronzeDir/raw_locations")
-    val nMeas = rawMeas.count()
-    if (nMeas > 0) Bronze.appendPartitioned(rawMeas, s"$bronzeDir/raw_measurements",
-      clusterBy = MeasurementsCluster)
+    def load(raw: DataFrame, path: String, clusterBy: Seq[String]): Long =
+      if (raw.isEmpty) 0L
+      else {
+        val rows = Observation()
+        Bronze.appendPartitioned(raw.observe(rows, count(lit(1)).as("rows")), path,
+          clusterBy = clusterBy)
+        rows.get("rows").asInstanceOf[Long]
+      }
+    val nLoc = load(Bronze.readNdjson(spark, Schemas.locationsEnvelope, locationsGlob),
+      s"$bronzeDir/raw_locations", Nil)
+    val nMeas = load(Bronze.readNdjson(spark, Schemas.measurementsEnvelope, measurementsGlob),
+      s"$bronzeDir/raw_measurements", MeasurementsCluster)
     (nLoc, nMeas)
   }
 

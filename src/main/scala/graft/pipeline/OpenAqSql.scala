@@ -5,8 +5,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** SQL surface: registers every medallion model as a temp view under its
   * dbt name, so a user of the reference's BigQuery/dbt project can run
   * their SQL against this engine with `spark.sql(...)` — same model
-  * names, same columns. Views are lazy: querying a view plans the whole
-  * fused medallion chain through Catalyst (view-inlining parity).
+  * names, same columns. The staging views read the run's materialized
+  * staging rows (see [[OpenAqModels]]); querying any later view plans
+  * the intermediate and mart chain over them through Catalyst.
   */
 object OpenAqSql {
 

@@ -67,6 +67,32 @@ class IvfStoredSpec extends SparkSuite {
     assert(pqStored.collect().nonEmpty)
   }
 
+  test("stored probes read BIGINT ids and ARRAY<FLOAT> vectors whatever the query id type") {
+    val emb = Tables.embeddings(spark, sfDir)
+    val queries = emb.filter(col("vec_id") < 10)
+    val intQueries = queries.withColumn("vec_id", col("vec_id").cast("int"))
+    def dir(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    val (ivf, pq, ivfPq) = (dir("ivf_types"), dir("pq_types"), dir("ivfpq_types"))
+    Similarity.writeIvfIndex(emb, "vec_id", "embedding", nClusters = 4, iterations = 2,
+      path = ivf)
+    Similarity.writePqIndex(emb, "vec_id", "embedding", 4, 16, ks = 4, iterations = 2,
+      path = pq)
+    Similarity.writeIvfPqIndex(emb, "vec_id", "embedding", nCoarse = 4, coarseIters = 2,
+      m = 4, subDim = 16, ks = 4, pqIters = 2, path = ivfPq)
+    def rows(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
+      df.select(df.columns.map(c => col(c).cast("string")).toSeq: _*)
+        .collect().map(_.toSeq).toSet
+    for ((name, probe) <- Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
+        "ivf" -> (q => Similarity.ivfTopKStored(spark, ivf, q, "vec_id", "embedding")),
+        "pq" -> (q => Similarity.pqTopKStored(spark, pq, q, "vec_id", "embedding", 4, 16)),
+        "ivfpq" -> (q => Similarity.ivfPqTopKStored(spark, ivfPq, q, "vec_id", "embedding",
+          m = 4, subDim = 16)))) {
+      val expected = rows(probe(queries))
+      assert(expected.nonEmpty, name)
+      assert(rows(probe(intQueries)) == expected, s"$name: INT query ids changed the result")
+    }
+  }
+
   test("auto training mode: full below the measured crossover, sampled above (r16)") {
     // the decision rule itself, at the documented boundary
     assert(!Similarity.autoSampledTraining(Similarity.AutoSampledTrainingRows - 1))

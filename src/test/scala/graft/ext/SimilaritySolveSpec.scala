@@ -74,6 +74,22 @@ class SimilaritySolveSpec extends SparkSuite {
       smallSolveBytes = 0L)))
   }
 
+  test("driver twin sums scaled terms in BIGINT, like the loop, past 2^53") {
+    // dim 0 terms: 0, ~1e18, 1e6, -~1e18. A double accumulator rounds the
+    // 1e6 term away next to ~1e18; the BIGINT sum keeps it exactly.
+    val c = Seq((0L, Seq(0f, 0f)), (1L, Seq(1e12f, 1f)), (2L, Seq(1f, 2f)),
+      (3L, Seq(-1e12f, 3f))).toDF("vec_id", "embedding")
+    val fast = Similarity.ivfCentroids(c, "vec_id", "embedding", 1, 1)
+    val loop = Similarity.ivfCentroids(c, "vec_id", "embedding", 1, 1, smallSolveBytes = 0L)
+    assert(isLocal(fast) && !isLocal(loop))
+    assert(rowsOf(fast) == rowsOf(loop))
+    assert(rowsOf(fast) == Seq((0, Seq(0.25f, 1.5f))))
+    val pqFast = Similarity.pqCodebooks(c, "vec_id", "embedding", 2, 1, 1, 1)
+    assert(isLocal(pqFast))
+    assert(pqRowsOf(pqFast) == pqRowsOf(Similarity.pqCodebooks(c, "vec_id", "embedding",
+      2, 1, 1, 1, smallSolveBytes = 0L)))
+  }
+
   test("empty corpus: both paths yield an empty model") {
     val empty = Seq.empty[(Long, Seq[Float])].toDF("vec_id", "embedding")
     assert(Similarity.ivfCentroids(empty, "vec_id", "embedding", 4, 2).count() == 0)

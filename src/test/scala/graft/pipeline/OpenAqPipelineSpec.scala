@@ -125,6 +125,35 @@ class OpenAqPipelineSpec extends SparkSuite {
       .forall(_._2 == 0L))
   }
 
+  test("staging is materialized once: no downstream model re-parses bronze JSON") {
+    import org.apache.spark.sql.catalyst.expressions.{GetJsonObject, JsonToStructs}
+    import org.apache.spark.sql.execution.LogicalRDD
+    for (df <- Seq(m.stgLocations, m.stgSensors, m.stgMeasurements))
+      assert(df.queryExecution.analyzed.isInstanceOf[LogicalRDD])
+    for (df <- Seq(m.sensorsEnriched, m.validMeasurements, m.dimLocations,
+        m.martAirQuality, m.martWeather)) {
+      val parses = df.queryExecution.optimizedPlan.collect { case n => n.expressions }
+        .flatten.flatMap(_.collect { case j: JsonToStructs => j; case g: GetJsonObject => g })
+      assert(parses.isEmpty, df.queryExecution.optimizedPlan.treeString)
+    }
+  }
+
+  test("release frees the staging checkpoint blocks") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.graft.TestBlocks
+    val run = OpenAqPipeline.models(rawLoc, rawMeas)
+    val ids = Seq(run.stgLocations, run.stgSensors, run.stgMeasurements)
+      .map(_.queryExecution.analyzed.asInstanceOf[LogicalRDD].rdd.id).toSet
+    val sc = spark.sparkContext
+    assert(TestBlocks.rddBlocks(sc, ids) > 0)
+    run.release()
+    assert(ids.forall(id => !sc.getPersistentRDDs.contains(id)))
+    // block removal is asynchronous
+    val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
+    while (TestBlocks.rddBlocks(sc, ids) > 0 && System.nanoTime < deadline) Thread.sleep(50)
+    assert(TestBlocks.rddBlocks(sc, ids) == 0)
+  }
+
   test("source freshness two-band check mirrors src_openaq.yml") {
     val maxTs = rawMeas.agg(max($"_audit_extracted_at")).collect().head.getTimestamp(0)
     def violations(hoursLater: Int): Long = Checks.run(OpenAqChecks.freshness(rawMeas,
