@@ -5,11 +5,20 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
-/** Regenerate PLANS.md: the committed `explain formatted` record for the
-  * headline queries, so plan shapes are reviewable without running the
-  * engine. Run after changing any listed query:
+/** The plan recorder, in plan-only mode (`spark.graft.planOnly`), so
+  * checkpoint-backed queries show their full derivation. Two uses:
   *
   *   sbt "runMain graft.DumpPlans"
+  *     regenerates PLANS.md: the committed `explain formatted` record for
+  *     the headline queries, so plan shapes are reviewable without
+  *     running the engine. Run after changing any listed query.
+  *
+  *   sbt "runMain graft.DumpPlans <suffix> <q1,q2,...> [tag]"
+  *     writes `plans/<tag>/<query>_<suffix>.txt` (tag defaults to r16) —
+  *     the before/after evidence an optimization round commits
+  *     (OPTIMIZATION_r16.md).
+  *
+  * Queries run against SPARK_GRAFT_SF_DIR (default sf0.01), as in Bench.
   */
 object DumpPlans {
 
@@ -87,32 +96,49 @@ object DumpPlans {
   )
 
   def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     // plan-inspection mode: eager-contract queries (stats checkpoints)
     // build WITHOUT running jobs, and explain shows the full
     // unmaterialized derivation — see shims.planOnly
-    System.setProperty("graft.planOnly", "true")
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val spark = GraftSession.configure(
-      SparkSession.builder().master("local[8]"), 8).getOrCreate()
+      SparkSession.builder().master("local[8]")
+        .config(org.apache.spark.sql.graft.shims.PlanOnlyConf, "true"), 8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    def plan(name: String): String =
+      SparkEntry.queries(name)(spark, sfDir).queryExecution
+        .explainString(ExplainMode.fromString("formatted")).trim
+    if (args.isEmpty) writePlansMd(sfDir, plan)
+    else {
+      val suffix = args(0)
+      val names = args.lift(1).map(_.split(",").map(_.trim).toSeq).getOrElse(Seq.empty)
+      val tag = args.lift(2).getOrElse("r16")
+      val dir = Paths.get(s"plans/$tag")
+      Files.createDirectories(dir)
+      names.foreach { name =>
+        Files.writeString(dir.resolve(s"${name}_$suffix.txt"), plan(name) + "\n")
+        println(s"wrote plans/$tag/${name}_$suffix.txt")
+      }
+    }
+    spark.stop()
+  }
+
+  private def writePlansMd(sfDir: String, plan: String => String): Unit = {
     val sb = new StringBuilder
     sb ++= "# PLANS — committed `explain formatted` for the headline queries\n\n"
     sb ++= "Generated by `graft.DumpPlans` (re-run after changing a listed\n"
     sb ++= s"query; data dir $sfDir). The one-line note above each plan states\n"
     sb ++= "the property the plan must keep — the same properties PlanSpec and\n"
     sb ++= "ShuffleBudgetSpec enforce in CI. AQE nodes appear as the initial\n"
-    sb ++= "(pre-runtime) plan. Dumped in plan-only mode (graft.planOnly):\n"
+    sb ++= "(pre-runtime) plan. Dumped in plan-only mode (spark.graft.planOnly):\n"
     sb ++= "eager stats checkpoints are skipped, so checkpoint-backed queries\n"
     sb ++= "show their FULL derivation here where production runs read\n"
     sb ++= "materialized blocks (Scan ExistingRDD) at the checkpoint cuts.\n"
     headline.foreach { case (name, note) =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
       sb ++= s"\n## $name\n\n$note\n\n```\n"
-      sb ++= df.queryExecution.explainString(ExplainMode.fromString("formatted")).trim
+      sb ++= plan(name)
       sb ++= "\n```\n"
     }
     Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println(s"wrote PLANS.md (${headline.size} plans)")
-    spark.stop()
   }
 }

@@ -529,17 +529,13 @@ object DedupOps {
     * needs: returns (labels, rounds actually executed). Rounds should
     * grow ~log(component diameter); a super-logarithmic round count on a
     * scale-up is the early-warning signal (asserted in ResolveSpec,
-    * logged by ScaleSmoke).
+    * logged by ScaleSmoke). Rounds = 0 signals the broadcast-small
+    * driver solve took the query ([[shims.broadcastSmall]]: the
+    * session's `spark.sql.autoBroadcastJoinThreshold` is the one switch
+    * — ResolveSpec sets it to -1 where it pins the distributed loop's
+    * round counts).
     */
-  /** @param smallSolveBytes broadcast-small fast-path bound in BYTES for
-    *   the symmetrized edge checkpoint (-1 = the session's
-    *   `spark.sql.autoBroadcastJoinThreshold`; 0 disables — ResolveSpec
-    *   uses 0 where it pins the distributed loop's round counts).
-    *   Rounds = 0 signals the driver solve took the query.
-    */
-  def resolveComponentsCounted(pairs: DataFrame,
-                               maxIterations: Int = 50,
-                               smallSolveBytes: Long = -1L): (DataFrame, Int) = {
+  def resolveComponentsCounted(pairs: DataFrame, maxIterations: Int = 50): (DataFrame, Int) = {
     // Per-round checkpoints MUST reinject measured stats, not snapshot
     // the origin plan's estimate: a plain localCheckpoint(eager) copies
     // the SizeInBytesOnly join-PRODUCT estimate into the LogicalRDD, and
@@ -568,14 +564,9 @@ object DedupOps {
     // broadcast on, so "fits a broadcast" ⇒ the driver union-find
     // replaces ~log(diameter) rounds of distributed jobs. Row-identical
     // labeling (ResolveSpec differential); rounds reported as 0.
-    val smallLimit =
-      if (smallSolveBytes == 0L) 0L
-      else if (smallSolveBytes > 0L) smallSolveBytes
-      else shims.autoBroadcastThresholdBytes(pairs.sparkSession).max(0L)
     val allLong = edges.schema.fields.forall(_.dataType ==
       org.apache.spark.sql.types.LongType)
-    if (!shims.planOnly && smallLimit > 0L && allLong &&
-        shims.statsSizeInBytes(edges).exists(sz => sz > 0 && sz <= smallLimit)) {
+    if (allLong && shims.broadcastSmall(edges)) {
       val solved = resolveComponentsSmall(edges)
       shims.unpersistLocalCheckpoint(edges)
       return (solved.select(col("doc_id"), col("label").as("keep_id")), 0)

@@ -156,8 +156,7 @@ object Graph {
     // co-occurrence delta that's a full self-join per reference).
     // Measured stats also let AQE broadcast the delta-sized sides, which
     // is the whole point: |delta| ≪ |standing table|.
-    val delta = if (shims.planOnly) newEdges.select(col("u"), col("v"))
-      else shims.checkpointWithStats(newEdges.select(col("u"), col("v")))
+    val delta = shims.checkpointWithStats(newEdges.select(col("u"), col("v")))
     // BROADCAST-SMALL FAST PATH (r9 VERDICT #5): the distributed fold
     // below has a ~3 s machinery floor per call — a second stats
     // checkpoint plus an iterative contraction solve whose per-round
@@ -165,21 +164,20 @@ object Graph {
     // regime this operator exists for (|delta| ≪ |standing|) is exactly
     // the regime where the CONTRACTED graph fits in a broadcast: its
     // node set is delta endpoints only. So when the measured delta is
-    // under the session's broadcast threshold — the same number AQE
-    // would use to broadcast it — solve the contraction with a driver
-    // union-find over the collected delta (the build side of a
-    // broadcast hash join collects the same bytes to the driver), and
+    // under the session's broadcast threshold ([[shims.broadcastSmall]],
+    // the one switch) — the same number AQE would use to broadcast it —
+    // solve the contraction with a driver union-find over the collected
+    // delta (the build side of a broadcast hash join collects the same
+    // bytes to the driver), and
     // the whole fold becomes two standing-table scans with broadcast
     // joins: endpoint-label lookup + final remap. No second checkpoint,
     // no iterative jobs. Result is row-identical to the distributed
     // path (same contraction, same min-label algebra) — GraphSpec's
     // randomized differential and the x_components_incremental /
     // t10_streaming_components oracles pin both.
-    val smallDelta = !shims.planOnly &&
+    val smallDelta =
       (delta.schema.fields ++ labels.schema.fields).forall(_.dataType ==
-        org.apache.spark.sql.types.LongType) &&
-      shims.statsSizeInBytes(delta).exists(sz => sz > 0 &&
-        sz <= shims.autoBroadcastThresholdBytes(delta.sparkSession).max(1L))
+        org.apache.spark.sql.types.LongType) && shims.broadcastSmall(delta)
     if (smallDelta) return componentsIncrementalSmall(labels, delta)
     val nodes = delta.select(col("u").as("n"))
       .unionAll(delta.select(col("v").as("n"))).distinct()
@@ -193,7 +191,7 @@ object Graph {
     val lab0 = nodes.join(labels, Seq("n"), "left")
       .select(col("n"), coalesce(col("component"), col("n")).as("lbl"),
         col("component").isNull.as("__new"))
-    val lab = if (shims.planOnly) lab0 else shims.checkpointWithStats(lab0)
+    val lab = shims.checkpointWithStats(lab0)
     val contracted = delta
       .join(lab.select(col("n").as("u"), col("lbl").as("lu")), Seq("u"))
       .join(lab.select(col("n").as("v"), col("lbl").as("lv")), Seq("v"))
@@ -203,7 +201,7 @@ object Graph {
       .select(col("n").as("component"), col("component").as("__newc"))
     // connectedComponents materialized eagerly, so the delta blocks are
     // dead here (lab stays live: the result plan unions it below)
-    if (!shims.planOnly) shims.unpersistLocalCheckpoint(delta)
+    if (!shims.planOnly(newEdges.sparkSession)) shims.unpersistLocalCheckpoint(delta)
     // all labeled nodes: the standing table plus the delta's NEW
     // endpoints (disjoint by construction — no shuffle, no dedupe)
     val all = labels.unionByName(
@@ -408,6 +406,16 @@ object Graph {
       .limit(k)
   }
 
+  /** Whether a stats-checkpointed all-BIGINT frame may take the
+    * fixed-round driver solve (r16 — the
+    * [[DedupOps.resolveComponentsCounted]] cold-solve move applied to
+    * the peel/BFS/SSSP family): [[shims.broadcastSmall]], the session's
+    * broadcast threshold, is the one switch.
+    */
+  private def fitsSmall(ck: DataFrame): Boolean =
+    ck.schema.fields.forall(_.dataType == org.apache.spark.sql.types.LongType) &&
+      shims.broadcastSmall(ck)
+
   /** `rounds` simultaneous peeling rounds toward the k-core: each round
     * drops every node whose CURRENT degree is below `k` (both endpoints
     * must survive for an edge to survive), then recomputes degrees on
@@ -423,29 +431,12 @@ object Graph {
     * 3× per round (the symmetrized list has three consumers), and the
     * keep side auto-broadcasts from measured stats — no hints. Prior
     * rounds' blocks are freed as soon as the next round materializes.
+    * A symmetrized edge list that fits the session's broadcast
+    * threshold is peeled on the driver instead ([[fitsSmall]]); setting
+    * `spark.sql.autoBroadcastJoinThreshold` to -1 keeps the rounds
+    * distributed.
     */
-  /** Broadcast-small bound for the fixed-round driver solves (r16 —
-    * the [[DedupOps.resolveComponentsCounted]] cold-solve move applied
-    * to the peel/BFS/SSSP family): -1 = the session's auto-broadcast
-    * threshold, 0 disables (GraphSpec's early-exit job pins force the
-    * distributed loop with it), >0 = explicit bytes.
-    */
-  private def smallGraphLimit(df: DataFrame, smallSolveBytes: Long): Long =
-    if (smallSolveBytes == 0L) 0L
-    else if (smallSolveBytes > 0L) smallSolveBytes
-    else shims.autoBroadcastThresholdBytes(df.sparkSession).max(0L)
-
-  /** Whether a stats-checkpointed all-BIGINT frame fits the driver-solve
-    * bound — the same measured footprint AQE would broadcast on.
-    */
-  private def fitsSmall(ck: DataFrame, limit: Long): Boolean =
-    !shims.planOnly && limit > 0L &&
-      ck.schema.fields.forall(_.dataType ==
-        org.apache.spark.sql.types.LongType) &&
-      shims.statsSizeInBytes(ck).exists(sz => sz > 0 && sz <= limit)
-
-  def kCorePeel(edges: DataFrame, k: Int, rounds: Int,
-                smallSolveBytes: Long = -1L): DataFrame = {
+  def kCorePeel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     var sym = shims.checkpointWithStats(
@@ -456,7 +447,7 @@ object Graph {
     // survives iff BOTH endpoints keep degree ≥ k; early exit when a
     // round drops nothing (the loop's strict-shrink check). Identical
     // rows to the distributed rounds (GraphSpec differential).
-    if (fitsSmall(sym, smallGraphLimit(sym, smallSolveBytes))) {
+    if (fitsSmall(sym)) {
       val spark = edges.sparkSession
       import spark.implicits._
       var cur = sym.collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -523,9 +514,10 @@ object Graph {
     * the candidate set, one anti-join against the node-bounded settled
     * set. Rounds materialize through stats-carrying checkpoints and
     * free the previous round's blocks — the kCorePeel lifetime pattern.
+    * Driver solve and its one switch, the session's broadcast
+    * threshold: as [[kCorePeel]].
     */
-  def bfsHops(edges: DataFrame, seeds: DataFrame, rounds: Int,
-              smallSolveBytes: Long = -1L): DataFrame = {
+  def bfsHops(edges: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
     var settled = shims.checkpointWithStats(
       seeds.select(col("n")).distinct().select(col("n"), lit(0L).as("hops")))
@@ -538,7 +530,7 @@ object Graph {
     // neighbors of round i−1's frontier; early exit on an empty
     // frontier. Row-identical to the distributed rounds (GraphSpec
     // differential).
-    if (fitsSmall(sym, smallGraphLimit(sym, smallSolveBytes)) &&
+    if (fitsSmall(sym) &&
         settled.schema("n").dataType == org.apache.spark.sql.types.LongType) {
       val spark = edges.sparkSession
       import spark.implicits._
@@ -617,9 +609,10 @@ object Graph {
     * changed set (auto-broadcast from checkpoint stats), one min-agg
     * on candidates, one min-merge + improvement filter against the
     * node-bounded distance table. kCorePeel checkpoint lifetimes.
+    * Driver solve and its one switch, the session's broadcast
+    * threshold: as [[kCorePeel]].
     */
-  def ssspRounds(edges: DataFrame, seeds: DataFrame, rounds: Int,
-                 smallSolveBytes: Long = -1L): DataFrame = {
+  def ssspRounds(edges: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
     var dist = shims.checkpointWithStats(
       seeds.select(col("n")).distinct().select(col("n"), lit(0L).as("dist")))
@@ -633,7 +626,7 @@ object Graph {
     // strict improvements; early exit when nothing improves. Exact
     // integers, row-identical to the distributed rounds (GraphSpec
     // differential).
-    if (fitsSmall(sym, smallGraphLimit(sym, smallSolveBytes)) &&
+    if (fitsSmall(sym) &&
         dist.schema("n").dataType == org.apache.spark.sql.types.LongType) {
       val spark = edges.sparkSession
       import spark.implicits._
@@ -798,7 +791,7 @@ object Graph {
     // the count is the action that materializes the checkpoint blocks
     // (one pass); its value drives ONLY the broadcast-vs-shuffle
     // decision and the `edges` output literal
-    val eCount = if (shims.planOnly) 0L else e.count()
+    val eCount = if (shims.planOnly(e.sparkSession)) 0L else e.count()
     // o stays a LAZY checkpoint: its first consumer materializes it in
     // the same pass (an eager stats checkpoint costs an extra edge-sized
     // pass + cache write, measured 1.3× on the whole query at sf0.1),
@@ -895,7 +888,7 @@ object Graph {
     // lazy + count, same reasoning as triangleStats: strategies are
     // explicit, the frame is multi-referenced
     val e = shims.lazyCheckpoint(edges)
-    val eCount = if (shims.planOnly) 0L else e.count()
+    val eCount = if (shims.planOnly(e.sparkSession)) 0L else e.count()
     val o = shims.lazyCheckpoint(orientByDegree(e))
     // the center filter lands on the checkpointed scan BEFORE any
     // enumeration — sampling a center keeps its WHOLE out-list (the

@@ -269,8 +269,7 @@ object Retrieval {
     * replay; result-identical (StreamingBm25Spec pins parity).
     */
   def availableNowBm25(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String,
-      compact: Boolean = graft.streaming.DrainCompact.enabled): DataFrame = {
+      sfDir: String, compact: Boolean = false): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     val work = graft.streaming.DrainWork.tempDir("graft_stream_bm25")
     val src = s"$work/docs"

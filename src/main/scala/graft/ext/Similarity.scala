@@ -127,7 +127,8 @@ object Similarity {
     // the argmin algebra — least(struct(dist, cid)) — IS Min's update
     // expression, so ties and null-distance handling match bit-for-bit;
     // SimilaritySolveSpec differential). Falls through untouched for
-    // lazy model plans (the Lloyd loop), big models, or planOnly.
+    // lazy model plans (the Lloyd loop), big models, or a session whose
+    // broadcast threshold is off ([[smallModelRows]]).
     smallModelRows(centroids, probeStored) match {
       case Some(cents) if cents.nonEmpty =>
         corpus.select(col(idCol), col(vecCol),
@@ -152,24 +153,23 @@ object Similarity {
     * 100 TB) never pass this, so the relational shape stays the scale
     * path.
     */
-  // def reading a system property, not a val: the differential spec
-  // (and any operator) can force the relational shape with
-  // -Dgraft.annLiteralCells=0
-  private def MaxLiteralCells: Int =
-    Integer.getInteger("graft.annLiteralCells", 64)
+  private final val MaxLiteralCells = 64
 
   /** Collected rows of a SMALL model table for the literal-argmin
-    * assigns, or None to keep the relational path. Collects only what
-    * is free or known-bounded: a LocalRelation (driver-solved trainer —
-    * no job), a measured stats checkpoint under [[MaxLiteralCells]]
-    * rows (local blocks — one trivial job), or — only when
-    * `probeStored` (the per-batch sinks, whose model is a just-written
-    * tiny parquet dir) — a limit-bounded collect. Lazy plans (the Lloyd
-    * loop's per-round models) are never probed.
+    * assigns, or None to keep the relational path. Inlining a model
+    * collects it to the driver, so it passes the same gate as the
+    * driver solves, [[shims.broadcastSmall]] — the session's broadcast
+    * threshold is the one switch (-1 keeps every assign relational).
+    * Collects only what is free or known-bounded: a LocalRelation
+    * (driver-solved trainer — no job), a measured stats checkpoint
+    * under [[MaxLiteralCells]] rows (local blocks — one trivial job),
+    * or — only when `probeStored` (the per-batch sinks, whose model is
+    * a just-written tiny parquet dir) — a limit-bounded collect. Lazy
+    * plans (the Lloyd loop's per-round models) are never probed.
     */
   private def smallModelRows(model: DataFrame, probeStored: Boolean)
       : Option[Array[org.apache.spark.sql.Row]] = {
-    if (shims.planOnly) return None
+    if (!shims.broadcastSmall(model)) return None
     def conv(rows: Array[org.apache.spark.sql.Row]): Option[Array[org.apache.spark.sql.Row]] =
       if (rows.length <= MaxLiteralCells &&
         rows.forall(r => !r.anyNull &&
@@ -239,7 +239,9 @@ object Similarity {
     * 2000 vectors ≈ 0.5 MB; wall-clock tracks job count ~120 ms/job).
     *
     * Honest gates, all falling through to the distributed loop:
-    *  - planOnly / smallSolveBytes == 0 (spec escape hatch);
+    *  - [[shims.broadcastSmall]] on the probe below — planOnly, or the
+    *    session's broadcast threshold off (-1) or exceeded, keeps the
+    *    loop; that threshold is the one switch;
     *  - id must be BIGINT and the vector ARRAY<FLOAT> (the repo-wide
     *    contract types the local twin mirrors);
     *  - a stats-checkpointed input (the sampled trainers' case — ALWAYS
@@ -266,13 +268,12 @@ object Similarity {
     * the ANN oracle rows.
     */
   private def collectSmallTraining(corpus: DataFrame, idCol: String,
-      vecCol: String, smallSolveBytes: Long,
-      requireLen: Option[Int]): Option[Array[(Long, Array[Float])]] = {
-    if (shims.planOnly || smallSolveBytes == 0L) return None
-    val limit =
-      if (smallSolveBytes > 0L) smallSolveBytes
-      else shims.autoBroadcastThresholdBytes(corpus.sparkSession).max(0L)
-    if (limit <= 0L) return None
+      vecCol: String, requireLen: Option[Int]): Option[Array[(Long, Array[Float])]] = {
+    // the gate's session half, checked first so a gate that is off
+    // anyway costs no probe job below
+    val spark = corpus.sparkSession
+    if (shims.planOnly(spark) || shims.autoBroadcastThresholdBytes(spark) <= 0L)
+      return None
     val idOk = corpus.schema(idCol).dataType ==
       org.apache.spark.sql.types.LongType
     val vecOk = corpus.schema(vecCol).dataType match {
@@ -283,7 +284,7 @@ object Similarity {
     if (!idOk || !vecOk) return None
     def fits(df: DataFrame): Boolean =
       shims.statsRowCount(df).exists(n => n >= 0 && n <= MaxLocalTrainRows) &&
-        shims.statsSizeInBytes(df).exists(sz => sz > 0 && sz <= limit)
+        shims.broadcastSmall(df)
     val (probe, ownedCk) = corpus.queryExecution.analyzed match {
       case _: org.apache.spark.sql.execution.LogicalRDD => (corpus, None)
       case _ =>
@@ -482,16 +483,14 @@ object Similarity {
     * not the k-means optimum, and a fixed count keeps the result a pure
     * function of the data. Returns (cluster_id, cvec) centroids.
     *
-    * `smallSolveBytes` gates the broadcast-small DRIVER SOLVE
-    * ([[collectSmallTraining]]): -1 = the session's auto-broadcast
-    * threshold, 0 disables (the differential spec forces the
-    * distributed loop with it), >0 explicit bytes.
+    * A training set that fits the session's broadcast threshold is
+    * solved on the driver ([[collectSmallTraining]]); setting
+    * `spark.sql.autoBroadcastJoinThreshold` to -1 forces the
+    * distributed loop (the differential spec does).
     */
   def ivfCentroids(corpus: DataFrame, idCol: String, vecCol: String,
-                   nClusters: Int, iterations: Int,
-                   smallSolveBytes: Long = -1L): DataFrame = {
-    collectSmallTraining(corpus, idCol, vecCol, smallSolveBytes,
-        requireLen = None) match {
+                   nClusters: Int, iterations: Int): DataFrame = {
+    collectSmallTraining(corpus, idCol, vecCol, requireLen = None) match {
       case Some(rows) =>
         val cents = localIvfCentroids(rows, nClusters, iterations)
         return localModelFrame(corpus.sparkSession, Seq("cluster_id", "cvec"),
@@ -936,8 +935,7 @@ object Similarity {
     * probing — the opt-in maintenance posture, result-identical.
     */
   def availableNowIvf(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String,
-      compact: Boolean = graft.streaming.DrainCompact.enabled): DataFrame = {
+      sfDir: String, compact: Boolean = false): DataFrame = {
     val work = graft.streaming.DrainWork.tempDir("graft_stream_ann")
     val idx = s"$work/index"
     writeIvfModel(graft.Tables.embeddings(spark, sfDir)
@@ -1040,18 +1038,17 @@ object Similarity {
     * subvectors of the `ks` smallest ids), all rounds running for every
     * subspace in ONE set of jobs (the subspace id is just another group
     * key — m independent k-means for the price of one). Returns
-    * (sub, cluster_id, cvec).
+    * (sub, cluster_id, cvec). The driver solve and its one switch, the
+    * session's broadcast threshold, are [[ivfCentroids]]'.
     */
   def pqCodebooks(corpus: DataFrame, idCol: String, vecCol: String,
-                  m: Int, subDim: Int, ks: Int, iterations: Int,
-                  smallSolveBytes: Long = -1L): DataFrame = {
+                  m: Int, subDim: Int, ks: Int, iterations: Int): DataFrame = {
     // broadcast-small DRIVER SOLVE (see [[collectSmallTraining]]); the
     // uniform-length gate tightens to len == m·subDim so every slice is
     // exactly subDim wide — the only regime where the local twin's
     // copyOfRange mirrors slice() and the sub-codebook dots can't hit
     // the length-mismatch NULL algebra
-    collectSmallTraining(corpus, idCol, vecCol, smallSolveBytes,
-        requireLen = Some(m * subDim)) match {
+    collectSmallTraining(corpus, idCol, vecCol, requireLen = Some(m * subDim)) match {
       case Some(rows) =>
         val books = localPqCodebooks(rows, m, subDim, ks, iterations)
         return localModelFrame(corpus.sparkSession,
@@ -1585,8 +1582,7 @@ object Similarity {
     * probing — opt-in maintenance, result-identical.
     */
   def availableNowIvfPq(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String,
-      compact: Boolean = graft.streaming.DrainCompact.enabled): DataFrame = {
+      sfDir: String, compact: Boolean = false): DataFrame = {
     val work = graft.streaming.DrainWork.tempDir("graft_stream_ivfpq")
     val idx = s"$work/index"
     writeIvfPqModel(graft.Tables.embeddings(spark, sfDir)

@@ -179,7 +179,7 @@ object StreamingAsOf {
   private def checkpointWithTimeBounds(df: DataFrame, timeCol: String)
       : (DataFrame, Option[(Long, Long)]) = {
     val tUs = unix_micros(col(timeCol))
-    if (shims.planOnly) {
+    if (shims.planOnly(df.sparkSession)) {
       val ck = shims.checkpointWithStats(df)
       val b = df.agg(min(tUs), max(tUs)).head()
       return (ck, if (b.isNullAt(0)) None else Some((b.getLong(0), b.getLong(1))))
@@ -407,7 +407,7 @@ object StreamingAsOf {
     * split (oracle-pinned).
     */
   def availableNowAsOf(spark: SparkSession, sfDir: String,
-      compact: Boolean = DrainCompact.enabled): DataFrame = {
+      compact: Boolean = false): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     val work = DrainWork.tempDir("graft_stream_asof")
     val src = s"$work/events"

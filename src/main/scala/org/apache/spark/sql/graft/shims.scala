@@ -77,9 +77,9 @@ object shims {
     * vs 1.38–1.58 s for `localCheckpoint(lazy)` + `Dataset.count()`
     * on the 1.2 M-edge sf0.1 graph, identical within noise; SCALE.md
     * "Round 8 … Cause 1"), measures the ACTUAL footprint of the cached
-    * blocks (`getRDDStorageInfo`), and re-wraps the RDD in a
-    * `LogicalRDD` carrying `Statistics(sizeInBytes = measured,
-    * rowCount = exact)` plus the analyzed plan's constraint set.
+    * blocks (the block manager master's block statuses), and re-wraps
+    * the RDD in a `LogicalRDD` carrying `Statistics(sizeInBytes =
+    * measured, rowCount = exact)` plus the analyzed plan's constraint set.
     * Catalyst and AQE then pick broadcast / shuffled-hash joins from
     * REAL sizes — no hand hints at the call sites. Output
     * partitioning/ordering are NOT preserved here; see
@@ -116,7 +116,7 @@ object shims {
     */
   def checkpointWithStatsObserved(df: org.apache.spark.sql.DataFrame)
       : (org.apache.spark.sql.DataFrame, Map[String, org.apache.spark.sql.Row]) =
-    if (planOnly) (df, Map.empty)
+    if (planOnly(df.sparkSession)) (df, Map.empty)
     else {
       val out = checkpointVariantImpl(df, keepLayout = false)
       (out, df.queryExecution.observedMetrics)
@@ -173,15 +173,18 @@ object shims {
   def checkpointWithStatsLayout(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     checkpointVariant(df, keepLayout = true)
 
-  /** Plan-inspection mode (`-Dgraft.planOnly=true`, set by DumpPlans):
-    * stats checkpoints degrade to LAZY checkpoints and count fallbacks
-    * are skipped, so constructing an eager-contract DataFrame runs NO
-    * jobs — `explain` shows the full unmaterialized derivation, which
-    * is what a committed plan record wants anyway. Never set in
-    * production paths (Bench/Verify): the measured-stats planning IS
-    * the production behavior.
+  /** Plan-inspection mode (session conf `spark.graft.planOnly=true`,
+    * set by DumpPlans on its builder): stats checkpoints degrade to
+    * LAZY checkpoints and count fallbacks are skipped, so constructing
+    * an eager-contract DataFrame runs NO jobs — `explain` shows the full
+    * unmaterialized derivation, which is what a committed plan record
+    * wants anyway. Never set in production paths (Bench/Verify): the
+    * measured-stats planning IS the production behavior.
     */
-  def planOnly: Boolean = java.lang.Boolean.getBoolean("graft.planOnly")
+  def planOnly(spark: org.apache.spark.sql.SparkSession): Boolean =
+    spark.conf.get(PlanOnlyConf, "false").toBoolean
+
+  val PlanOnlyConf = "spark.graft.planOnly"
 
   /** A lazy checkpoint that degrades to a NO-OP in [[planOnly]] mode —
     * even `localCheckpoint(eager = false)` materializes every upstream
@@ -191,11 +194,11 @@ object shims {
     * is exactly what a committed plan record wants.
     */
   def lazyCheckpoint(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    if (planOnly) df else df.localCheckpoint(eager = false)
+    if (planOnly(df.sparkSession)) df else df.localCheckpoint(eager = false)
 
   private def checkpointVariant(df: org.apache.spark.sql.DataFrame,
       keepLayout: Boolean): org.apache.spark.sql.DataFrame =
-    if (planOnly) df else checkpointVariantImpl(df, keepLayout)
+    if (planOnly(df.sparkSession)) df else checkpointVariantImpl(df, keepLayout)
 
   private def checkpointVariantImpl(df: org.apache.spark.sql.DataFrame,
       keepLayout: Boolean): org.apache.spark.sql.DataFrame = {
@@ -249,13 +252,20 @@ object shims {
           Some(mapped)
         else None
       }
-    val measured = session.sparkContext.getRDDStorageInfo
-      .find(_.id == internalRdd.id)
-      .map(i => i.memSize + i.diskSize)
-      .filter(_ > 0L)
-      // blocks evicted / not yet reported: fall back to a width
-      // estimate so the stat is still finite and row-count-accurate
-      .getOrElse(rowCount * math.max(8L, qe.analyzed.schema.defaultSize.toLong))
+    // the block manager master's view, not `getRDDStorageInfo`: that one
+    // reads the app status store, which the listener bus feeds
+    // asynchronously, so under a busy bus it can miss blocks this job
+    // just stored and measure the same frame smaller
+    val stored = session.sparkContext.env.blockManager.master.getStorageStatus
+      .iterator.flatMap(_.rddBlocks).collect {
+        case (org.apache.spark.storage.RDDBlockId(id, _), st) if id == internalRdd.id =>
+          st.memSize + st.diskSize
+      }.sum
+    val measured =
+      if (stored > 0L) stored
+      // blocks evicted: fall back to a width estimate so the stat is
+      // still finite and row-count-accurate
+      else rowCount * math.max(8L, qe.analyzed.schema.defaultSize.toLong)
     val stats = Statistics(
       sizeInBytes = BigInt(math.max(measured, 1L)),
       rowCount = Some(BigInt(rowCount)))
@@ -325,15 +335,34 @@ object shims {
       case _ => None
     }
 
-  /** Measured byte size of a [[checkpointWithStats]] frame, from the
-    * injected statistics — no job. None for other plans. The broadcast-
-    * small test an operator uses to pick a driver-side fast path should
-    * read the same number AQE would use to pick a broadcast join.
+  /** Byte size of a frame whose size is known without a job: the
+    * measured footprint of a [[checkpointWithStats]] frame, the rows of
+    * a `LocalRelation`, or the files of a plain file scan (what
+    * Catalyst's own broadcast rule reads for them). None for other
+    * plans — a derived plan's estimate is never consulted.
     */
   def statsSizeInBytes(df: org.apache.spark.sql.DataFrame): Option[Long] =
     df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        Some(lr.computeStats().sizeInBytes.toLong)
+      case p @ (_: org.apache.spark.sql.execution.LogicalRDD |
+                _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation |
+                _: org.apache.spark.sql.execution.datasources.LogicalRelation) =>
+        Some(p.stats.sizeInBytes.toLong)
       case _ => None
     }
+
+  /** The one broadcast-small gate: whether a driver-side path (a
+    * collect-and-solve, or a model inlined as literals) may take `df`.
+    * True iff the session is not in [[planOnly]] mode, its
+    * `spark.sql.autoBroadcastJoinThreshold` is positive, and the frame's
+    * [[statsSizeInBytes]] lies in (0, threshold] — the same bytes a
+    * broadcast join would ship to the driver. Setting the threshold to
+    * -1 turns every driver-side path off, exactly as it turns off
+    * broadcast joins; callers add only their own type and row checks.
+    */
+  def broadcastSmall(df: org.apache.spark.sql.DataFrame): Boolean = {
+    val spark = df.sparkSession
+    val limit = autoBroadcastThresholdBytes(spark)
+    !planOnly(spark) && limit > 0L &&
+      statsSizeInBytes(df).exists(sz => sz > 0L && sz <= limit)
+  }
 }

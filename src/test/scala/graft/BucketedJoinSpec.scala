@@ -25,9 +25,7 @@ class BucketedJoinSpec extends SparkSuite {
         .bucketBy(8, "c_custkey").sortBy("c_custkey")
         .saveAsTable(s"$db.b_customer")
 
-      val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
-      try {
+      withConf(BroadcastThreshold -> "-1") { // force SMJ
         val joined = spark.table(s"$db.b_orders")
           .join(spark.table(s"$db.b_customer"),
             col("o_custkey") === col("c_custkey"))
@@ -46,14 +44,13 @@ class BucketedJoinSpec extends SparkSuite {
           .select(col("o_orderkey"), col("c_name"))
         assert(joined.count() == plain.count())
         assert(joined.exceptAll(plain).isEmpty && plain.exceptAll(joined).isEmpty)
-      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
+      }
     } finally spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
   }
 
   test("Bucketed operator: external path-based tables, exchange-free join, idempotent rewrite") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_bucketed_spec").toString
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
+    try withConf(BroadcastThreshold -> "-1") {
       // coalesce(1): one FILE per bucket, so the reader can trust the
       // per-bucket sort and skip the Sort under the SMJ (with multiple
       // files per bucket Spark keeps the partitioning but re-sorts)
@@ -70,7 +67,6 @@ class BucketedJoinSpec extends SparkSuite {
       writeBoth()
       writeBoth() // S12 discipline: re-running the write is a no-op semantically
 
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       val joined = graft.operators.Bucketed.coLocatedJoin(
         spark, "bs_orders", "bs_customer", "o_custkey", "c_custkey")
       val plan = joined.queryExecution.executedPlan.toString
@@ -83,23 +79,20 @@ class BucketedJoinSpec extends SparkSuite {
       // requires exactly one file per bucket — which writeBucketed's
       // caller guarantees here via coalesce(1)): with the flag, the SMJ
       // runs with neither Exchange NOR Sort
-      spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      try {
+      withConf("spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true") {
         val sortFree = graft.operators.Bucketed.coLocatedJoin(
           spark, "bs_orders", "bs_customer", "o_custkey", "c_custkey")
         val p2 = sortFree.queryExecution.executedPlan.toString
         assert(p2.contains("SortMergeJoin") && !p2.contains("Exchange") &&
           !p2.contains("Sort ["),
           s"bucketed+sorted scan must not re-sort under the flag:\n$p2")
-      } finally spark.conf.set(
-        "spark.sql.legacy.bucketedTableScan.outputOrdering", "false")
+      }
 
       val expected = Tables(spark, sfDir, "orders")
         .join(Tables(spark, sfDir, "customer"),
           col("o_custkey") === col("c_custkey")).count()
       assert(joined.count() == expected)
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
       spark.sql("DROP TABLE IF EXISTS bs_orders")
       spark.sql("DROP TABLE IF EXISTS bs_customer")
     }

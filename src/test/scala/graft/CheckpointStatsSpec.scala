@@ -26,6 +26,24 @@ class CheckpointStatsSpec extends SparkSuite {
     } finally shims.unpersistLocalCheckpoint(cp)
   }
 
+  test("measured size is the stored blocks' footprint, whatever the status queue's lag") {
+    // getRDDStorageInfo reads the app status store, fed by the async
+    // listener bus: with the status queue lagging, it missed blocks the
+    // checkpoint job had just stored, so the same frame measured smaller
+    // (the GraphSpec fast-path boundary flake). Eight partitions, so a
+    // lagging store would miss some of them.
+    import spark.implicits._
+    def size(): Long = {
+      val cp = shims.checkpointWithStats((0 until 400).map(i => (i.toLong, i * 7L)).toDF("u", "v")
+        .repartition(8))
+      try shims.statsSizeInBytes(cp).get finally shims.unpersistLocalCheckpoint(cp)
+    }
+    val quiet = size()
+    val lagging = org.apache.spark.sql.graft.TestBlocks.withSlowStatusQueue(
+      spark.sparkContext, delayMs = 20)(Seq.fill(3)(size()))
+    assert(lagging.forall(_ == quiet), s"quiet $quiet, lagging $lagging")
+  }
+
   test("observed-eager variant: metrics collected during the one materialization job") {
     // the r16 components-loop fusion: convergence ("did any label
     // change") rides the checkpoint's own materialization as an
@@ -105,8 +123,7 @@ class CheckpointStatsSpec extends SparkSuite {
 
   test("planOnly mode: constructing an eager-contract query runs zero jobs (DumpPlans contract)") {
     val tracker = spark.sparkContext.statusTracker
-    System.setProperty("graft.planOnly", "true")
-    try {
+    withConf(shims.PlanOnlyConf -> "true") {
       val before = tracker.getJobIdsForGroup(null).length
       val df = SparkEntry.queries("x_triangle_stats")(spark, "/root/testdata/sf0.001")
       val plan = df.queryExecution.explainString(
@@ -120,7 +137,7 @@ class CheckpointStatsSpec extends SparkSuite {
       // and the plan shows the UNCUT derivation, not checkpoint blocks
       assert(plan.contains("lineitem") && !plan.contains("ExistingRDD"),
         s"planOnly should expose the full derivation:\n$plan")
-    } finally System.clearProperty("graft.planOnly")
+    }
   }
 
   test("a multi-referenced default checkpoint keeps AQE exchange dedup (round-8 regression pin)") {

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The program's command-line entry points are a fixed set: the
   * registry bench and oracle dump (`Bench`, `Verify`), the plan
-  * recorders (`DumpPlans`, `DumpPlansR16`) and the data makers
+  * recorder (`DumpPlans`) and the data makers
   * (`MakeScale`, `ScaleSmoke`).
   * Measurements go through those and the pipeline benchmark
   * (`pipebench --trace 1`), not through one-off `main` objects: a
@@ -17,7 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class EntryPointsSpec extends AnyFunSuite {
 
-  private val Kept = Set("Bench", "Verify", "DumpPlans", "DumpPlansR16", "MakeScale", "ScaleSmoke")
+  private val Kept = Set("Bench", "Verify", "DumpPlans", "MakeScale", "ScaleSmoke")
 
   private val ObjectDecl = """\bobject\s+(\w+)""".r
   private val MainDecl = """\bdef\s+main\s*\(""".r

@@ -14,4 +14,23 @@ trait SparkSuite extends AnyFunSuite {
     appName = getClass.getSimpleName)
 
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Catalyst's broadcast threshold — also the one switch of every
+    * broadcast-small driver-side path (`shims.broadcastSmall`); -1 turns
+    * them all off.
+    */
+  val BroadcastThreshold = "spark.sql.autoBroadcastJoinThreshold"
+
+  /** Run `body` with the given session confs set, then restore each key's
+    * previous value (or unset it if it had none) — even if `body` throws.
+    */
+  def withConf[A](kvs: (String, String)*)(body: => A): A = {
+    val saved = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

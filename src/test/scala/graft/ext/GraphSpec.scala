@@ -150,13 +150,9 @@ class GraphSpec extends SparkSuite {
       .localCheckpoint(true)
     val small = Graph.componentsIncremental(labels, e2.toDF("u", "v"))
       .as[(Long, Long)].collect().toMap
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val saved = spark.conf.get(key)
-    val dist = try {
-      spark.conf.set(key, "-1")
+    val dist = withConf(BroadcastThreshold -> "-1")(
       Graph.componentsIncremental(labels, e2.toDF("u", "v"))
-        .as[(Long, Long)].collect().toMap
-    } finally spark.conf.set(key, saved)
+        .as[(Long, Long)].collect().toMap)
     val scratch = Graph.connectedComponents(all.toDF("u", "v"))
       .as[(Long, Long)].collect().toMap
     assert(small == scratch)
@@ -195,23 +191,17 @@ class GraphSpec extends SparkSuite {
         if (j.stageInfos.exists(_.details.contains("componentsIncrementalSmall")))
           smallPathJobs.incrementAndGet()
     }
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val saved = spark.conf.get(key)
     val scratch = Graph.connectedComponents(all.toDF("u", "v"))
       .as[(Long, Long)].collect().toMap
     def runAt(threshold: Long): (Map[Long, Long], Int) = {
       spark.sparkContext.addSparkListener(listener)
       smallPathJobs.set(0)
-      try {
-        spark.conf.set(key, threshold.toString)
+      try withConf(BroadcastThreshold -> threshold.toString) {
         val r = Graph.componentsIncremental(labels, e2.toDF("u", "v"))
           .as[(Long, Long)].collect().toMap
         org.apache.spark.sql.graft.shims.waitForListenerBus(spark.sparkContext)
         (r, smallPathJobs.get())
-      } finally {
-        spark.conf.set(key, saved)
-        spark.sparkContext.removeSparkListener(listener)
-      }
+      } finally spark.sparkContext.removeSparkListener(listener)
     }
     val (atThreshold, jobsAt) = runAt(sz)      // sz <= threshold → fast path
     val (below, jobsBelow) = runAt(sz - 1)     // sz >  threshold → distributed
@@ -411,29 +401,31 @@ class GraphSpec extends SparkSuite {
       val r = f
       (r, tracker.getJobIdsForGroup(null).length - before)
     }
-    // smallSolveBytes = 0 forces the DISTRIBUTED loop — this test pins
-    // ITS early exit; a tiny fixture would otherwise take the
+    // broadcast threshold -1 forces the DISTRIBUTED loop — this test
+    // pins ITS early exit; a tiny fixture would otherwise take the
     // broadcast-small driver solve and trivially pass
-    val (bfs50, nBfs) = jobsDuring(
-      Graph.bfsHops(fixture, seeds, rounds = 50, smallSolveBytes = 0L)
-        .as[(Long, Long)].collect().toMap)
-    val bfs3 = Graph.bfsHops(fixture, seeds, rounds = 3, smallSolveBytes = 0L)
-      .as[(Long, Long)].collect().toMap
-    assert(bfs50 == bfs3)
-    assert(nBfs < 40, s"bfsHops(rounds=50) ran $nBfs jobs — no early exit")
+    withConf(BroadcastThreshold -> "-1") {
+      val (bfs50, nBfs) = jobsDuring(
+        Graph.bfsHops(fixture, seeds, rounds = 50)
+          .as[(Long, Long)].collect().toMap)
+      val bfs3 = Graph.bfsHops(fixture, seeds, rounds = 3)
+        .as[(Long, Long)].collect().toMap
+      assert(bfs50 == bfs3)
+      assert(nBfs < 40, s"bfsHops(rounds=50) ran $nBfs jobs — no early exit")
 
-    val unit = fixture.withColumn("w", lit(1L))
-    val (sssp50, nSssp) = jobsDuring(
-      Graph.ssspRounds(unit, seeds, rounds = 50, smallSolveBytes = 0L)
-        .as[(Long, Long)].collect().toMap)
-    assert(sssp50 == bfs3)
-    assert(nSssp < 60, s"ssspRounds(rounds=50) ran $nSssp jobs — no early exit")
+      val unit = fixture.withColumn("w", lit(1L))
+      val (sssp50, nSssp) = jobsDuring(
+        Graph.ssspRounds(unit, seeds, rounds = 50)
+          .as[(Long, Long)].collect().toMap)
+      assert(sssp50 == bfs3)
+      assert(nSssp < 60, s"ssspRounds(rounds=50) ran $nSssp jobs — no early exit")
 
-    val (core50, nCore) = jobsDuring(
-      Graph.kCorePeel(fixture, k = 2, rounds = 50, smallSolveBytes = 0L)
-        .as[(Long, Long)].collect().toMap)
-    assert(core50 == Map(1L -> 2L, 2L -> 2L, 3L -> 2L))
-    assert(nCore < 40, s"kCorePeel(rounds=50) ran $nCore jobs — no early exit")
+      val (core50, nCore) = jobsDuring(
+        Graph.kCorePeel(fixture, k = 2, rounds = 50)
+          .as[(Long, Long)].collect().toMap)
+      assert(core50 == Map(1L -> 2L, 2L -> 2L, 3L -> 2L))
+      assert(nCore < 40, s"kCorePeel(rounds=50) ran $nCore jobs — no early exit")
+    }
   }
 
   test("broadcast-small driver solves are row-identical to the distributed rounds") {
@@ -451,17 +443,17 @@ class GraphSpec extends SparkSuite {
     val seeds = raw.map(_._1).distinct.take(5).toDF("n")
     for (r <- Seq(1, 2, 3)) {
       val bfsF = Graph.bfsHops(g, seeds, r).as[(Long, Long)].collect().sorted.toSeq
-      val bfsL = Graph.bfsHops(g, seeds, r, smallSolveBytes = 0L)
-        .as[(Long, Long)].collect().sorted.toSeq
+      val bfsL = withConf(BroadcastThreshold -> "-1")(Graph.bfsHops(g, seeds, r)
+        .as[(Long, Long)].collect().sorted.toSeq)
       assert(bfsF == bfsL, s"bfs rounds=$r diverged")
       val ssspF = Graph.ssspRounds(g, seeds, r).as[(Long, Long)].collect().sorted.toSeq
-      val ssspL = Graph.ssspRounds(g, seeds, r, smallSolveBytes = 0L)
-        .as[(Long, Long)].collect().sorted.toSeq
+      val ssspL = withConf(BroadcastThreshold -> "-1")(Graph.ssspRounds(g, seeds, r)
+        .as[(Long, Long)].collect().sorted.toSeq)
       assert(ssspF == ssspL, s"sssp rounds=$r diverged")
       val coreF = Graph.kCorePeel(g, k = 3, rounds = r)
         .as[(Long, Long)].collect().sorted.toSeq
-      val coreL = Graph.kCorePeel(g, k = 3, rounds = r, smallSolveBytes = 0L)
-        .as[(Long, Long)].collect().sorted.toSeq
+      val coreL = withConf(BroadcastThreshold -> "-1")(Graph.kCorePeel(g, k = 3, rounds = r)
+        .as[(Long, Long)].collect().sorted.toSeq)
       assert(coreF == coreL, s"kcore rounds=$r diverged")
     }
   }
@@ -488,11 +480,9 @@ class GraphSpec extends SparkSuite {
       // layout contract, in two halves: with autoBucketedScan pinned
       // off (as the operator does for its decode) the table scans
       // bucket-aware, hash(src) from disk ...
-      val conf = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-      spark.conf.set(conf, "false")
       val scanPlan =
-        try spark.table("walk_spec").queryExecution.executedPlan.toString
-        finally spark.conf.set(conf, "true")
+        withConf("spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false")(
+          spark.table("walk_spec").queryExecution.executedPlan.toString)
       assert(scanPlan.contains("Bucketed: true"), s"walk scan not bucketed:\n$scanPlan")
       // ... and the refresh never exchanges ON src anywhere — the one
       // edge decode lands in a partitioning-preserving checkpoint, so

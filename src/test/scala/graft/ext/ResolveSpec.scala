@@ -24,12 +24,12 @@ class ResolveSpec extends SparkSuite {
     // with the l(l(v)) shortcut the reach doubles, so ~log2(63)+ε rounds.
     // This is the guard that keeps scale-up runs honest about iteration
     // growth: a super-logarithmic round count here is a regression.
-    // smallSolveBytes = 0: force the DISTRIBUTED loop — these two tests
-    // pin ITS round counts; a tiny graph would otherwise take the
+    // broadcast threshold -1: force the DISTRIBUTED loop — these two
+    // tests pin ITS round counts; a tiny graph would otherwise take the
     // broadcast-small driver solve (rounds = 0)
     val pairs = (1L until 64L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val (labels, rounds) =
-      DedupOps.resolveComponentsCounted(pairs, smallSolveBytes = 0L)
+    val (labels, rounds) = withConf(BroadcastThreshold -> "-1")(
+      DedupOps.resolveComponentsCounted(pairs))
     val got = labels.as[(Long, Long)].collect()
     assert(got.length == 64 && got.forall(_._2 == 1L))
     assert(rounds > 0, "fast path not disabled")
@@ -38,8 +38,8 @@ class ResolveSpec extends SparkSuite {
 
   test("round telemetry: star graph converges in 2 rounds (1 step + 1 confirm)") {
     val pairs = (2L to 9L).map(i => (1L, i)).toDF("doc_a", "doc_b")
-    val (labels, rounds) =
-      DedupOps.resolveComponentsCounted(pairs, smallSolveBytes = 0L)
+    val (labels, rounds) = withConf(BroadcastThreshold -> "-1")(
+      DedupOps.resolveComponentsCounted(pairs))
     assert(labels.as[(Long, Long)].collect().forall(_._2 == 1L))
     assert(rounds > 0 && rounds <= 2, s"star took $rounds rounds")
   }
@@ -54,7 +54,8 @@ class ResolveSpec extends SparkSuite {
       .map { case (a, b) => (math.min(a, b), math.max(a, b)) }
       .toDF("doc_a", "doc_b")
     val fast = DedupOps.resolveComponentsCounted(pairs)
-    val loop = DedupOps.resolveComponentsCounted(pairs, smallSolveBytes = 0L)
+    val loop = withConf(BroadcastThreshold -> "-1")(
+      DedupOps.resolveComponentsCounted(pairs))
     assert(fast._2 == 0, s"expected the driver solve, rounds=${fast._2}")
     assert(loop._2 > 0)
     assert(fast._1.as[(Long, Long)].collect().sorted.toSeq ==

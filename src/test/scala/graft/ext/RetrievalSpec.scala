@@ -110,10 +110,7 @@ class RetrievalSpec extends SparkSuite {
     // — at spec scale the tiny table would auto-broadcast) the
     // inverted-index self-join consumes the bucketed layout directly:
     // a SortMergeJoin with NO Exchange and NO Sort on either leg
-    val thresholdConf = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.get(thresholdConf)
-    try {
-      spark.conf.set(thresholdConf, "-1")
+    withConf(BroadcastThreshold -> "-1") {
       val atScale = Retrieval.tfidfCosinePairsStored(spark, "tfidf_spec_w",
         dir, "doc_id", 0.2)
       assert(atScale.as[(Long, Long, Long, Double)].collect().toSet == cold)
@@ -122,7 +119,7 @@ class RetrievalSpec extends SparkSuite {
       assert(joinAt >= 0, s"expected SMJ over the bucketed scans:\n$plan")
       assert(!plan.substring(joinAt).contains("Exchange hashpartitioning(token"),
         s"token self-join re-shuffled the bucketed weight table:\n$plan")
-    } finally spark.conf.set(thresholdConf, prev)
+    }
     spark.sql("DROP TABLE IF EXISTS tfidf_spec_w")
   }
 

@@ -33,8 +33,8 @@ class SimilaritySolveSpec extends SparkSuite {
     for ((n, k, iters) <- Seq((60, 4, 2), (60, 7, 3), (3, 8, 2), (25, 1, 1))) {
       val c = corpus(n, 16)
       val fast = Similarity.ivfCentroids(c, "vec_id", "embedding", k, iters)
-      val loop = Similarity.ivfCentroids(c, "vec_id", "embedding", k, iters,
-        smallSolveBytes = 0L)
+      val loop = withConf(BroadcastThreshold -> "-1")(
+        Similarity.ivfCentroids(c, "vec_id", "embedding", k, iters))
       assert(isLocal(fast), s"fast path did not engage at n=$n k=$k")
       assert(!isLocal(loop))
       assert(rowsOf(fast) == rowsOf(loop), s"ivf diverged at n=$n k=$k iters=$iters")
@@ -45,8 +45,8 @@ class SimilaritySolveSpec extends SparkSuite {
     for ((n, m, subDim, ks, iters) <- Seq((50, 4, 4, 4, 2), (50, 2, 8, 3, 3), (2, 4, 4, 4, 2))) {
       val c = corpus(n, m * subDim)
       val fast = Similarity.pqCodebooks(c, "vec_id", "embedding", m, subDim, ks, iters)
-      val loop = Similarity.pqCodebooks(c, "vec_id", "embedding", m, subDim, ks, iters,
-        smallSolveBytes = 0L)
+      val loop = withConf(BroadcastThreshold -> "-1")(
+        Similarity.pqCodebooks(c, "vec_id", "embedding", m, subDim, ks, iters))
       assert(isLocal(fast), s"fast path did not engage at n=$n m=$m")
       assert(pqRowsOf(fast) == pqRowsOf(loop), s"pq diverged at n=$n m=$m ks=$ks")
     }
@@ -69,9 +69,9 @@ class SimilaritySolveSpec extends SparkSuite {
     // non-long id type
     val strId = (0 until 10).map(i => (s"d$i", Seq.fill(8)(i / 10.0f))).toDF("vec_id", "embedding")
     assert(!isLocal(Similarity.ivfCentroids(strId, "vec_id", "embedding", 2, 1)))
-    // escape hatch
-    assert(!isLocal(Similarity.ivfCentroids(corpus(10, 8), "vec_id", "embedding", 2, 1,
-      smallSolveBytes = 0L)))
+    // broadcast threshold off
+    assert(!isLocal(withConf(BroadcastThreshold -> "-1")(
+      Similarity.ivfCentroids(corpus(10, 8), "vec_id", "embedding", 2, 1))))
   }
 
   test("driver twin sums scaled terms in BIGINT, like the loop, past 2^53") {
@@ -80,21 +80,22 @@ class SimilaritySolveSpec extends SparkSuite {
     val c = Seq((0L, Seq(0f, 0f)), (1L, Seq(1e12f, 1f)), (2L, Seq(1f, 2f)),
       (3L, Seq(-1e12f, 3f))).toDF("vec_id", "embedding")
     val fast = Similarity.ivfCentroids(c, "vec_id", "embedding", 1, 1)
-    val loop = Similarity.ivfCentroids(c, "vec_id", "embedding", 1, 1, smallSolveBytes = 0L)
+    val loop = withConf(BroadcastThreshold -> "-1")(
+      Similarity.ivfCentroids(c, "vec_id", "embedding", 1, 1))
     assert(isLocal(fast) && !isLocal(loop))
     assert(rowsOf(fast) == rowsOf(loop))
     assert(rowsOf(fast) == Seq((0, Seq(0.25f, 1.5f))))
     val pqFast = Similarity.pqCodebooks(c, "vec_id", "embedding", 2, 1, 1, 1)
     assert(isLocal(pqFast))
-    assert(pqRowsOf(pqFast) == pqRowsOf(Similarity.pqCodebooks(c, "vec_id", "embedding",
-      2, 1, 1, 1, smallSolveBytes = 0L)))
+    assert(pqRowsOf(pqFast) == pqRowsOf(withConf(BroadcastThreshold -> "-1")(
+      Similarity.pqCodebooks(c, "vec_id", "embedding", 2, 1, 1, 1))))
   }
 
   test("empty corpus: both paths yield an empty model") {
     val empty = Seq.empty[(Long, Seq[Float])].toDF("vec_id", "embedding")
     assert(Similarity.ivfCentroids(empty, "vec_id", "embedding", 4, 2).count() == 0)
-    assert(Similarity.ivfCentroids(empty, "vec_id", "embedding", 4, 2,
-      smallSolveBytes = 0L).count() == 0)
+    assert(withConf(BroadcastThreshold -> "-1")(
+      Similarity.ivfCentroids(empty, "vec_id", "embedding", 4, 2)).count() == 0)
   }
 
   test("literal-centroid assigns == relational assigns (whole-query differential)") {
@@ -111,23 +112,20 @@ class SimilaritySolveSpec extends SparkSuite {
       (ivf.collect() ++ pq.collect() ++ ivfpq.collect()).map(_.toString).sorted.toSeq
     }
     val lit = run()
-    System.setProperty("graft.annLiteralCells", "0")
-    try {
-      val rel = run()
-      assert(lit == rel, "literal-assign diverged from relational assign")
-    } finally System.clearProperty("graft.annLiteralCells")
+    val rel = withConf(BroadcastThreshold -> "-1")(run())
+    assert(lit == rel, "literal-assign diverged from relational assign")
   }
 
   test("sampled trainers ride the same solve: output unchanged") {
     val c = corpus(300, 16)
     val fast = Similarity.ivfCentroidsSampled(c, "vec_id", "embedding",
       nClusters = 3, iterations = 2, trainPerCluster = 16)
-    val viaLoop = Similarity.ivfCentroids(
+    val viaLoop = withConf(BroadcastThreshold -> "-1")(Similarity.ivfCentroids(
       org.apache.spark.sql.graft.shims.checkpointWithStats(
         c.orderBy(org.apache.spark.sql.functions.md5(
           org.apache.spark.sql.functions.col("vec_id").cast("string")),
           org.apache.spark.sql.functions.col("vec_id")).limit(48)),
-      "vec_id", "embedding", 3, 2, smallSolveBytes = 0L)
+      "vec_id", "embedding", 3, 2))
     assert(rowsOf(fast) == rowsOf(viaLoop))
   }
 }

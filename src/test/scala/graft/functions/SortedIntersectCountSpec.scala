@@ -36,15 +36,9 @@ class SortedIntersectCountSpec extends SparkSuite {
     // whole-stage codegen path
     both.collect().foreach(r => assert(r.getLong(0) == r.getLong(1)))
     // interpreted path (codegen disabled) must agree bit-for-bit
-    val saved = (spark.conf.get("spark.sql.codegen.wholeStage"),
-      spark.conf.get("spark.sql.codegen.factoryMode"))
-    try {
-      spark.conf.set("spark.sql.codegen.wholeStage", "false")
-      spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    withConf("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
       both.collect().foreach(r => assert(r.getLong(0) == r.getLong(1)))
-    } finally {
-      spark.conf.set("spark.sql.codegen.wholeStage", saved._1)
-      spark.conf.set("spark.sql.codegen.factoryMode", saved._2)
     }
   }
 

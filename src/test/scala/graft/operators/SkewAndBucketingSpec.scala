@@ -43,9 +43,7 @@ class SkewAndBucketingSpec extends SparkSuite {
   test("bucketed tables co-locate the join: no Exchange in the plan") {
     // warehouse.dir is a static conf — tables land in ./spark-warehouse
     // (gitignored) and are dropped in finally
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ path
-    try {
+    try withConf(BroadcastThreshold -> "-1") { // force SMJ path
       Tables.lineitem(spark, sfDir)
         .write.bucketBy(4, "l_orderkey").sortBy("l_orderkey")
         .mode("overwrite").saveAsTable("li_bucketed")
@@ -61,7 +59,6 @@ class SkewAndBucketingSpec extends SparkSuite {
         s"bucketed join still shuffles:\n$plan")
       assert(joined.count() == Tables.lineitem(spark, sfDir).count())
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
       spark.sql("DROP TABLE IF EXISTS li_bucketed")
       spark.sql("DROP TABLE IF EXISTS o_bucketed")
     }

@@ -24,9 +24,7 @@ class StreamingAsOfSpec extends SparkSuite {
   }
 
   test("partitioned sink requires a UTC session timezone") {
-    val tz = spark.conf.get("spark.sql.session.timeZone")
-    try {
-      spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    withConf("spark.sql.session.timeZone" -> "America/Los_Angeles") {
       import spark.implicits._
       val work = java.nio.file.Files.createTempDirectory("graft_asof_tz").toString
       val batch = Seq((1L, 1L, new java.sql.Timestamp(0L), "view", 0.0))
@@ -42,7 +40,7 @@ class StreamingAsOfSpec extends SparkSuite {
           Seq("click_id", "click_value"), "click_id", None)(batch, 0L)
       }
       assert(e.getMessage.contains("timeZone"))
-    } finally spark.conf.set("spark.sql.session.timeZone", tz)
+    }
   }
 
   test("late rights re-open already-matched lefts; argmax merge is split-invariant") {
