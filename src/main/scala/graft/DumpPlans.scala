@@ -1,6 +1,10 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.regex.Pattern
+
+import scala.collection.mutable
+import scala.util.matching.Regex
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
@@ -19,6 +23,8 @@ import org.apache.spark.sql.execution.ExplainMode
   *     (OPTIMIZATION_r16.md).
   *
   * Queries run against SPARK_GRAFT_SF_DIR (default sf0.01), as in Bench.
+  * Each plan is written through [[normalize]], so a re-run on unchanged
+  * code writes the same bytes and a plan diff shows only plan changes.
   */
 object DumpPlans {
 
@@ -105,8 +111,8 @@ object DumpPlans {
         .config(org.apache.spark.sql.graft.shims.PlanOnlyConf, "true"), 8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     def plan(name: String): String =
-      SparkEntry.queries(name)(spark, sfDir).queryExecution
-        .explainString(ExplainMode.fromString("formatted")).trim
+      normalize(SparkEntry.queries(name)(spark, sfDir).queryExecution
+        .explainString(ExplainMode.fromString("formatted")).trim)
     if (args.isEmpty) writePlansMd(sfDir, plan)
     else {
       val suffix = args(0)
@@ -122,6 +128,32 @@ object DumpPlans {
     spark.stop()
   }
 
+  /** One query's plan text with every run-dependent token made fixed:
+    *  - expression ids (`#<n>`) and `plan_id=<n>` renumbered in order of
+    *    first appearance, as Spark's own PlanStabilitySuite does for its
+    *    golden plans — equal ids stay equal, so the plan still reads;
+    *  - RDD ids (`MapPartitionsRDD[<n>]`) renumbered the same way;
+    *  - source line numbers of call sites (`Foo.scala:<line>`) masked;
+    *  - scratch directories (`DrainWork`'s per-user stable root and its
+    *    random-suffixed temp dirs, under /dev/shm or java.io.tmpdir)
+    *    replaced by `<scratch>` placeholders.
+    */
+  def normalize(plan: String): String = {
+    def renumber(text: String, re: Regex, spell: Int => String): String = {
+      val ids = mutable.HashMap.empty[String, Int]
+      re.replaceAllIn(text, m =>
+        Regex.quoteReplacement(spell(ids.getOrElseUpdate(m.group(1), ids.size + 1))))
+    }
+    val tmp = System.getProperty("java.io.tmpdir").stripSuffix("/")
+    val scratch = s"(?:/dev/shm|${Pattern.quote(tmp)})"
+    val ids = renumber(plan, "#(\\d+)".r, n => s"#$n")
+    val plans = renumber(ids, "plan_id=(\\d+)".r, n => s"plan_id=$n")
+    renumber(plans, "RDD\\[(\\d+)\\]".r, n => s"RDD[$n]")
+      .replaceAll("\\b(\\w+\\.scala):\\d+", "$1:<line>")
+      .replaceAll(s"$scratch/graft-[^/\\s\\],]+", "<scratch>")
+      .replaceAll(s"$scratch/(graft_[A-Za-z_]*?)\\d+", "<scratch>/$1<tmp>")
+  }
+
   private def writePlansMd(sfDir: String, plan: String => String): Unit = {
     val sb = new StringBuilder
     sb ++= "# PLANS — committed `explain formatted` for the headline queries\n\n"
@@ -133,6 +165,9 @@ object DumpPlans {
     sb ++= "eager stats checkpoints are skipped, so checkpoint-backed queries\n"
     sb ++= "show their FULL derivation here where production runs read\n"
     sb ++= "materialized blocks (Scan ExistingRDD) at the checkpoint cuts.\n"
+    sb ++= "Expression, plan and RDD ids are renumbered per plan, call-site\n"
+    sb ++= "line numbers and scratch paths masked, so a re-run on unchanged\n"
+    sb ++= "code writes the same bytes.\n"
     headline.foreach { case (name, note) =>
       sb ++= s"\n## $name\n\n$note\n\n```\n"
       sb ++= plan(name)

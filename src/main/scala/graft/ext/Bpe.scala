@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.shims
 
 /** Byte-pair-encoding tokenizer training as a Spark job.
   *
@@ -70,13 +71,14 @@ object Bpe {
   /** Learn `numMerges` merges from a `word, freq` table. Returns the
     * ordered merge list — the trained tokenizer. Driver state is the
     * merge list itself (bounded by numMerges); each round collects
-    * exactly one row. `localCheckpoint` per round caps the lineage the
-    * iterative rewrite would otherwise stack numMerges HOFs deep.
+    * exactly one row. A checkpoint per round caps the lineage the
+    * iterative rewrite would otherwise stack numMerges HOFs deep; each
+    * round frees the previous round's blocks, so storage stays at one
+    * token table whatever numMerges is.
     */
   def train(words: DataFrame, numMerges: Int): Seq[(String, String)] = {
-    var cur = words
-      .select(charTokensOf(col("word")).as("tokens"), col("freq"))
-      .localCheckpoint()
+    var cur = shims.checkpointEager(words
+      .select(charTokensOf(col("word")).as("tokens"), col("freq")))._1
     val merges = Seq.newBuilder[(String, String)]
     var round = 0
     var exhausted = false
@@ -97,12 +99,14 @@ object Bpe {
       else {
         val (a, b) = (best.head.getString(0), best.head.getString(1))
         merges += ((a, b))
-        cur = cur
-          .withColumn("tokens", fusePair(col("tokens"), a, b))
-          .localCheckpoint()
+        val next = shims.checkpointEager(
+          cur.withColumn("tokens", fusePair(col("tokens"), a, b)))._1
+        shims.unpersistLocalCheckpoint(cur)
+        cur = next
         round += 1
       }
     }
+    shims.unpersistLocalCheckpoint(cur)
     merges.result()
   }
 

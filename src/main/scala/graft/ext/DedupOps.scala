@@ -73,7 +73,7 @@ object DedupOps {
     // barriers cost more than the pipeline re-runs they avoid —
     // measured +0.6 s on x_lsh_recall's md5-half corpus at sf0.1.
     val ck: DataFrame => DataFrame =
-      if (materialize) shims.checkpointWithStats else identity
+      if (materialize) shims.checkpointWithStats(_) else identity
     val free: DataFrame => Unit =
       if (materialize) shims.unpersistLocalCheckpoint else _ => ()
     val sh0 = ck(shingleIndexHashed(docs, idCol, textCol, n))
@@ -190,7 +190,7 @@ object DedupOps {
     // hatch) as jaccardPairs: sizes + df cap + both join legs read the
     // materialized shingle blocks
     val ck: DataFrame => DataFrame =
-      if (materialize) shims.checkpointWithStats else identity
+      if (materialize) shims.checkpointWithStats(_) else identity
     val free: DataFrame => Unit =
       if (materialize) shims.unpersistLocalCheckpoint else _ => ()
     val sh0 = ck(shingleIndexHashed(docs, idCol, textCol, n))
@@ -273,7 +273,7 @@ object DedupOps {
     // both self-join legs read the materialized band table instead of
     // each re-running the shingle -> minhash -> band pipeline
     val ck: DataFrame => DataFrame =
-      if (materialize) shims.checkpointWithStats else identity
+      if (materialize) shims.checkpointWithStats(_) else identity
     val free: DataFrame => Unit =
       if (materialize) shims.unpersistLocalCheckpoint else _ => ()
     val bands = ck(
@@ -546,13 +546,13 @@ object DedupOps {
     // driver burning >1000 s of CPU in Toom-Cook BigInteger multiplies
     // inside stats estimation at sf0.01 (jstack-verified). Measured
     // stats keep the numbers small AND let AQE broadcast small label
-    // sides from real sizes. The EAGER variant runs even in planOnly
+    // sides from real sizes. `checkpointEager` runs even in planOnly
     // mode: this loop is inherently eager (per-round convergence
     // probe), and with upstream stats checkpoints degraded to identity
     // there, an origin-stats checkpoint would carry the UNCUT lineage's
     // join-product estimate — the blow-up, squared per round (measured:
     // DumpPlans hung >580 s planning x_components_incremental).
-    def ckpt(df: DataFrame): DataFrame = shims.checkpointWithStatsEager(df)
+    def ckpt(df: DataFrame): DataFrame = shims.checkpointEager(df)._1
     // materialize the edge list once and truncate label lineage per round —
     // otherwise every iteration's plan re-embeds the full upstream
     // candidate pipeline (~2× per round) and the final plan replays it
@@ -600,7 +600,7 @@ object DedupOps {
       // materialized into the round's blocks at all (the projection
       // above the CollectMetrics drops it).
       val obsName = s"__cc_changed_$round"
-      val (jumped, obs) = shims.checkpointWithStatsObservedEager(
+      val (jumped, obs) = shims.checkpointEager(
         stepped.as("s")
           .join(stepped.select(col("doc_id").as("label"), col("label").as("jmp")).as("j"),
             Seq("label"), "left")

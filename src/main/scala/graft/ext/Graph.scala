@@ -306,15 +306,10 @@ object Graph {
       if (fs.exists(target))
         spark.read.schema("n BIGINT, component BIGINT").parquet(outPath)
       else spark.range(0).select(col("id").as("n"), col("id").as("component"))
-    val merged0 = componentsIncremental(standing, batch)
-    // the merge reads the path it is about to replace — materialize
-    // before the swap (same reason the ivm/sketch sinks checkpoint)
-    val merged = merged0.localCheckpoint(true)
+    val merged = componentsIncremental(standing, batch)
     graft.streaming.AtomicSwap.commit(merged, outPath, batchId, lineage)
     // mart is on disk: free this batch's blocks — the internal `lab` /
-    // loop checkpoints still referenced by merged0's plan, then the
-    // swap copy itself
-    shims.unpersistLocalCheckpoint(merged0)
+    // loop checkpoints still referenced by merged's plan
     shims.unpersistLocalCheckpoint(merged)
   }
 
@@ -786,7 +781,7 @@ object Graph {
     // the r7 layout-preserving stats checkpoint defeated AQE exchange
     // dedup across the cloned references and ran the degree stages
     // twice: the named r7 bench regression (4.2 s → 7.2 s at sf0.1;
-    // see checkpointWithStatsLayout's scaladoc and SCALE.md round 8).
+    // see checkpointWithStats's `keepLayout` doc and SCALE.md round 8).
     val e = shims.lazyCheckpoint(edges)
     // the count is the action that materializes the checkpoint blocks
     // (one pass); its value drives ONLY the broadcast-vs-shuffle
@@ -947,18 +942,14 @@ object Graph {
     * integer form is the cross-engine-checkable spelling.)
     *
     * Each iteration is one shuffle (groupBy dst) plus a broadcast-able
-    * rank join; the edge+degree table is localCheckpoint'd once so the
+    * rank join; the edge+degree table is checkpointed once so the
     * iterations don't re-derive it (same amortization pattern as the
     * stored IVF index in `Similarity.scala`). At warehouse scale ranks
     * would persist between runs (incremental PageRank); the fixed-k
     * loop here matches how quality scores are refreshed in practice.
     */
-  def pageRankScaled(edges: DataFrame, iters: Int, scale: Long = 1000000L,
-                     broadcastBytesLimit: Long = -1L,
-                     copartParts: Int = 0): DataFrame =
-    pageRankLoop(
-      symDeg(edges), expr("rank div den"), iters, scale, None,
-      broadcastBytesLimit, copartParts)
+  def pageRankScaled(edges: DataFrame, iters: Int, scale: Long = 1000000L): DataFrame =
+    pageRankLoop(symDeg(edges), expr("rank div den"), iters, scale, None)
 
   /** Weighted PageRank over `(u, v, w)` edges: identical contract to
     * [[pageRankScaled]] but rank splits proportionally to edge weight —
@@ -969,12 +960,9 @@ object Graph {
     * plan shape and scale posture as the unweighted loop.
     */
   def pageRankScaledWeighted(wEdges: DataFrame, iters: Int,
-                             scale: Long = 1000000L,
-                             broadcastBytesLimit: Long = -1L,
-                             copartParts: Int = 0): DataFrame =
+                             scale: Long = 1000000L): DataFrame =
     pageRankLoop(
-      symDegWeighted(wEdges), expr("(rank * w) div den"), iters, scale, None,
-      broadcastBytesLimit, copartParts)
+      symDegWeighted(wEdges), expr("(rank * w) div den"), iters, scale, None)
 
   /** Persist a rank table for later [[pageRankResume]] — the stored-index
     * amortization pattern (`Similarity.writeIvfIndex`): at warehouse
@@ -996,12 +984,8 @@ object Graph {
     * [[pageRankScaled]] on the same edge list).
     */
   def pageRankResume(edges: DataFrame, ranks0: DataFrame, iters: Int,
-                     scale: Long = 1000000L,
-                     broadcastBytesLimit: Long = -1L,
-                     copartParts: Int = 0): DataFrame =
-    pageRankLoop(
-      symDeg(edges), expr("rank div den"), iters, scale, Some(ranks0),
-      broadcastBytesLimit, copartParts)
+                     scale: Long = 1000000L): DataFrame =
+    pageRankLoop(symDeg(edges), expr("rank div den"), iters, scale, Some(ranks0))
 
   /** Store the unweighted walk table — symmetrized edges with the
     * per-source denominator, `(src, dst, den)` — as a BUCKETED catalog
@@ -1051,10 +1035,10 @@ object Graph {
     // layout-preserving: the bucketed hash(src) layout from disk is the
     // whole point, and withDeg/deg are single-reference per round plan
     val withDeg =
-      try shims.checkpointWithStatsLayout(spark.table(name))
+      try shims.checkpointWithStats(spark.table(name), keepLayout = true)
       finally spark.conf.set(conf, prev)
-    val deg = shims.checkpointWithStatsLayout(
-      withDeg.select(col("src"), col("den")).distinct())
+    val deg = shims.checkpointWithStats(
+      withDeg.select(col("src"), col("den")).distinct(), keepLayout = true)
     pageRankRounds(withDeg, deg, expr("rank div den"), iters, scale,
       ranks0, copart = true, parts = buckets)
   }
@@ -1082,10 +1066,10 @@ object Graph {
     val prev = spark.conf.get(conf, "true")
     spark.conf.set(conf, "false")
     val withDeg =
-      try shims.checkpointWithStatsLayout(spark.table(name))
+      try shims.checkpointWithStats(spark.table(name), keepLayout = true)
       finally spark.conf.set(conf, prev)
-    val deg = shims.checkpointWithStatsLayout(
-      withDeg.select(col("src"), col("den")).distinct())
+    val deg = shims.checkpointWithStats(
+      withDeg.select(col("src"), col("den")).distinct(), keepLayout = true)
     pageRankRounds(withDeg, deg, expr("(rank * w) div den"), iters, scale,
       ranks0, copart = true, parts = buckets)
   }
@@ -1114,53 +1098,44 @@ object Graph {
     *
     * Strategy is chosen from MEASURED stats, not hints:
     *
-    *  - node table fits the session broadcast threshold → plain joins;
+    *  - node table fits `spark.sql.autoBroadcastJoinThreshold` → plain joins;
     *    Catalyst auto-broadcasts the rank side from the checkpoint's
     *    injected sizeInBytes, and each round's only edge-sized exchange
     *    is the groupBy(dst). No `broadcast()` anywhere.
     *  - past the threshold (web-graph node counts: a driver-assembled
     *    broadcast dies) → CO-PARTITIONED rounds: edges are hash-
     *    partitioned by src ONCE outside the loop, every round's rank
-    *    table is re-partitioned on the same key/count (node-sized
-    *    exchange), and the rank join is a SHUFFLE_HASH join that
+    *    table is re-partitioned on the same key into
+    *    `spark.sql.shuffle.partitions` parts (node-sized exchange),
+    *    and the rank join is a SHUFFLE_HASH join that
     *    builds only the node-sized side per partition — the edge
     *    stream never re-shuffles for the join, its only per-round
     *    exchange is still the groupBy(dst).
-    *
-    * @param broadcastBytesLimit decision bound in BYTES for the node
-    *   table (-1 = the session's `spark.sql.autoBroadcastJoinThreshold`)
-    * @param copartParts partition count for the co-partitioned path
-    *   (0 = the session's shuffle-partition width)
     */
   private def pageRankLoop(symAndDen: (DataFrame, DataFrame),
                            contribution: Column,
                            iters: Int, scale: Long,
-                           ranks0: Option[DataFrame],
-                           broadcastBytesLimit: Long,
-                           copartParts: Int): DataFrame = {
+                           ranks0: Option[DataFrame]): DataFrame = {
     val (sym, denPlan) = symAndDen
     val spark = sym.sparkSession
     // layout-preserving variants throughout the loop: every checkpoint
     // here (deg, withDeg, per-round ranks) is consumed ONCE per round
     // plan, so the exchange-dedup hazard documented at
-    // checkpointWithStatsLayout cannot bite, and in co-partitioned mode
-    // the preserved hash layout is what makes rounds exchange-free
-    val deg = shims.checkpointWithStatsLayout(denPlan)
+    // checkpointWithStats's `keepLayout` cannot bite, and in
+    // co-partitioned mode the preserved hash layout is what makes
+    // rounds exchange-free
+    val deg = shims.checkpointWithStats(denPlan, keepLayout = true)
     val degBytes = deg.queryExecution.optimizedPlan.stats.sizeInBytes
-    val bcLimit = BigInt(
-      if (broadcastBytesLimit >= 0) broadcastBytesLimit
-      else shims.autoBroadcastThresholdBytes(spark))
-    val copart = degBytes > bcLimit
-    val parts =
-      if (copartParts > 0) copartParts
-      else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val copart = degBytes > BigInt(shims.autoBroadcastThresholdBytes(spark))
+    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
 
     // the edge-side table is built once, outside the loop; in the
     // co-partitioned path it is hash-partitioned by src here so no
     // round ever moves it again
     val withDegPlan = sym.join(deg, "src")
-    val withDeg = shims.checkpointWithStatsLayout(
-      if (copart) withDegPlan.repartition(parts, col("src")) else withDegPlan)
+    val withDeg = shims.checkpointWithStats(
+      if (copart) withDegPlan.repartition(parts, col("src")) else withDegPlan,
+      keepLayout = true)
     pageRankRounds(withDeg, deg, contribution, iters, scale, ranks0,
       copart, parts)
   }
@@ -1180,9 +1155,9 @@ object Graph {
     def align(r: DataFrame): DataFrame =
       if (copart) r.repartition(parts, col("n")) else r
 
-    var ranks: DataFrame = shims.checkpointWithStatsLayout(align(
+    var ranks: DataFrame = shims.checkpointWithStats(align(
       ranks0.getOrElse(
-        deg.select(col("src").as("n"), lit(scale).as("rank")))))
+        deg.select(col("src").as("n"), lit(scale).as("rank")))), keepLayout = true)
     var spentRounds: List[DataFrame] = Nil
     var result: DataFrame = ranks
     for (i <- 1 to iters) {
@@ -1204,7 +1179,7 @@ object Graph {
         .select(col("n"),
           expr(s"(15 * ${scale}L + 85 * coalesce(s, 0L)) div 100").as("rank"))
       if (i < iters) {
-        val cp = shims.checkpointWithStatsLayout(align(next))
+        val cp = shims.checkpointWithStats(align(next), keepLayout = true)
         // blocks from two rounds back are no longer reachable
         spentRounds.foreach(shims.unpersistLocalCheckpoint)
         spentRounds = List(ranks)

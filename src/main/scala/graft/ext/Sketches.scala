@@ -85,11 +85,8 @@ object Sketches {
         spark.read.parquet(outPath).unionByName(partials)
           .groupBy(col(groupCol), col("day"))
           .agg(HllDistinct.hllMergeSketch(col("sketch")).as("sketch"))
-          // the merge reads the path it replaces — materialize first
-          .localCheckpoint(true)
       else partials
     graft.streaming.AtomicSwap.commit(merged, outPath, batchId, lineage)
-    shims.unpersistLocalCheckpoint(merged)
     shims.unpersistLocalCheckpoint(partials)
   }
 

@@ -132,11 +132,12 @@ object OpenAqPipeline {
     *     files untouched (asserted byte-identical in
     *     IncrementalWriteSpec).
     *
-    * The merged slice is localCheckpoint-materialized before the write:
-    * it is read from the same path it overwrites, and on bare parquet
-    * the materialization is what stands in for a table format's
-    * transactional MERGE (at real scale: reliable checkpoint or a
-    * staging dir + rename, same shape).
+    * The merged slice is materialized (`shims.checkpointEager`) before
+    * the write: it is read from the same path it overwrites, and on
+    * bare parquet the materialization is what stands in for a table
+    * format's transactional MERGE (at real scale: reliable checkpoint
+    * or a staging dir + rename, same shape). Its blocks are freed once
+    * the partitions are on disk.
     */
   def refreshMart(spark: SparkSession, validMeasurements: DataFrame,
                   sensorsEnriched: DataFrame, keyName: String,
@@ -149,12 +150,13 @@ object OpenAqPipeline {
     val touchedDays = batch.select(col("__day")).distinct()
     val touchedExisting =
       existing.join(broadcast(touchedDays), Seq("__day"), "left_semi")
-    graft.operators.Merge.upsert(touchedExisting, batch, Seq(keyName))
-      .sortWithinPartitions(col("__day"), col("country_code"), col("location_id"))
-      .localCheckpoint(true)
-      .write.mode("overwrite")
+    val (merged, _) = shims.checkpointEager(
+      graft.operators.Merge.upsert(touchedExisting, batch, Seq(keyName))
+        .sortWithinPartitions(col("__day"), col("country_code"), col("location_id")))
+    merged.write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("__day").parquet(path)
+    shims.unpersistLocalCheckpoint(merged)
   }
 
   /** Disaster recovery (dags/99): full-lake wildcard rescan, truncate

@@ -94,7 +94,7 @@ object StreamingAsOf {
     val aRows = withRt(AsOf.joinBackwardNative(
       newL, rightsForA, keys, leftTime, rightTime, rightCols,
       rightTieBreak, toleranceUs = None))
-    val merged0 =
+    val merged =
       if (!fs.exists(mart)) aRows
       else {
         val standingM = spark.read.schema(
@@ -134,11 +134,7 @@ object StreamingAsOf {
             when(better, col("__c_rt")).otherwise(col("__rt_us")).as("__rt_us"): _*)
         untouched.unionByName(mergedAffected).unionByName(aRows)
       }
-    // the merge reads the path it is about to replace — materialize
-    // before the swap (same reason the ivm/components sinks checkpoint)
-    val merged = merged0.localCheckpoint(true)
     AtomicSwap.commit(merged, martPath, batchId, lineage)
-    shims.unpersistLocalCheckpoint(merged)
     shims.unpersistLocalCheckpoint(newL)
     shims.unpersistLocalCheckpoint(newR)
   }
@@ -173,18 +169,14 @@ object StreamingAsOf {
     * never matches any left (the native exec drops it, the argmax merge
     * treats a NULL candidate time as no-candidate) and a NULL-time left
     * matches nothing, so both callers treat None as
-    * nothing-can-be-bounded. In planOnly mode (identity checkpoints, no
-    * job runs → no metrics accumulate) falls back to a plain agg job.
+    * nothing-can-be-bounded. The checkpoint runs in every mode: the
+    * fold needs the bounds, and one materialization job is cheaper than
+    * an identity checkpoint plus a separate agg job.
     */
   private def checkpointWithTimeBounds(df: DataFrame, timeCol: String)
       : (DataFrame, Option[(Long, Long)]) = {
     val tUs = unix_micros(col(timeCol))
-    if (shims.planOnly(df.sparkSession)) {
-      val ck = shims.checkpointWithStats(df)
-      val b = df.agg(min(tUs), max(tUs)).head()
-      return (ck, if (b.isNullAt(0)) None else Some((b.getLong(0), b.getLong(1))))
-    }
-    val (ck, metrics) = shims.checkpointWithStatsObserved(
+    val (ck, metrics) = shims.checkpointEager(
       df.observe("tb", min(tUs).as("lo"), max(tUs).as("hi")))
     (ck, metrics.get("tb") match {
       case Some(r) if !r.isNullAt(0) => Some((r.getLong(0), r.getLong(1)))
@@ -368,7 +360,7 @@ object StreamingAsOf {
     // touched day; a production backfill whose single hot day outgrows
     // one task would add a salt column here, but the fold's steady state
     // touches the tolerance window's 1–2 days.
-    val merged = merged0.repartition(col("__day")).localCheckpoint(true)
+    val (merged, _) = shims.checkpointEager(merged0.repartition(col("__day")))
     merged.write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("__day").parquet(martPath)

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.shims
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.Tables
@@ -168,8 +169,9 @@ object StreamingHourly {
     * year-long mart with a 2-hour watermark rewrites 1-2 partitions per
     * batch, not 365.
     *
-    * Commit contract: data first (localCheckpoint-materialized, since
-    * the merge reads the same path it overwrites), then the
+    * Commit contract: data first (materialized by
+    * `shims.checkpointEager`, since the merge reads the same path it
+    * overwrites; the blocks are freed after the write), then the
     * `_applied_batch` marker. Dynamic overwrite is not atomic across
     * partitions, so a crash mid-write can leave a batch half-applied
     * with the marker still old — the batch then REPLAYS, and the keyed
@@ -187,20 +189,21 @@ object StreamingHourly {
     val lineage = AtomicSwap.streamLineage(spark)
     if (AtomicSwap.alreadyApplied(fs, target, batchId, lineage)) return
     val withDay = batch.withColumn("__day", to_date(col(dayFrom)))
-    // localCheckpoint only when the merge READS the path it overwrites —
+    // checkpoint only when the merge READS the path it overwrites —
     // the first batch (no mart yet) writes straight through
     val merged =
       if (fs.exists(target)) {
         val existing = spark.read.parquet(outPath)
         val touched = withDay.select(col("__day")).distinct()
-        Merge.upsert(
+        Some(shims.checkpointEager(Merge.upsert(
           existing.join(broadcast(touched), Seq("__day"), "left_semi"),
-          withDay, keys).localCheckpoint(true)
-      } else withDay
-    merged
+          withDay, keys))._1)
+      } else None
+    merged.getOrElse(withDay)
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("__day").parquet(outPath)
     AtomicSwap.writeMarker(fs, target, batchId, lineage)
+    merged.foreach(shims.unpersistLocalCheckpoint)
   }
 }

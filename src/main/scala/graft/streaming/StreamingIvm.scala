@@ -62,13 +62,9 @@ object StreamingIvm {
     val merged =
       if (fs.exists(target))
         IncrementalAgg.mergeDeltaSmall(spark.read.parquet(outPath), partials, Keys)
-          // the merge reads the path it is about to replace — materialize
-          // before the swap (same reason partitionedMergeSink checkpoints)
-          .localCheckpoint(true)
       else partials
     AtomicSwap.commit(merged, outPath, batchId, lineage)
-    // the mart is on disk now: both per-batch checkpoints are dead
-    shims.unpersistLocalCheckpoint(merged)
+    // the mart is on disk now: the per-batch checkpoint is dead
     shims.unpersistLocalCheckpoint(partials)
   }
 

@@ -58,7 +58,10 @@ object shims {
   def waitForListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty(30000)
 
-  /** `localCheckpoint(eager = true)` that KEEPS size statistics.
+  /** `localCheckpoint(eager = true)` that KEEPS size statistics — the
+    * default materialization of every derived frame the engine reads
+    * more than once. Identity in [[planOnly]] mode (see
+    * [[checkpointEager]] for the loops that must materialize anyway).
     *
     * `Dataset.localCheckpoint` snapshots the ORIGINAL plan's estimated
     * stats into the resulting `LogicalRDD` — for a derived frame (join /
@@ -71,112 +74,88 @@ object shims {
     * previously patched with per-site `broadcast()` / SHUFFLE_HASH
     * hints (see Graph.scala history).
     *
-    * This helper materializes the checkpoint (ONE pass: `execute()`
-    * builds the RDD lazily, the `count()` is the action that computes,
-    * caches AND counts the blocks — measured construction 1.35–1.68 s
-    * vs 1.38–1.58 s for `localCheckpoint(lazy)` + `Dataset.count()`
-    * on the 1.2 M-edge sf0.1 graph, identical within noise; SCALE.md
-    * "Round 8 … Cause 1"), measures the ACTUAL footprint of the cached
-    * blocks (the block manager master's block statuses), and re-wraps
-    * the RDD in a `LogicalRDD` carrying `Statistics(sizeInBytes =
-    * measured, rowCount = exact)` plus the analyzed plan's constraint set.
-    * Catalyst and AQE then pick broadcast / shuffled-hash joins from
-    * REAL sizes — no hand hints at the call sites. Output
-    * partitioning/ordering are NOT preserved here; see
-    * [[checkpointWithStatsLayout]] for why preserving them breaks AQE
-    * exchange dedup on multi-referenced frames, and use that variant
-    * only where a single-reference consumer exploits the layout.
+    * This materializes the checkpoint (ONE pass: `execute()` builds the
+    * RDD lazily, the `count()` is the action that computes, caches AND
+    * counts the blocks — measured construction 1.35–1.68 s vs
+    * 1.38–1.58 s for `localCheckpoint(lazy)` + `Dataset.count()` on the
+    * 1.2 M-edge sf0.1 graph, identical within noise; SCALE.md "Round 8 …
+    * Cause 1"), measures the ACTUAL footprint of the cached blocks (the
+    * block manager master's block statuses), and re-wraps the RDD in a
+    * `LogicalRDD` carrying `Statistics(sizeInBytes = measured, rowCount
+    * = exact)` plus the analyzed plan's constraint set. Catalyst and AQE
+    * then pick broadcast / shuffled-hash joins from REAL sizes — no hand
+    * hints at the call sites. In-memory deserialized block size
+    * OVER-estimates the serialized broadcast size, so the decision errs
+    * on the safe (non-broadcast) side near the threshold.
     *
-    * In-memory deserialized block size OVER-estimates the serialized
-    * broadcast size, so the decision errs on the safe (non-broadcast)
-    * side near the threshold.
+    * `keepLayout = true` ALSO preserves the materialized output
+    * partitioning/ordering. Use it ONLY where the layout is exploited by
+    * a downstream operator that consumes the frame ONCE per plan (the
+    * co-partitioned PageRank rounds, the bucketed walk-table decode):
+    * there it saves a per-round exchange. Never for frames referenced
+    * multiple times in one plan (self-joins, multi-branch scalar
+    * aggregates): the analyzer clones a multi-referenced LogicalRDD via
+    * `MultiInstanceRelation.newInstance()`, each clone's partitioning
+    * expression carries its own exprIds, and `RDDScanExec`'s canonical
+    * form keeps those raw ids — so structurally identical subtrees over
+    * different clones stop comparing equal and AQE's exchange reuse
+    * re-materializes each one. Measured on triangleStats' edge
+    * checkpoint (consumed by 2 degree aggregates + 2 joins):
+    * layout-preserving ran the degree stages TWICE, +2 jobs and ~1.5 s
+    * of its 7.2 s at sf0.1 — the named r7 bench regression. The default
+    * layout-free form restores exchange dedup (12 jobs → 10, matching
+    * the plain lazy checkpoint — SCALE.md "Round 8 … Cause 1:
+    * layout-preserving checkpoints defeat AQE exchange dedup").
     *
     * Blocks must be freed with [[unpersistLocalCheckpoint]] when done
     * (same contract as a plain eager localCheckpoint).
     */
-  def checkpointWithStats(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    checkpointVariant(df, keepLayout = false)
+  def checkpointWithStats(df: org.apache.spark.sql.DataFrame,
+      keepLayout: Boolean = false): org.apache.spark.sql.DataFrame =
+    if (planOnly(df.sparkSession)) df else materialize(df, keepLayout)
 
-  /** [[checkpointWithStats]] that ALSO returns the plan's observed
-    * metrics (`Dataset.observe` / CollectMetrics rows, keyed by observe
-    * name) accumulated during the checkpoint's own materialization job —
-    * scalar facts about a delta (min/max event time, counts) for free
-    * with the scan the checkpoint already pays for.
+  /** [[checkpointWithStats]] (layout dropped) that runs in EVERY mode
+    * and also returns the plan's observed metrics (`Dataset.observe` /
+    * CollectMetrics rows, keyed by observe name) accumulated during the
+    * checkpoint's own materialization job — scalar facts about a delta
+    * (min/max event time, counts, "did any label change") for free with
+    * the scan the checkpoint already pays for. The map is empty when
+    * the plan observes nothing.
     *
-    * The stock `Observation` helper CANNOT be combined with these
-    * checkpoints: it resolves through a QueryExecutionListener, and the
+    * Use it where the caller runs jobs regardless, so a [[planOnly]]
+    * identity would only move the work elsewhere:
+    *  - inherently eager loops (the components fixed point, BPE
+    *    rounds): there a plain eager checkpoint would snapshot ORIGIN
+    *    stats, and in planOnly mode the upstream stats checkpoints ARE
+    *    identity, so the origin estimate is the join-product of the
+    *    whole uncut lineage and the per-round squaring blow-up returns
+    *    (measured: DumpPlans hung >580 s planning
+    *    x_components_incremental). Measured stats are the only safe
+    *    checkpoint for loop-fed frames in every mode.
+    *  - frames written back over the path they read (the in-place
+    *    dynamic-overwrite refreshes): one materialization job, the same
+    *    as `Dataset.localCheckpoint`, and the writer plans the same sort
+    *    (an AQE plan reports `UnknownPartitioning` and no ordering to
+    *    either). Free the blocks after the write.
+    *
+    * The stock `Observation` helper CANNOT be combined with this
+    * checkpoint: it resolves through a QueryExecutionListener, and the
     * materialization here is an RDD-level job on the plan's own query
-    * execution (see [[checkpointWithStats]]'s rationale), which never
-    * fires dataset-action listeners — `Observation.get` deadlocks
-    * (found the hard way in the r11 streaming as-of fold). Reading
-    * `queryExecution.observedMetrics` after the job is the
-    * listener-free equivalent. In [[planOnly]] mode: identity frame and
-    * an EMPTY map (no job ran) — callers must fall back to an explicit
-    * agg if they still need the numbers.
+    * execution, which never fires dataset-action listeners —
+    * `Observation.get` deadlocks (found the hard way in the r11
+    * streaming as-of fold). Reading `queryExecution.observedMetrics`
+    * after the job is the listener-free equivalent.
     */
-  def checkpointWithStatsObserved(df: org.apache.spark.sql.DataFrame)
+  def checkpointEager(df: org.apache.spark.sql.DataFrame)
       : (org.apache.spark.sql.DataFrame, Map[String, org.apache.spark.sql.Row]) =
-    if (planOnly(df.sparkSession)) (df, Map.empty)
-    else {
-      val out = checkpointVariantImpl(df, keepLayout = false)
-      (out, df.queryExecution.observedMetrics)
-    }
-
-  /** [[checkpointWithStats]] that does NOT degrade to identity in
-    * [[planOnly]] mode. For checkpoints inside inherently-eager loops
-    * (the components fixed point): the loop runs jobs regardless, and a
-    * plain eager checkpoint there would snapshot ORIGIN stats — in
-    * planOnly mode the upstream stats checkpoints ARE identity, so the
-    * origin estimate is the join-product of the whole uncut lineage and
-    * the per-round squaring blow-up returns (measured: DumpPlans hung
-    * >580 s planning x_components_incremental). Measured stats are the
-    * only safe checkpoint for loop-fed frames in every mode.
-    */
-  def checkpointWithStatsEager(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    checkpointVariantImpl(df, keepLayout = false)
-
-  /** [[checkpointWithStatsObserved]]'s eager twin — runs even in
-    * [[planOnly]] mode, for observe-carrying frames inside inherently
-    * eager loops (the components fixed point, which needs BOTH the
-    * planOnly-proof checkpoint of [[checkpointWithStatsEager]] AND the
-    * free convergence scalar of the observed variant: fusing the
-    * per-round "did any label change" probe into the checkpoint's own
-    * materialization job removes one action per round — r16).
-    */
-  def checkpointWithStatsObservedEager(df: org.apache.spark.sql.DataFrame)
-      : (org.apache.spark.sql.DataFrame, Map[String, org.apache.spark.sql.Row]) = {
-    val out = checkpointVariantImpl(df, keepLayout = false)
-    (out, df.queryExecution.observedMetrics)
-  }
-
-  /** [[checkpointWithStats]] that ALSO preserves the materialized
-    * output partitioning/ordering. Use ONLY where the layout is
-    * exploited by a downstream operator that consumes the frame ONCE
-    * per plan (the co-partitioned PageRank rounds, the bucketed
-    * walk-table decode): there it saves a per-round exchange.
-    *
-    * Do NOT use for frames referenced multiple times in one plan
-    * (self-joins, multi-branch scalar aggregates): the analyzer clones
-    * a multi-referenced LogicalRDD via `MultiInstanceRelation
-    * .newInstance()`, each clone's partitioning expression carries its
-    * own exprIds, and `RDDScanExec`'s canonical form keeps those raw
-    * ids — so structurally identical subtrees over different clones
-    * stop comparing equal and AQE's exchange reuse re-materializes
-    * each one. Measured on triangleStats' edge checkpoint (consumed by
-    * 2 degree aggregates + 2 joins): layout-preserving ran the degree
-    * stages TWICE, +2 jobs and ~1.5 s of its 7.2 s at sf0.1 — the
-    * named r7 bench regression. The layout-free form restores
-    * exchange dedup (12 jobs → 10, matching the plain lazy checkpoint —
-    * SCALE.md "Round 8 … Cause 1: layout-preserving checkpoints defeat
-    * AQE exchange dedup").
-    */
-  def checkpointWithStatsLayout(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    checkpointVariant(df, keepLayout = true)
+    // the metrics are read after (left to right) the job that fills them
+    (materialize(df, keepLayout = false), df.queryExecution.observedMetrics)
 
   /** Plan-inspection mode (session conf `spark.graft.planOnly=true`,
-    * set by DumpPlans on its builder): stats checkpoints degrade to
-    * LAZY checkpoints and count fallbacks are skipped, so constructing
-    * an eager-contract DataFrame runs NO jobs — `explain` shows the full
+    * set by DumpPlans on its builder): [[checkpointWithStats]] and
+    * [[lazyCheckpoint]] return their input and count fallbacks are
+    * skipped, so constructing an eager-contract DataFrame runs NO jobs
+    * outside [[checkpointEager]]'s loops — `explain` shows the full
     * unmaterialized derivation, which is what a committed plan record
     * wants anyway. Never set in production paths (Bench/Verify): the
     * measured-stats planning IS the production behavior.
@@ -196,11 +175,7 @@ object shims {
   def lazyCheckpoint(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     if (planOnly(df.sparkSession)) df else df.localCheckpoint(eager = false)
 
-  private def checkpointVariant(df: org.apache.spark.sql.DataFrame,
-      keepLayout: Boolean): org.apache.spark.sql.DataFrame =
-    if (planOnly(df.sparkSession)) df else checkpointVariantImpl(df, keepLayout)
-
-  private def checkpointVariantImpl(df: org.apache.spark.sql.DataFrame,
+  private def materialize(df: org.apache.spark.sql.DataFrame,
       keepLayout: Boolean): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, SortOrder}
     import org.apache.spark.sql.catalyst.plans.logical.Statistics

@@ -3,10 +3,11 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.shims
 
-/** Contract of `shims.checkpointWithStats` — the engine-level fix for
-  * the "checkpointed frames carry no size stats" hazard that previously
-  * forced per-site broadcast / SHUFFLE_HASH hints in every iterative
-  * operator (PageRank rounds, IVF probe joins, triangle closure).
+/** Contract of `shims.checkpointWithStats` / `shims.checkpointEager` —
+  * the engine-level fix for the "checkpointed frames carry no size
+  * stats" hazard that previously forced per-site broadcast /
+  * SHUFFLE_HASH hints in every iterative operator (PageRank rounds,
+  * IVF probe joins, triangle closure).
   */
 class CheckpointStatsSpec extends SparkSuite {
 
@@ -52,7 +53,7 @@ class CheckpointStatsSpec extends SparkSuite {
     // that the checkpoint still carries measured stats
     val df = spark.range(100)
       .selectExpr("id as doc_id", "id - (id % 10) as label", "id as prev_label")
-    val (cp, obs) = shims.checkpointWithStatsObservedEager(
+    val (cp, obs) = shims.checkpointEager(
       df.observe("__chg", sum(when(col("label") < col("prev_label"), 1L)
           .otherwise(0L)).as("changed"))
         .select(col("doc_id"), col("label")))
@@ -87,11 +88,13 @@ class CheckpointStatsSpec extends SparkSuite {
     // the DEFAULT checkpointWithStats deliberately drops the layout —
     // preserving it breaks AQE exchange dedup on multi-referenced
     // frames (see the shim's scaladoc; round-8 regression hunt) — so
-    // co-partitioned loops opt in via checkpointWithStatsLayout
-    val a = shims.checkpointWithStatsLayout(
-      spark.range(5000).selectExpr("id as k", "id * 2 as va").repartition(8, col("k")))
-    val b = shims.checkpointWithStatsLayout(
-      spark.range(5000).selectExpr("id as k", "id * 3 as vb").repartition(8, col("k")))
+    // co-partitioned loops opt in via keepLayout = true
+    val a = shims.checkpointWithStats(
+      spark.range(5000).selectExpr("id as k", "id * 2 as va").repartition(8, col("k")),
+      keepLayout = true)
+    val b = shims.checkpointWithStats(
+      spark.range(5000).selectExpr("id as k", "id * 3 as vb").repartition(8, col("k")),
+      keepLayout = true)
     try {
       // force a non-broadcast join so the partitioning requirement is live
       val joined = a.join(b.hint("SHUFFLE_HASH"), "k")
@@ -137,6 +140,24 @@ class CheckpointStatsSpec extends SparkSuite {
       // and the plan shows the UNCUT derivation, not checkpoint blocks
       assert(plan.contains("lineitem") && !plan.contains("ExistingRDD"),
         s"planOnly should expose the full derivation:\n$plan")
+    }
+  }
+
+  test("planOnly mode: checkpointWithStats is identity whatever keepLayout is; checkpointEager still materializes") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    val df = spark.range(100).selectExpr("id as k", "id * 2 as v")
+      .observe("__n", count(lit(1)).as("n"))
+    withConf(shims.PlanOnlyConf -> "true") {
+      Seq(false, true).foreach { keep =>
+        assert(shims.checkpointWithStats(df, keepLayout = keep) eq df,
+          s"keepLayout = $keep must not materialize in plan-only mode")
+      }
+      val (cp, obs) = shims.checkpointEager(df)
+      try {
+        assert(cp.queryExecution.analyzed.isInstanceOf[LogicalRDD])
+        assert(shims.statsRowCount(cp).contains(100L))
+        assert(obs.get("__n").map(_.getLong(0)).contains(100L), s"metrics: $obs")
+      } finally shims.unpersistLocalCheckpoint(cp)
     }
   }
 

@@ -32,6 +32,13 @@ class BpeSpec extends SparkSuite {
     assert(merges == Seq(("u", "g"), ("u", "n"), ("h", "ug")))
   }
 
+  test("train frees every round's checkpoint") {
+    val (stored, left) = org.apache.spark.sql.graft.TestBlocks.storedAndLeft(
+      spark.sparkContext)(assert(Bpe.train(fixtureWords, 5).length == 5))
+    assert(stored > 0, "positive control: the rounds checkpoint")
+    assert(left == 0, s"$left blocks of the training checkpoints remain")
+  }
+
   test("train is deterministic across repeated runs") {
     val a = Bpe.train(fixtureWords, 5)
     val b = Bpe.train(fixtureWords, 5)

@@ -255,42 +255,46 @@ class GraphSpec extends SparkSuite {
     assert(r(1L) > r(3L), s"expected heavy-edge endpoint to outrank: $r")
   }
 
+  /** A 1-byte broadcast threshold forces the past-the-cliff
+    * (co-partitioned) path on any input, on 4 partitions.
+    */
+  private def coPartitioned[A](body: => A): A =
+    withConf(BroadcastThreshold -> "1", "spark.sql.shuffle.partitions" -> "4")(body)
+
   test("pageRank co-partitioned mode: bit-identical to the broadcast mode") {
-    // broadcastBytesLimit = 1 forces the past-the-cliff path on any input;
     // exact integer arithmetic means the two plans must agree exactly
     val bc = Graph.pageRankScaled(fixture, iters = 3)
       .as[(Long, Long)].collect().toMap
-    val cp = Graph.pageRankScaled(fixture, iters = 3,
-        broadcastBytesLimit = 1L, copartParts = 4)
-      .as[(Long, Long)].collect().toMap
+    val cp = coPartitioned(Graph.pageRankScaled(fixture, iters = 3)
+      .as[(Long, Long)].collect().toMap)
     assert(bc == cp)
     val wEdges = fixture.withColumn("w", lit(2L))
     val bcW = Graph.pageRankScaledWeighted(wEdges, iters = 3)
       .as[(Long, Long)].collect().toMap
-    val cpW = Graph.pageRankScaledWeighted(wEdges, iters = 3,
-        broadcastBytesLimit = 1L, copartParts = 4)
-      .as[(Long, Long)].collect().toMap
+    val cpW = coPartitioned(Graph.pageRankScaledWeighted(wEdges, iters = 3)
+      .as[(Long, Long)].collect().toMap)
     assert(bcW == cpW)
   }
 
   test("pageRank co-partitioned mode: rank joins are exchange-free shuffled-hash; edges never re-shuffle") {
-    val df = Graph.pageRankScaled(fixture, iters = 2,
-      broadcastBytesLimit = 1L, copartParts = 4)
-    df.collect()
-    val p = df.queryExecution.executedPlan.toString
-    assert(p.contains("ShuffledHashJoin"), s"copart mode lost SHUFFLE_HASH:\n$p")
-    assert(!p.contains("SortMergeJoin"), s"edge partitions being sorted:\n$p")
-    assert(!p.contains("BroadcastHashJoin"),
-      s"past-the-cliff mode must not assemble a broadcast:\n$p")
-    // visible round = contrib join (exchange-free: both sides
-    // pre-partitioned) + groupBy(dst) + reinit join (node-sized
-    // exchanges only). The edge-side scan must NOT sit under an
-    // exchange. Count the AQE FINAL section only (the dump repeats the
-    // initial plan below it).
-    val finalSection = p.split("== Initial Plan ==").head
-    val exchanges = finalSection.linesIterator
-      .count(_.contains("Exchange hashpartitioning"))
-    assert(exchanges <= 2, s"too many exchanges for one round ($exchanges):\n$p")
+    coPartitioned {
+      val df = Graph.pageRankScaled(fixture, iters = 2)
+      df.collect()
+      val p = df.queryExecution.executedPlan.toString
+      assert(p.contains("ShuffledHashJoin"), s"copart mode lost SHUFFLE_HASH:\n$p")
+      assert(!p.contains("SortMergeJoin"), s"edge partitions being sorted:\n$p")
+      assert(!p.contains("BroadcastHashJoin"),
+        s"past-the-cliff mode must not assemble a broadcast:\n$p")
+      // visible round = contrib join (exchange-free: both sides
+      // pre-partitioned) + groupBy(dst) + reinit join (node-sized
+      // exchanges only). The edge-side scan must NOT sit under an
+      // exchange. Count the AQE FINAL section only (the dump repeats the
+      // initial plan below it).
+      val finalSection = p.split("== Initial Plan ==").head
+      val exchanges = finalSection.linesIterator
+        .count(_.contains("Exchange hashpartitioning"))
+      assert(exchanges <= 2, s"too many exchanges for one round ($exchanges):\n$p")
+    }
   }
 
   test("pageRankResume: k stored + j resumed rounds == k+j cold rounds, through parquet") {

@@ -78,6 +78,20 @@ class IncrementalWriteSpec extends SparkSuite {
     assert(hours(3) == 21.0 && hours(7) == 30.0 && hours(5) == 10.0)
   }
 
+  test("refreshMart frees the merged slice's checkpoint after the write") {
+    val path = Files.createTempDirectory("graft_incr_release").toString +
+      "/mart_location_weather"
+    val old = meas((1L, "2026-01-01 05:10:00", 10.0), (1L, "2026-01-02 03:10:00", 20.0))
+    OpenAqPipeline.writeMart(Gold.martWeather(old, sens), path)
+    val all = old.union(meas((1L, "2026-01-02 07:10:00", 30.0)))
+    val (stored, left) = org.apache.spark.sql.graft.TestBlocks.storedAndLeft(
+      spark.sparkContext)(OpenAqPipeline.refreshMart(spark, all, sens,
+        "weather_record_id", Gold.martWeather, path))
+    assert(stored > 0, "positive control: the merged slice is checkpointed")
+    assert(left == 0, s"$left blocks of the refresh checkpoint remain")
+    assert(spark.read.parquet(path).count() == 3L)
+  }
+
   test("refreshMart with no fresh rows is a no-op on every partition") {
     val tmp = Files.createTempDirectory("graft_incr_noop").toString
     val path = s"$tmp/mart_location_weather"

@@ -85,4 +85,35 @@ class StreamingIvmSpec extends SparkSuite {
     assert(spark.read.parquet(mart).collect().head.getLong(2) == 3L,
       "a new lineage's batch 0 must merge into the existing mart")
   }
+
+  test("one batch merged into an existing mart runs 7 jobs: no copy of the merge before the swap") {
+    // AtomicSwap.commit writes the staging dir in full before renaming,
+    // so the merge may read the mart it replaces straight into the
+    // write; checkpointing the merged mart first would add a job per
+    // batch (8) and hold a copy of the mart in block storage
+    import spark.implicits._
+    val mart = java.nio.file.Files.createTempDirectory("ivm_jobs")
+      .toString + "/mart"
+    def batch(v: Long) = Seq(("a", v), ("b", v + 1)).toDF("event_type", "v")
+      .select(col("event_type"),
+        lit(java.sql.Timestamp.valueOf("2024-01-01 10:30:00")).as("ts"),
+        (col("v").cast("double") / 100.0).as("value"))
+    StreamingIvm.ivmSink(mart)(batch(5L), 0L)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val merged = batch(7L)
+    org.apache.spark.sql.graft.shims.waitForListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      StreamingIvm.ivmSink(mart)(merged, 1L)
+      org.apache.spark.sql.graft.shims.waitForListenerBus(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get == 7, s"${jobs.get} jobs for one merged batch")
+    assert(spark.read.parquet(mart).filter(col("event_type") === "a")
+      .collect().head.getLong(2) == 2L)
+  }
 }
