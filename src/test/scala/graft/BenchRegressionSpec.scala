@@ -1,15 +1,30 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-over-round bench latch (r7 VERDICT #7): the five >1.5×
   * regressions in round 7 were only named at judging because nothing
   * in-round compared fresh numbers against the previous driver
-  * snapshot. This spec does that comparison in CI: the newest
-  * committed BENCH_r*.json (driver run) vs BENCH_LOCAL.json (the
-  * sidecar every local `graft.Bench` run rewrites), same sf only.
+  * snapshot. This spec does that comparison in CI, same sf only.
+  *
+  * The pairing is ordered in time by each snapshot's `"t0"` (suite
+  * start, epoch ms). `BENCH_LOCAL.json` is the standing idle reference,
+  * not the latest run: since r14 a full `graft.Bench` run replaces it
+  * only when faster (or forced, [[Bench.mayOverwriteReference]]); a
+  * slower run lands in a `BENCH_LOCAL.<t0>.json` side file. So the
+  * local run under test is the newest full-run snapshot by `t0` among
+  * `BENCH_LOCAL.json` and its side files (never the ONLY-filtered
+  * `BENCH_LOCAL_partial.json`), and the prior is the highest-numbered
+  * `BENCH_r*.json` whose `t0` precedes it. Judging the reference as
+  * "now" against the newest driver file ran the comparison backwards
+  * (r17 VERDICT #1): the r14 reference (2026-08-16) against r17
+  * (2026-08-19) read the r15–r17 graph speedups as regressions,
+  * `x_components_incremental` 1.55× and `x_graph_e2e` 1.56×.
   *
   * A query fails the latch when it grew >[[Bench.FlagRatio]]× AND by
   * >[[Bench.FlagAbsSeconds]] absolute (shared constants — this spec's
@@ -19,33 +34,48 @@ import org.scalatest.funsuite.AnyFunSuite
   * the regression gets named in-round; rerun the offender under
   * QueryMetrics for the shuffle-volume delta.
   *
-  * Skips (cancels) when either snapshot is missing or they ran at
-  * different scale factors — a stale comparison is worse than none.
+  * Skips (cancels) when either snapshot is missing, the local run has
+  * no `t0`, no driver snapshot precedes it, or they ran at different
+  * scale factors — a stale comparison is worse than none.
   */
 class BenchRegressionSpec extends AnyFunSuite {
 
-  private def sfOf(json: String): Option[String] =
-    """"sf":\s*"?([0-9.a-z]+)"?""".r.findFirstMatchIn(json).map(_.group(1))
+  /** A snapshot's suite start (epoch ms) from its unescaped `"t0"`.
+    * Driver files from r10 on carry an ESCAPED copy of the stdout line
+    * in their "tail" string, ahead of the real field; `\"t0\":` never
+    * matches a pattern anchored on an unescaped quote (as in
+    * [[Bench.sfLabelOf]]). Driver files before r10 carry no `t0`.
+    */
+  private def t0Of(json: String): Option[Long] =
+    """"t0":\s*([0-9]+)""".r.findFirstMatchIn(json).map(_.group(1).toLong)
+
+  private def snapshot(p: Path): (Path, String) = (p, Files.readString(p))
 
   test("no query grew past the flag thresholds vs the previous driver bench at the same sf") {
-    val localPath = Paths.get("BENCH_LOCAL.json")
-    assume(Files.exists(localPath), "no BENCH_LOCAL.json — run graft.Bench first")
-    val local = Files.readString(localPath)
+    val sideFile = """BENCH_LOCAL\.[0-9]+\.json""".r
+    val localRuns = Using.resource(Files.list(Paths.get(".")))(_.iterator.asScala.toList)
+      .filter { p =>
+        val name = p.getFileName.toString
+        name == "BENCH_LOCAL.json" || sideFile.matches(name)
+      }
+      .map(snapshot)
+    assume(localRuns.nonEmpty, "no BENCH_LOCAL.json — run graft.Bench first")
+    val (localPath, local) = localRuns.maxBy { case (_, s) => t0Of(s) }
+    val localT0 = t0Of(local)
+    assume(localT0.nonEmpty, s"${localPath.getFileName} carries no t0 to order it by")
 
-    val prior = (1 to 99).map(n => Paths.get(f"BENCH_r$n%02d.json"))
-      .filter(Files.exists(_)).lastOption
-    assume(prior.nonEmpty, "no committed BENCH_r*.json to compare against")
-    val priorJson = Files.readString(prior.get)
+    val prior = (99 to 1 by -1).iterator.map(n => Paths.get(f"BENCH_r$n%02d.json"))
+      .filter(Files.exists(_)).map(snapshot)
+      .find { case (_, s) => t0Of(s).exists(_ < localT0.get) }
+    assume(prior.nonEmpty,
+      s"no committed BENCH_r*.json precedes ${localPath.getFileName} (t0 ${localT0.get})")
+    val (priorPath, priorJson) = prior.get
 
-    val localSf = sfOf(local)
-    val priorSfNum = """"sf":\s*([0-9.]+)""".r.findFirstMatchIn(priorJson).map(_.group(1))
-    // driver snapshots carry sf as a number (0.1), the sidecar as a dir
-    // label (sf0.1) — normalize before comparing
-    val comparable = (localSf, priorSfNum) match {
-      case (Some(l), Some(p)) => l.stripPrefix("sf") == p
-      case _ => false
-    }
-    assume(comparable, s"sf mismatch: local=$localSf prior=$priorSfNum")
+    val localSf = Bench.sfLabelOf(local)
+    val priorSf = Bench.sfLabelOf(priorJson)
+    assume(localSf.zip(priorSf).exists { case (l, p) => Bench.sameSfLabel(l, p) },
+      s"sf mismatch: local=$localSf prior=$priorSf")
+    info(s"${localPath.getFileName} (t0 ${localT0.get}) vs ${priorPath.getFileName}")
 
     // the one parser Bench itself flags with (escaped-tail-safe) — the
     // band's self-exclusion below compares these maps for identity, so
@@ -56,7 +86,7 @@ class BenchRegressionSpec extends AnyFunSuite {
     // a SPARK_GRAFT_BENCH_ONLY-filtered sidecar ran with a fraction of
     // the suite's JIT warmup — its numbers aren't comparable
     assume(localQ.size * 2 >= priorQ.size,
-      s"BENCH_LOCAL is a partial run (${localQ.size} of ${priorQ.size} queries)")
+      s"${localPath.getFileName} is a partial run (${localQ.size} of ${priorQ.size} queries)")
 
     // In-artifact burst arbitration (round 10, tightened round 11):
     // Bench re-measures any query reading >FlagRatio x its committed
@@ -114,7 +144,7 @@ class BenchRegressionSpec extends AnyFunSuite {
     val (bursts, offenders) = checked.partition(_._4)
     bursts.foreach(b => info(s"burst-arbitrated (clean isolated re-measure): ${b._5}"))
     assert(offenders.isEmpty,
-      "bench regressions vs " + prior.get.getFileName + " — name each cause " +
+      s"bench regressions in ${localPath.getFileName} vs ${priorPath.getFileName} — name each cause " +
         "(QueryMetrics the offender at the same sf) before shipping:\n  " +
         offenders.map(_._5).mkString("\n  "))
   }
@@ -183,6 +213,16 @@ class BenchRegressionSpec extends AnyFunSuite {
     assert(Bench.sameSfLabel("graft_sf1", "graft_sf1"))
     assert(!Bench.sameSfLabel("graft_sf1", "sf1"))
     assert(!Bench.sameSfLabel("sf0.1", "sf1"))
+
+    // t0 extraction (the latch's time order): the driver file's real
+    // "t0" wins over the escaped \"t0\": copy its tail carries AHEAD of
+    // it; the sidecar's field parses; a snapshot without t0 (driver
+    // files before r10) yields nothing, so it is never a prior
+    assert(t0Of("""{"tail": "...\"t0\":1787159146362...", "t0": 1786878134595}""")
+      .contains(1786878134595L))
+    assert(t0Of("""{"total":137.87,"sf":"sf0.1","t0":1786894801904,"queries":{}}""")
+      .contains(1786894801904L))
+    assert(t0Of("""{"sf": 0.1, "tail": "...\"sf\":\"sf0.1\"..."}""").isEmpty)
 
     // reference BANDS (r16): per-query threshold from the query's own
     // clean-run spread — degenerate point reference below 2 runs, the
