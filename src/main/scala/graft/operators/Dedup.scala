@@ -26,20 +26,6 @@ object Dedup {
       .drop("__rn")
   }
 
-  /** Skew-safe twin of [[latestWins]]: identical result whenever
-    * `orderCols` ends in a unique tie-break (asserted by property test),
-    * implemented as `max_by` over the order tuple — a map-side-combining
-    * aggregation, so a hot key reduces to one candidate per map task
-    * before the shuffle instead of sort-serializing a window on one
-    * reducer. Prefer this at scale when a key can be arbitrarily hot
-    * (the window form matches the reference's QUALIFY shape 1:1 and is
-    * kept for the oracle-checked pipeline paths).
-    */
-  def latestWinsAgg(df: DataFrame, keys: Seq[String], orderCols: Seq[Column]): DataFrame = {
-    val m = max_by(struct(df.columns.map(col).toSeq: _*), struct(orderCols: _*))
-    df.groupBy(keys.map(col): _*).agg(m.as("__m")).select(col("__m.*"))
-  }
-
   /** First-wins dedup by composite key, deterministic via min over a
     * unique tiebreak column (reference in-flight dedup on
     * (datetimeFrom.utc, value), extract_measurements.py:109-118).

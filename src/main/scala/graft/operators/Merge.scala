@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   * profile as any MERGE. When `batch` is small relative to `existing`
   * (the daily-increment case), Spark/AQE broadcasts the batch side of the
   * anti-join, so the big table is never shuffled. With day-partitioned
-  * storage, pair this with dynamic partition overwrite so only touched
-  * partitions rewrite.
+  * storage, pair this with [[overwriteDays]] so only touched partitions
+  * rewrite.
   */
 object Merge {
 
@@ -34,4 +34,21 @@ object Merge {
     val anti = if (broadcastBatch) broadcast(batchKeys) else batchKeys
     existing.join(anti, keys, "left_anti").unionByName(batch)
   }
+
+  /** Replace exactly the `__day` partitions present in `df` under
+    * `path` (dynamic partition overwrite); every other day's files stay
+    * byte-identical. The one write path of the day-partitioned marts.
+    *
+    * `df` may read the very partitions it replaces: the dynamic mode
+    * writes task output under `path/.spark-staging-<job>` and deletes
+    * and renames the target `__day=` directories only at job commit,
+    * after every task has read its input, so no copy of `df` is needed
+    * first. Not atomic across partitions: a crash during the commit's
+    * renames can leave some days new and others old, and callers replay
+    * a keyed, idempotent merge to re-converge.
+    */
+  def overwriteDays(df: DataFrame, path: String): Unit =
+    df.write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("__day").parquet(path)
 }

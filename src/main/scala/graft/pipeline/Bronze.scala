@@ -45,16 +45,6 @@ object Bronze {
     spark.read.option("header", "true").option("inferSchema", "true")
       .option("mode", "PERMISSIVE").csv(path)
 
-  /** S2/P15: audit enrichment — the four ingestion-stamp columns the
-    * reference appends to every extracted row.
-    */
-  def withAudit(df: DataFrame, runId: String, logicalDate: String,
-                source: String): DataFrame =
-    df.withColumn("_audit_run_id", lit(runId))
-      .withColumn("_audit_logical_date", lit(logicalDate).cast("date"))
-      .withColumn("_audit_extracted_at", current_timestamp())
-      .withColumn("_audit_source", lit(source))
-
   /** Clustering-on-write (the reference's BigQuery `cluster_by`,
     * dags/01:191): sort within partitions by (partition col, cluster
     * cols) so each output file's row groups carry tight, mostly

@@ -4,12 +4,12 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Keys, Numeric}
-import graft.operators.{Dedup, Merge}
+import graft.operators.Dedup
 
 /** Intermediate + gold models: enrichment join, physical-range gate,
   * SCD-1 dimension, and the two wide hourly mart pivots with
-  * incremental-merge semantics (reference models/intermediate SQL,
-  * models/marts SQL).
+  * incremental-merge semantics (`OpenAqPipeline.refreshMart`; reference
+  * models/intermediate SQL, models/marts SQL).
   *
   * Scale design: locations is the small dimension → broadcast into J1 so
   * the sensor stream never shuffles; the mart aggregation is one hash
@@ -198,13 +198,4 @@ object Gold {
       .filter(col("measured_from_utc") >= col("__bound"))
       .drop("__bound")
   }
-
-  /** Incremental mart refresh (T2/F3/A6): rebuild the pivot for the
-    * [[freshSlice]] and MERGE it over the existing mart by record key.
-    */
-  def incrementalRefresh(existing: DataFrame, validMeasurements: DataFrame,
-                         sensorsEnriched: DataFrame, keyName: String,
-                         pivot: (DataFrame, DataFrame) => DataFrame): DataFrame =
-    Merge.upsert(existing, pivot(freshSlice(existing, validMeasurements), sensorsEnriched),
-      Seq(keyName))
 }

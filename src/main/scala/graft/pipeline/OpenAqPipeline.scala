@@ -5,6 +5,8 @@ import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.graft.shims
 
+import graft.operators.Merge
+
 /** End-to-end orchestration of the medallion chain for one run
   * (SURVEY §3): lake NDJSON → bronze → silver (materialized once per
   * run) → lazy intermediate → materialized gold, with the reference's
@@ -112,32 +114,26 @@ object OpenAqPipeline {
       .write.mode("overwrite").partitionBy("__day").parquet(path)
   }
 
-  /** PARTITION-SCOPED incremental mart refresh — the write path that
-    * makes `Gold.incrementalRefresh` hold at 100×. A full-table
-    * overwrite per daily refresh rewrites the whole mart (years of
-    * days) to change one boundary day; here only the partitions the
-    * fresh slice touches are read, merged, and rewritten:
+  /** PARTITION-SCOPED incremental mart refresh (T2/F3/A6), the dbt
+    * `incremental` model's MERGE on bare parquet. A full-table overwrite
+    * per daily refresh rewrites the whole mart (years of days) to change
+    * one boundary day; here only the partitions the fresh slice touches
+    * are read, merged, and rewritten:
     *
-    *  1. boundary = existing mart's max hour (`Gold.freshSlice`, the
-    *     same cut as `Gold.incrementalRefresh`, F3 semantics: boundary
-    *     hour re-aggregates, strictly-late rows drop);
+    *  1. boundary = existing mart's max hour (`Gold.freshSlice`, F3
+    *     semantics: boundary hour re-aggregates, strictly-late rows
+    *     drop);
     *  2. the re-pivoted fresh slice determines the touched day set —
     *     for a daily T-1 run that is 1–2 partitions out of thousands;
-    *  3. only those days of the existing mart enter the merge (a
+    *  3. only those days of the existing mart enter the keyed upsert (a
     *     broadcast semi-join on the partition column — dynamic
     *     partition pruning keeps the scan to the touched directories);
-    *  4. the merged slice is written with
-    *     `partitionOverwriteMode=dynamic`, which replaces exactly the
-    *     partitions present in the output and leaves every other day's
-    *     files untouched (asserted byte-identical in
-    *     IncrementalWriteSpec).
+    *  4. the merged slice replaces exactly those partitions
+    *     (`Merge.overwriteDays`), leaving every other day's files
+    *     untouched (asserted byte-identical in IncrementalWriteSpec).
     *
-    * The merged slice is materialized (`shims.checkpointEager`) before
-    * the write: it is read from the same path it overwrites, and on
-    * bare parquet the materialization is what stands in for a table
-    * format's transactional MERGE (at real scale: reliable checkpoint
-    * or a staging dir + rename, same shape). Its blocks are freed once
-    * the partitions are on disk.
+    * A replay with the same input re-merges the same slice to the same
+    * mart (the upsert is idempotent).
     */
   def refreshMart(spark: SparkSession, validMeasurements: DataFrame,
                   sensorsEnriched: DataFrame, keyName: String,
@@ -150,13 +146,8 @@ object OpenAqPipeline {
     val touchedDays = batch.select(col("__day")).distinct()
     val touchedExisting =
       existing.join(broadcast(touchedDays), Seq("__day"), "left_semi")
-    val (merged, _) = shims.checkpointEager(
-      graft.operators.Merge.upsert(touchedExisting, batch, Seq(keyName))
-        .sortWithinPartitions(col("__day"), col("country_code"), col("location_id")))
-    merged.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__day").parquet(path)
-    shims.unpersistLocalCheckpoint(merged)
+    Merge.overwriteDays(Merge.upsert(touchedExisting, batch, Seq(keyName))
+      .sortWithinPartitions(col("__day"), col("country_code"), col("location_id")), path)
   }
 
   /** Disaster recovery (dags/99): full-lake wildcard rescan, truncate

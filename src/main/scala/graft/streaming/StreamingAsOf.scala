@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.shims
 
-import graft.operators.AsOf
+import graft.operators.{AsOf, Merge}
 
 /** Streaming as-of join — the streaming twin of
   * [[graft.operators.AsOf.joinBackwardNative]], completing the
@@ -44,100 +44,6 @@ import graft.operators.AsOf
   * the same DuckDB oracle as `x_asof_native`.
   */
 object StreamingAsOf {
-
-  /** foreachBatch sink maintaining the as-of mart. `split` divides a
-    * micro-batch into (new lefts, new rights); `leftId` is the left
-    * row's unique id the merge joins on; `rightTieBreak` must be one of
-    * `rightCols` (the merge re-reads it from the stored payload).
-    */
-  def asOfSink(martPath: String, rightStorePath: String,
-               split: DataFrame => (DataFrame, DataFrame),
-               leftId: String, keys: Seq[String],
-               leftTime: String, rightTime: String,
-               rightCols: Seq[String], rightTieBreak: String,
-               toleranceUs: Option[Long])(batch: DataFrame, batchId: Long): Unit = {
-    require(rightCols.contains(rightTieBreak),
-      s"asOfSink: rightTieBreak '$rightTieBreak' must be stored (one of $rightCols)")
-    val spark = batch.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
-    val mart = new org.apache.hadoop.fs.Path(martPath)
-    val fs = mart.getFileSystem(conf)
-    AtomicSwap.heal(fs, mart)
-    val lineage = AtomicSwap.streamLineage(spark)
-    if (AtomicSwap.alreadyApplied(fs, mart, batchId, lineage)) return
-    val (newL0, newR0) = split(batch)
-    val (newL, lBounds) = checkpointWithTimeBounds(newL0, leftTime)
-    val (newR, rBounds) = checkpointWithTimeBounds(newR0, rightTime)
-    // 1. rights are append-only → land as an overwrite-idempotent
-    // `batch=<id>` shard (the StreamingIndex/bm25Sink posture): a
-    // replayed batch overwrites its own shard bit-for-bit, and the
-    // per-batch right-store cost is O(delta) — a full-history rewrite
-    // here measured as the one index-sized term in the fold
-    // (SCALE.md "Round 10: streaming as-of + streaming BM25 — measured
-    // fold costs"). Long streams consolidate shards offline with
-    // Compact.compactShards — behind the mart's _applied_batch
-    // watermark, whose replay guard returns above BEFORE this shard
-    // write (the property that makes consolidating applied batches
-    // safe); CompactSpec pins a post-compaction fold.
-    newR.write.mode("overwrite").parquet(s"$rightStorePath/batch=$batchId")
-    val rstoreSchema = graft.operators.ShardStore.withBatch(newR.schema)
-    val allR = graft.operators.ShardStore.read(spark, rightStorePath, rstoreSchema)
-      .drop("batch").select(newR.columns.map(col): _*)
-    // 2. A: new lefts vs (tolerance-pruned) right history, via the
-    // native batch exec — __rt_us (raw matched right time) is what the
-    // argmax merge compares
-    val rightsForA = pruneRightsForA(allR, lBounds.map(_._1), rightTime,
-      toleranceUs)
-    def withRt(asofed: DataFrame): DataFrame = asofed
-      .withColumn("__rt_us", unix_micros(col(leftTime)) - col("asof_lag_us"))
-      .drop("asof_lag_us")
-    val aRows = withRt(AsOf.joinBackwardNative(
-      newL, rightsForA, keys, leftTime, rightTime, rightCols,
-      rightTieBreak, toleranceUs = None))
-    val merged =
-      if (!fs.exists(mart)) aRows
-      else {
-        val standingM = spark.read.schema(
-          org.apache.spark.sql.types.StructType(newL.schema.fields ++
-            rightCols.map(c => newR.schema(c)) :+
-            org.apache.spark.sql.types.StructField("__rt_us",
-              org.apache.spark.sql.types.LongType))).parquet(martPath)
-        // 3. B: only mart rows that share a key with the new rights AND
-        // sit in the rights' time window can change. The time bound is
-        // exact, not approximate: a left with lt < min(new rt) has no
-        // new right at-or-before it at all, and one with
-        // lt > max(new rt) + tol could at most swap one
-        // beyond-tolerance raw match for another — both read as NULL,
-        // the same argument that makes the A-side prune safe. For a
-        // time-ordered stream this caps B at the tolerance window
-        // regardless of mart size or key spread (measured: an
-        // unpruned B re-as-of'd every historical row of every
-        // delta-active user, O(mart ∩ hot keys) per fold).
-        val (affected, untouched) = splitAffected(standingM, newR, keys,
-          leftTime, rBounds, toleranceUs)
-        val leftColNames = standingM.columns
-          .filterNot(c => c == "__rt_us" || rightCols.contains(c)).toSeq
-        val cand = withRt(AsOf.joinBackwardNative(
-            affected.select(leftColNames.map(col): _*), newR.toDF(), keys,
-            leftTime, rightTime, rightCols, rightTieBreak, toleranceUs = None))
-          .select((col(leftId) +: rightCols.map(c => col(c).as(s"__c_$c")))
-            :+ col("__rt_us").as("__c_rt"): _*)
-        // argmax merge: larger raw right time wins; equal time → larger
-        // tie value (the backward rule); a found match beats none
-        val better = col("__c_rt").isNotNull && (col("__rt_us").isNull ||
-          col("__c_rt") > col("__rt_us") ||
-          (col("__c_rt") === col("__rt_us") &&
-            col(s"__c_$rightTieBreak") > col(rightTieBreak)))
-        val mergedAffected = affected.join(cand, Seq(leftId), "left")
-          .select(leftColNames.map(col) ++
-            rightCols.map(c => when(better, col(s"__c_$c")).otherwise(col(c)).as(c)) :+
-            when(better, col("__c_rt")).otherwise(col("__rt_us")).as("__rt_us"): _*)
-        untouched.unionByName(mergedAffected).unionByName(aRows)
-      }
-    AtomicSwap.commit(merged, martPath, batchId, lineage)
-    shims.unpersistLocalCheckpoint(newL)
-    shims.unpersistLocalCheckpoint(newR)
-  }
 
   /** Fail fast when the SESSION timezone is not UTC-equivalent: the
     * partition-scoped sink's touched-day arithmetic
@@ -184,12 +90,12 @@ object StreamingAsOf {
     })
   }
 
-  /** A-side tolerance prune shared by both sinks: with a tolerance,
-    * only rights at or after `min(new left time) − tol` can produce a
-    * visible match for the delta's lefts. `minLt` is the observed
-    * min left time (None = empty or all-NULL-time delta → nothing to
-    * bound by; the unpruned history is correct and the downstream join
-    * output is empty/NULL-matched anyway).
+  /** A-side tolerance prune: with a tolerance, only rights at or after
+    * `min(new left time) − tol` can produce a visible match for the
+    * delta's lefts. `minLt` is the observed min left time (None = empty
+    * or all-NULL-time delta → nothing to bound by; the unpruned history
+    * is correct and the downstream join output is empty/NULL-matched
+    * anyway).
     */
   private def pruneRightsForA(allR: DataFrame, minLt: Option[Long],
       rightTime: String, toleranceUs: Option[Long]): DataFrame =
@@ -199,15 +105,17 @@ object StreamingAsOf {
       case _ => allR
     }
 
-  /** Affected/untouched split shared by both sinks: a standing mart row
-    * can change only if it (a) shares a key with the new rights and
-    * (b) sits in the rights' time window `[min rt, max rt + tol]`. The
-    * time bound is exact: a left before every new right has no new
-    * match at all, and one past the window could at most swap one
-    * beyond-tolerance raw match for another — both read NULL (the
-    * A-side prune argument). NULL left times land in `untouched`.
-    * `bounds` is [[rightBounds]] of the new rights (None = empty or
-    * all-NULL-time delta → nothing can change).
+  /** Affected/untouched split: a standing mart row can change only if
+    * it (a) shares a key with the new rights and (b) sits in the rights'
+    * time window `[min rt, max rt + tol]`. The time bound is exact: a
+    * left before every new right has no new match at all, and one past
+    * the window could at most swap one beyond-tolerance raw match for
+    * another — both read NULL (the A-side prune argument). For a
+    * time-ordered stream this caps the re-as-of at the tolerance window
+    * regardless of mart size or key spread. NULL left times land in
+    * `untouched`. `bounds` is the new rights' observed time bounds
+    * ([[checkpointWithTimeBounds]]; None = empty or all-NULL-time delta
+    * → nothing can change).
     */
   private def splitAffected(standing: DataFrame, newR: DataFrame,
       keys: Seq[String], leftTime: String,
@@ -225,25 +133,31 @@ object StreamingAsOf {
      marked.filter(col("__hot").isNull || !inWindow).drop("__hot"))
   }
 
-  /** The PARTITION-SCOPED form of [[asOfSink]] — the 100 TB posture
-    * (the `partitionedMergeSink` pattern applied to the as-of mart):
-    * the mart is partitioned by the LEFT EVENT DAY, and a batch reads
-    * and rewrites only the day partitions its delta touches — the new
-    * lefts' days plus the days overlapping the new rights' time window
-    * `[min rt, max rt + tol]` — via dynamic partition overwrite.
+  /** foreachBatch sink maintaining the as-of mart. `split` divides a
+    * micro-batch into (new lefts, new rights); `leftId` is the left
+    * row's unique id the merge joins on; `rightTieBreak` must be one of
+    * `rightCols` (the merge re-reads it from the stored payload).
+    *
+    * Partition-scoped (the `partitionedMergeSink` pattern applied to the
+    * as-of mart): the mart is partitioned by the LEFT EVENT DAY, and a
+    * batch reads and rewrites only the day partitions its delta touches
+    * — the new lefts' days plus the days overlapping the new rights'
+    * time window `[min rt, max rt + tol]` — via dynamic partition
+    * overwrite.
     *
     * Day partitioning, not key-bucket, deliberately: bucket-scoping by
     * key only localizes when deltas are KEY-local, and any delta with
     * more distinct keys than buckets touches every bucket (measured:
     * a uniform-key delta made the bucketed fold strictly worse than
-    * the full swap). Time-scoping exploits the locality the OPERATOR
+    * a whole-mart swap). Time-scoping exploits the locality the OPERATOR
     * guarantees — the tolerance bounds how far back a new right can
     * visibly reach — so for an in-order stream a fold rewrites the
     * last day or two regardless of mart size or key spread.
     *
-    * Commit contract (same as partitionedMergeSink): data first, then
-    * the `_applied_batch` marker. Dynamic overwrite is not atomic
-    * across partitions, so a crash mid-write replays the batch — and
+    * Commit contract (same as partitionedMergeSink): data first
+    * ([[Merge.overwriteDays]]), then the
+    * `_applied_batch` marker. Dynamic overwrite is not atomic across
+    * partitions, so a crash mid-write replays the batch — and
     * the fold is replay-CONVERGENT: already-inserted new lefts are
     * excluded from the existing side and recomputed identically from
     * the (idempotent) right shards, and the argmax merge re-applied
@@ -274,6 +188,14 @@ object StreamingAsOf {
     val (newL0, newR0) = split(batch)
     val (newL, lBounds) = checkpointWithTimeBounds(newL0, leftTime)
     val (newR, rBounds) = checkpointWithTimeBounds(newR0, rightTime)
+    // rights are append-only → land as an overwrite-idempotent
+    // `batch=<id>` shard (the StreamingIndex/bm25Sink posture): a
+    // replayed batch overwrites its own shard bit-for-bit, and the
+    // per-batch right-store cost is O(delta). Long streams consolidate
+    // shards offline with Compact.compactShards — behind the mart's
+    // _applied_batch watermark, whose replay guard returns above BEFORE
+    // this shard write (the property that makes consolidating applied
+    // batches safe); CompactSpec pins a post-compaction fold.
     newR.write.mode("overwrite").parquet(s"$rightStorePath/batch=$batchId")
     // declared schema (the delta's own, plus the shard partition id):
     // the standing reads run EVERY batch, and footer-based inference is
@@ -290,7 +212,7 @@ object StreamingAsOf {
         newL, rightsForA, keys, leftTime, rightTime, rightCols,
         rightTieBreak, toleranceUs = None))
       .withColumn("__day", to_date(col(leftTime)))
-    val merged0 =
+    val merged =
       if (!fs.exists(mart)) aRows
       else {
         // touched day partitions: the new lefts' days plus every day
@@ -340,6 +262,8 @@ object StreamingAsOf {
             leftTime, rightTime, rightCols, rightTieBreak, toleranceUs = None))
           .select((col(leftId) +: rightCols.map(c => col(c).as(s"__c_$c")))
             :+ col("__rt_us").as("__c_rt"): _*)
+        // argmax merge: larger raw right time wins; equal time → larger
+        // tie value (the backward rule); a found match beats none
         val better = col("__c_rt").isNotNull && (col("__rt_us").isNull ||
           col("__c_rt") > col("__rt_us") ||
           (col("__c_rt") === col("__rt_us") &&
@@ -351,29 +275,22 @@ object StreamingAsOf {
             col("__day"): _*)
         untouched.unionByName(mergedAffected).unionByName(aRows)
       }
-    // the merge reads partitions it is about to overwrite — materialize.
     // CLUSTER BY DAY first: an unclustered dynamic overwrite fans out to
     // one file per (task × day) — measured 115 files for a 30-day toy
     // mart, and the per-file open/commit machinery dominated the fold
     // (SCALE.md "Round 11: the `t*` drain floor"). Hashing days across
-    // tasks writes one file per
-    // touched day; a production backfill whose single hot day outgrows
-    // one task would add a salt column here, but the fold's steady state
-    // touches the tolerance window's 1–2 days.
-    val (merged, _) = shims.checkpointEager(merged0.repartition(col("__day")))
-    merged.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__day").parquet(martPath)
+    // tasks writes one file per touched day; a production backfill whose
+    // single hot day outgrows one task would add a salt column here, but
+    // the fold's steady state touches the tolerance window's 1–2 days.
+    Merge.overwriteDays(merged.repartition(col("__day")), martPath)
     AtomicSwap.writeMarker(fs, mart, batchId, lineage)
-    shims.unpersistLocalCheckpoint(merged)
     shims.unpersistLocalCheckpoint(newL)
     shims.unpersistLocalCheckpoint(newR)
   }
 
   /** Read the maintained mart in `x_asof_native` output shape: tolerance
     * nulling applied to the stored raw best, `asof_lag_us` derived from
-    * the stored match time. Works for both sink forms (`__day` from the
-    * partition-scoped mart is dropped).
+    * the stored match time (the `__day` partition column is dropped).
     */
   def readMart(spark: SparkSession, martPath: String, leftTime: String,
                rightCols: Seq[String], toleranceUs: Option[Long]): DataFrame = {

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.shims
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.Tables
@@ -62,10 +61,10 @@ object StreamingHourly {
     * (`Numeric.scaledAvg` — order-independent, so the result is
     * bit-identical to the batch/oracle answer no matter how the source
     * splits into micro-batches), update-mode emission feeds
-    * [[mergeSink]]'s keyed upsert, and `Trigger.AvailableNow` drains the
-    * source and stops (T3's data-aware trigger). Returns the committed
-    * mart. Registered as driver query `t2_streaming_merge`, so the
-    * streaming path has the same oracle + bench visibility as every
+    * [[partitionedMergeSink]]'s keyed upsert, and `Trigger.AvailableNow`
+    * drains the source and stops (T3's data-aware trigger). Returns the
+    * committed mart. Registered as registry query `t2_streaming_merge`, so
+    * the streaming path has the same oracle + bench visibility as every
     * batch operator.
     *
     * Update-mode note: append mode would withhold every window newer
@@ -79,8 +78,7 @@ object StreamingHourly {
     * [[mergeSink]]).
     */
   def availableNowHourlyMart(spark: SparkSession, sfDir: String,
-                             maxFilesPerTrigger: Option[Int] = None,
-                             partitionedSink: Boolean = true): DataFrame = {
+                             maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     val work = DrainWork.tempDir("graft_stream_mart")
     val mart = s"$work/mart"
     // same nanos-ts handling as Tables.events, stream-side: schema from a
@@ -115,12 +113,8 @@ object StreamingHourly {
         graft.functions.Numeric.scaledAvg(col("value")).as("avg_value"))
       .select(col("w.start").as("window_start"), col("event_type"),
         col("n_events"), col("avg_value"))
-    // partition-scoped sink is the default (per-batch cost independent
-    // of mart size — the 100 TB posture); whole-swap kept for callers
-    // needing single-rename atomicity
-    val sink =
-      if (partitionedSink) partitionedMergeSink(mart, Seq("window_start", "event_type")) _
-      else mergeSink(mart, Seq("window_start", "event_type")) _
+    // partition-scoped sink: per-batch cost independent of mart size
+    val sink = partitionedMergeSink(mart, Seq("window_start", "event_type")) _
     // bounded drain → clamp the state-store width (DrainWidth scaladoc)
     DrainWidth.clamped(spark) {
       val q = agg.writeStream
@@ -169,9 +163,7 @@ object StreamingHourly {
     * year-long mart with a 2-hour watermark rewrites 1-2 partitions per
     * batch, not 365.
     *
-    * Commit contract: data first (materialized by
-    * `shims.checkpointEager`, since the merge reads the same path it
-    * overwrites; the blocks are freed after the write), then the
+    * Commit contract: data first ([[Merge.overwriteDays]]), then the
     * `_applied_batch` marker. Dynamic overwrite is not atomic across
     * partitions, so a crash mid-write can leave a batch half-applied
     * with the marker still old — the batch then REPLAYS, and the keyed
@@ -189,21 +181,13 @@ object StreamingHourly {
     val lineage = AtomicSwap.streamLineage(spark)
     if (AtomicSwap.alreadyApplied(fs, target, batchId, lineage)) return
     val withDay = batch.withColumn("__day", to_date(col(dayFrom)))
-    // checkpoint only when the merge READS the path it overwrites —
-    // the first batch (no mart yet) writes straight through
     val merged =
       if (fs.exists(target)) {
-        val existing = spark.read.parquet(outPath)
         val touched = withDay.select(col("__day")).distinct()
-        Some(shims.checkpointEager(Merge.upsert(
-          existing.join(broadcast(touched), Seq("__day"), "left_semi"),
-          withDay, keys))._1)
-      } else None
-    merged.getOrElse(withDay)
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__day").parquet(outPath)
+        Merge.upsert(spark.read.parquet(outPath)
+          .join(broadcast(touched), Seq("__day"), "left_semi"), withDay, keys)
+      } else withDay
+    Merge.overwriteDays(merged, outPath)
     AtomicSwap.writeMarker(fs, target, batchId, lineage)
-    merged.foreach(shims.unpersistLocalCheckpoint)
   }
 }

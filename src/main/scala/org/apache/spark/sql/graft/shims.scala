@@ -132,11 +132,9 @@ object shims {
     *    (measured: DumpPlans hung >580 s planning
     *    x_components_incremental). Measured stats are the only safe
     *    checkpoint for loop-fed frames in every mode.
-    *  - frames written back over the path they read (the in-place
-    *    dynamic-overwrite refreshes): one materialization job, the same
-    *    as `Dataset.localCheckpoint`, and the writer plans the same sort
-    *    (an AQE plan reports `UnknownPartitioning` and no ordering to
-    *    either). Free the blocks after the write.
+    *  - deltas whose observed metrics the caller needs before planning
+    *    the rest of its work (the streaming as-of fold's time bounds):
+    *    one job yields both the checkpoint and the metrics.
     *
     * The stock `Observation` helper CANNOT be combined with this
     * checkpoint: it resolves through a QueryExecutionListener, and the

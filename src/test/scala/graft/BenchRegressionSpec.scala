@@ -18,8 +18,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * only when faster (or forced, [[Bench.mayOverwriteReference]]); a
   * slower run lands in a `BENCH_LOCAL.<t0>.json` side file. So the
   * local run under test is the newest full-run snapshot by `t0` among
-  * `BENCH_LOCAL.json` and its side files (never the ONLY-filtered
-  * `BENCH_LOCAL_partial.json`), and the prior is the highest-numbered
+  * `BENCH_LOCAL.json` and its side files at the reference's sf (never
+  * the ONLY-filtered `BENCH_LOCAL_partial.json`; a side file from a run
+  * at another sf, such as an sf1 sweep, is passed over), and the prior
+  * is the highest-numbered
   * `BENCH_r*.json` whose `t0` precedes it. Judging the reference as
   * "now" against the newest driver file ran the comparison backwards
   * (r17 VERDICT #1): the r14 reference (2026-08-16) against r17
@@ -51,6 +53,21 @@ class BenchRegressionSpec extends AnyFunSuite {
 
   private def snapshot(p: Path): (Path, String) = (p, Files.readString(p))
 
+  /** The local run under test among the full-run snapshots `runs`: the
+    * newest by `t0` whose sf label matches `BENCH_LOCAL.json`'s (all of
+    * them when there is no labelled reference). An other-sf side file
+    * must not displace it, or the latch would cancel on "sf mismatch"
+    * on every run until the file is deleted.
+    */
+  private def newestLocalRun(runs: Seq[(Path, String)]): Option[(Path, String)] = {
+    val refSf = runs.collectFirst {
+      case (p, s) if p.getFileName.toString == "BENCH_LOCAL.json" => Bench.sfLabelOf(s)
+    }.flatten
+    val atRefSf = refSf.fold(runs)(sf =>
+      runs.filter { case (_, s) => Bench.sfLabelOf(s).exists(Bench.sameSfLabel(_, sf)) })
+    atRefSf.maxByOption { case (_, s) => t0Of(s) }
+  }
+
   test("no query grew past the flag thresholds vs the previous driver bench at the same sf") {
     val sideFile = """BENCH_LOCAL\.[0-9]+\.json""".r
     val localRuns = Using.resource(Files.list(Paths.get(".")))(_.iterator.asScala.toList)
@@ -60,7 +77,7 @@ class BenchRegressionSpec extends AnyFunSuite {
       }
       .map(snapshot)
     assume(localRuns.nonEmpty, "no BENCH_LOCAL.json — run graft.Bench first")
-    val (localPath, local) = localRuns.maxBy { case (_, s) => t0Of(s) }
+    val (localPath, local) = newestLocalRun(localRuns).get
     val localT0 = t0Of(local)
     assume(localT0.nonEmpty, s"${localPath.getFileName} carries no t0 to order it by")
 
@@ -223,6 +240,19 @@ class BenchRegressionSpec extends AnyFunSuite {
     assert(t0Of("""{"total":137.87,"sf":"sf0.1","t0":1786894801904,"queries":{}}""")
       .contains(1786894801904L))
     assert(t0Of("""{"sf": 0.1, "tail": "...\"sf\":\"sf0.1\"..."}""").isEmpty)
+
+    // the local run under test: the newest at the reference's sf — a
+    // later side file from another sf does not displace it
+    val ref = Paths.get("BENCH_LOCAL.json") ->
+      """{"total":1.0,"sf":"sf0.1","t0":100,"queries":{}}"""
+    val sameSf = Paths.get("BENCH_LOCAL.200.json") ->
+      """{"total":1.1,"sf":"sf0.1","t0":200,"queries":{}}"""
+    val otherSf = Paths.get("BENCH_LOCAL.300.json") ->
+      """{"total":9.0,"sf":"graft_sf1","t0":300,"queries":{}}"""
+    assert(newestLocalRun(Seq(ref, sameSf, otherSf)).contains(sameSf))
+    assert(newestLocalRun(Seq(otherSf, ref)).contains(ref))
+    // no reference: the newest of all
+    assert(newestLocalRun(Seq(sameSf, otherSf)).contains(otherSf))
 
     // reference BANDS (r16): per-query threshold from the query's own
     // clean-run spread — degenerate point reference below 2 runs, the

@@ -126,16 +126,6 @@ class PropertiesSpec extends SparkSuite {
       }
     })
 
-  check("latestWinsAgg (skew-safe max_by) equals the window latestWins",
-    Prop.forAll(rowsGen) { rows =>
-      rows.isEmpty || {
-        val df = rows.toDF("id", "key", "ord", "v")
-        val win = Dedup.latestWins(df, Seq("key"), Seq(col("ord"), col("id")))
-        val agg = Dedup.latestWinsAgg(df, Seq("key"), Seq(col("ord"), col("id")))
-        win.collect().toSet == agg.collect().toSet
-      }
-    })
-
   check("assignSplit is total, stable under growth, and partitioning-invariant",
     Prop.forAll(Gen.resize(40, Gen.nonEmptyListOf(Gen.choose(0L, 100000L)))) { ids0 =>
       val ids = ids0.distinct

@@ -238,7 +238,7 @@ class CompactSpec extends SparkSuite {
       df.filter(col("event_type") === "click")
         .select(col("event_id").as("click_id"), col("user_id"), col("ts"),
           col("value").as("click_value")))
-    val sink = StreamingAsOf.asOfSink(mart, rstore, split, "event_id",
+    val sink = StreamingAsOf.asOfSinkPartitioned(mart, rstore, split, "event_id",
       Seq("user_id"), "ts", "ts", Seq("click_id", "click_value"),
       "click_id", toleranceUs = Some(1000000L)) _
     def batchDf(rows: (Long, Long, Long, String, Double)*) =

@@ -78,7 +78,10 @@ class IncrementalWriteSpec extends SparkSuite {
     assert(hours(3) == 21.0 && hours(7) == 30.0 && hours(5) == 10.0)
   }
 
-  test("refreshMart frees the merged slice's checkpoint after the write") {
+  test("refreshMart stores no RDD blocks") {
+    // the dynamic overwrite commits the touched days only after every
+    // task has read them, so the merged slice goes straight to the
+    // writer: no checkpoint, no block storage
     val path = Files.createTempDirectory("graft_incr_release").toString +
       "/mart_location_weather"
     val old = meas((1L, "2026-01-01 05:10:00", 10.0), (1L, "2026-01-02 03:10:00", 20.0))
@@ -87,8 +90,8 @@ class IncrementalWriteSpec extends SparkSuite {
     val (stored, left) = org.apache.spark.sql.graft.TestBlocks.storedAndLeft(
       spark.sparkContext)(OpenAqPipeline.refreshMart(spark, all, sens,
         "weather_record_id", Gold.martWeather, path))
-    assert(stored > 0, "positive control: the merged slice is checkpointed")
-    assert(left == 0, s"$left blocks of the refresh checkpoint remain")
+    assert(stored == 0, s"the refresh stored $stored RDD blocks")
+    assert(left == 0, s"$left RDD blocks of the refresh remain")
     assert(spark.read.parquet(path).count() == 3L)
   }
 

@@ -58,7 +58,7 @@ class StreamingAsOfSpec extends SparkSuite {
       df.filter(col("event_type") === "click")
         .select(col("event_id").as("click_id"), col("user_id"), col("ts"),
           col("value").as("click_value")))
-    val sink = StreamingAsOf.asOfSink(mart, rstore, split, "event_id",
+    val sink = StreamingAsOf.asOfSinkPartitioned(mart, rstore, split, "event_id",
       Seq("user_id"), "ts", "ts", Seq("click_id", "click_value"),
       "click_id", toleranceUs = Some(1000000L)) _
     def batchDf(rows: (Long, Long, Long, String, Double)*) =
@@ -121,6 +121,46 @@ class StreamingAsOfSpec extends SparkSuite {
     assert(probe() == want)
   }
 
+  test("one batch merged into an existing mart runs 17 jobs: no copy of the merge before the overwrite") {
+    // Merge.overwriteDays replaces the touched days only at job commit,
+    // after every task has read them, so the merged days go straight to
+    // the writer; checkpointing them first would add a job per batch (18)
+    import spark.implicits._
+    def ts(us: Long) = new java.sql.Timestamp(us / 1000)
+    val work = java.nio.file.Files.createTempDirectory("graft_asof_jobs").toString
+    def split(df: org.apache.spark.sql.DataFrame) = (
+      df.filter(col("event_type") === "view").select("event_id", "user_id", "ts"),
+      df.filter(col("event_type") === "click")
+        .select(col("event_id").as("click_id"), col("user_id"), col("ts"),
+          col("value").as("click_value")))
+    val sink = StreamingAsOf.asOfSinkPartitioned(s"$work/m", s"$work/r", split,
+      "event_id", Seq("user_id"), "ts", "ts", Seq("click_id", "click_value"),
+      "click_id", toleranceUs = Some(1000000L)) _
+    def batchDf(rows: (Long, Long, Long, String, Double)*) =
+      rows.toSeq.map { case (e, u, t, ty, v) => (e, u, ts(t * 1000), ty, v) }
+        .toDF("event_id", "user_id", "ts", "event_type", "value")
+    sink(batchDf((10L, 1L, 50L, "click", 1.0), (1L, 1L, 100L, "view", 0.0)), 0L)
+    // a late click (upgrades v1) and a new view in one batch
+    val next = batchDf((20L, 1L, 90L, "click", 2.0), (2L, 1L, 250L, "view", 0.0))
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.sql.graft.shims.waitForListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      sink(next, 1L)
+      org.apache.spark.sql.graft.shims.waitForListenerBus(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get == 17, s"${jobs.get} jobs for one merged batch")
+    val got = StreamingAsOf.readMart(spark, s"$work/m", "ts",
+        Seq("click_id", "click_value"), Some(1000000L))
+      .select("event_id", "click_id").as[(Long, Option[Long])].collect().toSet
+    assert(got == Set((1L, Some(20L)), (2L, Some(20L))), s"got $got")
+  }
+
   test("partitioned sink: late-right upgrade is JVM-default-timezone independent") {
     // r10 ADVICE (high): the touched-days computation used java.sql.Date,
     // which Spark converts to DateType through the JVM DEFAULT timezone,
@@ -162,40 +202,31 @@ class StreamingAsOfSpec extends SparkSuite {
     // r10 ADVICE (low): min/max over a non-empty delta whose times are
     // ALL NULL returns NULL — the statsRowCount guard only covers the
     // zero-row case, and getLong(0) then NPE'd. NULL-time rights match
-    // nothing; NULL-time lefts keep a NULL match. Both sinks.
+    // nothing; NULL-time lefts keep a NULL match.
     import spark.implicits._
     def ts(us: Long) = new java.sql.Timestamp(us / 1000)
-    for (partitioned <- Seq(false, true)) {
-      val work = java.nio.file.Files.createTempDirectory("graft_asof_null").toString
-      def split(df: org.apache.spark.sql.DataFrame) = (
-        df.filter(col("event_type") === "view").select("event_id", "user_id", "ts"),
-        df.filter(col("event_type") === "click")
-          .select(col("event_id").as("click_id"), col("user_id"), col("ts"),
-            col("value").as("click_value")))
-      val sink =
-        if (partitioned)
-          StreamingAsOf.asOfSinkPartitioned(s"$work/m", s"$work/r", split,
-            "event_id", Seq("user_id"), "ts", "ts",
-            Seq("click_id", "click_value"), "click_id", Some(1000000L)) _
-        else
-          StreamingAsOf.asOfSink(s"$work/m", s"$work/r", split,
-            "event_id", Seq("user_id"), "ts", "ts",
-            Seq("click_id", "click_value"), "click_id", Some(1000000L)) _
-      def batchDf(rows: (Long, Long, Option[Long], String, Double)*) =
-        rows.toSeq.map { case (e, u, t, ty, v) => (e, u, t.map(x => ts(x * 1000)), ty, v) }
-          .toDF("event_id", "user_id", "ts", "event_type", "value")
-      sink(batchDf((10L, 1L, Some(50L), "click", 1.0),
-                   (1L, 1L, Some(100L), "view", 0.0)), 0L)
-      // batch 1: ONLY a NULL-time click (B-side bounds min = NULL)
-      sink(batchDf((20L, 1L, None, "click", 2.0)), 1L)
-      // batch 2: ONLY a NULL-time view (A-side prune min = NULL)
-      sink(batchDf((2L, 1L, None, "view", 0.0)), 2L)
-      val got = StreamingAsOf.readMart(spark, s"$work/m", "ts",
-          Seq("click_id", "click_value"), Some(1000000L))
-        .select("event_id", "click_id").as[(Long, Option[Long])].collect().toSet
-      assert(got == Set((1L, Some(10L)), (2L, None)),
-        s"partitioned=$partitioned got $got")
-    }
+    val work = java.nio.file.Files.createTempDirectory("graft_asof_null").toString
+    def split(df: org.apache.spark.sql.DataFrame) = (
+      df.filter(col("event_type") === "view").select("event_id", "user_id", "ts"),
+      df.filter(col("event_type") === "click")
+        .select(col("event_id").as("click_id"), col("user_id"), col("ts"),
+          col("value").as("click_value")))
+    val sink = StreamingAsOf.asOfSinkPartitioned(s"$work/m", s"$work/r", split,
+      "event_id", Seq("user_id"), "ts", "ts",
+      Seq("click_id", "click_value"), "click_id", Some(1000000L)) _
+    def batchDf(rows: (Long, Long, Option[Long], String, Double)*) =
+      rows.toSeq.map { case (e, u, t, ty, v) => (e, u, t.map(x => ts(x * 1000)), ty, v) }
+        .toDF("event_id", "user_id", "ts", "event_type", "value")
+    sink(batchDf((10L, 1L, Some(50L), "click", 1.0),
+                 (1L, 1L, Some(100L), "view", 0.0)), 0L)
+    // batch 1: ONLY a NULL-time click (B-side bounds min = NULL)
+    sink(batchDf((20L, 1L, None, "click", 2.0)), 1L)
+    // batch 2: ONLY a NULL-time view (A-side prune min = NULL)
+    sink(batchDf((2L, 1L, None, "view", 0.0)), 2L)
+    val got = StreamingAsOf.readMart(spark, s"$work/m", "ts",
+        Seq("click_id", "click_value"), Some(1000000L))
+      .select("event_id", "click_id").as[(Long, Option[Long])].collect().toSet
+    assert(got == Set((1L, Some(10L)), (2L, None)), s"got $got")
   }
 
   test("tolerance nulling at read: raw best kept, farther-than-tolerance shows NULL") {
@@ -207,8 +238,8 @@ class StreamingAsOfSpec extends SparkSuite {
       df.filter(col("event_type") === "click")
         .select(col("event_id").as("click_id"), col("user_id"), col("ts"),
           col("value").as("click_value")))
-    val sink = StreamingAsOf.asOfSink(s"$work/m", s"$work/r", split, "event_id",
-      Seq("user_id"), "ts", "ts", Seq("click_id", "click_value"),
+    val sink = StreamingAsOf.asOfSinkPartitioned(s"$work/m", s"$work/r", split,
+      "event_id", Seq("user_id"), "ts", "ts", Seq("click_id", "click_value"),
       "click_id", toleranceUs = Some(100L)) _
     sink(Seq((10L, 1L, ts(1000L), "click", 1.0), (1L, 1L, ts(5000L), "view", 0.0))
       .toDF("event_id", "user_id", "ts", "event_type", "value"), 0L)
