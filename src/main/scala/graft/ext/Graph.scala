@@ -293,25 +293,19 @@ object Graph {
     * ids stay current at per-delta cost, with the standing table read
     * twice per batch (endpoint lookup + final remap), never iterated.
     */
-  def componentsSink(outPath: String)(batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val target = new org.apache.hadoop.fs.Path(outPath)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.streaming.AtomicSwap.heal(fs, target)
-    val lineage = graft.streaming.AtomicSwap.streamLineage(spark)
-    if (graft.streaming.AtomicSwap.alreadyApplied(fs, target, batchId, lineage)) return
-    // declared schema: the standing read runs every batch, and
-    // footer-based inference is a per-batch job the fold doesn't need
-    val standing =
-      if (fs.exists(target))
-        spark.read.schema("n BIGINT, component BIGINT").parquet(outPath)
-      else spark.range(0).select(col("id").as("n"), col("id").as("component"))
-    val merged = componentsIncremental(standing, batch)
-    graft.streaming.AtomicSwap.commit(merged, outPath, batchId, lineage)
-    // mart is on disk: free this batch's blocks — the internal `lab` /
-    // loop checkpoints still referenced by merged's plan
-    shims.unpersistLocalCheckpoint(merged)
-  }
+  def componentsSink(outPath: String)(batch: DataFrame, batchId: Long): Unit =
+    graft.streaming.AtomicSwap.swapFold(outPath, batch, batchId) { exists =>
+      // declared schema: the standing read runs every batch, and
+      // footer-based inference is a per-batch job the fold doesn't need;
+      // the commit frees this batch's blocks — the internal `lab` / loop
+      // checkpoints still referenced by the folded plan
+      val standing =
+        if (exists)
+          batch.sparkSession.read.schema("n BIGINT, component BIGINT").parquet(outPath)
+        else batch.sparkSession.range(0)
+          .select(col("id").as("n"), col("id").as("component"))
+      componentsIncremental(standing, batch)
+    }
 
   /** Drain an edge table through [[componentsSink]]
     * (`Trigger.AvailableNow`, one file per micro-batch) and return the
@@ -322,9 +316,7 @@ object Graph {
     */
   def availableNowComponents(spark: SparkSession, edges: DataFrame,
                              filesPerBatch: Int = 1): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val work = graft.streaming.DrainWork.tempDir("graft_stream_cc")
-    val src = s"$work/edges"
     val mart = s"$work/labels"
     // 3 files → cold solve + 2 incremental folds at filesPerBatch=1:
     // enough splits to exercise merge/bridge/new-node paths. NOTE a
@@ -333,23 +325,9 @@ object Graph {
     // fold's contraction is near-graph-sized; the |delta| ≪ |standing|
     // case the operator exists for (daily pair-stream growth) is
     // exercised by GraphSpec and priced in SCALE.md instead
-    edges.repartition(3).write.parquet(src)
-    // schema = the just-written frame's, top-level-nullable like a
-    // parquet read-back — no re-inference (guide §6 metadata cost)
-    val stream = spark.readStream
-      .schema(org.apache.spark.sql.types.StructType(
-        edges.schema.fields.map(_.copy(nullable = true))))
-      .option("maxFilesPerTrigger", filesPerBatch)
-      .parquet(src)
-    graft.streaming.DrainWidth.clamped(spark) {
-      val q = stream.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", s"$work/checkpoint")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch(componentsSink(mart) _)
-        .start()
-      q.awaitTermination()
-    }
+    graft.streaming.Drain.run(
+      graft.streaming.Drain.splitStream(edges, s"$work/edges", filesPerBatch),
+      "append")(componentsSink(mart) _)
     spark.read.parquet(mart)
   }
 

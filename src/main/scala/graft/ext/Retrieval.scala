@@ -270,39 +270,15 @@ object Retrieval {
     */
   def availableNowBm25(spark: org.apache.spark.sql.SparkSession,
       sfDir: String, compact: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val work = graft.streaming.DrainWork.tempDir("graft_stream_bm25")
-    val src = s"$work/docs"
     val idx = s"$work/index"
     val docs = graft.Tables.documents(spark, sfDir).select("doc_id", "text")
-    docs.repartition(3).write.parquet(src)
-    // the stream reads back what was just written from `docs` — its
-    // schema is known (top-level nullability matches a parquet
-    // read-back), no re-inference needed
-    val stream = spark.readStream
-      .schema(org.apache.spark.sql.types.StructType(
-        docs.schema.fields.map(_.copy(nullable = true))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(src)
-    graft.streaming.DrainWidth.clamped(spark) {
-      val q = stream.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", s"$work/checkpoint")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch(bm25Sink(idx, "doc_id", "text") _)
-        .start()
-      q.awaitTermination()
-    }
-    // zero-doc drains write no shard dirs at all — tested by EXPLICIT
-    // path existence (EmptyInputSpec wants the typed empty top-k), not
-    // by catching AnalysisException, which would also swallow genuine
-    // analysis errors (schema drift, renamed column) and report them as
-    // an empty — and suspiciously fast — result. Shards that exist but
-    // hold zero part files are covered by the declared read schemas in
-    // [[bm25TopKStreamed]].
-    val postings = new org.apache.hadoop.fs.Path(s"$idx/postings")
-    val fs = postings.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(postings)) {
+    graft.streaming.Drain.run(graft.streaming.Drain.splitStream(docs, s"$work/docs"),
+      "append")(bm25Sink(idx, "doc_id", "text") _)
+    // zero-doc drains write no shard dirs at all (EmptyInputSpec wants
+    // the typed empty top-k); shards that exist but hold zero part files
+    // are covered by the declared read schemas in [[bm25TopKStreamed]]
+    if (graft.streaming.Drain.hasData(spark, s"$idx/postings")) {
       if (compact) compactIndex(spark, idx)
       bm25TopKStreamed(spark, idx, "doc_id",
         Seq("vector", "spark", "window"), k = 20)

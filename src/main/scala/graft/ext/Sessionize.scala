@@ -7,8 +7,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.Tables
-
 /** Gap-based sessionization: consecutive events of a user belong to one
   * session while inter-event gaps stay under `gapMinutes`.
   *
@@ -128,27 +126,13 @@ object Sessionize {
   def availableNowSessions(spark: SparkSession, sfDir: String,
                            gapMinutes: Int): DataFrame = {
     import spark.implicits._
-    val work = graft.streaming.DrainWork.tempDir("graft_stream_sess")
-    val out = s"$work/sessions"
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val events = Tables.normalizeTs(spark.readStream
-      .schema(graft.Tables(spark, sfDir, "events").schema)
-      .parquet(s"$sfDir/{events.parquet}"))
+    val out = s"${graft.streaming.DrainWork.tempDir("graft_stream_sess")}/sessions"
+    val events = graft.streaming.Drain.eventsStream(spark, sfDir)
       .select(col("user_id"), col("ts"), col("value"))
       .as[Evt]
-    // bounded drain → clamp the state-store width (DrainWidth scaladoc)
-    graft.streaming.DrainWidth.clamped(spark) {
-      val q = streamingSessions(events, gapMinutes, GroupStateTimeout.NoTimeout)
-        .toDF()
-        .writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", s"$work/checkpoint")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    graft.streaming.Drain.run(
+      streamingSessions(events, gapMinutes, GroupStateTimeout.NoTimeout).toDF(),
+      "append", out)
     spark.read.parquet(out)
   }
 }

@@ -891,35 +891,17 @@ object Similarity {
       targetBytes, nested = Seq("cluster_id"), upTo = upTo, graceMs = graceMs,
       minor = minor, maxRuns = maxRuns)
 
-  /** Shared drain harness for the streaming-ANN chains (t13/t14): 3-way
-    * embedding file-stream → AvailableNow drain through `sink` — ONE
-    * spelling of the drain mechanics (source write, readStream options,
-    * clamped width, checkpointing) so an edge-case fix cannot apply to
-    * one index layout and not the other. Returns the embedding frame
-    * for the caller's probe.
+  /** Shared drain harness for the streaming-ANN chains (t13/t14): the
+    * embeddings as a 3-way split stream drained through `sink`, one
+    * spelling for both index layouts. Returns the embedding frame for
+    * the caller's probe.
     */
   private def drainEmbeddings(spark: org.apache.spark.sql.SparkSession,
       sfDir: String, work: String,
       sink: (DataFrame, Long) => Unit): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val src = s"$work/vecs"
     val emb = graft.Tables.embeddings(spark, sfDir).select("vec_id", "embedding")
-    emb.repartition(3).write.parquet(src)
-    // the stream reads back what was just written from `emb` — its schema
-    // IS emb's (parquet-inferred, nullable), no re-inference needed
-    val stream = spark.readStream
-      .schema(emb.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(src)
-    graft.streaming.DrainWidth.clamped(spark) {
-      val q = stream.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", s"$work/checkpoint")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch(sink)
-        .start()
-      q.awaitTermination()
-    }
+    graft.streaming.Drain.run(
+      graft.streaming.Drain.splitStream(emb, s"$work/vecs"), "append")(sink)
     emb
   }
 
@@ -943,11 +925,8 @@ object Similarity {
       nClusters = 4, iterations = 2, path = idx)
     val emb = drainEmbeddings(spark, sfDir, work,
       ivfSink(idx, "vec_id", "embedding") _)
-    // zero-vector drains write no lists dirs at all — explicit path
-    // probing, not exception catching (the availableNowBm25 rationale)
-    val lists = new org.apache.hadoop.fs.Path(s"$idx/lists")
-    val fs = lists.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(lists))
+    // zero-vector drains write no lists dirs at all
+    if (!graft.streaming.Drain.hasData(spark, s"$idx/lists"))
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         org.apache.spark.sql.types.StructType.fromDDL(
@@ -1590,11 +1569,8 @@ object Similarity {
       coarseIters = 2, m = 4, subDim = 16, ks = 4, pqIters = 2, path = idx)
     val emb = drainEmbeddings(spark, sfDir, work,
       ivfPqSink(idx, "vec_id", "embedding", m = 4, subDim = 16) _)
-    // zero-vector drains write no codes dirs at all — explicit path
-    // probing, not exception catching (the availableNowIvf rationale)
-    val codes = new org.apache.hadoop.fs.Path(s"$idx/codes")
-    val fs = codes.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(codes))
+    // zero-vector drains write no codes dirs at all
+    if (!graft.streaming.Drain.hasData(spark, s"$idx/codes"))
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         org.apache.spark.sql.types.StructType.fromDDL(

@@ -69,26 +69,17 @@ object Sketches {
     * skipped on replay, not just harmless).
     */
   def sketchSink(outPath: String, groupCol: String, valueCol: String,
-                 tsCol: String)(batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val shims = org.apache.spark.sql.graft.shims
-    val target = new org.apache.hadoop.fs.Path(outPath)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.streaming.AtomicSwap.heal(fs, target)
-    val lineage = graft.streaming.AtomicSwap.streamLineage(spark)
-    if (graft.streaming.AtomicSwap.alreadyApplied(fs, target, batchId, lineage)) return
-    val partials = shims.checkpointWithStats(
-      batch.groupBy(col(groupCol), to_date(col(tsCol)).as("day"))
-        .agg(HllDistinct.hllSketch(col(valueCol)).as("sketch")))
-    val merged =
-      if (fs.exists(target))
-        spark.read.parquet(outPath).unionByName(partials)
+                 tsCol: String)(batch: DataFrame, batchId: Long): Unit =
+    graft.streaming.AtomicSwap.swapFold(outPath, batch, batchId) { exists =>
+      val partials = org.apache.spark.sql.graft.shims.checkpointWithStats(
+        batch.groupBy(col(groupCol), to_date(col(tsCol)).as("day"))
+          .agg(HllDistinct.hllSketch(col(valueCol)).as("sketch")))
+      if (exists)
+        batch.sparkSession.read.parquet(outPath).unionByName(partials)
           .groupBy(col(groupCol), col("day"))
           .agg(HllDistinct.hllMergeSketch(col("sketch")).as("sketch"))
       else partials
-    graft.streaming.AtomicSwap.commit(merged, outPath, batchId, lineage)
-    shims.unpersistLocalCheckpoint(partials)
-  }
+    }
 
   /** Drain events through [[sketchSink]] (`Trigger.AvailableNow`) and
     * answer the rollup from the MAINTAINED table — must equal the
@@ -97,24 +88,10 @@ object Sketches {
     */
   def availableNowSketchMart(spark: SparkSession, sfDir: String,
                              maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val work = graft.streaming.DrainWork.tempDir("graft_stream_sketch")
-    val mart = s"$work/cells"
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val reader = spark.readStream
-      .schema(graft.Tables(spark, sfDir, "events").schema)
-    val events = graft.Tables.normalizeTs(
-      maxFilesPerTrigger.fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-        .parquet(s"$sfDir/{events.parquet}"))
-    graft.streaming.DrainWidth.clamped(spark) {
-      val q = events.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", s"$work/checkpoint")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch(sketchSink(mart, "event_type", "user_id", "ts") _)
-        .start()
-      q.awaitTermination()
-    }
+    val mart = s"${graft.streaming.DrainWork.tempDir("graft_stream_sketch")}/cells"
+    graft.streaming.Drain.run(
+      graft.streaming.Drain.eventsStream(spark, sfDir, maxFilesPerTrigger), "append")(
+      sketchSink(mart, "event_type", "user_id", "ts") _)
     hllRollup(spark, mart, "event_type", "approx_users")
   }
 }

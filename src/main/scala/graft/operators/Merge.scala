@@ -22,18 +22,13 @@ object Merge {
 
   /** Rows of `existing` whose key is absent from `batch`, plus all of
     * `batch`. Replays are idempotent: upsert(upsert(e, b), b) == upsert(e, b).
-    *
-    * @param broadcastBatch force-broadcast the batch's key set into the
-    *   anti-join (right for daily increments, where the batch is orders of
-    *   magnitude smaller than the accumulated table). Pass false for
-    *   comparable-size sides and let AQE pick the strategy.
+    * The batch's key set is force-broadcast into the anti-join (right for
+    * daily increments, where the batch is orders of magnitude smaller
+    * than the accumulated table).
     */
-  def upsert(existing: DataFrame, batch: DataFrame, keys: Seq[String],
-             broadcastBatch: Boolean = true): DataFrame = {
-    val batchKeys = batch.select(keys.map(col): _*).distinct()
-    val anti = if (broadcastBatch) broadcast(batchKeys) else batchKeys
-    existing.join(anti, keys, "left_anti").unionByName(batch)
-  }
+  def upsert(existing: DataFrame, batch: DataFrame, keys: Seq[String]): DataFrame =
+    existing.join(broadcast(batch.select(keys.map(col): _*).distinct()),
+      keys, "left_anti").unionByName(batch)
 
   /** Replace exactly the `__day` partitions present in `df` under
     * `path` (dynamic partition overwrite); every other day's files stay

@@ -4,6 +4,9 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graft.shims
+
+import graft.operators.Merge
 
 /** Crash-safe full-swap commit for parquet marts written from
   * foreachBatch, fixing two failure modes of a naive
@@ -19,8 +22,8 @@ import org.apache.spark.sql.DataFrame
   *     checkpoint commit; additive partials (sum/count) would then be
   *     added twice. Each committed mart carries a `_applied_batch` marker
   *     file (underscore-prefixed → invisible to parquet directory reads);
-  *     sinks consult [[lastAppliedBatchId]] and skip batches already in
-  *     the mart — the standard foreachBatch idempotence pattern.
+  *     sinks skip batches already in the mart — the standard
+  *     foreachBatch idempotence pattern.
   *
   * At real scale a table format (Delta/Iceberg) provides both properties
   * transactionally; this keeps the same contract on bare parquet.
@@ -30,6 +33,57 @@ object AtomicSwap {
   private val Marker = "_applied_batch"
 
   private def oldPath(target: Path) = new Path(target.toString + "__old")
+
+  /** The swap-committed sinks' one protocol: [[heal]], the lineage-scoped
+    * replay guard, then `fold` builds the new mart (its argument says
+    * whether a mart exists at `outPath` to fold into), which [[commit]]
+    * swaps in. A replayed delivery returns before `fold` runs and costs
+    * no Spark job.
+    */
+  def swapFold(outPath: String, batch: DataFrame, batchId: Long)(
+      fold: Boolean => DataFrame): Unit =
+    guarded(outPath, batch, batchId, heals = true)(fold) {
+      (folded, _, _, lineage) => commit(folded, outPath, batchId, lineage)
+    }
+
+  /** The day-partitioned sinks' one protocol: the replay guard, then
+    * `fold` builds the rows of every touched `__day` (its argument says
+    * whether a mart exists at `outPath`), [[Merge.overwriteDays]]
+    * replaces those days, and the `_applied_batch` marker goes in AFTER
+    * the data. Dynamic overwrite is not atomic across partitions, so a
+    * crash mid-write leaves the marker old and the batch replays; the
+    * folds are keyed and idempotent, so the replay re-converges.
+    */
+  def dayFold(outPath: String, batch: DataFrame, batchId: Long)(
+      fold: Boolean => DataFrame): Unit =
+    guarded(outPath, batch, batchId, heals = false)(fold) {
+      (folded, fs, target, lineage) =>
+        Merge.overwriteDays(folded, outPath)
+        writeMarker(fs, target, batchId, lineage)
+    }
+
+  /** Guard, fold, write, then free the local checkpoints the fold took
+    * that the written frame still references, so a long-running stream
+    * does not grow block storage per batch. Blocks persisted before the
+    * fold ran (a static dimension it joins, a caller's cache) stay:
+    * later batches still read them.
+    */
+  private def guarded(outPath: String, batch: DataFrame, batchId: Long,
+      heals: Boolean)(fold: Boolean => DataFrame)(
+      write: (DataFrame, FileSystem, Path, String) => Unit): Unit = {
+    val spark = batch.sparkSession
+    val sc = spark.sparkContext
+    val target = new Path(outPath)
+    val fs = target.getFileSystem(sc.hadoopConfiguration)
+    if (heals) heal(fs, target)
+    val lineage = streamLineage(spark)
+    if (!alreadyApplied(fs, target, batchId, lineage)) {
+      val before = sc.getPersistentRDDs.keySet.toSet
+      val folded = fold(fs.exists(target))
+      write(folded, fs, target, lineage)
+      shims.unpersistLocalCheckpoints(folded, sc.getPersistentRDDs.keySet.toSet -- before)
+    }
+  }
 
   /** Highest batchId already swapped into `target` (None = no marker —
     * a pre-marker mart or none at all).
@@ -41,7 +95,7 @@ object AtomicSwap {
     * written before the lineage field existed (or by non-stream
     * callers) — treated as wildcard by [[alreadyApplied]].
     */
-  def lastApplied(fs: FileSystem, target: Path): Option[(Long, String)] = {
+  private def lastApplied(fs: FileSystem, target: Path): Option[(Long, String)] = {
     val m = new Path(target, Marker)
     if (!fs.exists(m)) None
     else {
@@ -62,7 +116,7 @@ object AtomicSwap {
     * fresh checkpoint dir — exactly the lineage a replay guard must be
     * scoped to. "" outside a streaming batch (e.g. batch backfills).
     */
-  def streamLineage(spark: org.apache.spark.sql.SparkSession): String =
+  private def streamLineage(spark: org.apache.spark.sql.SparkSession): String =
     Option(spark.sparkContext.getLocalProperty("sql.streaming.queryId"))
       .getOrElse("")
 
@@ -79,11 +133,10 @@ object AtomicSwap {
     * batches under the fallback rule until the first new-format marker
     * lands — the exact window the lineage guard closes for new marts.
     * The skip is logged loudly below so the window is visible; to close
-    * it entirely, delete (or rewrite via [[writeMarker]] with the new
-    * stream's lineage) the `_applied_batch` file when attaching a fresh
-    * stream to a pre-existing mart.
+    * it entirely, delete the `_applied_batch` file when attaching a
+    * fresh stream to a pre-existing mart.
     */
-  def alreadyApplied(fs: FileSystem, target: Path, batchId: Long,
+  private def alreadyApplied(fs: FileSystem, target: Path, batchId: Long,
       lineage: String): Boolean =
     lastApplied(fs, target).exists { case (applied, storedLineage) =>
       val skip = applied >= batchId &&
@@ -112,23 +165,13 @@ object AtomicSwap {
     else if (fs.exists(old)) fs.delete(old, true)
   }
 
-  /** Stamp `target`'s applied-batch marker (used by the partition-scoped
-    * sink, which commits data via dynamic partition overwrite instead of
-    * the full swap; marker goes in AFTER the data so a crash between the
-    * two re-delivers the batch and the idempotent keyed upsert
-    * re-converges).
-    */
-  def writeMarker(fs: FileSystem, target: Path, batchId: Long,
-      lineage: String = ""): Unit = {
-    val out = fs.create(new Path(target, Marker), true)
-    try out.write(markerBytes(batchId, lineage))
+  /** Stamp `dir`'s applied-batch marker. */
+  private def writeMarker(fs: FileSystem, dir: Path, batchId: Long,
+      lineage: String): Unit = {
+    val body = if (lineage.isEmpty) batchId.toString else s"$batchId\n$lineage"
+    val out = fs.create(new Path(dir, Marker), true)
+    try out.write(body.getBytes(StandardCharsets.UTF_8))
     finally out.close()
-  }
-
-  private def markerBytes(batchId: Long, lineage: String): Array[Byte] = {
-    val body = if (lineage.isEmpty) batchId.toString
-               else s"$batchId\n$lineage"
-    body.getBytes(StandardCharsets.UTF_8)
   }
 
   /** Write `df` to a staging dir with the batch marker, then swap it in:
@@ -141,9 +184,7 @@ object AtomicSwap {
     val staging = new Path(outPath + s"__staging_$batchId")
     val fs = target.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
     df.write.mode("overwrite").parquet(staging.toString)
-    val out = fs.create(new Path(staging, Marker), true)
-    try out.write(markerBytes(batchId, lineage))
-    finally out.close()
+    writeMarker(fs, staging, batchId, lineage)
     val old = oldPath(target)
     if (fs.exists(target)) {
       fs.delete(old, true)

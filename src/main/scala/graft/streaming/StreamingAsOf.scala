@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.shims
 
-import graft.operators.{AsOf, Merge}
+import graft.operators.AsOf
 
 /** Streaming as-of join — the streaming twin of
   * [[graft.operators.AsOf.joinBackwardNative]], completing the
@@ -154,11 +154,10 @@ object StreamingAsOf {
     * visibly reach — so for an in-order stream a fold rewrites the
     * last day or two regardless of mart size or key spread.
     *
-    * Commit contract (same as partitionedMergeSink): data first
-    * ([[Merge.overwriteDays]]), then the
-    * `_applied_batch` marker. Dynamic overwrite is not atomic across
-    * partitions, so a crash mid-write replays the batch — and
-    * the fold is replay-CONVERGENT: already-inserted new lefts are
+    * Commit contract (same as partitionedMergeSink):
+    * [[AtomicSwap.dayFold]] — data first, then the `_applied_batch`
+    * marker, so a crash mid-write replays the batch — and the fold is
+    * replay-CONVERGENT: already-inserted new lefts are
     * excluded from the existing side and recomputed identically from
     * the (idempotent) right shards, and the argmax merge re-applied
     * to already-upgraded rows is a no-op (argmax is idempotent).
@@ -181,111 +180,110 @@ object StreamingAsOf {
     // bug). Enforce the invariant instead of assuming it.
     requireUtcSession(spark)
     import spark.implicits._
-    val mart = new org.apache.hadoop.fs.Path(martPath)
-    val fs = mart.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val lineage = AtomicSwap.streamLineage(spark)
-    if (AtomicSwap.alreadyApplied(fs, mart, batchId, lineage)) return
-    val (newL0, newR0) = split(batch)
-    val (newL, lBounds) = checkpointWithTimeBounds(newL0, leftTime)
-    val (newR, rBounds) = checkpointWithTimeBounds(newR0, rightTime)
-    // rights are append-only → land as an overwrite-idempotent
-    // `batch=<id>` shard (the StreamingIndex/bm25Sink posture): a
-    // replayed batch overwrites its own shard bit-for-bit, and the
-    // per-batch right-store cost is O(delta). Long streams consolidate
-    // shards offline with Compact.compactShards — behind the mart's
-    // _applied_batch watermark, whose replay guard returns above BEFORE
-    // this shard write (the property that makes consolidating applied
-    // batches safe); CompactSpec pins a post-compaction fold.
-    newR.write.mode("overwrite").parquet(s"$rightStorePath/batch=$batchId")
-    // declared schema (the delta's own, plus the shard partition id):
-    // the standing reads run EVERY batch, and footer-based inference is
-    // a per-batch job the fold doesn't need
-    val rstoreSchema = graft.operators.ShardStore.withBatch(newR.schema)
-    val allR = graft.operators.ShardStore.read(spark, rightStorePath, rstoreSchema)
-      .drop("batch").select(newR.columns.map(col): _*)
-    val rightsForA = pruneRightsForA(allR, lBounds.map(_._1), rightTime,
-      toleranceUs)
-    def withRt(asofed: DataFrame): DataFrame = asofed
-      .withColumn("__rt_us", unix_micros(col(leftTime)) - col("asof_lag_us"))
-      .drop("asof_lag_us")
-    val aRows = withRt(AsOf.joinBackwardNative(
-        newL, rightsForA, keys, leftTime, rightTime, rightCols,
-        rightTieBreak, toleranceUs = None))
-      .withColumn("__day", to_date(col(leftTime)))
-    val merged =
-      if (!fs.exists(mart)) aRows
-      else {
-        // touched day partitions: the new lefts' days plus every day
-        // overlapping the new rights' visible window — computed from
-        // the deltas alone, never by scanning the mart.
-        // LocalDate, NOT java.sql.Date, deliberately: Spark converts
-        // java.sql.Date to DateType through the JVM DEFAULT timezone
-        // (DateTimeUtils.fromJavaDate) while the mart's `__day` values
-        // come from to_date(leftTime) under the UTC-pinned SESSION
-        // timezone — on a JVM defaulting to a negative-offset zone every
-        // day here shifted one EARLIER, the `touched` semi-join missed
-        // the partitions actually holding affected rows, and late rights
-        // silently never upgraded standing mart rows (caught only
-        // because test JVMs run in UTC; pinned by the non-UTC-JVM case
-        // in StreamingAsOfSpec). LocalDate.ofEpochDay is timezone-free
-        // on both sides of the conversion. floorDiv for the same reason:
-        // pre-epoch micros must round toward -∞, matching to_date.
-        val rDays: Seq[java.time.LocalDate] = rBounds match {
-          case None => Nil // empty or all-NULL-time rights match nothing
-          case Some((lo, hi0)) =>
-            val dayUs = 86400L * 1000000
-            val hi = hi0 + toleranceUs.getOrElse(0L)
-            (Math.floorDiv(lo, dayUs) to Math.floorDiv(hi, dayUs))
-              .map(java.time.LocalDate.ofEpochDay)
+    AtomicSwap.dayFold(martPath, batch, batchId) { exists =>
+      val (newL0, newR0) = split(batch)
+      val (newL, lBounds) = checkpointWithTimeBounds(newL0, leftTime)
+      val (newR, rBounds) = checkpointWithTimeBounds(newR0, rightTime)
+      // rights are append-only → land as an overwrite-idempotent
+      // `batch=<id>` shard (the StreamingIndex/bm25Sink posture): a
+      // replayed batch overwrites its own shard bit-for-bit, and the
+      // per-batch right-store cost is O(delta). Long streams consolidate
+      // shards offline with Compact.compactShards — behind the mart's
+      // _applied_batch watermark, whose replay guard skips the fold BEFORE
+      // this shard write (the property that makes consolidating applied
+      // batches safe); CompactSpec pins a post-compaction fold.
+      newR.write.mode("overwrite").parquet(s"$rightStorePath/batch=$batchId")
+      // declared schema (the delta's own, plus the shard partition id):
+      // the standing reads run EVERY batch, and footer-based inference is
+      // a per-batch job the fold doesn't need
+      val rstoreSchema = graft.operators.ShardStore.withBatch(newR.schema)
+      val allR = graft.operators.ShardStore.read(spark, rightStorePath, rstoreSchema)
+        .drop("batch").select(newR.columns.map(col): _*)
+      val rightsForA = pruneRightsForA(allR, lBounds.map(_._1), rightTime,
+        toleranceUs)
+      def withRt(asofed: DataFrame): DataFrame = asofed
+        .withColumn("__rt_us", unix_micros(col(leftTime)) - col("asof_lag_us"))
+        .drop("asof_lag_us")
+      val aRows = withRt(AsOf.joinBackwardNative(
+          newL, rightsForA, keys, leftTime, rightTime, rightCols,
+          rightTieBreak, toleranceUs = None))
+        .withColumn("__day", to_date(col(leftTime)))
+      val merged =
+        if (!exists) {
+          // the first fold reads no new right after the shard write: free
+          // its blocks here, since the written frame does not carry them
+          shims.unpersistLocalCheckpoint(newR)
+          aRows
+        } else {
+          // touched day partitions: the new lefts' days plus every day
+          // overlapping the new rights' visible window — computed from
+          // the deltas alone, never by scanning the mart.
+          // LocalDate, NOT java.sql.Date, deliberately: Spark converts
+          // java.sql.Date to DateType through the JVM DEFAULT timezone
+          // (DateTimeUtils.fromJavaDate) while the mart's `__day` values
+          // come from to_date(leftTime) under the UTC-pinned SESSION
+          // timezone — on a JVM defaulting to a negative-offset zone every
+          // day here shifted one EARLIER, the `touched` semi-join missed
+          // the partitions actually holding affected rows, and late rights
+          // silently never upgraded standing mart rows (caught only
+          // because test JVMs run in UTC; pinned by the non-UTC-JVM case
+          // in StreamingAsOfSpec). LocalDate.ofEpochDay is timezone-free
+          // on both sides of the conversion. floorDiv for the same reason:
+          // pre-epoch micros must round toward -∞, matching to_date.
+          val rDays: Seq[java.time.LocalDate] = rBounds match {
+            case None => Nil // empty or all-NULL-time rights match nothing
+            case Some((lo, hi0)) =>
+              val dayUs = 86400L * 1000000
+              val hi = hi0 + toleranceUs.getOrElse(0L)
+              (Math.floorDiv(lo, dayUs) to Math.floorDiv(hi, dayUs))
+                .map(java.time.LocalDate.ofEpochDay)
+          }
+          val touched = newL.select(to_date(col(leftTime)).as("__day")).distinct()
+            .unionByName(rDays.toDF("__day")).distinct()
+          val martSchema = org.apache.spark.sql.types.StructType(
+            newL.schema.fields ++
+              rightCols.map(c => newR.schema(c)) ++ Seq(
+              org.apache.spark.sql.types.StructField("__rt_us",
+                org.apache.spark.sql.types.LongType),
+              org.apache.spark.sql.types.StructField("__day",
+                org.apache.spark.sql.types.DateType)))
+          val existing = spark.read.schema(martSchema).parquet(martPath)
+            .join(broadcast(touched), Seq("__day"), "left_semi")
+          // replay convergence: a new left already applied by a partial
+          // earlier write is recomputed in aRows (identically — the right
+          // shards are idempotent), so exclude it from the existing side
+          val base = existing.join(newL.select(col(leftId)), Seq(leftId), "left_anti")
+          val (affected, untouched) =
+            splitAffected(base, newR, keys, leftTime, rBounds, toleranceUs)
+          val leftColNames = base.columns
+            .filterNot(c => c == "__rt_us" || c == "__day" || rightCols.contains(c)).toSeq
+          val cand = withRt(AsOf.joinBackwardNative(
+              affected.select(leftColNames.map(col): _*), newR.toDF(), keys,
+              leftTime, rightTime, rightCols, rightTieBreak, toleranceUs = None))
+            .select((col(leftId) +: rightCols.map(c => col(c).as(s"__c_$c")))
+              :+ col("__rt_us").as("__c_rt"): _*)
+          // argmax merge: larger raw right time wins; equal time → larger
+          // tie value (the backward rule); a found match beats none
+          val better = col("__c_rt").isNotNull && (col("__rt_us").isNull ||
+            col("__c_rt") > col("__rt_us") ||
+            (col("__c_rt") === col("__rt_us") &&
+              col(s"__c_$rightTieBreak") > col(rightTieBreak)))
+          val mergedAffected = affected.join(cand, Seq(leftId), "left")
+            .select(leftColNames.map(col) ++
+              rightCols.map(c => when(better, col(s"__c_$c")).otherwise(col(c)).as(c)) :+
+              when(better, col("__c_rt")).otherwise(col("__rt_us")).as("__rt_us") :+
+              col("__day"): _*)
+          untouched.unionByName(mergedAffected).unionByName(aRows)
         }
-        val touched = newL.select(to_date(col(leftTime)).as("__day")).distinct()
-          .unionByName(rDays.toDF("__day")).distinct()
-        val martSchema = org.apache.spark.sql.types.StructType(
-          newL.schema.fields ++
-            rightCols.map(c => newR.schema(c)) ++ Seq(
-            org.apache.spark.sql.types.StructField("__rt_us",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("__day",
-              org.apache.spark.sql.types.DateType)))
-        val existing = spark.read.schema(martSchema).parquet(martPath)
-          .join(broadcast(touched), Seq("__day"), "left_semi")
-        // replay convergence: a new left already applied by a partial
-        // earlier write is recomputed in aRows (identically — the right
-        // shards are idempotent), so exclude it from the existing side
-        val base = existing.join(newL.select(col(leftId)), Seq(leftId), "left_anti")
-        val (affected, untouched) =
-          splitAffected(base, newR, keys, leftTime, rBounds, toleranceUs)
-        val leftColNames = base.columns
-          .filterNot(c => c == "__rt_us" || c == "__day" || rightCols.contains(c)).toSeq
-        val cand = withRt(AsOf.joinBackwardNative(
-            affected.select(leftColNames.map(col): _*), newR.toDF(), keys,
-            leftTime, rightTime, rightCols, rightTieBreak, toleranceUs = None))
-          .select((col(leftId) +: rightCols.map(c => col(c).as(s"__c_$c")))
-            :+ col("__rt_us").as("__c_rt"): _*)
-        // argmax merge: larger raw right time wins; equal time → larger
-        // tie value (the backward rule); a found match beats none
-        val better = col("__c_rt").isNotNull && (col("__rt_us").isNull ||
-          col("__c_rt") > col("__rt_us") ||
-          (col("__c_rt") === col("__rt_us") &&
-            col(s"__c_$rightTieBreak") > col(rightTieBreak)))
-        val mergedAffected = affected.join(cand, Seq(leftId), "left")
-          .select(leftColNames.map(col) ++
-            rightCols.map(c => when(better, col(s"__c_$c")).otherwise(col(c)).as(c)) :+
-            when(better, col("__c_rt")).otherwise(col("__rt_us")).as("__rt_us") :+
-            col("__day"): _*)
-        untouched.unionByName(mergedAffected).unionByName(aRows)
-      }
-    // CLUSTER BY DAY first: an unclustered dynamic overwrite fans out to
-    // one file per (task × day) — measured 115 files for a 30-day toy
-    // mart, and the per-file open/commit machinery dominated the fold
-    // (SCALE.md "Round 11: the `t*` drain floor"). Hashing days across
-    // tasks writes one file per touched day; a production backfill whose
-    // single hot day outgrows one task would add a salt column here, but
-    // the fold's steady state touches the tolerance window's 1–2 days.
-    Merge.overwriteDays(merged.repartition(col("__day")), martPath)
-    AtomicSwap.writeMarker(fs, mart, batchId, lineage)
-    shims.unpersistLocalCheckpoint(newL)
-    shims.unpersistLocalCheckpoint(newR)
+      // CLUSTER BY DAY first: an unclustered dynamic overwrite fans out to
+      // one file per (task × day) — measured 115 files for a 30-day toy
+      // mart, and the per-file open/commit machinery dominated the fold
+      // (SCALE.md "Round 11: the `t*` drain floor"). Hashing days across
+      // tasks writes one file per touched day; a production backfill whose
+      // single hot day outgrows one task would add a salt column here, but
+      // the fold's steady state touches the tolerance window's 1–2 days.
+      merged.repartition(col("__day"))
+    }
   }
 
   /** Read the maintained mart in `x_asof_native` output shape: tolerance
@@ -317,65 +315,39 @@ object StreamingAsOf {
     */
   def availableNowAsOf(spark: SparkSession, sfDir: String,
       compact: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val work = DrainWork.tempDir("graft_stream_asof")
-    val src = s"$work/events"
     val mart = s"$work/mart"
     val rstore = s"$work/clicks"
     val tol = Some(6L * 3600 * 1000000)
     val ev = graft.Tables.events(spark, sfDir)
       .filter(col("event_type").isin("view", "click"))
       .select("event_id", "user_id", "ts", "event_type", "value")
-    ev.repartition(3).write.parquet(src)
-    // schema = the just-written frame's, top-level-nullable like a
-    // parquet read-back — no re-inference (guide §6 metadata cost)
-    val stream = spark.readStream
-      .schema(org.apache.spark.sql.types.StructType(
-        ev.schema.fields.map(_.copy(nullable = true))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(src)
     def split(df: DataFrame): (DataFrame, DataFrame) = (
       df.filter(col("event_type") === "view")
         .select("event_id", "user_id", "ts"),
       df.filter(col("event_type") === "click")
         .select(col("event_id").as("click_id"), col("user_id"), col("ts"),
           col("value").as("click_value")))
-    DrainWidth.clamped(spark) {
-      val q = stream.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", s"$work/checkpoint")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch(asOfSinkPartitioned(mart, rstore, split, "event_id",
-          Seq("user_id"), "ts", "ts", Seq("click_id", "click_value"),
-          "click_id", tol) _)
-        .start()
-      q.awaitTermination()
-    }
-    // an all-empty drain leaves no readable mart (dynamic overwrite of
-    // zero rows writes no partition dirs) — zero-row robustness
-    // (EmptyInputSpec) wants the typed empty result. Tested by EXPLICIT
-    // path probing, not by catching AnalysisException: a broad catch
-    // would also swallow genuine analysis errors (schema drift, renamed
-    // column) and report them as a — suspiciously fast — empty result.
-    // "has data" = any `__day=` partition dir: a zero-row drain still
-    // writes the _applied_batch marker (so the dir exists) but no
-    // partition dirs — that mart is empty, not malformed. (A plain
-    // no-underscore filter would ALSO drop the partition dirs — the
-    // partition column itself is underscore-prefixed.)
-    val martP = new org.apache.hadoop.fs.Path(mart)
-    val martFs = martP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Drain.run(Drain.splitStream(ev, s"$work/events"), "append")(
+      asOfSinkPartitioned(mart, rstore, split, "event_id", Seq("user_id"),
+        "ts", "ts", Seq("click_id", "click_value"), "click_id", tol) _)
     // opt-in drain-tail maintenance: consolidate the right-history
     // shards scoped to the mart's _applied_batch marker — the exact
     // replay watermark the compaction safety contract names (a replay
     // of any id <= it returns before the shard write)
-    if (compact)
-      AtomicSwap.lastAppliedBatchId(martFs, martP).foreach { hwm =>
-        graft.operators.Compact.compactShards(spark, rstore,
-          targetBytes = 128L << 20, upTo = hwm)
-      }
-    val hasData = martFs.exists(martP) && martFs.listStatus(martP)
-      .exists(_.getPath.getName.startsWith("__day="))
-    if (hasData)
+    if (compact) {
+      val martP = new org.apache.hadoop.fs.Path(mart)
+      AtomicSwap.lastAppliedBatchId(
+          martP.getFileSystem(spark.sparkContext.hadoopConfiguration), martP)
+        .foreach { hwm =>
+          graft.operators.Compact.compactShards(spark, rstore,
+            targetBytes = 128L << 20, upTo = hwm)
+        }
+    }
+    // an all-empty drain leaves only the _applied_batch marker (dynamic
+    // overwrite of zero rows writes no partition dirs) — zero-row
+    // robustness (EmptyInputSpec) wants the typed empty result
+    if (Drain.hasData(spark, mart))
       readMart(spark, mart, "ts", Seq("click_id", "click_value"), tol)
         .select("event_id", "user_id", "click_id", "click_value", "asof_lag_us")
     else

@@ -2,9 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-
-import graft.Tables
 
 /** Streaming exact dedup — the streaming form of the batch first-wins
   * dedup (A4/W1): keep the first arrival of each key, across
@@ -39,26 +36,9 @@ object StreamingDedup {
     */
   def availableNowDedupKeys(spark: SparkSession, sfDir: String,
                             keys: Seq[String] = Seq("user_id", "event_type")): DataFrame = {
-    val work = DrainWork.tempDir("graft_stream_dedup")
-    val out = s"$work/keys"
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val src = s"$sfDir/{events.parquet}"
-    val events = Tables.normalizeTs(spark.readStream
-      .schema(graft.Tables(spark, sfDir, "events").schema)
-      .parquet(src))
-    // bounded drain → clamp the state-store width (DrainWidth scaladoc)
-    DrainWidth.clamped(spark) {
-      val q = firstWins(events, keys, "ts")
-        .select(keys.map(col): _*)
-        .writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", s"$work/checkpoint")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    val out = s"${DrainWork.tempDir("graft_stream_dedup")}/keys"
+    Drain.run(firstWins(Drain.eventsStream(spark, sfDir), keys, "ts")
+      .select(keys.map(col): _*), "append", out)
     spark.read.parquet(out)
   }
 }

@@ -1,11 +1,8 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
-import graft.Tables
 import graft.operators.Merge
 
 /** Structured Streaming form of the reference's incremental contract
@@ -35,6 +32,58 @@ object StreamingHourly {
       .select(col("w.start").as("window_start") +:
         (keyCols.map(col) ++ Seq(col("n_events"), col("avg_value"))): _*)
 
+  /** The full T1+T2+T3 chain run END-TO-END as one call, batch-parity
+    * deterministic: the events parquet becomes a file-stream source, the
+    * hourly aggregation keeps (scaled-integer sum, count) running state
+    * (`Numeric.scaledAvg` — order-independent, so the result is
+    * bit-identical to the batch/oracle answer no matter how the source
+    * splits into micro-batches), update-mode emission feeds
+    * [[partitionedMergeSink]]'s keyed upsert, and `Trigger.AvailableNow`
+    * drains the source and stops (T3's data-aware trigger). Returns the
+    * committed mart. Registered as registry query `t2_streaming_merge`, so
+    * the streaming path has the same oracle + bench visibility as every
+    * batch operator.
+    *
+    * Update-mode note: append mode would withhold every window newer
+    * than (max ts − watermark) — the final hours of a drained backlog
+    * never emit. Update mode re-emits a window's RUNNING aggregate
+    * whenever a batch changes it; the keyed upsert keeps the last
+    * (= complete) value, which is exactly MERGE-by-key semantics (T2).
+    *
+    * Each call drains from a fresh checkpoint into a fresh mart dir, so
+    * checkpoint, marker and mart are born together (see
+    * MARKER/CHECKPOINT COUPLING on [[mergeSink]]).
+    */
+  def availableNowHourlyMart(spark: SparkSession, sfDir: String,
+                             maxFilesPerTrigger: Option[Int] = None): DataFrame = {
+    val mart = s"${DrainWork.tempDir("graft_stream_mart")}/mart"
+    val events = Drain.eventsStream(spark, sfDir, maxFilesPerTrigger)
+    // NO watermark: update mode doesn't require one for aggregation, and
+    // this is a bounded AvailableNow drain — state dies with the run. A
+    // watermark here would silently DROP any row arriving in a later
+    // micro-batch with event time older than (max seen ts − delay); the
+    // driver testdata happens to fit one batch, but under
+    // maxFilesPerTrigger or a many-part source each part spans the full
+    // time range and rows would vanish. Unbounded state is the correct
+    // trade for a finite drain; the indefinitely-running form with a
+    // late-data bound is [[hourlyAgg]].
+    val agg = events
+      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
+      .agg(count(lit(1)).as("n_events"),
+        graft.functions.Numeric.scaledAvg(col("value")).as("avg_value"))
+      .select(col("w.start").as("window_start"), col("event_type"),
+        col("n_events"), col("avg_value"))
+    // partition-scoped sink: per-batch cost independent of mart size
+    Drain.run(agg, "update")(
+      partitionedMergeSink(mart, Seq("window_start", "event_type")) _)
+    // an all-empty drain leaves no readable partitioned mart (partitionBy
+    // of zero rows writes no files) — a fresh day with no data is a valid
+    // production state, not an error: return the empty aggregation shape
+    if (Drain.hasData(spark, mart)) spark.read.parquet(mart).drop("__day")
+    else spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], agg.schema)
+  }
+
   /** T2: a foreachBatch sink that MERGEs each micro-batch into a parquet
     * mart by key (A6 upsert). Commit goes through [[AtomicSwap]]: a
     * readable mart exists at every step, and a replayed batch (crash
@@ -55,101 +104,11 @@ object StreamingHourly {
     * Delta's txn-id dedup has). See SEMANTICS.md "Streaming commit
     * contract".
     */
-  /** The full T1+T2+T3 chain run END-TO-END as one call, batch-parity
-    * deterministic: the events parquet becomes a file-stream source, the
-    * hourly aggregation keeps (scaled-integer sum, count) running state
-    * (`Numeric.scaledAvg` — order-independent, so the result is
-    * bit-identical to the batch/oracle answer no matter how the source
-    * splits into micro-batches), update-mode emission feeds
-    * [[partitionedMergeSink]]'s keyed upsert, and `Trigger.AvailableNow`
-    * drains the source and stops (T3's data-aware trigger). Returns the
-    * committed mart. Registered as registry query `t2_streaming_merge`, so
-    * the streaming path has the same oracle + bench visibility as every
-    * batch operator.
-    *
-    * Update-mode note: append mode would withhold every window newer
-    * than (max ts − watermark) — the final hours of a drained backlog
-    * never emit. Update mode re-emits a window's RUNNING aggregate
-    * whenever a batch changes it; the keyed upsert keeps the last
-    * (= complete) value, which is exactly MERGE-by-key semantics (T2).
-    *
-    * Each call uses a fresh work dir: checkpoint, marker, and mart are
-    * born and die together (see MARKER/CHECKPOINT COUPLING on
-    * [[mergeSink]]).
-    */
-  def availableNowHourlyMart(spark: SparkSession, sfDir: String,
-                             maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val work = DrainWork.tempDir("graft_stream_mart")
-    val mart = s"$work/mart"
-    // same nanos-ts handling as Tables.events, stream-side: schema from a
-    // cheap batch footer read, int64 nanos → micros timestamp projection
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // glob form, not the bare path: the file-stream source requires its
-    // base path to be a directory, and `events.parquet` is a single file
-    // in the driver testdata (a directory of parts in generated dirs —
-    // the glob handles both)
-    val src = s"$sfDir/{events.parquet}"
-    val reader = spark.readStream
-      .schema(graft.Tables(spark, sfDir, "events").schema)
-    // AvailableNow honors rate limits: maxFilesPerTrigger splits the
-    // drain into real micro-batches (the spec uses this to prove
-    // batch-split independence)
-    val events = Tables.normalizeTs(
-      maxFilesPerTrigger.fold(reader)(n =>
-        reader.option("maxFilesPerTrigger", n))
-      .parquet(src))
-    // NO watermark: update mode doesn't require one for aggregation, and
-    // this is a bounded AvailableNow drain — state dies with the run. A
-    // watermark here would silently DROP any row arriving in a later
-    // micro-batch with event time older than (max seen ts − delay); the
-    // driver testdata happens to fit one batch, but under
-    // maxFilesPerTrigger or a many-part source each part spans the full
-    // time range and rows would vanish. Unbounded state is the correct
-    // trade for a finite drain; the indefinitely-running form with a
-    // late-data bound is [[hourlyAgg]].
-    val agg = events
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        graft.functions.Numeric.scaledAvg(col("value")).as("avg_value"))
-      .select(col("w.start").as("window_start"), col("event_type"),
-        col("n_events"), col("avg_value"))
-    // partition-scoped sink: per-batch cost independent of mart size
-    val sink = partitionedMergeSink(mart, Seq("window_start", "event_type")) _
-    // bounded drain → clamp the state-store width (DrainWidth scaladoc)
-    DrainWidth.clamped(spark) {
-      val q = agg.writeStream
-        .outputMode("update")
-        .option("checkpointLocation", s"$work/checkpoint")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch(sink)
-        .start()
-      q.awaitTermination()
-    }
-    // an all-empty drain leaves no readable partitioned mart (partitionBy
-    // of zero rows writes no files) — a fresh day with no data is a valid
-    // production state, not an error: return the empty aggregation shape
-    try spark.read.parquet(mart).drop("__day")
-    catch {
-      case _: org.apache.spark.sql.AnalysisException =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], agg.schema)
-    }
-  }
-
-  def mergeSink(outPath: String, keys: Seq[String])(batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val target = new Path(outPath)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    AtomicSwap.heal(fs, target)
-    // lineage-scoped guard: a fresh stream's batchIds restart at 0 and
-    // must not be skipped against an older stream's high-water marker
-    val lineage = AtomicSwap.streamLineage(spark)
-    if (AtomicSwap.alreadyApplied(fs, target, batchId, lineage)) return
-    val merged =
-      if (fs.exists(target)) Merge.upsert(spark.read.parquet(outPath), batch, keys)
+  def mergeSink(outPath: String, keys: Seq[String])(batch: DataFrame, batchId: Long): Unit =
+    AtomicSwap.swapFold(outPath, batch, batchId) { exists =>
+      if (exists) Merge.upsert(batch.sparkSession.read.parquet(outPath), batch, keys)
       else batch
-    AtomicSwap.commit(merged, outPath, batchId, lineage)
-  }
+    }
 
   /** Partition-scoped T2 sink — the scale form of [[mergeSink]], and the
     * streaming twin of `OpenAqPipeline.refreshMart`: instead of
@@ -163,31 +122,22 @@ object StreamingHourly {
     * year-long mart with a 2-hour watermark rewrites 1-2 partitions per
     * batch, not 365.
     *
-    * Commit contract: data first ([[Merge.overwriteDays]]), then the
-    * `_applied_batch` marker. Dynamic overwrite is not atomic across
-    * partitions, so a crash mid-write can leave a batch half-applied
-    * with the marker still old — the batch then REPLAYS, and the keyed
-    * upsert re-converges (idempotent: matched keys take the batch's
+    * Commit contract: [[AtomicSwap.dayFold]] — data first, then the
+    * `_applied_batch` marker, so a crash mid-write REPLAYS the batch, and
+    * the keyed upsert re-converges (matched keys take the batch's
     * values, which are the same values on replay). The whole-swap
     * [[mergeSink]] trades per-batch cost for single-rename atomicity;
     * at real scale a table format's transactional MERGE provides both.
     */
   def partitionedMergeSink(outPath: String, keys: Seq[String],
                            dayFrom: String = "window_start")
-                          (batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val target = new Path(outPath)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val lineage = AtomicSwap.streamLineage(spark)
-    if (AtomicSwap.alreadyApplied(fs, target, batchId, lineage)) return
-    val withDay = batch.withColumn("__day", to_date(col(dayFrom)))
-    val merged =
-      if (fs.exists(target)) {
+                          (batch: DataFrame, batchId: Long): Unit =
+    AtomicSwap.dayFold(outPath, batch, batchId) { exists =>
+      val withDay = batch.withColumn("__day", to_date(col(dayFrom)))
+      if (exists) {
         val touched = withDay.select(col("__day")).distinct()
-        Merge.upsert(spark.read.parquet(outPath)
+        Merge.upsert(batch.sparkSession.read.parquet(outPath)
           .join(broadcast(touched), Seq("__day"), "left_semi"), withDay, keys)
       } else withDay
-    Merge.overwriteDays(merged, outPath)
-    AtomicSwap.writeMarker(fs, target, batchId, lineage)
-  }
+    }
 }

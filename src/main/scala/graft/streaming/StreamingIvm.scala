@@ -1,9 +1,7 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.Tables
 import graft.operators.IncrementalAgg
@@ -43,30 +41,18 @@ object StreamingIvm {
   /** foreachBatch sink: partials of the batch → broadcast-delta merge
     * into the mart → atomic swap with the batchId marker.
     */
-  def ivmSink(outPath: String)(batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val shims = org.apache.spark.sql.graft.shims
-    val target = new Path(outPath)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    AtomicSwap.heal(fs, target)
-    // replay guard scoped to the STREAM lineage: batchIds restart at 0
-    // for a fresh checkpoint dir, so a batchId-only guard would silently
-    // drop a new stream's early batches against an old mart's marker
-    val lineage = AtomicSwap.streamLineage(spark)
-    if (AtomicSwap.alreadyApplied(fs, target, batchId, lineage)) return
-    // checkpointed HERE (not inside mergeDeltaSmall) so this sink owns
-    // the blocks and can free them after commit — a long-running stream
-    // must not grow block-manager storage per batch
-    val partials = shims.checkpointWithStats(
-      IncrementalAgg.partials(factsOf(batch), Keys, "v"))
-    val merged =
-      if (fs.exists(target))
-        IncrementalAgg.mergeDeltaSmall(spark.read.parquet(outPath), partials, Keys)
+  def ivmSink(outPath: String)(batch: DataFrame, batchId: Long): Unit =
+    AtomicSwap.swapFold(outPath, batch, batchId) { exists =>
+      // checkpointed inside the fold, so the commit frees these blocks
+      // after the swap — a long-running stream must not grow
+      // block-manager storage per batch
+      val partials = org.apache.spark.sql.graft.shims.checkpointWithStats(
+        IncrementalAgg.partials(factsOf(batch), Keys, "v"))
+      if (exists)
+        IncrementalAgg.mergeDeltaSmall(
+          batch.sparkSession.read.parquet(outPath), partials, Keys)
       else partials
-    AtomicSwap.commit(merged, outPath, batchId, lineage)
-    // the mart is on disk now: the per-batch checkpoint is dead
-    shims.unpersistLocalCheckpoint(partials)
-  }
+    }
 
   /** The whole chain drained end-to-end (driver query
     * `t7_streaming_ivm`): events file-stream → per-batch partials →
@@ -76,31 +62,13 @@ object StreamingIvm {
     */
   def availableNowIvmMart(spark: SparkSession, sfDir: String,
                           maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val work = DrainWork.tempDir("graft_stream_ivm")
-    val mart = s"$work/mart"
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val reader = spark.readStream
-      .schema(graft.Tables(spark, sfDir, "events").schema)
-    val events = Tables.normalizeTs(
-      maxFilesPerTrigger.fold(reader)(n =>
-        reader.option("maxFilesPerTrigger", n))
-      .parquet(s"$sfDir/{events.parquet}"))
-    DrainWidth.clamped(spark) {
-      val q = events.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", s"$work/checkpoint")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch(ivmSink(mart) _)
-        .start()
-      q.awaitTermination()
-    }
-    try spark.read.parquet(mart)
-    catch {
-      case _: org.apache.spark.sql.AnalysisException =>
-        // zero-batch drain (empty source dir): valid state — the empty
-        // aggregate shape, not an error
-        IncrementalAgg.partials(
-          factsOf(Tables.events(spark, sfDir)).limit(0), Keys, "v")
-    }
+    val mart = s"${DrainWork.tempDir("graft_stream_ivm")}/mart"
+    Drain.run(Drain.eventsStream(spark, sfDir, maxFilesPerTrigger), "append")(
+      ivmSink(mart) _)
+    if (Drain.hasData(spark, mart)) spark.read.parquet(mart)
+    // zero-batch drain (empty source dir): valid state — the empty
+    // aggregate shape, not an error
+    else IncrementalAgg.partials(
+      factsOf(Tables.events(spark, sfDir)).limit(0), Keys, "v")
   }
 }

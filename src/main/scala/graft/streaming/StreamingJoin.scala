@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Stream-stream interval join — the streaming counterpart of
   * [[graft.operators.RangeJoin]]/[[graft.operators.AsOf]]: match each
@@ -66,29 +65,16 @@ object StreamingJoin {
   def availableNowAttribution(spark: org.apache.spark.sql.SparkSession,
                               sfDir: String,
                               lookbackSec: Long = 3600): DataFrame = {
-    val work = DrainWork.tempDir("graft_stream_join")
-    val out = s"$work/matches"
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = graft.Tables(spark, sfDir, "events").schema
-    DrainWidth.clamped(spark) {
-    def stream(): DataFrame = graft.Tables.normalizeTs(
-      spark.readStream.schema(schema).parquet(s"$sfDir/{events.parquet}"))
-    val purchases = stream().filter(col("event_type") === "purchase")
+    val out = s"${DrainWork.tempDir("graft_stream_join")}/matches"
+    val purchases = Drain.eventsStream(spark, sfDir)
+      .filter(col("event_type") === "purchase")
       .select(col("event_id").as("purchase_id"), col("user_id"), col("ts").as("p_ts"))
-    val clicks = stream().filter(col("event_type") === "click")
+    val clicks = Drain.eventsStream(spark, sfDir)
+      .filter(col("event_type") === "click")
       .select(col("event_id").as("click_id"), col("user_id"), col("ts").as("c_ts"))
-    val q = intervalJoin(purchases, clicks, Seq("user_id"), "p_ts", "c_ts",
+    Drain.run(intervalJoin(purchases, clicks, Seq("user_id"), "p_ts", "c_ts",
         lookbackSec, watermarkSec = lookbackSec)
-      .select(col("user_id"), col("purchase_id"), col("click_id"))
-      .writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", s"$work/checkpoint")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    }
+      .select(col("user_id"), col("purchase_id"), col("click_id")), "append", out)
     spark.read.parquet(out)
   }
 }

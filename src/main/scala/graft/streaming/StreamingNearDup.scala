@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming MinHash-LSH near-duplicate detection — the streaming twin
   * of [[graft.ext.DedupOps.lshCandidates]]: as documents arrive, each is
@@ -133,23 +133,12 @@ object StreamingNearDup {
     */
   def availableNowCandidates(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val work = DrainWork.tempDir("graft_stream_neardup")
-    val out = s"$work/pairs"
+    val out = s"${DrainWork.tempDir("graft_stream_neardup")}/pairs"
     val schema = graft.Tables(spark, sfDir, "documents").schema
     val docs = spark.readStream.schema(schema)
       .parquet(s"$sfDir/{documents.parquet}")
-    val pairs = candidatePairs(
-      bandKeys(docs, "doc_id", "text").as[BandDoc])
-    DrainWidth.clamped(spark) {
-      val q = pairs.writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", s"$work/checkpoint")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    Drain.run(candidatePairs(bandKeys(docs, "doc_id", "text").as[BandDoc]).toDF(),
+      "append", out)
     spark.read.parquet(out).distinct()
   }
 }

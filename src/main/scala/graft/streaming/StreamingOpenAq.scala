@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
@@ -57,19 +56,14 @@ object StreamingOpenAq {
     * replay a no-op instead.
     */
   def algebraicMergeSink(outPath: String, pivots: Seq[Gold.PivotCol], keyName: String)(
-      batchPartials: DataFrame, batchId: Long): Unit = {
-    val spark = batchPartials.sparkSession
-    val target = new Path(outPath)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    AtomicSwap.heal(fs, target)
-    val lineage = AtomicSwap.streamLineage(spark)
-    if (AtomicSwap.alreadyApplied(fs, target, batchId, lineage)) return
-    val combined =
-      if (fs.exists(target)) {
-        val existing = spark.read.parquet(outPath).select(
-          batchPartials.columns.map(org.apache.spark.sql.functions.col).toSeq: _*)
-        Gold.combinePartials(existing.unionByName(batchPartials))
-      } else batchPartials
-    AtomicSwap.commit(Gold.finalizeMart(combined, pivots, keyName), outPath, batchId, lineage)
-  }
+      batchPartials: DataFrame, batchId: Long): Unit =
+    AtomicSwap.swapFold(outPath, batchPartials, batchId) { exists =>
+      val combined =
+        if (exists) {
+          val existing = batchPartials.sparkSession.read.parquet(outPath).select(
+            batchPartials.columns.map(org.apache.spark.sql.functions.col).toSeq: _*)
+          Gold.combinePartials(existing.unionByName(batchPartials))
+        } else batchPartials
+      Gold.finalizeMart(combined, pivots, keyName)
+    }
 }

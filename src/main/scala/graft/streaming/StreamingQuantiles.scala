@@ -2,9 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
-import graft.Tables
 import graft.functions.HistQuantile
 
 /** Streaming distribution monitoring: per-key histogram quantiles over
@@ -29,15 +27,8 @@ object StreamingQuantiles {
     */
   def availableNowQuantiles(spark: SparkSession, sfDir: String,
                             maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val work = DrainWork.tempDir("graft_stream_quant")
-    val mart = s"$work/mart"
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val src = s"$sfDir/{events.parquet}"
-    val reader = spark.readStream
-      .schema(graft.Tables(spark, sfDir, "events").schema)
-    val events = Tables.normalizeTs(
-      maxFilesPerTrigger.fold(reader)(n =>
-        reader.option("maxFilesPerTrigger", n)).parquet(src))
+    val mart = s"${DrainWork.tempDir("graft_stream_quant")}/mart"
+    val events = Drain.eventsStream(spark, sfDir, maxFilesPerTrigger)
     // bounded AvailableNow drain → no watermark, same reasoning as
     // StreamingHourly.availableNowHourlyMart (a watermark would drop
     // cross-batch stragglers; state dies with the run)
@@ -52,16 +43,7 @@ object StreamingQuantiles {
         col("qs").getItem(1).as("p90_cents"),
         col("qs").getItem(2).as("p99_cents"),
         col("n_events"))
-    // bounded drain → clamp the state-store width (DrainWidth scaladoc)
-    DrainWidth.clamped(spark) {
-      val q = agg.writeStream
-        .outputMode("update")
-        .foreachBatch(StreamingHourly.mergeSink(mart, Seq("event_type")) _)
-        .option("checkpointLocation", s"$work/chk")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    Drain.run(agg, "update")(StreamingHourly.mergeSink(mart, Seq("event_type")) _)
     spark.read.parquet(mart)
   }
 }

@@ -45,8 +45,16 @@ object shims {
     * only copy.
     */
   def unpersistLocalCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
+    unpersistLocalCheckpoints(df, _ => true)
+
+  /** [[unpersistLocalCheckpoint]] narrowed to the leaves whose RDD id
+    * passes `only`.
+    */
+  def unpersistLocalCheckpoints(df: org.apache.spark.sql.DataFrame,
+      only: Int => Boolean): Unit =
     df.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(blocking = false)
+      case l: org.apache.spark.sql.execution.LogicalRDD if only(l.rdd.id) =>
+        l.rdd.unpersist(blocking = false)
       case _ => ()
     }
 
