@@ -181,7 +181,7 @@ object Retrieval {
     // tok_band nested INSIDE the batch shard, so the probe still prunes
     // to the query terms' md5-band directories within every shard
     // not salt-clustered — the ivfSink rationale: shard file counts are
-    // delta-bounded, consolidation ([[compactIndex]]) re-clusters
+    // delta-bounded
     tok.groupBy(id, col("token")).agg(count(lit(1)).as("tf"))
       .withColumn("tok_band", substring(md5(col("token")), 1, 1))
       .write.mode("overwrite").partitionBy("tok_band")
@@ -190,39 +190,6 @@ object Retrieval {
       .write.mode("overwrite").parquet(s"$indexPath/doclen/batch=$batchId")
     graftShims.unpersistLocalCheckpoint(tok)
   }
-
-  /** Offline maintenance for the stream-maintained index: consolidate
-    * the postings and doclen `batch=` shard tables into one shard each
-    * via [[graft.operators.Compact.compactShards]]. Probe-side pruning
-    * is preserved — `tok_band` stays a partition column inside the
-    * consolidated postings shard — and the probe result is unchanged
-    * (CompactSpec pins hash parity; SCALE.md "Round 11: `batch=` shard
-    * compaction" measures the probe-latency curve vs shard count that
-    * motivates running this).
-    *
-    * SAFETY: consolidate only batches beyond replay — after an
-    * AvailableNow drain terminates, or `upTo` = the owning stream's
-    * committed watermark. [[bm25Sink]]'s replay idempotence is a
-    * re-delivered batch overwriting its own shard; on a consolidated
-    * shard that overwrite would drop the other batches' rows.
-    *
-    * `minor`/`maxRuns` run the tiered LSM schedule; `maxRuns` defaults
-    * to the measured probe-latency knee (8 — SCALE.md "Round 14:
-    * read-side pricing of stacked runs": flat through 8 stacked runs,
-    * 2–3× worse by 32).
-    */
-  def compactIndex(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, targetBytes: Long = 128L << 20,
-      upTo: Long = Long.MaxValue,
-      graceMs: Long = 0L,
-      minor: Boolean = false,
-      maxRuns: Int = graft.operators.Compact.DefaultMaxRuns): Seq[graft.operators.Compact.Report] = Seq(
-    graft.operators.Compact.compactShards(spark, s"$indexPath/postings",
-      targetBytes, nested = Seq("tok_band"), upTo = upTo, graceMs = graceMs,
-      minor = minor, maxRuns = maxRuns),
-    graft.operators.Compact.compactShards(spark, s"$indexPath/doclen",
-      targetBytes, upTo = upTo, graceMs = graceMs, minor = minor,
-      maxRuns = maxRuns))
 
   /** Probe the stream-maintained index: identical results to
     * [[bm25TopK]] over every document any shard has indexed (parity
@@ -242,9 +209,7 @@ object Retrieval {
     // failing schema inference, and genuine schema drift fails loudly
     // at analysis instead of being paper-overable by a broad catch.
     // `batch` is the shard partition column, declared LONG (foreachBatch
-    // batchIds are longs; directory values parse either way). The reads
-    // go through ShardStore so a compacted index (manifest + live dir)
-    // probes identically — including mid-crash states of the compactor.
+    // batchIds are longs; directory values parse either way).
     val tf = graft.operators.ShardStore.read(spark, s"$indexPath/postings",
         org.apache.spark.sql.types.StructType.fromDDL(
           s"$idCol BIGINT, token STRING, tf BIGINT, tok_band STRING, batch BIGINT"))
@@ -263,13 +228,9 @@ object Retrieval {
     * driver query): documents file-stream (3 arbitrary splits) →
     * per-batch postings shards → stream-index probe. Equals the batch
     * [[bm25TopK]] / stored-index probe for any split (oracle-pinned).
-    * With `compact=true` the drain tail consolidates the postings and
-    * doclen shards before probing — safe because AvailableNow commits
-    * every batch before terminating, so all shard ids are beyond
-    * replay; result-identical (StreamingBm25Spec pins parity).
     */
   def availableNowBm25(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String, compact: Boolean = false): DataFrame = {
+      sfDir: String): DataFrame = {
     val work = graft.streaming.DrainWork.tempDir("graft_stream_bm25")
     val idx = s"$work/index"
     val docs = graft.Tables.documents(spark, sfDir).select("doc_id", "text")
@@ -278,11 +239,9 @@ object Retrieval {
     // zero-doc drains write no shard dirs at all (EmptyInputSpec wants
     // the typed empty top-k); shards that exist but hold zero part files
     // are covered by the declared read schemas in [[bm25TopKStreamed]]
-    if (graft.streaming.Drain.hasData(spark, s"$idx/postings")) {
-      if (compact) compactIndex(spark, idx)
+    if (graft.streaming.Drain.hasData(spark, s"$idx/postings"))
       bm25TopKStreamed(spark, idx, "doc_id",
         Seq("vector", "spark", "window"), k = 20)
-    }
     else
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         org.apache.spark.sql.types.StructType.fromDDL(

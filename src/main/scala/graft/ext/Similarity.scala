@@ -834,11 +834,7 @@ object Similarity {
     // bounded collect replaces the per-batch broadcast build + exchange
     // NOT salt-clustered like the batch builder (measured +0.1-0.15 s
     // per fold for an exchange the shard doesn't need): a micro-batch
-    // shard's file count is bounded by the delta's own task count, and
-    // the offline consolidation path ([[compactIvfLists]] ->
-    // Compact.compactShards) re-clusters to the target layout anyway —
-    // that is where the 100 TB file-count control for streamed shards
-    // lives.
+    // shard's file count is bounded by the delta's own task count.
     ivfAssign(batch, cents, idCol, vecCol, probeStored = true)
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"),
         norm2Scaled(col(vecCol)).as("c_n2"), col("cluster_id"))
@@ -849,47 +845,20 @@ object Similarity {
   /** Probe the stream-maintained index: identical results to
     * [[ivfTopKStored]] over every vector any shard has indexed (parity
     * pinned in StreamingAnnSpec and the `t13_streaming_ann` oracle).
-    * The lists read goes through [[graft.operators.ShardStore]] —
-    * shard-union + any consolidated live dir, declared schema (ids are
-    * BIGINT, the repo-wide contract) so empty shards read as zero
+    * The lists read goes through [[graft.operators.ShardStore]] — the
+    * union of the `batch=` shards under [[ListsSchema]] (BIGINT ids,
+    * whatever the query id type), so empty shards read as zero
     * candidates — and the probe's cluster_id equi-join prunes unprobed
     * cells exactly as the batch stored path does.
     */
   def ivfTopKStreamed(spark: org.apache.spark.sql.SparkSession, path: String,
                       queries: DataFrame, idCol: String, vecCol: String,
                       nProbe: Int = 2, k: Int = 3): DataFrame = {
-    import org.apache.spark.sql.types._
     val cents = spark.read.schema(CentroidSchema).parquet(s"$path/centroids")
-    val schema = graft.operators.ShardStore.withBatch(StructType(Seq(
-      StructField("neighbor_id", queries.schema(idCol).dataType),
-      StructField("c_vec", queries.schema(vecCol).dataType),
-      StructField("c_n2", LongType),
-      StructField("cluster_id", IntegerType))))
-    val lists = graft.operators.ShardStore
-      .read(spark, s"$path/lists", schema).drop("batch")
+    val lists = graft.operators.ShardStore.read(spark, s"$path/lists",
+      graft.operators.ShardStore.withBatch(ListsSchema)).drop("batch")
     ivfSearch(lists, cents, queries, idCol, vecCol, nProbe, k)
   }
-
-  /** Offline/drain-tail maintenance for the stream-maintained lists:
-    * consolidate the `batch=` shards via the crash-atomic
-    * [[graft.operators.Compact.compactShards]]; `cluster_id` stays a
-    * partition column of the live dir so cell pruning is preserved and
-    * the probe result is unchanged (StreamingAnnSpec pins parity).
-    * Same safety contract as the BM25 index: consolidate only batches
-    * beyond replay (after an AvailableNow drain terminates, or
-    * `upTo` = the owning stream's committed watermark). `minor`/
-    * `maxRuns` run the tiered LSM schedule; the `maxRuns` default is
-    * the measured probe-latency knee (SCALE.md r14).
-    */
-  def compactIvfLists(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, targetBytes: Long = 128L << 20,
-      upTo: Long = Long.MaxValue,
-      graceMs: Long = 0L,
-      minor: Boolean = false,
-      maxRuns: Int = graft.operators.Compact.DefaultMaxRuns): graft.operators.Compact.Report =
-    graft.operators.Compact.compactShards(spark, s"$indexPath/lists",
-      targetBytes, nested = Seq("cluster_id"), upTo = upTo, graceMs = graceMs,
-      minor = minor, maxRuns = maxRuns)
 
   /** Shared drain harness for the streaming-ANN chains (t13/t14): the
     * embeddings as a 3-way split stream drained through `sink`, one
@@ -911,13 +880,10 @@ object Similarity {
     * list shards → stream-index probe. Equals [[ivfTopKStored]] with
     * the same build parameters for any split (oracle-pinned — the
     * `x_ann_ivf` oracle, since assignment is a pure per-vector function
-    * of the standing model). With `compact=true` the drain tail
-    * consolidates the lists shards behind the drained checkpoint
-    * (every batch is committed once AvailableNow terminates) before
-    * probing — the opt-in maintenance posture, result-identical.
+    * of the standing model).
     */
   def availableNowIvf(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String, compact: Boolean = false): DataFrame = {
+      sfDir: String): DataFrame = {
     val work = graft.streaming.DrainWork.tempDir("graft_stream_ann")
     val idx = s"$work/index"
     writeIvfModel(graft.Tables.embeddings(spark, sfDir)
@@ -931,7 +897,6 @@ object Similarity {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         org.apache.spark.sql.types.StructType.fromDDL(
           "query_id BIGINT, neighbor_id BIGINT, cluster_id BIGINT, cos_sim DOUBLE"))
-    if (compact) compactIvfLists(spark, idx)
     ivfTopKStreamed(spark, idx, emb.filter(col("vec_id") < 10),
         "vec_id", "embedding", nProbe = 2, k = 3)
       .withColumn("cluster_id", col("cluster_id").cast("bigint"))
@@ -1504,7 +1469,7 @@ object Similarity {
     val books = spark.read.schema(PqBookSchema).parquet(s"$indexPath/codebooks")
     // probeStored: both standing model tables are tiny just-written dirs
     // not salt-clustered — the ivfSink rationale: shard file counts are
-    // delta-bounded, consolidation re-clusters
+    // delta-bounded
     encodeResiduals(residuals(batch, coarse, idCol, vecCol, probeStored = true),
         books, idCol, m, subDim, probeStored = true)
       .write.mode("overwrite").partitionBy("coarse_id")
@@ -1513,55 +1478,33 @@ object Similarity {
 
   /** Probe the stream-maintained IVF-PQ index: identical results to
     * [[ivfPqTopKStored]] over every vector any shard has encoded. The
-    * codes read goes through [[graft.operators.ShardStore]] (shard
-    * union + any consolidated live dir, declared schema) and the ADC
-    * equi-join prunes unprobed cells exactly as the batch path does.
+    * codes read goes through [[graft.operators.ShardStore]] (the union
+    * of the `batch=` shards under the stored codes schema, BIGINT ids
+    * whatever the query id type) and the ADC equi-join prunes unprobed
+    * cells exactly as the batch path does.
     */
   def ivfPqTopKStreamed(spark: org.apache.spark.sql.SparkSession,
                         path: String, queries: DataFrame, idCol: String,
                         vecCol: String, m: Int = 4, subDim: Int = 16,
                         nProbe: Int = 2, k: Int = 3): DataFrame = {
-    import org.apache.spark.sql.types._
-    val schema = graft.operators.ShardStore.withBatch(StructType(Seq(
-      StructField("neighbor_id", queries.schema(idCol).dataType),
-      StructField("sub", IntegerType),
-      StructField("code", IntegerType),
-      StructField("coarse_id", IntegerType))))
-    val codes = graft.operators.ShardStore
-      .read(spark, s"$path/codes", schema).drop("batch")
+    val codes = graft.operators.ShardStore.read(spark, s"$path/codes",
+      graft.operators.ShardStore.withBatch(pqCodesSchema(withCoarse = true)))
+      .drop("batch")
     ivfPqSearch(codes,
       spark.read.schema(CentroidSchema).parquet(s"$path/coarse"),
       spark.read.schema(PqBookSchema).parquet(s"$path/codebooks"),
       queries, idCol, vecCol, m, subDim, nProbe, k)
   }
 
-  /** Drain-tail/offline consolidation for the stream-maintained codes:
-    * same contract as [[compactIvfLists]] — `coarse_id` stays a
-    * partition column of the live dir, so cell pruning and the probe
-    * result are unchanged. Consolidate only behind the replay
-    * watermark.
-    */
-  def compactIvfPqCodes(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, targetBytes: Long = 128L << 20,
-      upTo: Long = Long.MaxValue,
-      graceMs: Long = 0L,
-      minor: Boolean = false,
-      maxRuns: Int = graft.operators.Compact.DefaultMaxRuns): graft.operators.Compact.Report =
-    graft.operators.Compact.compactShards(spark, s"$indexPath/codes",
-      targetBytes, nested = Seq("coarse_id"), upTo = upTo, graceMs = graceMs,
-      minor = minor, maxRuns = maxRuns)
-
   /** The whole IVF-PQ chain drained end-to-end (the
     * `t14_streaming_ivfpq` driver query): standing model trained once →
     * embeddings file-stream (3 arbitrary splits) → per-batch residual-
     * code shards → stream-index ADC probe. Equals [[ivfPqTopKStored]]
     * with the same build parameters for any split (oracle-pinned — the
-    * `x_ann_ivfpq` oracle). With `compact=true` the drain tail
-    * consolidates the code shards behind the drained checkpoint before
-    * probing — opt-in maintenance, result-identical.
+    * `x_ann_ivfpq` oracle).
     */
   def availableNowIvfPq(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String, compact: Boolean = false): DataFrame = {
+      sfDir: String): DataFrame = {
     val work = graft.streaming.DrainWork.tempDir("graft_stream_ivfpq")
     val idx = s"$work/index"
     writeIvfPqModel(graft.Tables.embeddings(spark, sfDir)
@@ -1575,7 +1518,6 @@ object Similarity {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         org.apache.spark.sql.types.StructType.fromDDL(
           "query_id BIGINT, neighbor_id BIGINT, coarse_id BIGINT, adist_s BIGINT"))
-    if (compact) compactIvfPqCodes(spark, idx)
     ivfPqTopKStreamed(spark, idx, emb.filter(col("vec_id") < 10),
       "vec_id", "embedding", m = 4, subDim = 16, nProbe = 2, k = 3)
   }

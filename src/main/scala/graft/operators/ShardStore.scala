@@ -2,85 +2,22 @@ package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
 /** The `batch=<id>` shard-table layout shared by the streaming sinks
   * (bm25Sink, StreamingIndex, the as-of right store, the streaming ANN
-  * lists) plus the MANIFEST protocol that makes consolidating those
-  * shards crash-atomic.
+  * lists and codes).
   *
-  * Until r11, [[Compact.compactShards]] swapped the consolidated
-  * rewrite in with delete-old-shards-then-rename — a crash between the
-  * two steps left the table unreadable until manual recovery, and a
-  * failed rename (Hadoop reports it as `false`, not an exception) left
-  * ZERO shards while the pass reported success (r11 VERDICT #3 +
-  * ADVICE). The root problem is structural: replacing N directories
-  * with 1 cannot be atomic on a filesystem, so the commit point must be
-  * a single METADATA write — the same move every table format makes.
-  *
-  * Protocol (all names underscore-prefixed → invisible to raw parquet
-  * readers):
-  *
-  *  1. the consolidated rewrite lands in `_compact_tmp`;
-  *  2. `_compact_tmp` is renamed to `_compact_live_g<gen>` (one rename,
-  *     checked);
-  *  3. the COMMIT POINT: `_compact_manifest_g<gen>` is published by
-  *     atomic rename of a sidecar tmp file. The manifest records the
-  *     live directory and `batchValue` — the highest consolidated batch
-  *     id. A batch shard is superseded iff `id <= batchValue`: sinks
-  *     only ever append ids beyond the replay watermark (>= any id a
-  *     compaction may cover), so the single number is the whole set;
-  *  4. cleanup ([[heal]]): superseded `batch=` dirs, unreferenced live
-  *     dirs and older manifests are deleted — pure garbage collection,
-  *     reordered freely.
-  *
-  * A crash ANYWHERE leaves readers consistent: before step 3 the new
-  * live dir is unreferenced garbage and every original shard is intact
-  * (full rows, no duplicates); after step 3 the manifest excludes the
-  * superseded shards whether or not cleanup ran (full rows, no
-  * duplicates). CompactSpec pins all three crash windows.
-  *
-  * [[read]] is the reader half every shard-table probe goes through:
-  * non-superseded `batch=` dirs unioned with the manifest's live dir.
-  * Schemas are DECLARED by the caller (`batch BIGINT` included) — empty
-  * shard dirs read as zero rows instead of failing inference, and the
-  * live dir's rows re-expose `batch = batchValue` so downstream
-  * batch-column logic (e.g. StreamingIndex's replay self-exclusion)
-  * keeps working: consolidated ids are behind the watermark, so no live
-  * row can belong to a replayable batch.
-  *
-  * Concurrency posture (r13): compaction may run CONCURRENT with
-  * probes when [[heal]]'s `graceMs` is set to at least the longest
-  * plausible probe scan — superseded artifacts then outlive every scan
-  * that planned against the pre-publish listing, and such a scan reads
-  * its consistent pre-publish snapshot (full rows, no duplicates; its
-  * plan predates the new live dir). With the default `graceMs = 0`
-  * (offline maintenance, the AvailableNow drain tail) cleanup is
-  * immediate and a concurrent reader can hit a missing file mid-scan —
-  * CompactSpec pins both behaviors.
-  *
-  * Compaction itself is SINGLE-WRITER per root, and since r14 that is
-  * ENFORCED, not assumed: [[Compact.compactShards]] claims an exclusive
-  * `_compact_lock` ([[claimCompactor]]) for the whole pass — a second
-  * concurrent pass fails loudly instead of colliding on [[nextGen]]
-  * (nested live-dir renames, overwritten manifests, a sibling [[heal]]
-  * deleting a swapped-but-unpublished live dir). The reference's own
-  * posture is serialized runs (`max_active_runs=1`,
-  * dags/01_openaq_ingestion.py:46); the lock makes violating it an
-  * error instead of corruption.
+  * Layout contract: a shard table is a root directory holding one
+  * `batch=<id>` directory per micro-batch, written by that batch alone
+  * with `mode("overwrite")`. A replayed batch rewrites its own shard
+  * bit-for-bit, so the table is the union of its shards and every
+  * appended row appears exactly once. Shards may nest partition
+  * directories of their own (`cluster_id=`, `tok_band=`), which probes
+  * prune on. Nothing else under the root is part of the table.
   */
 object ShardStore {
-
-  /** The committed compaction state: rows of batches `<= batchValue`
-    * live (only) in the run directories `dirs`; `batch=` dirs with
-    * larger ids are current. A single-element `dirs` is the fully
-    * merged (major-compacted) layout; several elements are TIERED runs
-    * — each a minor pass's delta-sized consolidation (r13): minor
-    * compaction keeps maintenance cost proportional to the NEW shards
-    * instead of rewriting the whole standing index every pass.
-    */
-  final case class Manifest(gen: Long, dirs: Seq[String], batchValue: Long)
 
   /** The declared schema [[read]] requires, built from a shard's DATA
     * schema: the layout contract (`batch BIGINT` partition column) in
@@ -90,12 +27,6 @@ object ShardStore {
     StructType(dataSchema.fields :+
       org.apache.spark.sql.types.StructField(
         "batch", org.apache.spark.sql.types.LongType))
-
-  private val ManifestRe = "^_compact_manifest_g(\\d+)$".r
-  private val LiveRe = "^_compact_live_g(\\d+)$".r
-
-  def liveDirName(gen: Long): String = s"_compact_live_g$gen"
-  private def manifestName(gen: Long): String = s"_compact_manifest_g$gen"
 
   def fs(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -110,450 +41,18 @@ object ShardStore {
         .map(_ -> s.getPath))
       .sortBy(_._1)
 
-  /** Parse one committed manifest file. A manifest that exists but
-    * cannot be parsed is CORRUPTION and throws — treating it as absent
-    * would resurface superseded shards as duplicate rows.
-    */
-  private def parseManifest(f: FileSystem, root: Path, gen: Long): Manifest = {
-    val in = f.open(new Path(root, manifestName(gen)))
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-               finally in.close()
-    val kv = text.linesIterator.filter(_.contains("="))
-      .map { l => val i = l.indexOf('='); l.take(i) -> l.drop(i + 1).trim }
-      .toMap
-    try {
-      // `dirs=` is the tiered form (comma-joined run names, r13);
-      // `dir=` is the pre-tiering single-run spelling, still accepted
-      // so standing indexes written by earlier code read unchanged
-      val dirs = kv.get("dirs").map(_.split(',').toSeq.filter(_.nonEmpty))
-        .orElse(kv.get("dir").map(Seq(_)))
-        .getOrElse(throw new NoSuchElementException("dirs"))
-      // an empty run list is corruption, not "no runs": a manifest
-      // always names at least one live dir, and accepting Seq() here
-      // would silently drop every superseded shard's rows from reads
-      if (dirs.isEmpty) throw new NoSuchElementException("dirs is empty")
-      // a DUPLICATE run entry is corruption too — [[read]] unions the
-      // list as-is, so accepting it would silently double those rows
-      if (dirs.distinct.size != dirs.size)
-        throw new IllegalArgumentException(s"duplicate run in dirs: $dirs")
-      Manifest(gen, dirs, kv("batchValue").toLong)
-    } catch { case e: Exception => throw new java.io.IOException(
-      s"ShardStore: corrupt manifest ${manifestName(gen)} under $root: '$text'", e) }
-  }
-
-  /** The highest-generation committed manifest. */
-  def currentManifest(f: FileSystem, root: Path): Option[Manifest] = {
-    if (!f.exists(root)) return None
-    val gens = f.listStatus(root).toSeq.flatMap(s => s.getPath.getName match {
-      case ManifestRe(g) => Some(g.toLong)
-      case _             => None
-    })
-    gens.maxOption.map(parseManifest(f, root, _))
-  }
-
-  /** Next unused generation number: one past anything any artifact name
-    * (manifest, staged tmp manifest, live dir) has ever claimed.
-    */
-  def nextGen(f: FileSystem, root: Path): Long = {
-    if (!f.exists(root)) return 1L
-    val seen = f.listStatus(root).toSeq.flatMap { s =>
-      s.getPath.getName.stripSuffix(".tmp") match {
-        case ManifestRe(g) => Some(g.toLong)
-        case LiveRe(g)     => Some(g.toLong)
-        case _             => None
-      }
-    }
-    seen.maxOption.getOrElse(0L) + 1L
-  }
-
-  /** Publish a manifest — the compaction COMMIT POINT: content staged
-    * to a `.tmp` sidecar, then a single checked rename.
-    *
-    * Single-run manifests (the major-compacted common case) also carry
-    * the pre-tiering `dir=` spelling so a mixed-version reader fleet
-    * keeps working across a rolling upgrade (r13 ADVICE). A multi-run
-    * manifest has no old-reader spelling — stacked runs are a one-way
-    * upgrade: run a major pass before downgrading readers.
-    */
-  def publish(f: FileSystem, root: Path, m: Manifest): Unit = {
-    val tmp = new Path(root, manifestName(m.gen) + ".tmp")
-    val compat = if (m.dirs.size == 1) s"dir=${m.dirs.head}\n" else ""
-    val out = f.create(tmp, true)
-    try out.write(
-      (s"gen=${m.gen}\n" + compat +
-        s"dirs=${m.dirs.mkString(",")}\nbatchValue=${m.batchValue}\n")
-        .getBytes("UTF-8"))
-    finally out.close()
-    val fin = new Path(root, manifestName(m.gen))
-    if (!f.rename(tmp, fin))
-      throw new java.io.IOException(
-        s"ShardStore: manifest publish rename $tmp -> $fin failed")
-  }
-
-  private[operators] val LockName = "_compact_lock"
-
-  /** A held compactor claim: the lock path plus the claimant's nonce —
-    * [[releaseCompactor]] deletes the lock only while it still carries
-    * this nonce, so a claimant whose stale claim was broken and
-    * re-claimed by a sibling (possible only where the heartbeat is a
-    * no-op) cannot delete the sibling's fresh lock on its way out.
-    */
-  final case class Claim(lock: Path, nonce: String)
-
-  /** Claim exclusive COMPACTOR ownership of `root` — the enforcement of
-    * the single-writer contract the whole manifest protocol assumes
-    * (r13 VERDICT #1): two concurrent passes would both take
-    * [[nextGen]] = g, nest their live-dir renames on local fs, and
-    * overwrite each other's manifest publish — and a sibling's [[heal]]
-    * would delete a first pass's swapped-but-unpublished live dir as an
-    * orphan. The claim is an exclusive creation of a `_compact_lock`
-    * sidecar: on HDFS-like stores via `create(_, overwrite = false)`
-    * (namenode-atomic); on `file://` stores via `Files.createFile`
-    * (O_EXCL, kernel-atomic across OS processes — Hadoop's
-    * RawLocalFileSystem implements non-overwrite create as an
-    * exists-check-then-create, which is race-free only within one JVM's
-    * cached FileSystem, r14 ADVICE). A live claim younger than `ttlMs`
-    * fails the pass LOUDLY; an older claim is a crashed compactor's
-    * (this process cannot block on it forever) — it is broken and
-    * re-claimed. A healthy holder keeps its claim younger than any TTL
-    * via [[startHeartbeat]]; without a heartbeat (stores lacking
-    * `setTimes`) `ttlMs` must exceed the longest plausible pass.
-    * Release with [[releaseCompactor]] in a `finally`.
-    */
-  def claimCompactor(f: FileSystem, root: Path, ttlMs: Long): Claim = {
-    val lock = new Path(root, LockName)
-    val nonce = java.util.UUID.randomUUID().toString
-    val body = s"claimedAt=${System.currentTimeMillis()}\nnonce=$nonce\n"
-      .getBytes("UTF-8")
-    // file:// claims go through O_EXCL (kernel-atomic across OS
-    // processes); RawLocalFileSystem's non-overwrite create is an
-    // exists-check-then-create, race-free only inside one JVM's cached
-    // FileSystem instance (r14 ADVICE). Custom test schemes and
-    // HDFS-like stores keep the Hadoop path, whose create(_, false) IS
-    // their atomic primitive.
-    val nioLock: Option[java.nio.file.Path] =
-      if (f.getUri.getScheme == "file")
-        Some(java.nio.file.Paths.get(lock.toUri.getPath))
-      else None
-    def attempt(): Boolean = nioLock match {
-      case Some(p) =>
-        try {
-          java.nio.file.Files.createFile(p) // O_EXCL: throws if present
-          try { java.nio.file.Files.write(p, body); true }
-          catch { case e: java.io.IOException =>
-            // ours (create succeeded, no sibling holds it) but
-            // nonce-less: left behind it would read as a live contender
-            // and block the root until the TTL — best-effort delete
-            try java.nio.file.Files.deleteIfExists(p)
-            catch { case _: java.io.IOException => () }
-            throw e
-          }
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException => false
-        }
-      case None =>
-        var created = false
-        try {
-          val out = f.create(lock, false) // exclusive: throws if present
-          created = true
-          try out.write(body) finally out.close()
-          true
-        } catch { case e: java.io.IOException =>
-          // a lock we CREATED but failed to write is our own,
-          // nonce-less half-claim (store hiccup on the write) — left in
-          // place it masquerades as a live contender and blocks every
-          // pass on this root until the TTL (r14 ADVICE): we own it, so
-          // best-effort delete before surfacing the real failure
-          if (created) {
-            try f.delete(lock, false)
-            catch { case _: java.io.IOException => () }
-            throw e
-          }
-          // contention only if the lock actually exists — a create that
-          // failed for any OTHER reason (permissions, store outage) must
-          // surface as itself, not masquerade as a concurrent compactor
-          if (f.exists(lock)) false else throw e
-        }
-    }
-    if (!attempt()) {
-      val age = try {
-        System.currentTimeMillis() - f.getFileStatus(lock).getModificationTime
-      } catch { case _: java.io.FileNotFoundException => Long.MaxValue }
-      if (age < ttlMs)
-        throw new java.io.IOException(
-          s"ShardStore: another compactor holds $lock (age ${age}ms < ttl " +
-            s"${ttlMs}ms) — concurrent compaction of one root is not " +
-            "supported; serialize passes or wait for the holder")
-      // break the stale claim ATOMICALLY: rename it aside first — only
-      // one breaker's rename can succeed, so two waiters cannot both
-      // break-and-claim (a bare delete+create would let the slower
-      // waiter delete the faster one's FRESH re-claim)
-      val aside = new Path(root, LockName +
-        s".broken.${System.nanoTime()}.${Thread.currentThread().getId}")
-      if (f.rename(lock, aside)) f.delete(aside, false)
-      if (!attempt())
-        throw new java.io.IOException(
-          s"ShardStore: lost the race re-claiming stale lock $lock — " +
-            "another compactor broke it first and is now live")
-    }
-    Claim(lock, nonce)
-  }
-
-  /** Release a claim — only while the lock still carries OUR nonce: a
-    * lock that changed hands (our claim went stale on a no-setTimes
-    * store and a sibling broke + re-claimed it) belongs to the sibling
-    * now and must survive our exit.
-    */
-  def releaseCompactor(f: FileSystem, c: Claim): Unit = {
-    val ours = try {
-      val in = f.open(c.lock)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-                 finally in.close()
-      text.linesIterator.contains(s"nonce=${c.nonce}")
-    } catch { case _: java.io.IOException => false }
-    if (ours) f.delete(c.lock, false)
-  }
-
-  /** Keep a claimed lock FRESH while a long pass runs: a daemon task
-    * re-touches the lock's mtime every `ttlMs / 3`, so a pass that
-    * outlives the TTL (a 100 TB major rewrite) does not get its LIVE
-    * claim broken as "stale" by a waiting sibling — the TTL then only
-    * ever breaks claims whose owner stopped heartbeating (a real
-    * crash). Cancel in the same `finally` that releases the lock. On a
-    * store without `setTimes` the touch is a silent no-op and the
-    * fallback contract applies: size `ttlMs` beyond the longest pass.
-    *
-    * Each claim gets its OWN single-thread scheduler (r14 ADVICE): on a
-    * shared pool, one `setTimes` hung against a stalled store would
-    * starve a SIBLING root's heartbeat past its TTL, exposing that
-    * healthy claim to a stale-break — the exact corruption the lock
-    * exists to prevent, and live the moment passes run concurrently
-    * (e.g. [[Compact.compactPartitioned]]'s per-leaf parallelism).
-    * Cancelling the returned future also tears the scheduler down, so
-    * long-lived processes don't accumulate idle heartbeat threads.
-    */
-  def startHeartbeat(f: FileSystem, lock: Path,
-      ttlMs: Long): java.util.concurrent.ScheduledFuture[_] = {
-    val pool =
-      java.util.concurrent.Executors.newSingleThreadScheduledExecutor { r =>
-        val t = new Thread(r, s"shardstore-lock-heartbeat-${lock.getParent.getName}")
-        t.setDaemon(true); t
-      }
-    val period = math.max(100L, ttlMs / 3)
-    val inner = pool.scheduleAtFixedRate(
-      () => try f.setTimes(lock, System.currentTimeMillis(), -1L)
-            catch { case _: Exception => () },
-      period, period, java.util.concurrent.TimeUnit.MILLISECONDS)
-    new java.util.concurrent.ScheduledFuture[Any] {
-      override def cancel(mayInterrupt: Boolean): Boolean = {
-        val r = inner.cancel(mayInterrupt)
-        pool.shutdownNow() // a touch hung on THIS store may linger; the
-        r                  // daemon thread dies with it, blocking no one
-      }
-      override def isCancelled: Boolean = inner.isCancelled
-      override def isDone: Boolean = inner.isDone
-      override def get(): Any = inner.get()
-      override def get(t: Long, u: java.util.concurrent.TimeUnit): Any =
-        inner.get(t, u)
-      override def getDelay(u: java.util.concurrent.TimeUnit): Long =
-        inner.getDelay(u)
-      override def compareTo(o: java.util.concurrent.Delayed): Int =
-        inner.compareTo(o)
-    }
-  }
-
-  /** Garbage-collect everything the current manifest supersedes plus
-    * any artifact a crashed pass left behind: the staging dir, tmp
-    * manifests, live dirs the manifest doesn't reference, superseded
-    * `batch=` dirs, and older manifests. [[Compact.compactShards]] runs
-    * it on entry (completing any crashed predecessor) and after
-    * publishing.
-    *
-    * `graceMs` is the ONLINE-compaction knob (r12 VERDICT #2): a probe
-    * that planned its scan against the pre-publish listing (old
-    * manifest + superseded shards) still holds references to those
-    * paths, so deleting them at publish time fails that probe mid-scan.
-    * With `graceMs > 0`, each reader-visible superseded artifact (older
-    * `batch=` dirs, older live dirs, older manifests) is deleted only
-    * once the manifest that FIRST superseded it is at least `graceMs`
-    * old — i.e. every scan that began before that publish has had
-    * `graceMs` to finish against its consistent pre-publish snapshot
-    * (full rows, no duplicates: its plan predates the new live dir).
-    * The clock is per-artifact (r13 ADVICE, medium): gating on the
-    * LATEST manifest's age would reset at every publish, so a pass
-    * cadence under `graceMs` — exactly the continuously-fed mode the
-    * grace window exists for — would never collect anything. The
-    * superseding manifest's mtime is read from the manifests retained
-    * during their own grace; if it was already collected, its grace
-    * elapsed ≥ `graceMs` ago and the artifact is collected too. Set
-    * `graceMs` to the longest plausible probe scan. Never-reader-visible
-    * garbage (the `_compact_tmp` staging dir, `.tmp` manifests, orphan
-    * live dirs a crash left unpublished) is collected immediately
-    * regardless — no reader can hold a reference to an artifact no
-    * manifest ever named.
-    *
-    * COMPACTOR-PRIVATE: heal decides "orphan vs superseded" from the
-    * current manifest, which is only safe while no other pass is
-    * between its live-dir swap and its publish — run it under the
-    * [[claimCompactor]] lock (as [[Compact.compactShards]] does) or
-    * with compaction quiescent.
-    *
-    * Clock caveat: expiry compares the CLIENT clock against the
-    * STORE's manifest mtime, so client-store skew shifts the effective
-    * window (skew ahead shrinks it). Size `graceMs` as
-    * longest-scan + clock-skew bound — on an NTP'd fleet that bound is
-    * seconds, and a generous grace costs only lingering bytes, never
-    * correctness.
-    */
-  def heal(f: FileSystem, root: Path, graceMs: Long = 0L): Unit = {
-    if (!f.exists(root)) return
-    f.delete(new Path(root, "_compact_tmp"), true)
-    val m = currentManifest(f, root)
-    val now = System.currentTimeMillis()
-    // every retained manifest, gen-ascending, with its publish mtime —
-    // the per-artifact supersession clocks. Only materialized when a
-    // grace window is in force (the offline default skips the reads)
-    val history: Seq[(Manifest, Long)] =
-      if (graceMs <= 0L || m.isEmpty) Nil
-      else f.listStatus(root).toSeq.flatMap { s =>
-        s.getPath.getName match {
-          case ManifestRe(g) if g.toLong == m.get.gen =>
-            Some(m.get -> s.getModificationTime)
-          case ManifestRe(g) =>
-            // an OLD manifest that no longer parses (external truncation
-            // mid-grace) is skipped, not thrown: it only served as a
-            // supersession clock, and without it artifacts fall to the
-            // next superseder's (later) mtime — GC delayed, never
-            // premature. The CURRENT manifest still throws on corruption
-            // (currentManifest above), as reads do.
-            scala.util.Try(parseManifest(f, root, g.toLong)).toOption
-              .map(_ -> s.getModificationTime)
-          case _ => None
-        }
-      }.sortBy(_._1.gen)
-    // an artifact's grace runs from the publish of the first manifest
-    // satisfying `supersededBy`; a missing superseder (already
-    // collected) means its own grace elapsed — the artifact's did too
-    def aged(supersededBy: Manifest => Boolean): Boolean =
-      graceMs <= 0L ||
-        history.collectFirst { case (man, t) if supersededBy(man) => t }
-          .forall(t => now - t >= graceMs)
-    f.listStatus(root).foreach { s =>
-      val n = s.getPath.getName
-      val stale = n.stripSuffix(".tmp") match {
-        case _ if !n.startsWith("_compact") => false
-        case ManifestRe(g) =>
-          n.endsWith(".tmp") ||
-            (m.exists(_.gen > g.toLong) && aged(_.gen > g.toLong))
-        case LiveRe(g) =>
-          !m.exists(_.dirs.contains(n)) && {
-            // gen beyond the manifest = crashed orphan, never published,
-            // no reader ever saw it → immediate (single-writer holds:
-            // heal runs under the compactor claim). At/below = was a
-            // published run: grace runs from the first manifest that
-            // dropped it (after the last one referencing it)
-            m.forall(g.toLong > _.gen) || {
-              val refs = history.collect {
-                case (man, _) if man.dirs.contains(n) => man.gen }
-              refs.isEmpty ||
-                aged(man => man.gen > refs.max && !man.dirs.contains(n))
-            }
-          }
-        // a broken-aside lock is dead on arrival (the breaker either
-        // claimed or crashed); the LIVE lock itself is never touched
-        case _ => n == "_compact_tmp" || n.startsWith(LockName + ".broken.")
-      }
-      if (stale) f.delete(s.getPath, true)
-    }
-    m.foreach { man =>
-      batchShards(f, root).foreach { case (id, p) =>
-        // grace runs from the first manifest whose cut covered this id
-        if (id <= man.batchValue && aged(_.batchValue >= id))
-          f.delete(p, true)
-      }
-    }
-  }
-
-  /** Operational status of a shard root — the "which maintenance does
-    * this table need" view an operator schedules the LSM policy from,
-    * one row per root: current generation and cut, standing RUN count
-    * (compare against [[Compact.compactShards]]'s `maxRuns`), shards
-    * accumulated past the cut (minor-pass pressure), superseded
-    * artifacts still awaiting their GC grace, and the compactor lock's
-    * age if one is held. Pure metadata: one listing plus the retained
-    * manifests — no data files are opened, so it is safe to poll.
-    */
-  def statusDf(spark: SparkSession, root: String): DataFrame = {
-    import spark.implicits._
-    val rootP = new Path(root)
-    val f = fs(spark, root)
-    val now = System.currentTimeMillis()
-    if (!f.exists(rootP))
-      return Seq((root, None: Option[Long], None: Option[Long], 0, 0, 0, 0,
-        None: Option[Long])).toDF("root", "generation", "batch_value",
-        "run_dirs", "pending_shards", "superseded_shards",
-        "stale_manifests", "lock_age_ms")
-    val m = currentManifest(f, rootP)
-    val cut = m.map(_.batchValue).getOrElse(Long.MinValue)
-    val shards = batchShards(f, rootP)
-    val names = f.listStatus(rootP).map(_.getPath.getName)
-    val manifests = names.count(n =>
-      ManifestRe.findFirstIn(n).isDefined && !n.endsWith(".tmp"))
-    val lockAge = try {
-      Some(now - f.getFileStatus(new Path(rootP, LockName))
-        .getModificationTime)
-    } catch { case _: java.io.IOException => None }
-    Seq((root, m.map(_.gen), m.map(_.batchValue),
-      m.map(_.dirs.size).getOrElse(0),
-      shards.count(_._1 > cut),
-      shards.count(_._1 <= cut),
-      math.max(0, manifests - 1),
-      lockAge)).toDF("root", "generation", "batch_value", "run_dirs",
-      "pending_shards", "superseded_shards", "stale_manifests",
-      "lock_age_ms")
-  }
-
-  /** Read a shard table: the union of non-superseded `batch=` dirs and
-    * the manifest's live dir. `schema` must DECLARE every column
-    * including nested partition columns and `batch BIGINT` (the repo's
-    * shard readers already do — declared schemas are what make empty
-    * shards readable and schema drift loud). Missing root → typed empty.
-    *
-    * Plan size grows linearly with the manifest's RUN count (one scan
-    * relation per run dir, union-reduced) — fine at the intended O(few)
-    * stacked runs the compactor's `maxRuns` bounds, wrong at hundreds:
-    * keep `maxRuns` small (see [[Compact.compactShards]]).
+  /** Read a shard table: the union of its `batch=` dirs. `schema` must
+    * DECLARE every column including nested partition columns and
+    * `batch BIGINT` ([[withBatch]]) — declared schemas are what make
+    * empty shards readable and schema drift loud. Missing root (or a
+    * root with no shard yet) → typed empty.
     */
   def read(spark: SparkSession, root: String, schema: StructType): DataFrame = {
-    val rootP = new Path(root)
-    val f = fs(spark, root)
-    val m = currentManifest(f, rootP)
-    val cut = m.map(_.batchValue).getOrElse(Long.MinValue)
-    val shardPaths = batchShards(f, rootP)
-      .collect { case (id, p) if id > cut => p.toString }
-    val dataSchema = StructType(schema.fields.filterNot(_.name == "batch"))
-    val parts = Seq.newBuilder[DataFrame]
-    if (shardPaths.nonEmpty)
-      parts += spark.read.option("basePath", root).schema(schema)
-        .parquet(shardPaths: _*)
-    m.foreach { man =>
-      man.dirs.foreach { d =>
-        val live = new Path(rootP, d)
-        // a crash between live-dir rename and manifest publish leaves
-        // the dir unreferenced (handled above); referenced-but-absent
-        // would mean external deletion — let the read fail loudly then.
-        // Every run carries batch = batchValue: consolidated ids are
-        // all behind the watermark, which is the only property the
-        // downstream batch-column logic needs
-        parts += spark.read.option("basePath", live.toString).schema(dataSchema)
-          .parquet(live.toString)
-          .withColumn("batch", lit(man.batchValue).cast(schema("batch").dataType))
-      }
-    }
-    val ps = parts.result()
-    if (ps.isEmpty)
+    val shardPaths = batchShards(fs(spark, root), new Path(root)).map(_._2.toString)
+    if (shardPaths.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    else ps.map(_.select(schema.fieldNames.toIndexedSeq.map(col): _*))
-      .reduce(_ unionByName _)
+    else spark.read.option("basePath", root).schema(schema)
+      .parquet(shardPaths: _*)
+      .select(schema.fieldNames.toIndexedSeq.map(col): _*)
   }
 }

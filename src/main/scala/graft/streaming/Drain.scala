@@ -40,7 +40,9 @@ object Drain {
   /** Drain `stream` to exhaustion, handing each micro-batch to `sink`
     * (a foreachBatch function), then return. Each drain starts from a
     * fresh checkpoint, so its batchIds start at 0 under a new stream
-    * lineage (the replay guard's scope, [[AtomicSwap]]).
+    * lineage (the replay guard's scope, [[AtomicSwap]]). The checkpoint
+    * is dead once the query stops, so the runner deletes it, also when
+    * the drain fails.
     */
   def run(stream: DataFrame, outputMode: String)(
       sink: (DataFrame, Long) => Unit): Unit =
@@ -59,18 +61,20 @@ object Drain {
     val aqe = "spark.sql.adaptive.enabled"
     val prevWidth = spark.conf.get(width)
     val prevAqe = spark.conf.get(aqe)
+    val scratch = new Path(DrainWork.tempDir("graft_drain"))
     spark.conf.set(width, Width.toString)
     spark.conf.set(aqe, "false")
     try sink(stream.writeStream
         .outputMode(outputMode)
-        .option("checkpointLocation",
-          s"${DrainWork.tempDir("graft_drain")}/checkpoint")
+        .option("checkpointLocation", s"$scratch/checkpoint")
         .trigger(Trigger.AvailableNow()))
       .start()
       .awaitTermination()
     finally {
       spark.conf.set(width, prevWidth)
       spark.conf.set(aqe, prevAqe)
+      scratch.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .delete(scratch, true)
     }
   }
 

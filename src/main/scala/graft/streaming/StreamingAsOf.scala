@@ -187,11 +187,7 @@ object StreamingAsOf {
       // rights are append-only → land as an overwrite-idempotent
       // `batch=<id>` shard (the StreamingIndex/bm25Sink posture): a
       // replayed batch overwrites its own shard bit-for-bit, and the
-      // per-batch right-store cost is O(delta). Long streams consolidate
-      // shards offline with Compact.compactShards — behind the mart's
-      // _applied_batch watermark, whose replay guard skips the fold BEFORE
-      // this shard write (the property that makes consolidating applied
-      // batches safe); CompactSpec pins a post-compaction fold.
+      // per-batch right-store cost is O(delta).
       newR.write.mode("overwrite").parquet(s"$rightStorePath/batch=$batchId")
       // declared schema (the delta's own, plus the shard partition id):
       // the standing reads run EVERY batch, and footer-based inference is
@@ -313,8 +309,7 @@ object StreamingAsOf {
     * in oracle shape. Equals the batch `x_asof_native` rows for any
     * split (oracle-pinned).
     */
-  def availableNowAsOf(spark: SparkSession, sfDir: String,
-      compact: Boolean = false): DataFrame = {
+  def availableNowAsOf(spark: SparkSession, sfDir: String): DataFrame = {
     val work = DrainWork.tempDir("graft_stream_asof")
     val mart = s"$work/mart"
     val rstore = s"$work/clicks"
@@ -331,19 +326,6 @@ object StreamingAsOf {
     Drain.run(Drain.splitStream(ev, s"$work/events"), "append")(
       asOfSinkPartitioned(mart, rstore, split, "event_id", Seq("user_id"),
         "ts", "ts", Seq("click_id", "click_value"), "click_id", tol) _)
-    // opt-in drain-tail maintenance: consolidate the right-history
-    // shards scoped to the mart's _applied_batch marker — the exact
-    // replay watermark the compaction safety contract names (a replay
-    // of any id <= it returns before the shard write)
-    if (compact) {
-      val martP = new org.apache.hadoop.fs.Path(mart)
-      AtomicSwap.lastAppliedBatchId(
-          martP.getFileSystem(spark.sparkContext.hadoopConfiguration), martP)
-        .foreach { hwm =>
-          graft.operators.Compact.compactShards(spark, rstore,
-            targetBytes = 128L << 20, upTo = hwm)
-        }
-    }
     // an all-empty drain leaves only the _applied_batch marker (dynamic
     // overwrite of zero rows writes no partition dirs) — zero-row
     // robustness (EmptyInputSpec) wants the typed empty result

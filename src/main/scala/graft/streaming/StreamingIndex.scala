@@ -46,11 +46,7 @@ object StreamingIndex {
     val dups =
       if (!fs.exists(new Path(indexPath))) intra
       else {
-        // ShardStore read → the standing index stays probe-able across
-        // compactShards consolidation; this batch's own (replayed)
-        // shard must not self-match, and consolidated rows can't belong
-        // to it (compaction covers only watermark-committed ids, and a
-        // replayable id is never committed)
+        // this batch's own (replayed) shard must not self-match
         val idxSchema = graft.operators.ShardStore.withBatch(newSigs.schema)
         val index = graft.operators.ShardStore.read(spark, indexPath, idxSchema)
           .filter(col("batch") =!= batchId)

@@ -6,54 +6,6 @@ import org.scalacheck.{Gen, Prop, Test => ScTest}
 import graft.functions.{Keys, Numeric}
 import graft.operators.{Dedup, Merge}
 
-/** Local filesystem whose Nth protocol-step rename RETURNS FALSE —
-  * Hadoop's failure contract for e.g. a lost object-store rename, the
-  * failure mode the flat-dir compactor's checked renames exist for.
-  * Only renames onto the protocol's own targets (the `_compact_commit`
-  * journal and `c<gen>-` swap-in files) count toward the index, so
-  * Spark's task-commit renames inside the staging dir are untouched.
-  * Registered under the `flaky://` scheme via `fs.flaky.impl`;
-  * configured through the companion (FileSystem instances are cached
-  * per scheme, so static state is the channel).
-  */
-class FlakyRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
-  override def getUri: java.net.URI = java.net.URI.create("flaky:///")
-  override def rename(src: org.apache.hadoop.fs.Path,
-                      dst: org.apache.hadoop.fs.Path): Boolean =
-    if (FlakyRenameFs.shouldFail(dst)) false else super.rename(src, dst)
-}
-object FlakyRenameFs {
-  private val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-  @volatile private var failIndex: Int = -1
-  def arm(idx: Int): Unit = { counter.set(0); failIndex = idx }
-  def shouldFail(dst: org.apache.hadoop.fs.Path): Boolean = {
-    val n = dst.getName
-    val protocolStep = n == "_compact_commit" || n.matches("c\\d+-\\d+\\.parquet")
-    protocolStep && counter.getAndIncrement() == failIndex
-  }
-}
-
-/** Local filesystem that REFUSES `setTimes` — the no-setTimes store
-  * profile from the heartbeat contract ("on a store without setTimes
-  * the touch is a silent no-op; size ttlMs beyond the longest pass").
-  * Registered under `nst://` via `fs.nst.impl`.
-  */
-class NoSetTimesFs extends org.apache.hadoop.fs.RawLocalFileSystem {
-  override def getUri: java.net.URI = java.net.URI.create("nst:///")
-  override def setTimes(p: org.apache.hadoop.fs.Path,
-                        mtime: Long, atime: Long): Unit = {
-    NoSetTimesFs.touches.incrementAndGet()
-    throw new java.io.IOException("setTimes unsupported on this store")
-  }
-}
-object NoSetTimesFs {
-  /** Refused-touch counter — lets a spec assert a heartbeat actually
-    * FIRED (and was refused) on this store, not merely that the mtime
-    * stayed put because the scheduler never ran.
-    */
-  val touches = new java.util.concurrent.atomic.AtomicInteger(0)
-}
-
 /** Property-based invariants (SURVEY §5.4) — ScalaCheck generators drive
   * small DataFrames through the operators; 20 cases per property.
   */
@@ -239,65 +191,34 @@ class PropertiesSpec extends SparkSuite {
       }
     })
 
-  // r12 VERDICT #4: pin the ShardStore invariant ITSELF — read = every
-  // appended row exactly once — over randomized interleavings of the
-  // protocol's moves, not just the three failpoint instances CompactSpec
-  // pins. 100 schedules; each op is followed by a full read check.
+  // the ShardStore layout contract: read = every appended row exactly
+  // once, over random interleavings of appends and replays (a replayed
+  // batch overwrites its own `batch=<id>` shard). An empty append is a
+  // shard dir with no data file, as a partitioned write of zero rows
+  // leaves it. 100 schedules; each op is followed by a full read check.
   {
-    import org.apache.hadoop.fs.Path
-    import graft.operators.{Compact, ShardStore}
+    import graft.operators.ShardStore
 
     sealed trait ShardOp
     case class Append(vs: List[Long]) extends ShardOp
-    // graceMs > 0 exercises the r14 per-artifact clocks: GC is then
-    // DEFERRED (superseded dirs linger), and the read invariant must
-    // hold identically — the manifest cut, not deletion, is what keeps
-    // lingering shards invisible
-    case class CompactAt(failAt: String, coverAll: Boolean,
-                         minor: Boolean, graceMs: Long) extends ShardOp
-    case class Heal(graceMs: Long) extends ShardOp
-    case object Replay extends ShardOp
-    // a second compactor attempts a pass while one's claim is live:
-    // the single-writer enforcement (r13 VERDICT #1) must refuse it
-    // loudly and leave the store byte-identical
-    case object ContendedCompact extends ShardOp
-    // a crashed predecessor's claim (mtime far past the TTL, no
-    // heartbeat) sits on the root: the pass must break it, re-claim,
-    // run to completion, and release — the end-to-end break-and-reclaim
-    // path through the real compactor (r14 VERDICT #6)
-    case object StaleBreakCompact extends ShardOp
-    // store clock ahead of the client (skewed mtime in the FUTURE):
-    // age reads negative, which must classify as LIVE — a skewed clock
-    // may delay a break, never cause one
-    case object SkewedContendedCompact extends ShardOp
+    case class Replay(pick: Int) extends ShardOp
 
-    val graceGen: Gen[Long] = Gen.oneOf(0L, 0L, 10L * 60 * 1000)
     val opGen: Gen[ShardOp] = Gen.frequency(
-      4 -> Gen.resize(4, Gen.listOf(Gen.choose(0L, 99L))).map(Append.apply),
-      4 -> Gen.zip(
-        Gen.oneOf("", "", "staged", "swapped", "published"),
-        Gen.oneOf(true, false),
-        Gen.oneOf(true, false),
-        graceGen).map((CompactAt.apply _).tupled),
-      1 -> graceGen.map(Heal.apply),
-      2 -> Gen.const(Replay),
-      1 -> Gen.const(ContendedCompact),
-      1 -> Gen.const(StaleBreakCompact),
-      1 -> Gen.const(SkewedContendedCompact))
+      3 -> Gen.resize(4, Gen.listOf(Gen.choose(0L, 99L))).map(Append.apply),
+      2 -> Gen.choose(0, 1000).map(Replay.apply))
 
     val schedParams = ScTest.Parameters.default.withMinSuccessfulTests(100)
-    test("ShardStore protocol: read = appended rows exactly once, under random " +
-         "append/compact-crash/heal/replay schedules") {
+    test("ShardStore layout: read = appended rows exactly once, under random append/replay schedules") {
       val schema = org.apache.spark.sql.types.StructType.fromDDL(
         "id BIGINT, batch BIGINT")
       val p = Prop.forAll(Gen.resize(6, Gen.nonEmptyListOf(opGen))) { ops =>
         val root = java.nio.file.Files.createTempDirectory("shardstore_prop").toString
-        val rootP = new Path(root)
-        val f = ShardStore.fs(spark, root)
         var nextId = 0L
         val appended = scala.collection.mutable.Map.empty[Long, List[Long]]
         def writeBatch(id: Long, vs: List[Long]): Unit =
-          vs.toDF("id").write.mode("overwrite").parquet(s"$root/batch=$id")
+          if (vs.isEmpty) java.nio.file.Files.createDirectories(
+            java.nio.file.Paths.get(root, s"batch=$id"))
+          else vs.toDF("id").write.mode("overwrite").parquet(s"$root/batch=$id")
         def readRows(): Seq[Long] =
           ShardStore.read(spark, root, schema).select("id").as[Long]
             .collect().sorted.toSeq
@@ -305,276 +226,17 @@ class PropertiesSpec extends SparkSuite {
           op match {
             case Append(vs) =>
               appended(nextId) = vs; writeBatch(nextId, vs); nextId += 1
-            case CompactAt(failAt, coverAll, minor, graceMs) =>
-              // a sink compacts only batches its checkpoint has
-              // committed; `coverAll=false` leaves the newest one out;
-              // minor passes stack tiered runs instead of merging
-              val upTo = if (coverAll) Long.MaxValue else nextId - 2
-              try Compact.compactShardsImpl(spark, root, targetBytes = 1L << 30,
-                nested = Nil, upTo = upTo, failAt = failAt, minor = minor,
-                graceMs = graceMs)
-              catch { case _: Compact.CompactCrash => () }
-            case Heal(graceMs) => ShardStore.heal(f, rootP, graceMs)
-            case ContendedCompact =>
-              val lock = new Path(root, "_compact_lock")
-              val out = f.create(lock, false)
-              out.close()
-              try {
-                val e = intercept[java.io.IOException] {
-                  Compact.compactShardsImpl(spark, root,
-                    targetBytes = 1L << 30, nested = Nil,
-                    upTo = Long.MaxValue, failAt = "")
-                }
-                assert(e.getMessage.contains("another compactor"))
-              } finally f.delete(lock, false)
-            case StaleBreakCompact =>
-              val lock = new java.io.File(root, "_compact_lock")
-              assert(lock.createNewFile())
-              assert(lock.setLastModified(
-                System.currentTimeMillis() - 10L * 60 * 1000))
-              Compact.compactShardsImpl(spark, root, targetBytes = 1L << 30,
-                nested = Nil, upTo = Long.MaxValue, failAt = "",
-                lockTtlMs = 60000L)
-              // broken, re-claimed for the pass, released on exit
-              assert(!lock.exists(), "stale-broken lock survived the pass")
-            case SkewedContendedCompact =>
-              val lock = new java.io.File(root, "_compact_lock")
-              assert(lock.createNewFile())
-              assert(lock.setLastModified(
-                System.currentTimeMillis() + 10L * 60 * 1000))
-              try {
-                val e = intercept[java.io.IOException] {
-                  Compact.compactShardsImpl(spark, root,
-                    targetBytes = 1L << 30, nested = Nil,
-                    upTo = Long.MaxValue, failAt = "", lockTtlMs = 60000L)
-                }
-                assert(e.getMessage.contains("another compactor"))
-              } finally lock.delete()
-            case Replay =>
-              // the sink contract: a replayed batch id at/below the
-              // manifest cut returns BEFORE writing its shard; above
-              // the cut it rewrites the same shard idempotently
-              val cut = ShardStore.currentManifest(f, rootP)
-                .map(_.batchValue).getOrElse(Long.MinValue)
-              appended.keys.maxOption.filter(_ > cut)
-                .foreach(id => writeBatch(id, appended(id)))
+            case Replay(pick) =>
+              // any appended batch may be re-delivered, not only the newest
+              if (nextId > 0) {
+                val id = pick % nextId
+                writeBatch(id, appended(id))
+              }
           }
           readRows() == appended.values.flatten.toSeq.sorted
         }
       }
       val r = ScTest.check(schedParams, p)
-      assert(r.passed, r.status.toString)
-    }
-  }
-
-  // r14 VERDICT #6: the claim/break/release algebra itself, under
-  // randomized schedules — stale breaks under skewed clocks (backdated
-  // and future mtimes), heartbeat touches, crashed holders, late
-  // releases by broken ex-holders — on BOTH store profiles (setTimes
-  // local, no-setTimes). Pure filesystem ops, no Spark jobs: 50
-  // schedules run in seconds. Invariants:
-  //   - a claim succeeds iff no LIVE lock exists (age < ttl, where a
-  //     future mtime reads negative = live: skew delays breaks, never
-  //     causes them);
-  //   - a successful claim over an EXISTING (stale) lock is a
-  //     break-and-reclaim — counted, and required to occur at least
-  //     once across the run;
-  //   - the lock always carries the current holder's nonce;
-  //   - release deletes the lock iff it still carries the releaser's
-  //     nonce (a broken ex-holder's late release never kills a
-  //     successor's claim).
-  {
-    import org.apache.hadoop.fs.Path
-    import graft.operators.ShardStore
-
-    sealed trait LockOp
-    case class TryClaim(ttlMs: Long) extends LockOp
-    case object Backdate extends LockOp      // holder stopped heartbeating long ago
-    case object SkewFuture extends LockOp    // store clock ahead of the client
-    case object HeartbeatTouch extends LockOp // one heartbeat tick (best-effort)
-    case object Release extends LockOp       // current holder exits cleanly
-    case object CrashHolder extends LockOp   // holder dies; its lock remains
-    case object ReleaseBroken extends LockOp // an ex-holder's finally runs late
-
-    // TTLs far above schedule wall-clock (ops run in ms) and far below
-    // the backdate/skew offsets (10 min): no op sequence can land a
-    // lock age NEAR a ttl, so expected outcomes are deterministic
-    val lockOpGen: Gen[LockOp] = Gen.frequency(
-      5 -> Gen.oneOf(30000L, 60000L).map(TryClaim.apply),
-      3 -> Gen.const(Backdate),
-      2 -> Gen.const(SkewFuture),
-      2 -> Gen.const(HeartbeatTouch),
-      3 -> Gen.const(Release),
-      2 -> Gen.const(CrashHolder),
-      2 -> Gen.const(ReleaseBroken))
-
-    test("compactor lock algebra: claim/break/release under randomized skewed-clock " +
-         "schedules, setTimes and no-setTimes store profiles") {
-      spark.sparkContext.hadoopConfiguration
-        .set("fs.nst.impl", classOf[NoSetTimesFs].getName)
-      val breaks = new java.util.concurrent.atomic.AtomicInteger(0)
-      val p = Prop.forAll(
-        Gen.resize(14, Gen.nonEmptyListOf(lockOpGen)),
-        Gen.oneOf(true, false)) { (ops, noSetTimes) =>
-        val dir = java.nio.file.Files.createTempDirectory("lock_prop").toString
-        val rootP = new Path(if (noSetTimes) s"nst://$dir" else dir)
-        val f = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val lockFile = new java.io.File(dir, "_compact_lock")
-        val offset = 10L * 60 * 1000
-        def lockText(): String =
-          if (!lockFile.exists()) ""
-          else new String(java.nio.file.Files
-            .readAllBytes(lockFile.toPath), "UTF-8")
-        var current: Option[ShardStore.Claim] = None
-        var broken: List[ShardStore.Claim] = Nil
-        ops.forall { op =>
-          op match {
-            case TryClaim(ttl) =>
-              val existed = lockFile.exists()
-              // LIVE = age < ttl; a future mtime is a negative age
-              val live = existed &&
-                System.currentTimeMillis() - lockFile.lastModified() < ttl
-              try {
-                val c = ShardStore.claimCompactor(f, rootP, ttl)
-                assert(!live, "claim succeeded over a LIVE lock")
-                if (existed) breaks.incrementAndGet() // stale break-and-reclaim
-                current.foreach(c0 => broken ::= c0)  // its lock changed hands
-                current = Some(c)
-              } catch { case e: java.io.IOException =>
-                assert(live, s"claim refused with no live lock: ${e.getMessage}")
-                assert(e.getMessage.contains("another compactor"), e.getMessage)
-              }
-            case Backdate =>
-              if (lockFile.exists())
-                assert(lockFile.setLastModified(
-                  System.currentTimeMillis() - offset))
-            case SkewFuture =>
-              if (lockFile.exists())
-                assert(lockFile.setLastModified(
-                  System.currentTimeMillis() + offset))
-            case HeartbeatTouch =>
-              current.foreach { c =>
-                val before = lockFile.lastModified()
-                // exactly what the heartbeat task does: best-effort touch
-                try f.setTimes(c.lock, System.currentTimeMillis(), -1L)
-                catch { case _: Exception => () }
-                if (noSetTimes)
-                  assert(lockFile.lastModified() == before,
-                    "no-setTimes store mutated an mtime")
-                else
-                  assert(System.currentTimeMillis() -
-                    lockFile.lastModified() < 2000L, "touch did not refresh")
-              }
-            case Release =>
-              current.foreach { c =>
-                ShardStore.releaseCompactor(f, c)
-                // the lock always carries the current holder's nonce →
-                // a current-holder release always frees the root
-                assert(!lockFile.exists(), "own-nonce release left the lock")
-                current = None
-              }
-            case CrashHolder =>
-              current.foreach { c => broken ::= c; current = None }
-            case ReleaseBroken =>
-              broken.headOption.foreach { c =>
-                val stillOurs = lockText().contains(s"nonce=${c.nonce}")
-                val existed = lockFile.exists()
-                ShardStore.releaseCompactor(f, c)
-                // deleted iff the lock was still the ex-holder's own
-                // (nobody re-claimed it since) — never a successor's
-                assert(lockFile.exists() == (existed && !stillOurs),
-                  s"broken-release wrong: existed=$existed ours=$stillOurs")
-                broken = broken.tail // a release attempt is once-only
-              }
-          }
-          // standing invariant: a believed-live claim is always backed
-          // by a lock carrying its nonce
-          current.forall(c => lockText().contains(s"nonce=${c.nonce}"))
-        }
-      }
-      val r = ScTest.check(ScTest.Parameters.default.withMinSuccessfulTests(50), p)
-      assert(r.passed, r.status.toString)
-      assert(breaks.get() > 0,
-        "no schedule exercised a break-and-reclaim — generator drifted")
-    }
-  }
-
-  // flat-dir twin of the shard-protocol property: a raw-parquet reader
-  // consults no manifest, so the pinned invariant is the achievable
-  // contract (Compact.scala header) — no row is ever LOST at any crash
-  // point (the DISTINCT row set is always complete), and after healDir
-  // the read is exactly the original multiset.
-  {
-    import graft.operators.Compact
-
-    val flatParams = ScTest.Parameters.default.withMinSuccessfulTests(30)
-    test("flat-dir compaction: rows never lost under random crash/heal schedules; " +
-         "heal restores exactness") {
-      val fpGen = Gen.oneOf("", "staged", "committed", "moved")
-      val p = Prop.forAll(
-        Gen.resize(3, Gen.nonEmptyListOf(fpGen)),
-        Gen.choose(2, 6)) { (fps, parts) =>
-        val dir = java.nio.file.Files.createTempDirectory("flat_prop").toString
-        (0 until 60).map(i => (i.toLong, s"v$i")).toDF("id", "v")
-          .repartition(parts).write.mode("overwrite").parquet(dir)
-        def rows() = spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
-        val want = rows()
-        fps.forall { fp =>
-          try Compact.compactDirImpl(spark, dir, targetBytes = 1L << 30, failAt = fp)
-          catch { case _: Compact.CompactCrash => () }
-          rows().distinct == want.distinct
-        } && {
-          Compact.healDir(spark, dir)
-          rows() == want
-        }
-      }
-      val r = ScTest.check(flatParams, p)
-      assert(r.passed, r.status.toString)
-    }
-
-    // r13 VERDICT #6: the randomized flat-dir schedules above draw only
-    // CRASH points; this twin draws rename-RETURNS-FALSE at a random
-    // protocol step (journal publish or any c<gen>- swap-in) — the
-    // Hadoop failure mode the checked renames exist for. Invariant:
-    // the pass throws (never a false-success Report), no row is ever
-    // lost, and healDir on a healthy filesystem restores exactness.
-    test("flat-dir compaction: a rename failing at any protocol step throws, " +
-         "loses nothing, and heals exactly") {
-      spark.sparkContext.hadoopConfiguration
-        .set("fs.flaky.impl", classOf[FlakyRenameFs].getName)
-      val p = Prop.forAll(Gen.choose(0, 4), Gen.choose(2, 6),
-        Gen.choose(2, 4)) { (failIdx, parts, outFiles) =>
-        val dir = java.nio.file.Files.createTempDirectory("flat_flaky").toString
-        val df = (0 until 60).map(i => (i.toLong, s"v$i")).toDF("id", "v")
-          .repartition(parts)
-        df.write.mode("overwrite").parquet(dir)
-        def rows() = spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
-        val want = rows()
-        val bytes = new java.io.File(dir).listFiles()
-          .filter(f => f.isFile && f.getName.endsWith(".parquet")).map(_.length).sum
-        // target ~outFiles outputs so several swap-in renames exist;
-        // protocol renames = 1 journal publish + nOut swap-ins, so a
-        // failIdx beyond them exercises the pass-succeeds path too
-        val target = math.max(1L, bytes / outFiles)
-        FlakyRenameFs.arm(failIdx)
-        val threw =
-          try { Compact.compactDir(spark, s"flaky://$dir", target); false }
-          catch { case e: java.io.IOException =>
-            assert(e.getMessage.contains("rename")); true }
-        FlakyRenameFs.arm(-1)
-        // nothing lost at the failure point, whichever step it hit
-        rows().distinct == want.distinct && {
-          // a healthy-fs heal (or the no-op when the pass succeeded)
-          // restores the exact multiset
-          Compact.healDir(spark, dir)
-          rows() == want && (!threw || {
-            // and the next pass completes normally
-            Compact.compactDir(spark, dir, target)
-            rows() == want
-          })
-        }
-      }
-      val r = ScTest.check(ScTest.Parameters.default.withMinSuccessfulTests(30), p)
       assert(r.passed, r.status.toString)
     }
   }

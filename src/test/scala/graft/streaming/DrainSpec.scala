@@ -2,6 +2,8 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSuite
 import graft.operators.Merge
 
@@ -59,5 +61,36 @@ class DrainSpec extends SparkSuite {
 
     AtomicSwap.commit(Seq((1L, "a")).toDF("k", "v"), s"$work/plain", 0L)
     assert(Drain.hasData(spark, s"$work/plain"))
+  }
+
+  test("the runner deletes its checkpoint dir after a drain that succeeds and one whose sink throws") {
+    // the runner's scratch lands where DrainWork puts every drain's dir
+    val probe = java.nio.file.Paths.get(DrainWork.tempDir("drainspec_base"))
+    val base = probe.getParent
+    Files.delete(probe)
+    def drainDirs(): Set[String] = {
+      val ls = Files.list(base)
+      try ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("graft_drain")).toSet
+      finally ls.close()
+    }
+    val work = Files.createTempDirectory("drainspec_cleanup").toString
+    val before = drainDirs()
+    val during = new java.util.concurrent.ConcurrentLinkedQueue[Set[String]]()
+    Drain.run(Drain.splitStream(spark.range(3).toDF("id"), s"$work/ok"), "append") {
+      (_, _) => during.add(drainDirs() -- before)
+    }
+    intercept[Exception] {
+      Drain.run(Drain.splitStream(spark.range(3).toDF("id"), s"$work/fail"), "append") {
+        (_, _) =>
+          during.add(drainDirs() -- before)
+          throw new IllegalStateException("sink failed on purpose")
+      }
+    }
+    // each drain's own dir existed while it ran, under the listed base
+    // (3 batches, then 1 that fails)
+    val seen = during.asScala.toSeq
+    assert(seen.size == 4 && seen.forall(_.size == 1), seen)
+    assert(drainDirs() -- before == Set.empty)
   }
 }

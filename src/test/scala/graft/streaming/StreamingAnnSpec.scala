@@ -11,7 +11,7 @@ class StreamingAnnSpec extends SparkSuite {
   private def queries = emb.filter(col("vec_id") < 10)
 
   test("drained streaming lists probe equals the batch stored-index search") {
-    val drained = Similarity.availableNowIvf(spark, sfDir, compact = false)
+    val drained = Similarity.availableNowIvf(spark, sfDir)
       .collect().map(_.toString).toSeq
     val path = java.nio.file.Files.createTempDirectory("graft_ann_spec_batch").toString
     Similarity.writeIvfIndex(emb, "vec_id", "embedding",
@@ -49,66 +49,26 @@ class StreamingAnnSpec extends SparkSuite {
     assert(probe() == want)
   }
 
-  test("drain-tail compaction: result identical, lists consolidated to one live dir") {
-    val compacted = Similarity.availableNowIvf(spark, sfDir, compact = true)
-      .collect().map(_.toString).toSeq
-    val plain = Similarity.availableNowIvf(spark, sfDir, compact = false)
-      .collect().map(_.toString).toSeq
-    assert(compacted == plain && compacted.nonEmpty)
-  }
-
-  test("compacted hand-fed lists: probe parity, cluster_id pruning survives consolidation") {
-    val idx = java.nio.file.Files.createTempDirectory("graft_ann_spec_cmp").toString
+  test("streamed probe reads BIGINT ids whatever the query id type") {
+    // the t13 chain's index, drained the way availableNowIvf drains it,
+    // probed with INT query ids: the lists schema is the stored one,
+    // not the query frame's
+    val work = java.nio.file.Files.createTempDirectory("graft_ann_spec_types").toString
     Similarity.writeIvfModel(emb, "vec_id", "embedding",
-      nClusters = 4, iterations = 2, path = idx)
-    val sink = Similarity.ivfSink(idx, "vec_id", "embedding") _
-    (0 until 3).foreach(b => sink(emb.filter(col("vec_id") % 3 === b).toDF(), b.toLong))
-    def probe() = Similarity.ivfTopKStreamed(spark, idx, queries,
-        "vec_id", "embedding", nProbe = 2, k = 3)
-      .collect().map(_.toString).toSeq
-    val want = probe()
-    val rep = Similarity.compactIvfLists(spark, idx)
-    assert(rep.filesBefore > rep.filesAfter && rep.filesAfter > 0)
-    val lists = new java.io.File(s"$idx/lists").listFiles().map(_.getName)
-    assert(!lists.exists(_.startsWith("batch=")), lists.mkString(","))
-    val live = lists.filter(_.startsWith("_compact_live_g"))
-    assert(live.length == 1)
-    // cluster_id stays a partition column INSIDE the live dir — the
-    // probe's cell-pruning contract
-    assert(new java.io.File(s"$idx/lists/${live.head}").listFiles()
-      .exists(f => f.isDirectory && f.getName.startsWith("cluster_id=")))
-    assert(probe() == want && want.nonEmpty)
-  }
-
-  test("stacked tiered runs keep dynamic cell pruning: every run scan is DPP-filtered") {
-    val idx = java.nio.file.Files.createTempDirectory("graft_ann_spec_dpp").toString
-    Similarity.writeIvfModel(emb, "vec_id", "embedding",
-      nClusters = 4, iterations = 2, path = idx)
-    val sink = Similarity.ivfSink(idx, "vec_id", "embedding") _
-    (0 until 4).foreach(b =>
-      sink(emb.filter(pmod(col("vec_id"), lit(4)) === b).toDF(), b.toLong))
-    Similarity.compactIvfLists(spark, idx, upTo = 1L, minor = true)
-    Similarity.compactIvfLists(spark, idx, upTo = 3L, minor = true)
-    val runs = new java.io.File(s"$idx/lists").listFiles().map(_.getName)
-      .filter(_.startsWith("_compact_live_g")).toSeq
-    assert(runs.length == 2, runs.mkString(","))
-    val df = Similarity.ivfTopKStreamed(spark, idx, queries,
+      nClusters = 4, iterations = 2, path = s"$work/index")
+    Drain.run(Drain.splitStream(emb, s"$work/vecs"), "append")(
+      Similarity.ivfSink(s"$work/index", "vec_id", "embedding") _)
+    val intQueries = queries.withColumn("vec_id", col("vec_id").cast("int"))
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+      df.select(df.columns.map(c => col(c).cast("string")).toSeq: _*)
+        .collect().map(_.toSeq).toSeq
+    val expected = rows(Similarity.availableNowIvf(spark, sfDir))
+    assert(expected.nonEmpty)
+    val probe = Similarity.ivfTopKStreamed(spark, s"$work/index", intQueries,
       "vec_id", "embedding", nProbe = 2, k = 3)
-    // the probe's "reads only probed cells" claim must survive the
-    // TIERED layout: parity tests cannot see a silent regression to
-    // full scans, so pin the PLAN — each run is its own scan relation
-    // (ShardStore.read unions per run), and each must carry a
-    // dynamicpruning partition filter on cluster_id from the probed
-    // (query, cell) build side
-    val plan = df.queryExecution.executedPlan.toString
-    runs.foreach { r =>
-      val line = plan.linesIterator
-        .find(l => l.contains(r) && l.contains("FileScan"))
-      assert(line.isDefined, s"no scan over run $r in the probe plan")
-      assert(line.exists(_.contains("dynamicpruning")),
-        s"run $r scan lost dynamic cell pruning: ${line.get.take(400)}")
-    }
-    assert(df.count() > 0)
+    assert(rows(probe) == expected)
+    // the shard scan still prunes unprobed cells
+    assert(probe.queryExecution.executedPlan.toString.contains("dynamicpruning"))
   }
 
   test("missing lists store probes as typed empty, not an error") {

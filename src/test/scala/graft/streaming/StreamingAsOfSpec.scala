@@ -15,14 +15,6 @@ class StreamingAsOfSpec extends SparkSuite {
     assert(drained == batch && drained.nonEmpty)
   }
 
-  test("drain-tail compaction (marker-scoped): result identical to the plain drain") {
-    val compacted = StreamingAsOf.availableNowAsOf(spark, sfDir, compact = true)
-      .collect().map(_.toString).sorted.toSeq
-    val plain = StreamingAsOf.availableNowAsOf(spark, sfDir, compact = false)
-      .collect().map(_.toString).sorted.toSeq
-    assert(compacted == plain && compacted.nonEmpty)
-  }
-
   test("partitioned sink requires a UTC session timezone") {
     withConf("spark.sql.session.timeZone" -> "America/Los_Angeles") {
       import spark.implicits._

@@ -38,14 +38,6 @@ class StreamingBm25Spec extends SparkSuite {
     assert(probe() == want)
   }
 
-  test("drain-tail compaction: result identical, postings consolidated") {
-    val compacted = Retrieval.availableNowBm25(spark, sfDir, compact = true)
-      .collect().map(_.toString).toSeq
-    val plain = Retrieval.availableNowBm25(spark, sfDir, compact = false)
-      .collect().map(_.toString).toSeq
-    assert(compacted == plain && compacted.nonEmpty)
-  }
-
   test("probe scan is pruned to the query terms' band partitions") {
     val docs = Tables.documents(spark, sfDir).select("doc_id", "text").limit(50)
     val idx = java.nio.file.Files.createTempDirectory("graft_bm25_prune").toString
@@ -54,30 +46,5 @@ class StreamingBm25Spec extends SparkSuite {
       .queryExecution.executedPlan.toString
     assert(p.contains("PartitionFilters") && p.contains("tok_band"),
       s"band pruning lost on the streamed index:\n$p")
-  }
-
-  test("stacked tiered runs keep static band pruning: every run scan carries tok_band") {
-    val docs = Tables.documents(spark, sfDir).select("doc_id", "text").limit(80)
-    val idx = java.nio.file.Files.createTempDirectory("graft_bm25_tiers").toString
-    (0 until 4).foreach(b => Retrieval.bm25Sink(idx, "doc_id", "text")(
-      docs.filter(col("doc_id") % 4 === b).toDF(), b.toLong))
-    Retrieval.compactIndex(spark, idx, upTo = 1L, minor = true)
-    Retrieval.compactIndex(spark, idx, upTo = 3L, minor = true)
-    val runs = new java.io.File(s"$idx/postings").listFiles().map(_.getName)
-      .filter(_.startsWith("_compact_live_g")).toSeq
-    assert(runs.length == 2, runs.mkString(","))
-    // the terms' isin(bands) filter is a LITERAL predicate, so each
-    // run's own scan relation must prune tok_band partitions
-    // statically — parity tests cannot see a regression to full scans
-    val plan = Retrieval.bm25TopKStreamed(spark, idx, "doc_id", Terms, k = 5)
-      .queryExecution.executedPlan.toString
-    runs.foreach { r =>
-      val line = plan.linesIterator
-        .find(l => l.contains(s"postings/$r") && l.contains("FileScan"))
-      assert(line.isDefined, s"no scan over postings run $r in the probe plan")
-      assert(line.exists(l =>
-          l.contains("PartitionFilters: [") && l.contains("tok_band")),
-        s"postings run $r scan lost band pruning: ${line.get.take(400)}")
-    }
   }
 }

@@ -8,8 +8,7 @@ import graft.ext.Similarity
 /** The t14 contract: a stream-maintained IVF-PQ code table (per-batch
   * residual encode against the standing model into `batch=` shards)
   * probes identically to the from-scratch [[Similarity.writeIvfPqIndex]]
-  * build — for any micro-batch split, under replay, and across shard
-  * consolidation.
+  * build — for any micro-batch split and under replay.
   */
 class StreamingIvfPqSpec extends SparkSuite {
 
@@ -17,7 +16,7 @@ class StreamingIvfPqSpec extends SparkSuite {
   private def queries = emb.filter(col("vec_id") < 10)
 
   test("drained streaming codes probe equals the batch stored-index search") {
-    val drained = Similarity.availableNowIvfPq(spark, sfDir, compact = false)
+    val drained = Similarity.availableNowIvfPq(spark, sfDir)
       .collect().map(_.toString).toSeq
     val path = java.nio.file.Files.createTempDirectory("graft_ivfpq_spec_batch").toString
     Similarity.writeIvfPqIndex(emb, "vec_id", "embedding",
@@ -54,34 +53,22 @@ class StreamingIvfPqSpec extends SparkSuite {
     assert(probe() == want)
   }
 
-  test("compacted hand-fed codes: probe parity, coarse_id pruning survives consolidation") {
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivfpq_spec_cmp").toString
+  test("streamed probe reads BIGINT ids whatever the query id type") {
+    // the t14 chain's index, drained the way availableNowIvfPq drains
+    // it, probed with INT query ids: the codes schema is the stored one,
+    // not the query frame's
+    val work = java.nio.file.Files.createTempDirectory("graft_ivfpq_spec_types").toString
     Similarity.writeIvfPqModel(emb, "vec_id", "embedding", nCoarse = 4,
-      coarseIters = 2, m = 4, subDim = 16, ks = 4, pqIters = 2, path = idx)
-    val sink = Similarity.ivfPqSink(idx, "vec_id", "embedding", m = 4, subDim = 16) _
-    (0 until 3).foreach(b => sink(emb.filter(col("vec_id") % 3 === b).toDF(), b.toLong))
-    def probe() = Similarity.ivfPqTopKStreamed(spark, idx, queries,
-        "vec_id", "embedding", m = 4, subDim = 16, nProbe = 2, k = 3)
-      .collect().map(_.toString).toSeq
-    val want = probe()
-    val rep = Similarity.compactIvfPqCodes(spark, idx)
-    assert(rep.filesBefore > rep.filesAfter && rep.filesAfter > 0)
-    val codes = new java.io.File(s"$idx/codes").listFiles().map(_.getName)
-    assert(!codes.exists(_.startsWith("batch=")), codes.mkString(","))
-    val live = codes.filter(_.startsWith("_compact_live_g"))
-    assert(live.length == 1)
-    // coarse_id stays a partition column INSIDE the live dir — the
-    // probe's cell-pruning contract
-    assert(new java.io.File(s"$idx/codes/${live.head}").listFiles()
-      .exists(f => f.isDirectory && f.getName.startsWith("coarse_id=")))
-    assert(probe() == want && want.nonEmpty)
-  }
-
-  test("drain-tail compaction: result identical") {
-    val compacted = Similarity.availableNowIvfPq(spark, sfDir, compact = true)
-      .collect().map(_.toString).toSeq
-    val plain = Similarity.availableNowIvfPq(spark, sfDir, compact = false)
-      .collect().map(_.toString).toSeq
-    assert(compacted == plain && compacted.nonEmpty)
+      coarseIters = 2, m = 4, subDim = 16, ks = 4, pqIters = 2, path = s"$work/index")
+    Drain.run(Drain.splitStream(emb, s"$work/vecs"), "append")(
+      Similarity.ivfPqSink(s"$work/index", "vec_id", "embedding", m = 4, subDim = 16) _)
+    val intQueries = queries.withColumn("vec_id", col("vec_id").cast("int"))
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+      df.select(df.columns.map(c => col(c).cast("string")).toSeq: _*)
+        .collect().map(_.toSeq).toSeq
+    val expected = rows(Similarity.availableNowIvfPq(spark, sfDir))
+    assert(expected.nonEmpty)
+    assert(rows(Similarity.ivfPqTopKStreamed(spark, s"$work/index", intQueries,
+      "vec_id", "embedding", m = 4, subDim = 16, nProbe = 2, k = 3)) == expected)
   }
 }
