@@ -185,17 +185,4 @@ object Gold {
       Numeric.roundBin(col(s"${p.name}__sum") / col(s"${p.name}__cnt"), p.scale).as(p.name))
     withMartKey(partials.select(partials.columns.toSeq.map(col) ++ display: _*), keyName)
   }
-
-  /** The refresh boundary cut (F3): the measurements at or after the
-    * existing mart's max hour. The boundary hour re-aggregates;
-    * strictly-later-than-boundary late rows are silently dropped — the
-    * reference's documented behavior, SURVEY §2.9 T2.
-    */
-  private[pipeline] def freshSlice(existing: DataFrame, validMeasurements: DataFrame): DataFrame = {
-    val bound = existing.agg(max(col("measurement_hour_utc")).as("__bound"))
-    validMeasurements
-      .crossJoin(broadcast(bound))
-      .filter(col("measured_from_utc") >= col("__bound"))
-      .drop("__bound")
-  }
 }

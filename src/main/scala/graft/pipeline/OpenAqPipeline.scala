@@ -1,7 +1,10 @@
 package graft.pipeline
 
+import java.time.LocalDate
+
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelationWithTable}
 import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.graft.shims
 
@@ -48,7 +51,9 @@ object OpenAqPipeline {
     * `daily_increment.silver.rows_scanned_per_fresh_row` (input records
     * of the mart refreshes per loaded row) went from ~9 to ~21 with this
     * materialization. That is a change in what the metric counts, not
-    * more work: the refreshes no longer parse bronze JSON at all.
+    * more work: the refreshes no longer parse bronze JSON at all. It is
+    * ~7 since each refresh reads its fresh slice once, into one
+    * checkpoint, instead of once per use of the pivot.
     */
   def models(rawLocations: DataFrame, rawMeasurements: DataFrame): OpenAqModels = {
     val locs = shims.checkpointWithStats(Silver.stgLocations(rawLocations))
@@ -117,20 +122,33 @@ object OpenAqPipeline {
   /** PARTITION-SCOPED incremental mart refresh (T2/F3/A6), the dbt
     * `incremental` model's MERGE on bare parquet. A full-table overwrite
     * per daily refresh rewrites the whole mart (years of days) to change
-    * one boundary day; here only the partitions the fresh slice touches
-    * are read, merged, and rewritten:
+    * one boundary day; here only the last day partition and the
+    * partitions the fresh slice touches are read, and only the touched
+    * ones are rewritten:
     *
-    *  1. boundary = existing mart's max hour (`Gold.freshSlice`, F3
-    *     semantics: boundary hour re-aggregates, strictly-late rows
-    *     drop);
-    *  2. the re-pivoted fresh slice determines the touched day set —
-    *     for a daily T-1 run that is 1–2 partitions out of thousands;
-    *  3. only those days of the existing mart enter the keyed upsert (a
-    *     broadcast semi-join on the partition column — dynamic
-    *     partition pruning keeps the scan to the touched directories);
-    *  4. the merged slice replaces exactly those partitions
-    *     (`Merge.overwriteDays`), leaving every other day's files
-    *     untouched (asserted byte-identical in IncrementalWriteSpec).
+    *  1. boundary = the max hour of the mart's LAST `__day` partition,
+    *     found in the file index the mart read already built (the
+    *     null-day `__HIVE_DEFAULT_PARTITION__` is skipped) and read with
+    *     static partition pruning. That equals the whole mart's max hour
+    *     because `__day = to_date(measurement_hour_utc)` under the UTC
+    *     session zone `GraftSession` pins, and `to_date` is monotone. No
+    *     day partition: nothing to refresh, as a null boundary selects
+    *     no row;
+    *  2. the fresh slice is a literal filter, `measured_from_utc >=
+    *     boundary` (F3 semantics: the boundary hour re-aggregates,
+    *     strictly-late rows drop); its pivot is materialized once;
+    *  3. one collect of `(__day, key)` from that checkpoint gives the
+    *     touched days and the batch keys as driver literals — no more
+    *     rows than the broadcast key set of `Merge.upsert` would carry.
+    *     For a daily T-1 run that is 1–2 partitions out of thousands,
+    *     and static partition pruning keeps the existing-side scan to
+    *     them;
+    *  4. the touched days' rows whose key is not in the batch (a null
+    *     key matches none, as in `Merge.upsert`'s anti join), plus the
+    *     batch, replace exactly those partitions (`Merge.overwriteDays`),
+    *     leaving every other day's files untouched (asserted
+    *     byte-identical in IncrementalWriteSpec). An empty batch writes
+    *     nothing.
     *
     * A replay with the same input re-merges the same slice to the same
     * mart (the upsert is idempotent).
@@ -139,15 +157,29 @@ object OpenAqPipeline {
                   sensorsEnriched: DataFrame, keyName: String,
                   pivot: (DataFrame, DataFrame) => DataFrame,
                   path: String): Unit = {
-    import org.apache.spark.sql.functions.{broadcast, col, to_date}
+    import org.apache.spark.sql.functions.{col, max, to_date}
     val existing = spark.read.parquet(path)
-    val batch = pivot(Gold.freshSlice(existing, validMeasurements), sensorsEnriched)
-      .withColumn("__day", to_date(col("measurement_hour_utc")))
-    val touchedDays = batch.select(col("__day")).distinct()
-    val touchedExisting =
-      existing.join(broadcast(touchedDays), Seq("__day"), "left_semi")
-    Merge.overwriteDays(Merge.upsert(touchedExisting, batch, Seq(keyName))
-      .sortWithinPartitions(col("__day"), col("country_code"), col("location_id")), path)
+    val index = existing.queryExecution.analyzed.collectFirst {
+      case LogicalRelationWithTable(r: HadoopFsRelation, _) => r.location
+    }.get
+    val dayAt = index.partitionSchema.fieldIndex("__day")
+    val lastDay = index.listFiles(Nil, Nil).map(_.values)
+      .filterNot(_.isNullAt(dayAt)).map(_.getInt(dayAt)).maxOption
+    for (day <- lastDay) {
+      val bound = existing.filter(col("__day") === lit(LocalDate.ofEpochDay(day)))
+        .agg(max(col("measurement_hour_utc"))).head().get(0)
+      val batch = shims.checkpointWithStats(
+        pivot(validMeasurements.filter(col("measured_from_utc") >= lit(bound)), sensorsEnriched)
+          .withColumn("__day", to_date(col("measurement_hour_utc"))))
+      try {
+        val touched = batch.select(col("__day"), col(keyName)).collect()
+        def literals(i: Int) = touched.map(_.get(i)).filter(_ != null).distinct.toSeq
+        if (touched.nonEmpty)
+          Merge.overwriteDays(existing.filter(col("__day").isin(literals(0): _*))
+            .filter(col(keyName).isNull || !col(keyName).isin(literals(1): _*)).unionByName(batch)
+            .sortWithinPartitions(col("__day"), col("country_code"), col("location_id")), path)
+      } finally shims.unpersistLocalCheckpoint(batch)
+    }
   }
 
   /** Disaster recovery (dags/99): full-lake wildcard rescan, truncate
