@@ -3,6 +3,9 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.{shims => graftShims}
+import org.apache.spark.sql.types.StructType
+
+import graft.operators.ShardStore
 
 /** Lexical retrieval scoring — the BM25 family, spelled so the score is
   * EXACT integer arithmetic end to end (the PageRank discipline: a
@@ -101,62 +104,68 @@ object Retrieval {
   }
 
   /** Build the postings index ONCE: full (id, token, tf) postings
-    * partitioned by the token's md5 band (16 dirs), plus doc-length
-    * and 1-row corpus-stats side tables — the stored-IVF amortization
-    * applied to retrieval. The token explode is paid at build time;
-    * every later query reads only its terms' partitions.
+    * partitioned by the token's md5 band (16 dirs), plus the doc-length
+    * table — the stored-IVF amortization applied to retrieval. Both are
+    * shard 0 of their [[ShardStore]] tables, which [[bm25Sink]] extends
+    * by later shards; a rebuild replaces every shard. The token explode
+    * is paid at build time; every later query reads only its terms'
+    * partitions.
     */
   def writePostings(docs: DataFrame, idCol: String, textCol: String,
       path: String): Unit = {
     val id = col(idCol)
     val tok = docs.select(id, explode(TextOps.tokens(col(textCol))).as("token"))
-    val dl = tok.groupBy(id).agg(count(lit(1)).as("dl"))
-    // band via the codegen'd md5 expression — [[tokenBand]] is its
-    // driver-side twin for the probe's literal partition filter
     // salted clustering before the partitioned write (r17, guide §6 —
     // [[graft.operators.Bucketed.clusterForPartitionBy]]): bounds files
     // per band dir and keeps a hot band parallel
-    graft.operators.Bucketed.clusterForPartitionBy(
-        tok.groupBy(id, col("token")).agg(count(lit(1)).as("tf"))
-          .withColumn("tok_band", substring(md5(col("token")), 1, 1)),
-        "tok_band", idCol)
-      .write.mode("overwrite").partitionBy("tok_band")
-      .parquet(s"$path/postings")
-    dl.write.mode("overwrite").parquet(s"$path/doclen")
-    dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("tl"))
-      .write.mode("overwrite").parquet(s"$path/stats")
+    ShardStore.rebuild(graft.operators.Bucketed.clusterForPartitionBy(
+        postings(tok, idCol), "tok_band", idCol), s"$path/postings", "tok_band")
+    ShardStore.rebuild(tok.groupBy(id).agg(count(lit(1)).as("dl")),
+      s"$path/doclen")
   }
 
-  /** Probe the stored index: identical results to [[bm25TopK]] on the
-    * indexed corpus (parity pinned in RetrievalSpec), but the scan is
-    * statically pruned to the query terms' md5-band partitions —
-    * `PartitionFilters` in the plan, ≤ |terms|/16 of the index read.
-    * Schemas are DECLARED (ids are BIGINT, the repo-wide id contract),
-    * so an empty index — zero docs indexed → zero part files — reads
-    * as zero candidates instead of failing schema inference.
+  /** Postings rows (id, token, tf, tok_band) of a token explode. The
+    * band is the codegen'd md5 expression; [[tokenBand]] is its
+    * Scala twin for the probe's literal partition filter.
+    */
+  private def postings(tok: DataFrame, idCol: String): DataFrame =
+    tok.groupBy(col(idCol), col("token")).agg(count(lit(1)).as("tf"))
+      .withColumn("tok_band", substring(md5(col("token")), 1, 1))
+
+  /** Probe the stored index — the shards of [[writePostings]] and
+    * [[bm25Sink]] alike: identical results to [[bm25TopK]] over every
+    * document any shard has indexed (parity pinned in RetrievalSpec,
+    * StreamingBm25Spec and the `t12_streaming_bm25` oracle), but the
+    * scan is statically pruned to the query terms' md5-band partitions
+    * — `PartitionFilters` in the plan, ≤ |terms|/16 of the index read.
+    * Corpus stats aggregate from the doclen table (one tiny agg over a
+    * table the scoring tail joins anyway). Schemas are DECLARED (ids
+    * are BIGINT, the repo-wide id contract), so an empty index — no
+    * shard, or shards with zero part files — reads as zero candidates
+    * instead of failing schema inference, and genuine schema drift
+    * fails loudly at analysis.
     */
   def bm25TopKStored(spark: org.apache.spark.sql.SparkSession, path: String,
       idCol: String, terms: Seq[String], k: Int,
       scale: Long = 1000L): DataFrame = {
     require(terms.nonEmpty, "terms must be non-empty")
     val bands = terms.map(tokenBand).distinct
-    val tf = spark.read
-      .schema(s"$idCol BIGINT, token STRING, tf BIGINT, tok_band STRING")
-      .parquet(s"$path/postings")
+    val tf = ShardStore.read(spark, s"$path/postings", StructType.fromDDL(
+        s"$idCol BIGINT, token STRING, tf BIGINT, tok_band STRING"))
       .filter(col("tok_band").isin(bands: _*))
       .filter(col("token").isin(terms: _*))
       .select(col(idCol), col("token"), col("tf"))
-    val dl = spark.read.schema(s"$idCol BIGINT, dl BIGINT")
-      .parquet(s"$path/doclen")
-    val stats = spark.read.schema("n_docs BIGINT, tl BIGINT")
-      .parquet(s"$path/stats")
+    val dl = ShardStore.read(spark, s"$path/doclen",
+        StructType.fromDDL(s"$idCol BIGINT, dl BIGINT"))
+      .select(col(idCol), col("dl"))
+    val stats = dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("tl"))
     score(tf, dl, stats, idCol, k, scale)
   }
 
   /** STREAMING postings maintenance — IVM for retrieval, completing the
     * batch/streaming symmetry for the BM25 family: each micro-batch of
     * new documents is tokenized ON ARRIVAL and its postings + doc-length
-    * rows land as a `batch=<id>` shard (the StreamingIndex posture), so
+    * rows land as shard `batchId` of the [[writePostings]] tables, so
     * the index is always current at O(batch) cost and the corpus text is
     * never re-read. Every piece of the BM25 state is mergeable across
     * shards by construction — postings and doc lengths are disjoint
@@ -167,9 +176,7 @@ object Retrieval {
     * documents, for any micro-batch split.
     *
     * Replay idempotence needs no marker: a re-delivered batch overwrites
-    * its own `batch=<id>` shards bit-for-bit (no additive state
-    * anywhere — the reason the stored-stats side table of the batch
-    * builder is deliberately NOT maintained here).
+    * its own shards bit-for-bit (no additive state anywhere).
     */
   def bm25Sink(indexPath: String, idCol: String, textCol: String)
               (batch: DataFrame, batchId: Long): Unit = {
@@ -182,52 +189,18 @@ object Retrieval {
     // to the query terms' md5-band directories within every shard
     // not salt-clustered — the ivfSink rationale: shard file counts are
     // delta-bounded
-    tok.groupBy(id, col("token")).agg(count(lit(1)).as("tf"))
-      .withColumn("tok_band", substring(md5(col("token")), 1, 1))
-      .write.mode("overwrite").partitionBy("tok_band")
-      .parquet(s"$indexPath/postings/batch=$batchId")
-    tok.groupBy(id).agg(count(lit(1)).as("dl"))
-      .write.mode("overwrite").parquet(s"$indexPath/doclen/batch=$batchId")
+    ShardStore.append(postings(tok, idCol), s"$indexPath/postings", batchId,
+      "tok_band")
+    ShardStore.append(tok.groupBy(id).agg(count(lit(1)).as("dl")),
+      s"$indexPath/doclen", batchId)
     graftShims.unpersistLocalCheckpoint(tok)
-  }
-
-  /** Probe the stream-maintained index: identical results to
-    * [[bm25TopK]] over every document any shard has indexed (parity
-    * pinned in StreamingBm25Spec and the `t12_streaming_bm25` oracle).
-    * Same band pruning as [[bm25TopKStored]] — `tok_band` is a
-    * discovered partition column inside each batch shard. Corpus stats
-    * aggregate from the doclen table (one tiny agg over a table the
-    * scoring tail joins anyway).
-    */
-  def bm25TopKStreamed(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, idCol: String, terms: Seq[String], k: Int,
-      scale: Long = 1000L): DataFrame = {
-    require(terms.nonEmpty, "terms must be non-empty")
-    val bands = terms.map(tokenBand).distinct
-    // schemas DECLARED, same as [[bm25TopKStored]]: an index whose
-    // shards hold zero part files reads as zero candidates instead of
-    // failing schema inference, and genuine schema drift fails loudly
-    // at analysis instead of being paper-overable by a broad catch.
-    // `batch` is the shard partition column, declared LONG (foreachBatch
-    // batchIds are longs; directory values parse either way).
-    val tf = graft.operators.ShardStore.read(spark, s"$indexPath/postings",
-        org.apache.spark.sql.types.StructType.fromDDL(
-          s"$idCol BIGINT, token STRING, tf BIGINT, tok_band STRING, batch BIGINT"))
-      .filter(col("tok_band").isin(bands: _*))
-      .filter(col("token").isin(terms: _*))
-      .select(col(idCol), col("token"), col("tf"))
-    val dl = graft.operators.ShardStore.read(spark, s"$indexPath/doclen",
-        org.apache.spark.sql.types.StructType.fromDDL(
-          s"$idCol BIGINT, dl BIGINT, batch BIGINT"))
-      .select(col(idCol), col("dl"))
-    val stats = dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("tl"))
-    score(tf, dl, stats, idCol, k, scale)
   }
 
   /** The whole chain drained end-to-end (the `t12_streaming_bm25`
     * driver query): documents file-stream (3 arbitrary splits) →
-    * per-batch postings shards → stream-index probe. Equals the batch
-    * [[bm25TopK]] / stored-index probe for any split (oracle-pinned).
+    * per-batch postings shards → stored-index probe. Equals the batch
+    * [[bm25TopK]] / [[writePostings]] probe for any split
+    * (oracle-pinned). A zero-doc drain probes as the typed empty top-k.
     */
   def availableNowBm25(spark: org.apache.spark.sql.SparkSession,
       sfDir: String): DataFrame = {
@@ -236,16 +209,7 @@ object Retrieval {
     val docs = graft.Tables.documents(spark, sfDir).select("doc_id", "text")
     graft.streaming.Drain.run(graft.streaming.Drain.splitStream(docs, s"$work/docs"),
       "append")(bm25Sink(idx, "doc_id", "text") _)
-    // zero-doc drains write no shard dirs at all (EmptyInputSpec wants
-    // the typed empty top-k); shards that exist but hold zero part files
-    // are covered by the declared read schemas in [[bm25TopKStreamed]]
-    if (graft.streaming.Drain.hasData(spark, s"$idx/postings"))
-      bm25TopKStreamed(spark, idx, "doc_id",
-        Seq("vector", "spark", "window"), k = 20)
-    else
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "doc_id BIGINT, bm25_scaled BIGINT"))
+    bm25TopKStored(spark, idx, "doc_id", Seq("vector", "spark", "window"), k = 20)
   }
 
   /** Sparse tf-idf cosine near-dup pairs: all document pairs sharing a

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.shims
 
 import graft.functions.Numeric
+import graft.operators.ShardStore
 
 /** Embedding similarity search: brute-force cosine top-k (baseline) and
   * bucket-pruned top-k (the scale path).
@@ -590,23 +591,10 @@ object Similarity {
     */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
               vecCol: String, nClusters: Int = 4, iterations: Int = 2,
-              nProbe: Int = 2, k: Int = 3): DataFrame = {
-    // stats-carrying checkpoint: stops re-deriving k-means per use AND
-    // lets the probe/score joins see the model table's real (tiny) size
-    // instead of a stats-less scan — no broadcast hints needed downstream
-    val cents = ensureStatsCheckpoint(
-      ivfCentroids(corpus, idCol, vecCol, nClusters, iterations))
-    val lists = ivfAssign(corpus, cents, idCol, vecCol)
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"),
-        col("cluster_id"), norm2Scaled(col(vecCol)).as("c_n2"))
-    ivfSearch(lists, cents, queries, idCol, vecCol, nProbe, k)
-  }
+              nProbe: Int = 2, k: Int = 3): DataFrame =
+    ivfTopKWithCentroids(corpus, queries, idCol, vecCol,
+      ivfCentroids(corpus, idCol, vecCol, nClusters, iterations), nProbe, k)
 
-  /** [[ivfTopK]] with caller-supplied centroids — the entry point for
-    * sampled training ([[ivfCentroidsSampled]]) or an externally-fit
-    * model: one full-corpus assignment pass builds the lists, then the
-    * standard probe-and-score. Same plan shape as ivfTopK.
-    */
   /** Stats checkpoint unless the frame already IS one: the sampled
     * trainers return materialized stats checkpoints, and re-wrapping a
     * bare LogicalRDD leaf would re-materialize the model table and
@@ -624,15 +612,32 @@ object Similarity {
       case _ => shims.checkpointWithStats(df)
     }
 
+  /** [[ivfTopK]] with caller-supplied centroids — the entry point for
+    * sampled training ([[ivfCentroidsSampled]]) or an externally-fit
+    * model: one full-corpus assignment pass builds the lists, then the
+    * standard probe-and-score. The centroids get a stats-carrying
+    * checkpoint ([[ensureStatsCheckpoint]]): it stops re-deriving
+    * k-means per use AND lets the probe/score joins see the model
+    * table's real (tiny) size — no broadcast hints needed downstream.
+    */
   def ivfTopKWithCentroids(corpus: DataFrame, queries: DataFrame,
                            idCol: String, vecCol: String, centroids: DataFrame,
                            nProbe: Int, k: Int): DataFrame = {
     val cents = ensureStatsCheckpoint(centroids)
-    val lists = ivfAssign(corpus, cents, idCol, vecCol)
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"),
-        col("cluster_id"), norm2Scaled(col(vecCol)).as("c_n2"))
-    ivfSearch(lists, cents, queries, idCol, vecCol, nProbe, k)
+    ivfSearch(ivfLists(corpus, cents, idCol, vecCol), cents, queries,
+      idCol, vecCol, nProbe, k)
   }
+
+  /** The inverted lists `(neighbor_id, c_vec, c_n2, cluster_id)`: each
+    * vector assigned to its cell, with its precomputed norm, so search
+    * never touches raw vectors it doesn't score. The one projection the
+    * in-memory search, the stored build and the streaming sink share.
+    */
+  private def ivfLists(corpus: DataFrame, cents: DataFrame, idCol: String,
+                       vecCol: String, probeStored: Boolean = false): DataFrame =
+    ivfAssign(corpus, cents, idCol, vecCol, probeStored)
+      .select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"),
+        norm2Scaled(col(vecCol)).as("c_n2"), col("cluster_id"))
 
   /** Probe-and-score stage shared by the in-memory and stored-index IVF
     * paths: rank each query's cells by centroid distance, keep `nProbe`,
@@ -719,11 +724,16 @@ object Similarity {
 
   /** Materialize the IVF index — the build-once half of the 100 TB
     * contract ivfTopK's doc describes: the tiny centroid model table
-    * plus the inverted lists written `partitionBy(cluster_id)`, so every
-    * later query batch reads nProbe/nClusters of the corpus FROM DISK
+    * plus the inverted lists as shard 0 of the [[ShardStore]] lists
+    * table, `partitionBy(cluster_id)` inside the shard, so every later
+    * query batch reads nProbe/nClusters of the corpus FROM DISK
     * (dynamic partition pruning at the parquet scan), not just in
-    * memory. Precomputed per-vector norms ride along — search never
-    * touches raw vectors it doesn't score.
+    * memory. [[ivfSink]] extends the same table by later shards. A
+    * rebuild replaces every shard under `path/lists`.
+    *
+    * Corpus contract: each vector id is unique and non-null, stored as
+    * BIGINT. The lists hold one row per input row; duplicate or null
+    * ids are neither merged nor rejected.
     */
   def writeIvfIndex(corpus: DataFrame, idCol: String, vecCol: String,
                     nClusters: Int, iterations: Int, path: String,
@@ -748,37 +758,32 @@ object Similarity {
       // salted clustering before the partitioned write (r17, guide §6 —
       // see [[graft.operators.Bucketed.clusterForPartitionBy]]): bounds
       // files per cell dir and keeps hot cells parallel
-      graft.operators.Bucketed.clusterForPartitionBy(
-          ivfAssign(corpus, cents, idCol, vecCol)
-            .select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"),
-              norm2Scaled(col(vecCol)).as("c_n2"), col("cluster_id")),
-          "cluster_id", "neighbor_id")
-        .write.mode("overwrite").partitionBy("cluster_id")
-        .parquet(s"$path/lists")
+      ShardStore.rebuild(graft.operators.Bucketed.clusterForPartitionBy(
+          ivfLists(corpus, cents, idCol, vecCol), "cluster_id", "neighbor_id"),
+        s"$path/lists", "cluster_id")
     } finally
       // the checkpoint is dead once the index is on disk (and on a failed
       // write there is nothing left to read it) — free its blocks now
       shims.unpersistLocalCheckpoint(cents)
   }
 
-  /** Search a stored index ([[writeIvfIndex]]): identical results to
-    * [[ivfTopK]] with the same build parameters, but the k-means build
-    * is amortized across query batches and the broadcast equi-join on
-    * the partition column prunes unprobed cluster directories at the
-    * scan (asserted in IvfStoredSpec).
+  /** Search a stored index: the lists shards of [[writeIvfIndex]] and
+    * [[ivfSink]] alike. Identical results to [[ivfTopK]] with the same
+    * build parameters (parity pinned in IvfStoredSpec, StreamingAnnSpec
+    * and the `t13_streaming_ann` oracle), but the k-means build is
+    * amortized across query batches and the broadcast equi-join on the
+    * partition column prunes unprobed cluster directories at the scan.
+    * The lists read under the DECLARED [[ListsSchema]] (BIGINT ids,
+    * whatever the query id type; no per-probe footer inference):
+    * cluster_id keeps its int type so DPP prunes on the bare attribute,
+    * and a table with no shard, or shards with no data file, reads as
+    * zero candidates.
     */
   def ivfTopKStored(spark: org.apache.spark.sql.SparkSession, path: String,
                     queries: DataFrame, idCol: String, vecCol: String,
                     nProbe: Int = 2, k: Int = 3): DataFrame = {
     val cents = spark.read.schema(CentroidSchema).parquet(s"$path/centroids")
-    // DECLARED schema, not footer inference (r17, guide §6 — the probe
-    // paths re-inferred these fixed layouts per call; the bm25TopKStored
-    // posture): cluster_id keeps its original int type so DPP prunes on
-    // the bare attribute, and an EMPTY corpus's zero partition dirs
-    // (schema-less layout) read as an empty index instead of failing
-    // inference — the declared schema covers what the old try/catch did.
-    val lists = spark.read.schema(ListsSchema)
-      .parquet(s"$path/lists")
+    val lists = ShardStore.read(spark, s"$path/lists", ListsSchema).drop("batch")
     ivfSearch(lists, cents, queries, idCol, vecCol, nProbe, k)
   }
 
@@ -811,18 +816,21 @@ object Similarity {
     * asymmetry left in the streaming-index family (BM25 had a full
     * incremental sink, the IVF index was batch-built only): each
     * micro-batch of new vectors is assigned to the STANDING centroids
-    * on arrival and lands as a `batch=<id>` shard of the lists table,
-    * `cluster_id`-partitioned INSIDE the shard so probe-side cell
-    * pruning keeps working. Inverted lists are mergeable across shards
-    * by construction — a vector is assigned in exactly one batch and
-    * assignment depends only on (vector, centroids) — so the maintained
-    * index is IDENTICAL to a from-scratch [[writeIvfIndex]] lists build
-    * over all vectors, for any micro-batch split (the t13 oracle).
+    * on arrival and lands as shard `batchId` of the [[ShardStore]] lists
+    * table, `cluster_id`-partitioned INSIDE the shard so probe-side cell
+    * pruning keeps working; [[ivfTopKStored]] probes it. Inverted lists
+    * are mergeable across shards by construction — a vector is assigned
+    * in exactly one batch and assignment depends only on (vector,
+    * centroids) — so the maintained index is IDENTICAL to a from-scratch
+    * [[writeIvfIndex]] lists build over all vectors, for any micro-batch
+    * split (the t13 oracle).
     *
     * Replay idempotence needs no marker: a re-delivered batch
     * overwrites its own shard bit-for-bit (no additive state — the
     * bm25Sink posture). Per-batch cost is O(delta × nClusters) with the
     * (tiny) centroid table broadcast from measured parquet stats.
+    * Corpus contract as [[writeIvfIndex]]: unique non-null ids, stored
+    * as BIGINT, one row per input row (nothing deduped or rejected).
     */
   def ivfSink(indexPath: String, idCol: String, vecCol: String)
              (batch: DataFrame, batchId: Long): Unit = {
@@ -835,29 +843,8 @@ object Similarity {
     // NOT salt-clustered like the batch builder (measured +0.1-0.15 s
     // per fold for an exchange the shard doesn't need): a micro-batch
     // shard's file count is bounded by the delta's own task count.
-    ivfAssign(batch, cents, idCol, vecCol, probeStored = true)
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"),
-        norm2Scaled(col(vecCol)).as("c_n2"), col("cluster_id"))
-      .write.mode("overwrite").partitionBy("cluster_id")
-      .parquet(s"$indexPath/lists/batch=$batchId")
-  }
-
-  /** Probe the stream-maintained index: identical results to
-    * [[ivfTopKStored]] over every vector any shard has indexed (parity
-    * pinned in StreamingAnnSpec and the `t13_streaming_ann` oracle).
-    * The lists read goes through [[graft.operators.ShardStore]] — the
-    * union of the `batch=` shards under [[ListsSchema]] (BIGINT ids,
-    * whatever the query id type), so empty shards read as zero
-    * candidates — and the probe's cluster_id equi-join prunes unprobed
-    * cells exactly as the batch stored path does.
-    */
-  def ivfTopKStreamed(spark: org.apache.spark.sql.SparkSession, path: String,
-                      queries: DataFrame, idCol: String, vecCol: String,
-                      nProbe: Int = 2, k: Int = 3): DataFrame = {
-    val cents = spark.read.schema(CentroidSchema).parquet(s"$path/centroids")
-    val lists = graft.operators.ShardStore.read(spark, s"$path/lists",
-      graft.operators.ShardStore.withBatch(ListsSchema)).drop("batch")
-    ivfSearch(lists, cents, queries, idCol, vecCol, nProbe, k)
+    ShardStore.append(ivfLists(batch, cents, idCol, vecCol, probeStored = true),
+      s"$indexPath/lists", batchId, "cluster_id")
   }
 
   /** Shared drain harness for the streaming-ANN chains (t13/t14): the
@@ -877,10 +864,11 @@ object Similarity {
   /** The whole chain drained end-to-end (the `t13_streaming_ann` driver
     * query): standing centroid model trained once from the corpus →
     * embeddings file-stream (3 arbitrary splits) → per-batch inverted-
-    * list shards → stream-index probe. Equals [[ivfTopKStored]] with
-    * the same build parameters for any split (oracle-pinned — the
-    * `x_ann_ivf` oracle, since assignment is a pure per-vector function
-    * of the standing model).
+    * list shards → stored-index probe. Equals [[ivfTopKStored]] over a
+    * [[writeIvfIndex]] build with the same parameters for any split
+    * (oracle-pinned — the `x_ann_ivf` oracle, since assignment is a
+    * pure per-vector function of the standing model). A zero-vector
+    * drain probes as the typed empty top-k.
     */
   def availableNowIvf(spark: org.apache.spark.sql.SparkSession,
       sfDir: String): DataFrame = {
@@ -891,13 +879,7 @@ object Similarity {
       nClusters = 4, iterations = 2, path = idx)
     val emb = drainEmbeddings(spark, sfDir, work,
       ivfSink(idx, "vec_id", "embedding") _)
-    // zero-vector drains write no lists dirs at all
-    if (!graft.streaming.Drain.hasData(spark, s"$idx/lists"))
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "query_id BIGINT, neighbor_id BIGINT, cluster_id BIGINT, cos_sim DOUBLE"))
-    ivfTopKStreamed(spark, idx, emb.filter(col("vec_id") < 10),
+    ivfTopKStored(spark, idx, emb.filter(col("vec_id") < 10),
         "vec_id", "embedding", nProbe = 2, k = 3)
       .withColumn("cluster_id", col("cluster_id").cast("bigint"))
   }
@@ -1098,12 +1080,9 @@ object Similarity {
     */
   def pqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
              vecCol: String, m: Int = 4, subDim: Int = 16, ks: Int = 4,
-             iterations: Int = 2, k: Int = 3): DataFrame = {
-    val books = ensureStatsCheckpoint(
-      pqCodebooks(corpus, idCol, vecCol, m, subDim, ks, iterations))
-    pqSearch(pqEncode(corpus, books, idCol, vecCol, m, subDim), books,
-      queries, idCol, vecCol, m, subDim, k)
-  }
+             iterations: Int = 2, k: Int = 3): DataFrame =
+    pqTopKWithCodebooks(corpus, queries, idCol, vecCol,
+      pqCodebooks(corpus, idCol, vecCol, m, subDim, ks, iterations), m, subDim, k)
 
   /** [[pqTopK]] with caller-supplied codebooks — the entry point for
     * sampled training ([[pqCodebooksSampled]]) or an externally-fit
@@ -1372,10 +1351,17 @@ object Similarity {
   }
 
   /** Materialize the IVF-PQ index: two tiny model tables (coarse
-    * centroids, sub-codebooks) plus the code table written
-    * `partitionBy(coarse_id)` — a probe reads nProbe/nCoarse of the
-    * COMPRESSED corpus from disk (partition pruning on the cell, same
-    * contract as [[writeIvfIndex]], at PQ's scan width).
+    * centroids, sub-codebooks) plus the code table as shard 0 of the
+    * [[ShardStore]] codes table, `partitionBy(coarse_id)` inside the
+    * shard — a probe reads nProbe/nCoarse of the COMPRESSED corpus from
+    * disk (partition pruning on the cell, same contract as
+    * [[writeIvfIndex]], at PQ's scan width). [[ivfPqSink]] extends the
+    * same table by later shards. A rebuild replaces every shard under
+    * `path/codes`.
+    *
+    * Corpus contract: each vector id is unique and non-null, stored as
+    * BIGINT. The codes hold one row per (input row, sub); duplicate or
+    * null ids are neither merged nor rejected.
     */
   def writeIvfPqIndex(corpus: DataFrame, idCol: String, vecCol: String,
                       nCoarse: Int, coarseIters: Int, m: Int, subDim: Int,
@@ -1389,10 +1375,8 @@ object Similarity {
     try {
       coarse.write.mode("overwrite").parquet(s"$path/coarse")
       books.write.mode("overwrite").parquet(s"$path/codebooks")
-      graft.operators.Bucketed.clusterForPartitionBy(
-          codes, "coarse_id", "neighbor_id")
-        .write.mode("overwrite").partitionBy("coarse_id")
-        .parquet(s"$path/codes")
+      ShardStore.rebuild(graft.operators.Bucketed.clusterForPartitionBy(
+          codes, "coarse_id", "neighbor_id"), s"$path/codes", "coarse_id")
     } finally
       // all three model checkpoints (incl. the corpus-sized residuals)
       // are dead once the index is on disk (or the build failed) — free
@@ -1400,22 +1384,20 @@ object Similarity {
       Seq(coarse, resid, books).foreach(shims.unpersistLocalCheckpoint)
   }
 
-  /** Search a stored IVF-PQ index ([[writeIvfPqIndex]]): identical
-    * results to [[ivfPqTopK]] with the same build parameters; training,
-    * residuals, and encode all amortize, and the probe scans only the
-    * probed cells' code partitions.
+  /** Search a stored IVF-PQ index: the code shards of
+    * [[writeIvfPqIndex]] and [[ivfPqSink]] alike. Identical results to
+    * [[ivfPqTopK]] with the same build parameters; training, residuals,
+    * and encode all amortize, and the probe scans only the probed
+    * cells' code partitions. The codes read under the DECLARED codes
+    * schema (BIGINT ids whatever the query id type; no per-probe footer
+    * inference), so a table with no shard reads as an empty index.
     */
   def ivfPqTopKStored(spark: org.apache.spark.sql.SparkSession, path: String,
                       queries: DataFrame, idCol: String, vecCol: String,
                       m: Int = 4, subDim: Int = 16, nProbe: Int = 2,
                       k: Int = 3): DataFrame = {
-    // DECLARED schemas (guide §6 — no per-probe footer inference): an
-    // EMPTY corpus's zero code partitions (schema-less layout, same as
-    // writeIvfIndex's lists) read as an empty index under the declared
-    // schema — covers what the old inference-failure catch did.
-    val codes = spark.read
-      .schema(pqCodesSchema(withCoarse = true))
-      .parquet(s"$path/codes")
+    val codes = ShardStore.read(spark, s"$path/codes",
+      pqCodesSchema(withCoarse = true)).drop("batch")
     ivfPqSearch(codes,
       spark.read.schema(CentroidSchema).parquet(s"$path/coarse"),
       spark.read.schema(PqBookSchema).parquet(s"$path/codebooks"),
@@ -1452,10 +1434,12 @@ object Similarity {
     * [[ivfSink]] pattern at the compressed layout: each micro-batch of
     * new vectors is residual-encoded against the STANDING model
     * (coarse assignment → residual → per-subspace code argmin) and
-    * lands as a `batch=<id>` shard of the codes table,
+    * lands as shard `batchId` of the [[ShardStore]] codes table,
     * `coarse_id`-partitioned INSIDE the shard so probe-side cell
-    * pruning keeps working. A vector's codes depend only on
-    * (vector, standing model), so the maintained code table is
+    * pruning keeps working; [[ivfPqTopKStored]] probes it. Corpus
+    * contract as [[writeIvfPqIndex]]: unique non-null ids, stored as
+    * BIGINT, nothing deduped or rejected. A vector's codes depend only
+    * on (vector, standing model), so the maintained code table is
     * IDENTICAL to a from-scratch [[writeIvfPqIndex]] build with the
     * same model parameters, for any micro-batch split (the t14 oracle).
     * Replay idempotence needs no marker: a re-delivered batch
@@ -1470,38 +1454,19 @@ object Similarity {
     // probeStored: both standing model tables are tiny just-written dirs
     // not salt-clustered — the ivfSink rationale: shard file counts are
     // delta-bounded
-    encodeResiduals(residuals(batch, coarse, idCol, vecCol, probeStored = true),
-        books, idCol, m, subDim, probeStored = true)
-      .write.mode("overwrite").partitionBy("coarse_id")
-      .parquet(s"$indexPath/codes/batch=$batchId")
-  }
-
-  /** Probe the stream-maintained IVF-PQ index: identical results to
-    * [[ivfPqTopKStored]] over every vector any shard has encoded. The
-    * codes read goes through [[graft.operators.ShardStore]] (the union
-    * of the `batch=` shards under the stored codes schema, BIGINT ids
-    * whatever the query id type) and the ADC equi-join prunes unprobed
-    * cells exactly as the batch path does.
-    */
-  def ivfPqTopKStreamed(spark: org.apache.spark.sql.SparkSession,
-                        path: String, queries: DataFrame, idCol: String,
-                        vecCol: String, m: Int = 4, subDim: Int = 16,
-                        nProbe: Int = 2, k: Int = 3): DataFrame = {
-    val codes = graft.operators.ShardStore.read(spark, s"$path/codes",
-      graft.operators.ShardStore.withBatch(pqCodesSchema(withCoarse = true)))
-      .drop("batch")
-    ivfPqSearch(codes,
-      spark.read.schema(CentroidSchema).parquet(s"$path/coarse"),
-      spark.read.schema(PqBookSchema).parquet(s"$path/codebooks"),
-      queries, idCol, vecCol, m, subDim, nProbe, k)
+    ShardStore.append(
+      encodeResiduals(residuals(batch, coarse, idCol, vecCol, probeStored = true),
+        books, idCol, m, subDim, probeStored = true),
+      s"$indexPath/codes", batchId, "coarse_id")
   }
 
   /** The whole IVF-PQ chain drained end-to-end (the
     * `t14_streaming_ivfpq` driver query): standing model trained once →
     * embeddings file-stream (3 arbitrary splits) → per-batch residual-
-    * code shards → stream-index ADC probe. Equals [[ivfPqTopKStored]]
-    * with the same build parameters for any split (oracle-pinned — the
-    * `x_ann_ivfpq` oracle).
+    * code shards → stored-index ADC probe. Equals [[ivfPqTopKStored]]
+    * over a [[writeIvfPqIndex]] build with the same parameters for any
+    * split (oracle-pinned — the `x_ann_ivfpq` oracle). A zero-vector
+    * drain probes as the typed empty top-k.
     */
   def availableNowIvfPq(spark: org.apache.spark.sql.SparkSession,
       sfDir: String): DataFrame = {
@@ -1512,13 +1477,7 @@ object Similarity {
       coarseIters = 2, m = 4, subDim = 16, ks = 4, pqIters = 2, path = idx)
     val emb = drainEmbeddings(spark, sfDir, work,
       ivfPqSink(idx, "vec_id", "embedding", m = 4, subDim = 16) _)
-    // zero-vector drains write no codes dirs at all
-    if (!graft.streaming.Drain.hasData(spark, s"$idx/codes"))
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "query_id BIGINT, neighbor_id BIGINT, coarse_id BIGINT, adist_s BIGINT"))
-    ivfPqTopKStreamed(spark, idx, emb.filter(col("vec_id") < 10),
+    ivfPqTopKStored(spark, idx, emb.filter(col("vec_id") < 10),
       "vec_id", "embedding", m = 4, subDim = 16, nProbe = 2, k = 3)
   }
 

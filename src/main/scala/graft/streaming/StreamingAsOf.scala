@@ -185,16 +185,15 @@ object StreamingAsOf {
       val (newL, lBounds) = checkpointWithTimeBounds(newL0, leftTime)
       val (newR, rBounds) = checkpointWithTimeBounds(newR0, rightTime)
       // rights are append-only → land as an overwrite-idempotent
-      // `batch=<id>` shard (the StreamingIndex/bm25Sink posture): a
+      // ShardStore shard (the StreamingIndex/bm25Sink posture): a
       // replayed batch overwrites its own shard bit-for-bit, and the
       // per-batch right-store cost is O(delta).
-      newR.write.mode("overwrite").parquet(s"$rightStorePath/batch=$batchId")
-      // declared schema (the delta's own, plus the shard partition id):
-      // the standing reads run EVERY batch, and footer-based inference is
-      // a per-batch job the fold doesn't need
-      val rstoreSchema = graft.operators.ShardStore.withBatch(newR.schema)
-      val allR = graft.operators.ShardStore.read(spark, rightStorePath, rstoreSchema)
-        .drop("batch").select(newR.columns.map(col): _*)
+      graft.operators.ShardStore.append(newR, rightStorePath, batchId)
+      // declared schema (the delta's own): the standing reads run EVERY
+      // batch, and footer-based inference is a per-batch job the fold
+      // doesn't need
+      val allR = graft.operators.ShardStore.read(spark, rightStorePath, newR.schema)
+        .drop("batch")
       val rightsForA = pruneRightsForA(allR, lBounds.map(_._1), rightTime,
         toleranceUs)
       def withRt(asofed: DataFrame): DataFrame = asofed

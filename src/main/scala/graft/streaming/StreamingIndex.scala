@@ -5,6 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ext.DedupOps
+import graft.operators.ShardStore
 
 /** Continuous corpus-index maintenance: the streaming form of
   * [[graft.ext.DedupOps.lshCandidatesIncremental]]. Each micro-batch of
@@ -19,11 +20,11 @@ import graft.ext.DedupOps
   * text.
   *
   * Idempotence on replay: each batch writes its index shard and its
-  * duplicate records under `batch=<batchId>` subdirectories with
-  * overwrite — a replayed micro-batch (crash between sink and
-  * checkpoint commit) overwrites its own previous output bit-for-bit
-  * instead of appending twice. The `batch=` layout doubles as a
-  * partition column, so index readers can also prune by arrival batch.
+  * duplicate records as [[graft.operators.ShardStore]] shards — a
+  * replayed micro-batch (crash between sink and checkpoint commit)
+  * overwrites its own previous output bit-for-bit instead of appending
+  * twice. The shard id doubles as a partition column, so index readers
+  * can also prune by arrival batch.
   */
 object StreamingIndex {
 
@@ -47,15 +48,14 @@ object StreamingIndex {
       if (!fs.exists(new Path(indexPath))) intra
       else {
         // this batch's own (replayed) shard must not self-match
-        val idxSchema = graft.operators.ShardStore.withBatch(newSigs.schema)
-        val index = graft.operators.ShardStore.read(spark, indexPath, idxSchema)
+        val index = ShardStore.read(spark, indexPath, newSigs.schema)
           .filter(col("batch") =!= batchId)
           .select(col(idCol) +: (0 until k).map(i => col(s"mh$i")): _*)
         DedupOps.lshCandidatesIncremental(index, batch, idCol, textCol, k, rowsPerBand, n)
           .select(col("doc_new"), col("doc_corpus").as("doc_matched"))
           .unionByName(intra)
       }
-    dups.write.mode("overwrite").parquet(s"$dupsPath/batch=$batchId")
-    newSigs.write.mode("overwrite").parquet(s"$indexPath/batch=$batchId")
+    ShardStore.append(dups, dupsPath, batchId)
+    ShardStore.append(newSigs, indexPath, batchId)
   }
 }

@@ -209,8 +209,7 @@ class PropertiesSpec extends SparkSuite {
 
     val schedParams = ScTest.Parameters.default.withMinSuccessfulTests(100)
     test("ShardStore layout: read = appended rows exactly once, under random append/replay schedules") {
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(
-        "id BIGINT, batch BIGINT")
+      val schema = org.apache.spark.sql.types.StructType.fromDDL("id BIGINT")
       val p = Prop.forAll(Gen.resize(6, Gen.nonEmptyListOf(opGen))) { ops =>
         val root = java.nio.file.Files.createTempDirectory("shardstore_prop").toString
         var nextId = 0L
@@ -218,7 +217,7 @@ class PropertiesSpec extends SparkSuite {
         def writeBatch(id: Long, vs: List[Long]): Unit =
           if (vs.isEmpty) java.nio.file.Files.createDirectories(
             java.nio.file.Paths.get(root, s"batch=$id"))
-          else vs.toDF("id").write.mode("overwrite").parquet(s"$root/batch=$id")
+          else ShardStore.append(vs.toDF("id"), root, id)
         def readRows(): Seq[Long] =
           ShardStore.read(spark, root, schema).select("id").as[Long]
             .collect().sorted.toSeq

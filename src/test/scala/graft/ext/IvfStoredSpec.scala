@@ -18,7 +18,7 @@ class IvfStoredSpec extends SparkSuite {
     Similarity.writeIvfIndex(emb, "vec_id", "embedding",
       nClusters = 4, iterations = 2, path = path)
     // the index is a real layout: one directory per cluster
-    val dirs = new java.io.File(s"$path/lists").listFiles()
+    val dirs = new java.io.File(s"$path/lists/batch=0").listFiles()
       .filter(_.getName.startsWith("cluster_id=")).map(_.getName).sorted
     assert(dirs.length == 4, s"expected 4 cluster dirs, got ${dirs.mkString(",")}")
 
@@ -49,7 +49,7 @@ class IvfStoredSpec extends SparkSuite {
     val path = java.nio.file.Files.createTempDirectory("ivf_sampled").toString
     Similarity.writeIvfIndex(emb, "vec_id", "embedding",
       nClusters = 4, iterations = 2, path = path, sampledTraining = Some(true))
-    val dirs = new java.io.File(s"$path/lists").listFiles()
+    val dirs = new java.io.File(s"$path/lists/batch=0").listFiles()
       .filter(_.getName.startsWith("cluster_id=")).map(_.getName)
     assert(dirs.nonEmpty && dirs.length <= 4)
     val stored = Similarity.ivfTopKStored(spark, path, queries,

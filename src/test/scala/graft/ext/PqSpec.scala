@@ -91,7 +91,7 @@ class PqSpec extends SparkSuite {
     Similarity.writeIvfPqIndex(emb, "vec_id", "embedding",
       nCoarse = 4, coarseIters = 2, m = M, subDim = SubDim, ks = 4,
       pqIters = 2, path = path)
-    val dirs = new java.io.File(s"$path/codes").listFiles()
+    val dirs = new java.io.File(s"$path/codes/batch=0").listFiles()
       .filter(_.getName.startsWith("coarse_id=")).map(_.getName)
     assert(dirs.length == 4, s"expected 4 cell dirs, got ${dirs.mkString(",")}")
     val stored = Similarity.ivfPqTopKStored(spark, path, queries,

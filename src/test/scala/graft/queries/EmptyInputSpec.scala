@@ -14,7 +14,8 @@ import graft.{SparkEntry, SparkSuite}
   */
 class EmptyInputSpec extends SparkSuite {
 
-  test("every registered query executes on zero-row tables") {
+  /** A data dir holding every table with its schema and zero rows. */
+  private lazy val emptySf: String = {
     val out = Files.createTempDirectory("graft_empty_sf").toString
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     for (t <- Seq("region", "nation", "customer", "supplier", "part",
@@ -23,6 +24,11 @@ class EmptyInputSpec extends SparkSuite {
         .write.mode("overwrite").parquet(s"$out/$t.parquet")
     }
     spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    out
+  }
+
+  test("every registered query executes on zero-row tables") {
+    val out = emptySf
     val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       try {
         fn(spark, out).write.format("noop").mode("overwrite").save()
@@ -34,5 +40,22 @@ class EmptyInputSpec extends SparkSuite {
       }
     }
     assert(failures.isEmpty, s"queries failing on empty input:\n${failures.mkString("\n")}")
+  }
+
+  test("the streaming index chains drain zero rows to the typed empty top-k") {
+    // the stored probes read a shard table that holds no rows as typed
+    // empty, so the chains need no guard of their own
+    for ((name, ddl) <- Seq(
+        "t12_streaming_bm25" -> "doc_id BIGINT, bm25_scaled BIGINT",
+        "t13_streaming_ann" ->
+          "query_id BIGINT, neighbor_id BIGINT, cluster_id BIGINT, cos_sim DOUBLE",
+        "t14_streaming_ivfpq" ->
+          "query_id BIGINT, neighbor_id BIGINT, coarse_id BIGINT, adist_s BIGINT")) {
+      val out = SparkEntry.queries(name)(spark, emptySf)
+      assert(out.count() == 0, name)
+      val want = org.apache.spark.sql.types.StructType.fromDDL(ddl)
+      assert(out.schema.map(f => f.name -> f.dataType) == want.map(f => f.name -> f.dataType),
+        s"$name: ${out.schema.toDDL}")
+    }
   }
 }

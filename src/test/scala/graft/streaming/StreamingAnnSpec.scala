@@ -30,7 +30,7 @@ class StreamingAnnSpec extends SparkSuite {
     val sink = Similarity.ivfSink(idx, "vec_id", "embedding") _
     sink(emb.filter(col("vec_id") % 2 === 0).toDF(), 0L)
     sink(emb.filter(col("vec_id") % 2 =!= 0).toDF(), 1L)
-    def probe() = Similarity.ivfTopKStreamed(spark, idx, queries,
+    def probe() = Similarity.ivfTopKStored(spark, idx, queries,
         "vec_id", "embedding", nProbe = 2, k = 3)
       .collect().map(_.toString).toSeq
     val got = probe()
@@ -39,7 +39,7 @@ class StreamingAnnSpec extends SparkSuite {
     Similarity.writeIvfModel(emb, "vec_id", "embedding",
       nClusters = 4, iterations = 2, path = one)
     Similarity.ivfSink(one, "vec_id", "embedding")(emb.toDF(), 0L)
-    val want = Similarity.ivfTopKStreamed(spark, one, queries,
+    val want = Similarity.ivfTopKStored(spark, one, queries,
         "vec_id", "embedding", nProbe = 2, k = 3)
       .collect().map(_.toString).toSeq
     assert(got == want && want.nonEmpty)
@@ -64,7 +64,7 @@ class StreamingAnnSpec extends SparkSuite {
         .collect().map(_.toSeq).toSeq
     val expected = rows(Similarity.availableNowIvf(spark, sfDir))
     assert(expected.nonEmpty)
-    val probe = Similarity.ivfTopKStreamed(spark, s"$work/index", intQueries,
+    val probe = Similarity.ivfTopKStored(spark, s"$work/index", intQueries,
       "vec_id", "embedding", nProbe = 2, k = 3)
     assert(rows(probe) == expected)
     // the shard scan still prunes unprobed cells
@@ -75,7 +75,7 @@ class StreamingAnnSpec extends SparkSuite {
     val idx = java.nio.file.Files.createTempDirectory("graft_ann_spec_empty").toString
     Similarity.writeIvfModel(emb, "vec_id", "embedding",
       nClusters = 4, iterations = 2, path = idx)
-    val out = Similarity.ivfTopKStreamed(spark, idx, queries,
+    val out = Similarity.ivfTopKStored(spark, idx, queries,
       "vec_id", "embedding", nProbe = 2, k = 3)
     assert(out.count() == 0)
     assert(out.columns.toSeq ==

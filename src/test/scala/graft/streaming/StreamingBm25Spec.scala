@@ -29,7 +29,7 @@ class StreamingBm25Spec extends SparkSuite {
     sink(bDocs.toDF(), 1L)
     val want = Retrieval.bm25TopK(docs, "doc_id", "text", Terms, k = 20)
       .collect().map(_.toString).toSeq
-    def probe() = Retrieval.bm25TopKStreamed(spark, idx, "doc_id", Terms, k = 20)
+    def probe() = Retrieval.bm25TopKStored(spark, idx, "doc_id", Terms, k = 20)
       .collect().map(_.toString).toSeq
     assert(probe() == want && want.nonEmpty)
     // replayed batch overwrites its own shard bit-for-bit — no marker
@@ -42,7 +42,7 @@ class StreamingBm25Spec extends SparkSuite {
     val docs = Tables.documents(spark, sfDir).select("doc_id", "text").limit(50)
     val idx = java.nio.file.Files.createTempDirectory("graft_bm25_prune").toString
     Retrieval.bm25Sink(idx, "doc_id", "text")(docs.toDF(), 0L)
-    val p = Retrieval.bm25TopKStreamed(spark, idx, "doc_id", Terms, k = 5)
+    val p = Retrieval.bm25TopKStored(spark, idx, "doc_id", Terms, k = 5)
       .queryExecution.executedPlan.toString
     assert(p.contains("PartitionFilters") && p.contains("tok_band"),
       s"band pruning lost on the streamed index:\n$p")

@@ -35,7 +35,7 @@ class StreamingIvfPqSpec extends SparkSuite {
     val sink = Similarity.ivfPqSink(idx, "vec_id", "embedding", m = 4, subDim = 16) _
     sink(emb.filter(col("vec_id") % 2 === 0).toDF(), 0L)
     sink(emb.filter(col("vec_id") % 2 =!= 0).toDF(), 1L)
-    def probe() = Similarity.ivfPqTopKStreamed(spark, idx, queries,
+    def probe() = Similarity.ivfPqTopKStored(spark, idx, queries,
         "vec_id", "embedding", m = 4, subDim = 16, nProbe = 2, k = 3)
       .collect().map(_.toString).toSeq
     val got = probe()
@@ -44,7 +44,7 @@ class StreamingIvfPqSpec extends SparkSuite {
     Similarity.writeIvfPqModel(emb, "vec_id", "embedding", nCoarse = 4,
       coarseIters = 2, m = 4, subDim = 16, ks = 4, pqIters = 2, path = one)
     Similarity.ivfPqSink(one, "vec_id", "embedding", m = 4, subDim = 16)(emb.toDF(), 0L)
-    val want = Similarity.ivfPqTopKStreamed(spark, one, queries,
+    val want = Similarity.ivfPqTopKStored(spark, one, queries,
         "vec_id", "embedding", m = 4, subDim = 16, nProbe = 2, k = 3)
       .collect().map(_.toString).toSeq
     assert(got == want && want.nonEmpty)
@@ -68,7 +68,7 @@ class StreamingIvfPqSpec extends SparkSuite {
         .collect().map(_.toSeq).toSeq
     val expected = rows(Similarity.availableNowIvfPq(spark, sfDir))
     assert(expected.nonEmpty)
-    assert(rows(Similarity.ivfPqTopKStreamed(spark, s"$work/index", intQueries,
+    assert(rows(Similarity.ivfPqTopKStored(spark, s"$work/index", intQueries,
       "vec_id", "embedding", m = 4, subDim = 16, nProbe = 2, k = 3)) == expected)
   }
 }
